@@ -20,15 +20,48 @@ from pyspark.sql import functions as F
 _ACC = "decimal(28,18)"
 
 
+def fast_sums() -> bool:
+    """Production fast mode: ``EHS_FAST_SUMS=1`` switches plans/_util's
+    ``dsum`` / ``davg`` / ``dsum_wide``, this module's array folds and the
+    IVF-PQ probe fold to plain double sums. This is the one reader of the
+    variable; functions/ imports nothing from operators/ or plans/, so
+    all three layers import it without a cycle.
+
+    The decimal fold exists to make every aggregate BIT-IDENTICAL to the
+    DuckDB oracle (order-free accumulation) — the verification contract,
+    not a numerical-accuracy need. A deployment that does not diff against
+    an oracle flips this on and erases the decimal tax (1.4–6.3× per
+    sum-heavy query, q_pricing_summary 6.3×, measured at sf10 — table in
+    BASELINE.md; since r13 the switch also covers the vector family's
+    array folds, :func:`_dec_sum` — k-means assignment, SemDeDup
+    cosine, ADC scoring); results then agree with the exact sum to double
+    round-off on the documented 6dp domain (|Δ|/Σ ≲ n·2⁻⁵³ — at 1e12 rows
+    still ~1e-4 relative worst-case, ~1e-10 typical random-sign error).
+    That round-off bound holds for the SUMS themselves; consumers that
+    pass a fast sum through a discrete decision — k-means argmin, a
+    SemDeDup/near-dup threshold, an ADC top-k cut — can see a near-tied
+    comparison flip, so fast mode there can change a cluster assignment
+    or top-k member outright (still valid-quality output, but discretely
+    different, not a round-off delta; ADVICE r13).
+
+    Scope and timing: the flag is read by each dsum()/davg() CALL during
+    driver-side plan construction — set it before building the query and
+    don't toggle it concurrently, or a single plan can mix modes. It does
+    NOT rewrite SQL-STRING helpers (``sql_dsum``/``sql_davg``): those
+    build the DuckDB oracle texts (which must stay exact by definition)
+    and the one Spark-side spark.sql() consumer (q_scalar_subquery, whose
+    WHERE comparison wants order-free determinism). DEFAULT is exact mode;
+    the correctness driver never sets the variable, and tests/conftest.py
+    fails fast if it leaks into a verification session."""
+    return os.environ.get("EHS_FAST_SUMS", "") == "1"
+
+
 def _dec_sum(arr: Column) -> Column:
-    """Order-exact array fold — or, under ``EHS_FAST_SUMS=1`` (the same
-    production switch plans/_util.fast_sums documents for dsum/davg), a
+    """Order-exact array fold — or, in fast mode (:func:`fast_sums`), a
     plain sequential double fold: same plan shape, no per-element
-    BigDecimal, not bit-reproducible against the DuckDB oracle. Read per
-    CALL at plan-construction time, exactly like dsum; duplicated rather
-    than imported because functions/ must not import plans/ (layering).
-    This is the switch that erases the decimal tax from the vector
-    family's hot paths (k-means assignment, SemDeDup cosine, ADC scan).
+    BigDecimal, not bit-reproducible against the DuckDB oracle. This is
+    the switch that erases the decimal tax from the vector family's hot
+    paths (k-means assignment, SemDeDup cosine, ADC scan).
 
     ARGMIN/THRESHOLD CONSUMERS (ADVICE r13): for plain sums the fast
     fold differs from the exact fold only by round-off — but k-means
@@ -40,7 +73,7 @@ def _dec_sum(arr: Column) -> Column:
     valid-quality — assignment or top-k member), not just in trailing
     digits. Exact mode remains the verification default; conftest fails
     fast if the switch leaks into a verification session."""
-    if os.environ.get("EHS_FAST_SUMS", "") == "1":
+    if fast_sums():
         return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
     return F.aggregate(
         arr, F.lit(0).cast(_ACC), lambda acc, x: (acc + x.cast(_ACC)).cast(_ACC)
@@ -103,7 +136,7 @@ def dec_sum_static(terms: list[Column]) -> Column:
     plain expression tree Catalyst whole-stage-codegens — the HOF fold is
     interpreted per row. Honors EHS_FAST_SUMS like ``_dec_sum`` (plain
     left-associated double sum, bitwise the fast fold's order)."""
-    if os.environ.get("EHS_FAST_SUMS", "") == "1":
+    if fast_sums():
         acc = terms[0]
         for t in terms[1:]:
             acc = acc + t

@@ -28,6 +28,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.vectors import fast_sums
+
 
 def dimension_ranges(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Per-dimension (pos, lo, hi) over the corpus — dim-sized output."""
@@ -358,7 +360,7 @@ def _local_probe_and_lut(spark, st, query_vec, nprobe: int, per_sub: int):
     import numpy as np
     import pandas as pd
 
-    fast = os.environ.get("EHS_FAST_SUMS", "") == "1"
+    fast = fast_sums()
     q = np.asarray(list(query_vec), dtype=np.float64)
     if not np.isfinite(q).all():
         return None, None

@@ -112,32 +112,25 @@ def lsh_neardup_pairs(
     deduplicated on (id_a, id_b) before scoring so each survives exactly once
     regardless of how many tables bucket it together.
 
-    Plan shape per table: one equi-join on the bucket column; union across
-    tables; dropDuplicates = one shuffle on the pair key; scoring is a
-    map-side JVM lambda. The distance computation never touches Python.
+    Scoring is a map-side JVM lambda; the distance computation never
+    touches Python.
 
-    r16 (guide §2.4 shuffle fewer bytes, §7.2 duplicated subtrees): the
-    candidate stage now carries ONLY the id pair — the old form dragged
-    both 64-dim arrays through all T unions and the dropDuplicates
-    exchange (hundreds of bytes per candidate per side) — and the T
-    per-table self-joins collapse into ONE equi-join on the exploded
-    (table, bucket) key: each row emits its T bucket assignments via
-    posexplode and pairs colliding in ANY table meet on the composite
-    key, the identical candidate multiset the union produced (measured:
-    the 16-way union-of-joins plan alone cost ~5.8 s of Catalyst
+    r16 (guide §2.4 shuffle fewer bytes, §7.2 duplicated subtrees): the T
+    per-table self-joins collapse into ONE :func:`dedup.band_pairs` over the
+    exploded (table, bucket) key: each row emits its T bucket assignments
+    via posexplode and pairs colliding in ANY table meet on the composite
+    key, the identical candidate set the union of per-table joins produced
+    (measured: the 16-way union-of-joins plan alone cost ~5.8 s of Catalyst
     analysis per call). Vectors and per-vector norms re-attach by unique
-    id AFTER dedup, broadcast when the corpus scan is provably tiny
-    (layout.broadcast_if_tiny; plain equi-join at production sizes),
-    with the skinny deduped pair frame explicitly repartitioned to
-    session parallelism so the per-pair cosine fold never collapses onto
-    the few AQE-coalesced byte-tiny partitions. Same candidate set, same
-    cosine value → identical rows.
+    id AFTER the id-pair dedup, broadcast when the corpus scan is provably
+    tiny (layout.broadcast_if_tiny; plain equi-join at production sizes).
+    Same candidate set, same cosine value → identical rows.
     """
     from ..layout import broadcast_if_tiny, fan_out
     from ._ckpt import tracked_persist
+    from .dedup import band_pairs
 
     spark = emb.sparkSession
-    par = spark.sparkContext.defaultParallelism
     tagged = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     # Hyperplanes travel as broadcast DATA (one row holding the T·planes
     # nested double array), not as inlined literals: the literal form put
@@ -172,35 +165,18 @@ def lsh_neardup_pairs(
     # the cache, fills are per-partition-locked) — measured 8.3-8.5 s →
     # 7.25-7.38 s isolated cold at sf0.1, mk 2.5 → 1.9 s; rows identical
     # (exceptAll = 0 both directions).
-    banded = tracked_persist(
-        fan_out(tagged, "id")
-        .crossJoin(F.broadcast(hrow))
-        .select(
-            "id",
-            F.posexplode(
-                F.array(*[_bucket(t) for t in range(tables)])
-            ).alias("table", "bucket"),
+    cands = band_pairs(
+        tracked_persist(
+            fan_out(tagged, "id")
+            .crossJoin(F.broadcast(hrow))
+            .select(
+                "id",
+                F.posexplode(
+                    F.array(*[_bucket(t) for t in range(tables)])
+                ).alias("band", "bkey"),
+            )
         )
     )
-    # numbered repartition on the join key: satisfies the equi-join's
-    # distribution requirement directly (no extra exchange) and pins the
-    # candidate-generation stage at session parallelism — the byte-tiny
-    # band shuffle would otherwise AQE-coalesce to ~1 partition and the
-    # whole pair blow-up + dedup feed would run on one core
-    banded = banded.repartition(par, "table", "bucket")
-    l, r = banded.alias("l"), banded.alias("r")
-    cands = (
-        l.join(
-            r,
-            (F.col("l.table") == F.col("r.table"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-    )
-    if tables > 1:
-        cands = cands.dropDuplicates(["id_a", "id_b"])
-    cands = cands.repartition(par, "id_a", "id_b")
     # per-VECTOR norms once in the attach dim (identical decimal fold on the
     # identical array → identical doubles), not per pair — 2 of cosine's 3
     # folds leave the pair stream

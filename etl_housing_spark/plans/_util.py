@@ -35,45 +35,12 @@ documented domain and is property-tested with that edge excluded.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..functions.vectors import fast_sums
+
 DEC = "decimal(18,6)"
-
-
-def fast_sums() -> bool:
-    """Production fast mode: ``EHS_FAST_SUMS=1`` switches :func:`dsum` /
-    :func:`davg` / :func:`dsum_wide` to plain double SUM/AVG.
-
-    The decimal fold exists to make every aggregate BIT-IDENTICAL to the
-    DuckDB oracle (order-free accumulation) — the verification contract,
-    not a numerical-accuracy need. A deployment that does not diff against
-    an oracle flips this on and erases the decimal tax (1.4–6.3× per
-    sum-heavy query, q_pricing_summary 6.3×, measured at sf10 — table in
-    BASELINE.md; since r13 the switch also covers the vector family's
-    array folds, functions/vectors._dec_sum — k-means assignment, SemDeDup
-    cosine, ADC scoring); results then agree with the exact sum to double
-    round-off on the documented 6dp domain (|Δ|/Σ ≲ n·2⁻⁵³ — at 1e12 rows
-    still ~1e-4 relative worst-case, ~1e-10 typical random-sign error).
-    That round-off bound holds for the SUMS themselves; consumers that
-    pass a fast sum through a discrete decision — k-means argmin, a
-    SemDeDup/near-dup threshold, an ADC top-k cut — can see a near-tied
-    comparison flip, so fast mode there can change a cluster assignment
-    or top-k member outright (still valid-quality output, but discretely
-    different, not a round-off delta; ADVICE r13).
-
-    Scope and timing: the flag is read by each dsum()/davg() CALL during
-    driver-side plan construction — set it before building the query and
-    don't toggle it concurrently, or a single plan can mix modes. It does
-    NOT rewrite SQL-STRING helpers (``sql_dsum``/``sql_davg``): those
-    build the DuckDB oracle texts (which must stay exact by definition)
-    and the one Spark-side spark.sql() consumer (q_scalar_subquery, whose
-    WHERE comparison wants order-free determinism). DEFAULT is exact mode;
-    the correctness driver never sets the variable, and tests/conftest.py
-    fails fast if it leaks into a verification session."""
-    return os.environ.get("EHS_FAST_SUMS", "") == "1"
 
 
 def dsum(col: Column | str) -> Column:

@@ -22,18 +22,12 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..layout import fan_out
 from ..operators._ckpt import tracked_persist
+from ..operators.dedup import band_pairs, ngrams, shingles
 from ..sources.warehouse import sql_zorder_key
 from ._util import sql_davg, sql_dsum
 from .registry import query
 
-# -- shared shingle expressions (same construction q_minhash_portable uses) --
-
-_SHINGLE_SPARK = (
-    "CASE WHEN size(split(text, ' ')) >= 3 THEN "
-    "transform(sequence(0, size(split(text, ' ')) - 3), "
-    "i -> concat_ws(' ', split(text, ' ')[i], split(text, ' ')[i+1], split(text, ' ')[i+2])) "
-    "ELSE array(text) END"
-)
+# -- shared shingle expression (same construction q_minhash_portable uses) --
 
 _SHINGLE_DUCK = """
     SELECT doc_id, unnest(list_distinct(
@@ -68,23 +62,7 @@ def shingles_from(docs: DataFrame) -> DataFrame:
     core, so a caller with a RESTRICTED corpus (the density-safe consensus
     feeds keepers only) pays the explode for its subset instead of the
     whole table. Shingles are per-doc, so restriction commutes."""
-    # bound-token construction (the q_minhash_portable lesson): Catalyst
-    # does not CSE inside lambda bodies, so the inline _SHINGLE_SPARK form
-    # evaluates split() 3x per shingle index; binding the token array in
-    # its own projection evaluates it once per doc. Values are identical —
-    # only this helper builds the frame, so the construction is free to be
-    # the fast one.
-    toks = docs.select("doc_id", F.split(F.col("text"), " ").alias("t"))
-    shingles = F.when(
-        F.size(F.col("t")) >= 3,
-        F.expr(
-            "transform(sequence(0, size(t) - 3), "
-            "i -> concat_ws(' ', t[i], t[i+1], t[i+2]))"
-        ),
-    ).otherwise(F.array(F.array_join(F.col("t"), " ")))
-    return toks.select(
-        "doc_id", F.explode(F.array_distinct(shingles)).alias("sh")
-    )
+    return shingles(docs, "doc_id", "text", 3).withColumnRenamed("id", "doc_id")
 
 
 @query(
@@ -456,11 +434,13 @@ _MATCH_SPARK = " + ".join(
 )
 
 
-def _mh_pairs_oracle() -> str:
-    from .dedup_queries import _mh_oracle
+def _mh_pairs_oracle(oph: bool = False) -> str:
+    """Oracle of _mh_pairs_from over the k-wise (q_minhash_portable) or the
+    one-permutation (q_minhash_oph_portable) signature CTE."""
+    from .dedup_queries import _mh_oracle, _oph_oracle
 
     return f"""
-    WITH sigs AS ({_mh_oracle()}),
+    WITH sigs AS ({_oph_oracle() if oph else _mh_oracle()}),
     bands AS (
       {_BAND_UNION}),
     pairs AS (
@@ -495,21 +475,21 @@ def q_minhash_pairs_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _mh_pairs_from(q_minhash_portable(spark, sf_dir))
 
 
+def _mh_bands(sigs: DataFrame) -> DataFrame:
+    """The 4 band × 4 row table of a (doc_id, sig_0..sig_15) frame, as the
+    (id, band, bkey) input of operators.dedup.band_pairs."""
+    return sigs.selectExpr("doc_id AS id", _BAND_STACK).withColumnRenamed(
+        "b", "band"
+    )
+
+
 def _mh_pairs_from(sigs: DataFrame) -> DataFrame:
     """MinHash-LSH candidate pairs + n_match/est_jaccard over a signature
     frame (doc_id, sig_0..sig_15) — the q_minhash_pairs_portable body as a
     reusable core, so the density-safe consensus can feed it a
     keeper-restricted signature frame (signatures are per-doc, banding and
     matching are pairwise, so restriction commutes with detection)."""
-    bands = sigs.selectExpr("doc_id", _BAND_STACK)
-    a = bands.select(F.col("doc_id").alias("id_a"), "b", "bkey")
-    b2 = bands.select(F.col("doc_id").alias("id_b"), "b", "bkey")
-    pairs = (
-        a.join(b2, ["b", "bkey"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    pairs = band_pairs(_mh_bands(sigs))
     sa = sigs.select(
         F.col("doc_id").alias("id_a"), *[F.col(f"sig_{i}").alias(f"a_{i}") for i in range(16)]
     )
@@ -744,29 +724,16 @@ def q_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             + ", ".join(f"sig_{k * r + j}" for j in range(r))
             + ")"
             for k in range(b)
-        ) + ") AS (bd, bkey)"
-        bands = sigs.selectExpr("doc_id", stack)
-        c = (
-            bands.select(F.col("doc_id").alias("id_a"), "bd", "bkey")
-            .join(
-                bands.select(F.col("doc_id").alias("id_b"), "bd", "bkey"),
-                ["bd", "bkey"],
-            )
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select(
-                F.lit(f"b{b}r{r}").alias("layout"), "id_a", "id_b"
-            )
-            .distinct()
+        ) + ") AS (band, bkey)"
+        c = band_pairs(sigs.selectExpr("doc_id AS id", stack)).select(
+            F.lit(f"b{b}r{r}").alias("layout"), "id_a", "id_b"
         )
         cands = c if cands is None else cands.unionByName(c)
     cands = cands.withColumn("ca", F.lit(1))
-    layouts = spark.createDataFrame(
-        [(f"b{b}r{r}",) for b, r in _SWEEP_LAYOUTS], "layout string"
-    )
-    truth = (
-        _jaccard_decile_truth(spark, sf_dir)
-        .crossJoin(F.broadcast(layouts))
-        .withColumn("tr", F.lit(1))
+    # each truth pair once per layout, in-row: no join, no driver-built frame
+    layouts = F.array(*[F.lit(f"b{b}r{r}") for b, r in _SWEEP_LAYOUTS])
+    truth = _jaccard_decile_truth(spark, sf_dir).select(
+        F.explode(layouts).alias("layout"), "id_a", "id_b", "d", F.lit(1).alias("tr")
     )
     joined = truth.join(cands, ["layout", "id_a", "id_b"], "full_outer").select(
         "layout",
@@ -1322,27 +1289,22 @@ def _simhash_sql_cte() -> str:
     tags=("dedup", "pipeline"),
 )
 def q_simhash_pairs_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sigs = q_simhash_portable(spark, sf_dir)
-    bands = sigs.select(
-        "doc_id",
-        "simhash",
-        F.explode(F.sequence(F.lit(0), F.lit(3))).alias("b"),
-    ).withColumn("chunk", F.expr("shiftright(simhash, 8 * b) & 255"))
-    a = bands.select(
-        F.col("doc_id").alias("id_a"), F.col("simhash").alias("sh_a"), "b", "chunk"
+    # three consumers (band table + both attach sides): one signature pass
+    sigs = tracked_persist(q_simhash_portable(spark, sf_dir))
+    pairs = band_pairs(
+        sigs.select(
+            F.col("doc_id").alias("id"),
+            F.explode(F.sequence(F.lit(0), F.lit(3))).alias("band"),
+            "simhash",
+        ).select("id", "band", F.expr("shiftright(simhash, 8 * band) & 255").alias("bkey"))
     )
-    c = bands.select(
-        F.col("doc_id").alias("id_b"), F.col("simhash").alias("sh_b"), "b", "chunk"
-    )
-    pairs = (
-        a.join(c, ["b", "chunk"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "sh_a", "id_b", "sh_b")
-        .distinct()
-    )
+    sa = sigs.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("sh_a"))
+    sb = sigs.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("sh_b"))
     ham = F.expr("bit_count(sh_a ^ sh_b)")
     return (
-        pairs.filter(ham <= 3)
+        pairs.join(sa, "id_a")
+        .join(sb, "id_b")
+        .filter(ham <= 3)
         .select("id_a", "id_b", ham.cast("long").alias("hamming"))
     )
 
@@ -1403,8 +1365,10 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # §1.1), and the single-file scan ran it on one task; measured 4.5 s →
     # 1.1 s for the w build alone (metadata-driven no-op at production
     # file counts)
-    tok = fan_out(docs, "doc_id").select(
-        "doc_id", F.explode(F.expr(_SHINGLE_SPARK)).alias("t")
+    tok = (
+        fan_out(docs, "doc_id")
+        .select("doc_id", F.split("text", " ").alias("toks"))
+        .select("doc_id", F.explode(ngrams(F.col("toks"), 3)).alias("t"))
     )
     tf = tok.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("tf"))
     df = tf.groupBy("t").agg(F.count(F.lit(1)).alias("df")).filter(F.col("df") <= _MAX_DF)
@@ -2794,15 +2758,14 @@ def q_fineweb_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    # S5: near-dup drop — band-mate with a smaller surviving doc_id
-    sigs = q_minhash_portable(spark, sf_dir)
-    bands = sigs.selectExpr("doc_id", _BAND_STACK)
-    sb = bands.join(s4.filter(F.col("p4") == 1).select("doc_id"), "doc_id")
-    b2 = sb.select(F.col("doc_id").alias("id_b"), "b", "bkey")
+    # S5: near-dup drop — a survivor with a smaller surviving band-mate is
+    # the id_b side of some survivor pair (distinct: it may have several)
+    sigs = q_minhash_portable(spark, sf_dir).join(
+        s4.filter(F.col("p4") == 1).select("doc_id"), "doc_id"
+    )
     drp = (
-        sb.join(b2, ["b", "bkey"])
-        .filter(F.col("id_b") < F.col("doc_id"))
-        .select("doc_id")
+        band_pairs(_mh_bands(sigs))
+        .select(F.col("id_b").alias("doc_id"))
         .distinct()
         .withColumn("hit", F.lit(1))
     )
@@ -3137,29 +3100,9 @@ def q_lm_heldout_jm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oph_pairs_oracle() -> str:
-    from .dedup_queries import _oph_oracle
-
-    return f"""
-    WITH sigs AS ({_oph_oracle()}),
-    bands AS (
-      {_BAND_UNION}),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
-      FROM bands a JOIN bands b2
-        ON a.b = b2.b AND a.bkey = b2.bkey AND a.doc_id < b2.doc_id)
-    SELECT p.id_a, p.id_b,
-           CAST({_MATCH_DUCK} AS BIGINT) AS n_match,
-           ({_MATCH_DUCK}) / CAST(16 AS DOUBLE) AS est_jaccard
-    FROM pairs p
-    JOIN sigs sa ON p.id_a = sa.doc_id
-    JOIN sigs sb ON p.id_b = sb.doc_id
-    """
-
-
 @query(
     "q_oph_pairs",
-    oracle=_oph_pairs_oracle(),
+    oracle=_mh_pairs_oracle(oph=True),
     description="the MinHash→LSH candidate pipeline on ONE-PERMUTATION "
     "signatures (q_minhash_oph_portable): identical 4-band × 4-row banding, "
     "candidate equi-joins and agreement estimate as q_minhash_pairs_portable "
@@ -3174,32 +3117,7 @@ def q_oph_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three consumers (band stack + both verification sides) — one
     # materialization of the signature pass, the q_minhash_pairs_portable
     # convention; without it the explode+16-min agg plan runs per consumer
-    sigs = tracked_persist(q_minhash_oph_portable(spark, sf_dir))
-    bands = sigs.selectExpr("doc_id", _BAND_STACK)
-    a = bands.select(F.col("doc_id").alias("id_a"), "b", "bkey")
-    b2 = bands.select(F.col("doc_id").alias("id_b"), "b", "bkey")
-    pairs = (
-        a.join(b2, ["b", "bkey"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sa = sigs.select(
-        F.col("doc_id").alias("id_a"), *[F.col(f"sig_{i}").alias(f"a_{i}") for i in range(16)]
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("id_b"), *[F.col(f"sig_{i}").alias(f"b_{i}") for i in range(16)]
-    )
-    return (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.expr(f"CAST({_MATCH_SPARK} AS BIGINT)").alias("n_match"),
-            F.expr(f"({_MATCH_SPARK}) / CAST(16 AS DOUBLE)").alias("est_jaccard"),
-        )
-    )
+    return _mh_pairs_from(tracked_persist(q_minhash_oph_portable(spark, sf_dir)))
 
 
 def _oph_vs_kwise_oracle() -> str:

@@ -1407,21 +1407,10 @@ def q_image_neardup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ph = phash_media(resize_media(media, 9, 8, strict=True), strict=True).select(
         "media_id", "phash_hi", "phash_lo"
     )
-    a = ph.select(
-        F.col("media_id").alias("id_a"),
-        F.col("phash_hi").alias("ha"),
-        F.col("phash_lo").alias("la"),
-    )
-    b = ph.select(
-        F.col("media_id").alias("id_b"),
-        F.col("phash_hi").alias("hb"),
-        F.col("phash_lo").alias("lb"),
-    )
-    hi_band = a.join(b, a["ha"] == b["hb"]).filter(F.col("id_a") < F.col("id_b"))
-    lo_band = a.join(b, a["la"] == b["lb"]).filter(F.col("id_a") < F.col("id_b"))
-    cand = hi_band.unionByName(lo_band).distinct()
+    # the two 32-bit halves are the two bands
     return (
-        cand.withColumn("hamming", _phash_hamming().cast("bigint"))
+        _banded_cands_spark(ph, 32)
+        .withColumn("hamming", _phash_hamming().cast("bigint"))
         .filter(F.col("hamming") <= 6)
         .select("id_a", "id_b", "hamming")
     )
@@ -1475,38 +1464,21 @@ def _banded_cand_duck(width: int, src: str = "ph") -> str:
 
 def _banded_cands_spark(ph, width: int):
     """Spark candidate pairs for one band layout: stack-unpivot the hash
-    into (bd, bval) rows, self-equi-join on the composite band key (never
-    all-pairs — the plan is the MinHash-LSH band-bucket shape), then
-    re-attach both hash halves by id so the exact distance needs no
-    corpus rescan.
+    into (band, bkey) rows, take operators.dedup.band_pairs (never
+    all-pairs — the MinHash-LSH band-bucket shape), then re-attach both
+    hash halves by id so the exact distance needs no corpus rescan.
 
-    r16 shape (the minhash_near_dups pattern, guide §2.3, §2.5, §7.2):
-    the hash frame is tracked_persist-ed (both candidate sides + both
-    attach dims consume it — phash_media's PNG-decode mapInPandas chain
-    would otherwise re-run per consumer); the candidate join and distinct
-    carry ONLY the id pair (the hash halves are functionally dependent on
-    the ids — identical pair set); the streamed side and the deduped pair
-    frame are explicitly repartitioned so candidate generation and the
-    popcount stage never collapse onto byte-tiny AQE-coalesced
-    partitions; hashes re-attach broadcast when the source scan is
-    provably tiny, plain equi-join at production sizes. Same candidate
-    multiset, same (ha, la, hb, lb) values → identical rows."""
+    The hash frame is tracked_persist-ed: the band table and both attach
+    dims consume it, and phash_media's PNG-decode mapInPandas chain would
+    otherwise re-run per consumer. Hashes re-attach broadcast when the
+    source scan is provably tiny, plain equi-join at production sizes."""
     from ..layout import broadcast_if_tiny
     from ..operators._ckpt import tracked_persist
+    from ..operators.dedup import band_pairs
 
-    par = ph.sparkSession.sparkContext.defaultParallelism
     ph = tracked_persist(ph)
-    bands = ph.selectExpr("media_id", _phash_bands_spark(width)).repartition(
-        par, "media_id"
-    )
-    a = bands.select(F.col("media_id").alias("id_a"), "bd", "bval")
-    b = bands.select(F.col("media_id").alias("id_b"), "bd", "bval")
-    cand = (
-        a.join(b, ["bd", "bval"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .repartition(par, "id_a", "id_b")
+    cand = band_pairs(
+        ph.selectExpr("media_id", _phash_bands_spark(width)).toDF("id", "band", "bkey")
     )
     ha = broadcast_if_tiny(
         ph.select(

@@ -7,7 +7,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_housing_spark.functions.cleaning import clean_listings
-from etl_housing_spark.operators.dedup import exact_dedup, minhash_near_dups, simhash
+from etl_housing_spark.operators.dedup import (
+    exact_dedup,
+    minhash_near_dups,
+    simhash,
+    simhash_near_dups,
+)
 from etl_housing_spark.operators.encode import get_dummies, keyword_flags
 from etl_housing_spark.operators.multimodal import frame_sample, synthesize_media
 from etl_housing_spark.operators.similarity import topk_bruteforce
@@ -37,6 +42,32 @@ def test_minhash_single_doc_no_pairs(spark):
     one = spark.createDataFrame([(1, "only document here")], "doc_id long, text string")
     assert minhash_near_dups(one, "doc_id", "text").count() == 0
     assert simhash(one, "doc_id", "text").count() == 1
+
+
+def test_minhash_rejects_more_bands_than_hashes(spark):
+    # rows = 0: every doc would hash its empty band to one bucket
+    one = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="bands"):
+        minhash_near_dups(one, "doc_id", "text", num_hashes=4, bands=8)
+
+
+def test_minhash_rejects_bands_not_dividing_hashes(spark):
+    one = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="bands"):
+        minhash_near_dups(one, "doc_id", "text", num_hashes=16, bands=3)
+
+
+def test_simhash_rejects_max_hamming_at_chunks(spark):
+    # pigeonhole needs max_hamming < chunks
+    one = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="pigeonhole"):
+        simhash_near_dups(one, "doc_id", "text", max_hamming=4, chunks=4)
+
+
+def test_simhash_rejects_chunks_not_dividing_bits(spark):
+    one = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="pigeonhole"):
+        simhash_near_dups(one, "doc_id", "text", max_hamming=2, chunks=5)
 
 
 def test_topk_k_larger_than_corpus(spark):

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_housing_spark.operators.dedup import (
+    band_pairs,
     exact_dedup,
     minhash_near_dups,
     ngram_jaccard_pairs,
@@ -79,9 +80,38 @@ def test_minhash_near_dups(docs):
 def test_simhash_near_dups(docs):
     sh = {r.id: r.simhash for r in simhash(docs, "doc_id", "text").collect()}
     assert sh[1] == sh[4]  # identical text → identical simhash
-    pairs = simhash_near_dups(docs, "doc_id", "text", max_hamming=6)
+    pairs = simhash_near_dups(docs, "doc_id", "text", max_hamming=6, chunks=8)
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     assert (1, 4) in got
+
+
+def test_band_pairs_matches_bruteforce(spark):
+    """band_pairs law: exactly the distinct id_a < id_b pairs sharing a
+    (band, bkey), against a brute-force Python reference."""
+    from itertools import combinations
+
+    rows = [
+        (1, 0, 7), (2, 0, 7), (1, 1, 9), (2, 1, 9),  # share two bands: once
+        (3, 0, 5), (4, 1, 5),  # equal key, different bands: no pair
+        *[(i, 2, 11) for i in (10, 11, 12, 13, 14)],  # one bucket of 5 ids
+        (20, 0, 8),  # alone in its bucket
+    ]
+    banded = spark.createDataFrame(rows, "id long, band int, bkey long")
+    got = sorted((r.id_a, r.id_b) for r in band_pairs(banded).collect())
+    want = sorted(
+        {
+            (min(x[0], y[0]), max(x[0], y[0]))
+            for x, y in combinations(rows, 2)
+            if x[1:] == y[1:] and x[0] != y[0]
+        }
+    )
+    assert got == want
+    assert (1, 2) in got and (3, 4) not in got
+    assert sum(1 for p in got if p[0] >= 10) == 10  # C(5, 2)
+    assert all(a < b for a, b in got)
+    assert band_pairs(spark.createDataFrame([], "id long, band int, bkey long")).count() == 0
+    with pytest.raises(ValueError, match="exactly"):  # payload must not ride the join
+        band_pairs(banded.withColumn("sig", F.lit(1)))
 
 
 def test_skinny_pair_attach_matches_reference(spark, docs):
@@ -107,7 +137,11 @@ def test_skinny_pair_attach_matches_reference(spark, docs):
         assert r.id_a < r.id_b
     # simhash: hamming re-derivable from the fingerprint frame per pair
     sh = {r.id: r.simhash for r in simhash(docs, "doc_id", "text").collect()}
-    for r in simhash_near_dups(docs, "doc_id", "text", max_hamming=32).collect():
+    # 32 one-bit chunks: the widest valid layout, so nearly every pair is a
+    # candidate and the distance filter keeps all but complements
+    for r in simhash_near_dups(
+        docs, "doc_id", "text", max_hamming=31, chunks=32
+    ).collect():
         assert r.hamming == bin(sh[r.id_a] ^ sh[r.id_b]).count("1")
 
 

@@ -10,6 +10,8 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
+
 from etl_housing_spark.plans import all_queries
 
 from .conftest import SF_SMOKE
@@ -230,8 +232,18 @@ def test_join_salted_no_cartesian(spark):
     assert "Python" not in plan
 
 
-def test_minhash_pairs_candidates_from_band_equi_join(spark):
-    plan = _plan(_q(spark, "q_minhash_pairs_portable"))
+@pytest.mark.parametrize(
+    "qid",
+    [
+        "q_minhash_pairs_portable",
+        "q_oph_pairs",
+        "q_lsh_band_sweep",
+        "q_image_neardup_banded",
+        "q_image_neardup_phash",
+    ],
+)
+def test_minhash_pairs_candidates_from_band_equi_join(spark, qid):
+    plan = _plan(_q(spark, qid))
     # candidate pairs come from band-bucket equi-joins, never all-pairs
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
