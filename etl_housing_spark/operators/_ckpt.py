@@ -20,18 +20,25 @@ Concurrency (r17, ADVICE r16 #3): the pinned-id lookup is now EXACT — a
 checkpointed Dataset's analyzed plan is a ``LogicalRDD`` wrapping precisely
 the persisted internal RDD, so the id comes straight off the plan instead
 of a before/after diff of the persistent-RDD map. Concurrent
-tracked_local_checkpoint calls (operators/_ckpt.concurrent_checkpoints)
+_local_checkpoint calls (operators/_ckpt.concurrent_checkpoints)
 therefore attribute ids correctly even while another driver thread runs a
 checkpoint+release cycle (the r16 diff could attribute a concurrent leg's
 checkpoint to the wrong caller, and a loop's release-on-supersede would
 then truncate a live leg unrecoverably). The snapshot-diff survives only
 as a fallback for engines whose plan shape differs, with the original
 single-threaded-driver caveat.
+
+Iterative loops hand their round residency to :class:`Generations`, which
+states the policy once; nothing outside this module pins or releases a
+checkpoint by id.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+
+# Rounds between eager lineage-truncating checkpoints in a Generations loop.
+CHECKPOINT_EVERY = 4
 
 
 def _persistent_ids(spark: SparkSession) -> set[int]:
@@ -39,7 +46,7 @@ def _persistent_ids(spark: SparkSession) -> set[int]:
     return {int(k) for k in jmap.keySet().toArray()}
 
 
-def tracked_local_checkpoint(df: DataFrame) -> tuple[DataFrame, set[int]]:
+def _local_checkpoint(df: DataFrame) -> tuple[DataFrame, set[int]]:
     """Eager localCheckpoint + the RDD id(s) it pinned, for later release."""
     spark = df.sparkSession
     before = _persistent_ids(spark)
@@ -55,7 +62,7 @@ def tracked_local_checkpoint(df: DataFrame) -> tuple[DataFrame, set[int]]:
         # leg's fresh checkpoint — harmless where it happens
         # (concurrent_checkpoints fails the whole call anyway; registry
         # double-release is a no-op).
-        release_rdd_ids(spark, _persistent_ids(spark) - before)
+        _release_ids(spark, _persistent_ids(spark) - before)
         raise
     try:
         # exact: the checkpointed plan IS a LogicalRDD over the pinned RDD
@@ -67,7 +74,7 @@ def tracked_local_checkpoint(df: DataFrame) -> tuple[DataFrame, set[int]]:
         return out, _persistent_ids(spark) - before
 
 
-def release_rdd_ids(spark: SparkSession, ids: set[int]) -> None:
+def _release_ids(spark: SparkSession, ids: set[int]) -> None:
     """Unpersist checkpoint RDDs by id (no-op for ids already gone).
 
     Non-blocking: the block removal completes asynchronously on the
@@ -99,11 +106,13 @@ def release_rdd_ids(spark: SparkSession, ids: set[int]) -> None:
 #      CacheManager, so even ``spark.catalog.clearCache()`` cannot release
 #      it — only the persistent-RDD map can (module docstring).
 #
-# Both register here at creation; ``clear_pipeline_cache`` drains the
-# registry — the session-level lifecycle hook bench.py calls between queries
-# and tests/test_scale_techniques.py's leak guard asserts on. Draining while
-# a tracked frame is still mid-action is the caller's bug (same
-# single-threaded-driver contract as tracked_local_checkpoint).
+# Both register here at creation — Generations' round persists and
+# checkpoints too, and leave when a newer generation releases them;
+# ``clear_pipeline_cache`` drains the registry — the session-level lifecycle
+# hook bench.py calls between queries and tests/test_scale_techniques.py's
+# leak guard asserts on. Draining while a tracked frame is still mid-action
+# is the caller's bug (same single-threaded-driver contract as
+# _local_checkpoint).
 # ---------------------------------------------------------------------------
 
 _TRACKED_FRAMES: list[DataFrame] = []
@@ -122,18 +131,21 @@ def tracked_persist(df: DataFrame) -> DataFrame:
     return out
 
 
-def register_tracked_frame(df: DataFrame) -> DataFrame:
-    """Register an ALREADY-persisted frame (e.g. an iterative operator's
-    returned generation) for session-scope release."""
-    _TRACKED_FRAMES.append(df)
-    return df
+def _pin(df: DataFrame) -> tuple[DataFrame, tuple[SparkSession, set[int]]]:
+    """Eager localCheckpoint whose pinned ids enter the registry at once;
+    returns the checkpoint and its registry entry."""
+    out, ids = _local_checkpoint(df)
+    entry = (out.sparkSession, ids)
+    _TRACKED_CKPT.append(entry)
+    return out, entry
 
 
-def register_tracked_ckpt_ids(spark: SparkSession, ids: set[int]) -> None:
-    """Register checkpoint RDD ids (an iterative operator's final
-    generation) for session-scope release."""
-    if ids:
-        _TRACKED_CKPT.append((spark, ids))
+def _forget(registry: list, entry: object) -> None:
+    # list.remove is one atomic call: safe beside concurrent appends/pops
+    try:
+        registry.remove(entry)
+    except ValueError:  # already drained by clear_pipeline_cache
+        pass
 
 
 def single_shot_checkpoint(df: DataFrame) -> DataFrame:
@@ -141,9 +153,77 @@ def single_shot_checkpoint(df: DataFrame) -> DataFrame:
     materialize-the-edge-list-once pattern, minus the storage leak: the
     pinned RDD ids go into the tracked registry so clear_pipeline_cache can
     release what DataFrame.unpersist()/clearCache() cannot."""
-    out, ids = tracked_local_checkpoint(df)
-    _TRACKED_CKPT.append((out.sparkSession, ids))
-    return out
+    return _pin(df)[0]
+
+
+class Generations:
+    """Round residency of one iterative loop: the single owner of when a
+    round is persisted, when its lineage is cut, and when superseded
+    storage is released.
+
+    - **Cadence.** ``step`` is called once per generation; the loop's seed
+      frame is generation 0. Generation g is a lazy tracked persist, except
+      every ``CHECKPOINT_EVERY``-th (g > 0), which is an eager
+      localCheckpoint. Persists let the caller's first action (or the
+      loop's own convergence count) materialize the chain bottom-up with
+      each generation evaluated once, instead of one driver-blocking job
+      per round; the periodic checkpoint bounds plan depth — unbounded,
+      Catalyst analysis dominates by round ~10 and the driver heap dies.
+    - **Final round.** ``step(df, last=True)`` never checkpoints: an eager
+      checkpoint re-caches every partition, and the caller's first action
+      materializes the persist anyway.
+    - **Release on supersede.** A checkpoint has materialized every persist
+      beneath it, so it releases (non-blocking) the persists stepped since
+      the previous checkpoint and that checkpoint's ids — nothing references
+      them anymore. ``checkpoint`` does the same outside the cadence: a loop
+      that cuts lineage every round calls only it; it is a no-op on the
+      current checkpoint, so ``checkpoint(latest)`` at exit ensures a
+      checkpointed result without a second job.
+    - **Registration at pin time.** Every persist and checkpoint enters the
+      session registry the moment it is pinned and leaves it when released
+      on supersede, so a loop that raises mid-round leaves nothing
+      ``clear_pipeline_cache`` cannot drain, and what a finished loop still
+      holds (the returned generation) drains at session scope.
+    - **Bound.** At most ``CHECKPOINT_EVERY + 1`` generations are resident:
+      the latest checkpoint plus the persists stepped since (the +1 is a
+      final round that ``last`` kept a persist).
+
+    Placement moves bytes, never expressions: values are the same at any
+    cadence. ``release`` frees everything still held, for loop-scoped
+    inputs that must not outlive the call.
+    """
+
+    def __init__(self) -> None:
+        self._next = 0  # generation number of the next step
+        self._persists: list[DataFrame] = []
+        self._ckpt: DataFrame | None = None
+        self._entry: tuple[SparkSession, set[int]] | None = None
+
+    def step(self, df: DataFrame, last: bool = False) -> DataFrame:
+        g, self._next = self._next, self._next + 1
+        if g and g % CHECKPOINT_EVERY == 0 and not last:
+            return self.checkpoint(df)
+        out = tracked_persist(df)
+        self._persists.append(out)
+        return out
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        if df is self._ckpt:
+            return df
+        out, entry = _pin(df)
+        self.release()
+        self._ckpt, self._entry = out, entry
+        return out
+
+    def release(self) -> None:
+        for f in self._persists:
+            f.unpersist()
+            _forget(_TRACKED_FRAMES, f)
+        self._persists.clear()
+        if self._entry is not None:
+            _release_ids(*self._entry)
+            _forget(_TRACKED_CKPT, self._entry)
+        self._ckpt = self._entry = None
 
 
 def concurrent_checkpoints(frames: list[DataFrame]) -> list[DataFrame]:
@@ -188,7 +268,7 @@ def clear_pipeline_cache(spark: SparkSession | None = None, blocking: bool = Fal
     while _TRACKED_CKPT:
         sess, ids = _TRACKED_CKPT.pop()
         try:
-            release_rdd_ids(sess, ids)
+            _release_ids(sess, ids)
             n += 1
         except Exception:
             pass

@@ -440,9 +440,7 @@ def minhash_near_dups(
     )
 
 
-def dedup_clusters(
-    pairs: DataFrame, max_iters: int = 20, checkpoint_every: int = 4
-) -> DataFrame:
+def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     """Connected components over near-dup pairs → (id, cluster_id) with
     cluster_id = min member id (the canonical survivor).
 
@@ -452,10 +450,10 @@ def dedup_clusters(
     min-propagation core. Convergence in O(diameter) rounds; near-dup
     clusters are almost always tiny cliques, so 2-3 rounds in practice
     (``max_iters`` bounds pathology). Each iteration is one shuffle on id;
-    the edge list is materialized ONCE and each round's label frame is
-    eagerly ``localCheckpoint``-ed, which truncates the logical plan —
-    without this the plan tree (and codegen) doubles every round and the
-    driver heap dies around round ~10 at sf0.1 (observed). On a real
+    the edge list is materialized ONCE and the label rounds' lineage is
+    cut by periodic eager ``localCheckpoint``s — without them the plan tree
+    (and codegen) doubles every round and the driver heap dies around
+    round ~10 at sf0.1 (observed). On a real
     cluster prefer ``checkpoint()`` with a reliable checkpoint dir:
     localCheckpoint trades executor-loss tolerance for speed.
 
@@ -464,35 +462,22 @@ def dedup_clusters(
     (singletons are their own cluster by definition — union them in from
     the corpus if a total assignment is needed).
 
-    Storage discipline (the r05/r06 leak class, fixed): interior label
-    generations are released before returning, the edge checkpoint is
-    released before returning, and only the RETURNED generation — always
-    an eager checkpoint, so it survives the session-scope cache drain and
-    never needs the released edges' lineage — stays resident per call
-    (``DataFrame.unpersist()`` cannot release checkpoints, see
-    operators/_ckpt.py, so the caller cannot free it explicitly either;
-    Spark's ContextCleaner reclaims it once the caller drops the frame and
-    the JVM GCs it — verified in-session). Per-invocation residency is
-    O(checkpoint_every) node-sized frames mid-loop, O(1) at return.
-
-    r17 round cadence (VERDICT r16 ask #5, guide §5 driver round-trips):
-    the r16 loop ran an eager localCheckpoint job PLUS the convergence
-    count per round — two driver-blocking jobs per propagation round, the
-    measured cost unit once the edge mining was one-shot. Rounds now
-    persist LAZILY and the per-round convergence count itself materializes
-    the generation through the cache (the groupBy shuffle inside each
-    round forces the previous generation fully, so no work is deferred
-    past one round); lineage is truncated by an eager checkpoint only
-    every ``checkpoint_every`` rounds (plan depth stays bounded — the r16
-    death-by-analysis at ~10 unbounded rounds cannot return) and once at
-    exit for the returned generation. One job per round + one checkpoint
-    per K rounds instead of two jobs per round; identical label values
-    (the checkpoint/persist placement moves bytes, never expressions).
+    Storage (the r05/r06 leak class, fixed): rounds follow the
+    operators/_ckpt.Generations policy — each round's ONE driver-blocking
+    job is its convergence count, which materializes the lazily persisted
+    generation through the cache (the groupBy shuffle inside each round
+    forces the previous generation fully, so no work is deferred past one
+    round). The edge checkpoint and interior generations are released
+    before returning; the RETURNED generation is always an eager
+    checkpoint — it survives the session-scope persist drain and never
+    needs the released edges' lineage — registered with the session
+    registry, so ``clear_pipeline_cache`` releases it: do not re-collect
+    the result after a drain.
     """
-    from ._ckpt import release_rdd_ids, tracked_local_checkpoint, tracked_persist
+    from ._ckpt import Generations
 
-    spark = pairs.sparkSession
-    edges, edges_ids = tracked_local_checkpoint(
+    edge_gen, rounds = Generations(), Generations()
+    edges = edge_gen.checkpoint(
         # both orientations from ONE evaluation of the (possibly expensive)
         # pair pipeline (r16, guide §7.2 duplicated subtrees): the previous
         # union-of-two-selects re-mined the pairs once per branch INSIDE the
@@ -525,13 +510,11 @@ def dedup_clusters(
         # pre-keying the cache cannot pay until Spark preserves it.
         .distinct()
     )
-    labels = tracked_persist(
+    labels = rounds.step(
         edges.groupBy(F.col("src").alias("id"))
         .agg(F.least(F.min("dst"), F.first("src")).alias("cluster_id"))
     )
-    labels_ids: set[int] = set()  # ids backing a checkpointed generation
-    pending: list[DataFrame] = [labels]  # lazy persists awaiting a boundary
-    for i in range(max_iters):
+    for _ in range(max_iters):
         # propagate: my new label = min(my label, min over neighbors' labels)
         neighbor_labels = (
             edges.join(
@@ -557,38 +540,20 @@ def dedup_clusters(
                 ),
             )
         )
-        if (i + 1) % checkpoint_every == 0:
-            # interior boundary: truncate lineage; the eager checkpoint has
-            # materialized every pending persist beneath it, so superseded
-            # generations release HERE (the pagerank pattern)
-            new_labels, new_ids = tracked_local_checkpoint(new_labels)
-            for g in pending:
-                g.unpersist()
-            pending.clear()
-            release_rdd_ids(spark, labels_ids)
-            labels_ids = new_ids
-        else:
-            new_labels = tracked_persist(new_labels)
-            pending.append(new_labels)
-        labels = new_labels
+        labels = rounds.step(new_labels)
         # the round's ONE driver-blocking job; on the converged round the
         # filter finds no row, which means it scanned — and cached — the
         # whole generation
         changed = labels.filter("chg").limit(1).count()
         if changed == 0:
             break
-    if pending:
-        # returned generation must be a checkpoint: it outlives this call's
-        # edge checkpoint AND the session-scope persist drain, and a persist
-        # would recompute through the released edges' truncated lineage.
-        # Reads the (now fully cached) final persist — one cheap job.
-        labels, final_ids = tracked_local_checkpoint(labels)
-        for g in pending:
-            g.unpersist()
-        pending.clear()
-        release_rdd_ids(spark, labels_ids)
-        labels_ids = final_ids
-    release_rdd_ids(spark, edges_ids)  # labels is a checkpoint: edges unneeded
+    # returned generation must be a checkpoint: it outlives the edge
+    # checkpoint AND the session-scope persist drain, and a persist would
+    # recompute through the released edges' truncated lineage. Reads the
+    # (now fully cached) final persist — one cheap job, none when the last
+    # round already checkpointed.
+    labels = rounds.checkpoint(labels)
+    edge_gen.release()  # labels is a checkpoint: edges unneeded
     return labels.select("id", "cluster_id")
 
 

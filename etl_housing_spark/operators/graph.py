@@ -11,14 +11,10 @@ Scale design: each PageRank iteration is one equi-join (ranks ⋈ edges on
 src — both sides hash-partitioned on the join key, so successive iterations
 reuse the same shuffle layout) plus one partial-agg groupBy(dst). Dangling
 mass (nodes with no out-edges) is a one-row aggregate broadcast back in-plan
-— no collect() in the loop. Lineage is truncated with localCheckpoint every
-few rounds, otherwise the plan tree grows exponentially and planning time
-dominates; rank generations persist LAZILY and superseded storage releases
-at checkpoint boundaries (O(checkpoint_every) node-sized frames resident)
-or at session scope — the caller's first action materializes the whole
-chain in ONE job instead of one driver-blocking job per round (r16).
-Per-round work is one O(|E|/p)-per-task stage pair: the textbook
-distributed PageRank shape, good for any |E| that one shuffle can move.
+— no collect() in the loop. Round persistence, lineage truncation and
+release follow operators/_ckpt.Generations. Per-round work is one
+O(|E|/p)-per-task stage pair: the textbook distributed PageRank shape, good
+for any |E| that one shuffle can move.
 """
 
 from __future__ import annotations
@@ -26,12 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._ckpt import (
-    register_tracked_ckpt_ids,
-    register_tracked_frame,
-    release_rdd_ids,
-    tracked_local_checkpoint,
-)
+from ._ckpt import Generations, tracked_persist
 
 __all__ = ["pagerank", "degree_stats", "label_propagation"]
 
@@ -42,7 +33,6 @@ def pagerank(
     dst: str = "dst",
     damping: float = 0.85,
     iterations: int = 10,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Power-iteration PageRank on a directed edge list.
 
@@ -54,34 +44,18 @@ def pagerank(
     """
     # Persist the edge list BEFORE deriving nodes/outdeg/fanout: all three
     # setup frames consume it, and without the persist each one re-executes
-    # the (possibly expensive — e.g. a kNN scoring join) edge lineage.
-    #
-    # r16 (guide §2.6 idle capacity / §5 driver round-trips): setup and
-    # per-round persists are now LAZY — the old form ran an eager count()
-    # per generation (plus fanout/flagged setup counts), ~7 driver-blocking
-    # jobs for a 4-iteration call whose per-job latency dominated the wall
-    # at bench scale and serializes on any cluster. The caller's first
-    # action materializes the whole chain bottom-up through the persists
-    # (each generation still evaluates ONCE — recv and the dangling
-    # aggregate share the cached parent). Residency: superseded
-    # generations are released eagerly at every interior localCheckpoint
-    # boundary (the checkpoint materializes everything beneath it, so the
-    # release is safe); between boundaries — and for the ≤checkpoint_every
-    # frames live at return — release happens at session scope via the
-    # _ckpt registry. Residency is O(checkpoint_every) node-sized frames
-    # instead of O(1), traded for O(iterations) fewer driver round-trips;
-    # values are untouched (same expressions, same per-round float order).
-    from ._ckpt import tracked_persist
-
+    # the (possibly expensive — e.g. a kNN scoring join) edge lineage. Setup
+    # persists are lazy (r16): the caller's first action materializes the
+    # whole chain, each generation evaluated once (recv and the dangling
+    # aggregate share the cached parent).
     e = tracked_persist(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
     )
-    nodes = (
+    nodes = tracked_persist(
         e.select(F.col("src").alias("node"))
         .unionAll(e.select(F.col("dst").alias("node")))
         .distinct()
-        .persist()
     )
     # One setup-time action (like MLlib's iterative fits): N is a plan
     # constant for every subsequent iteration. This count also materializes
@@ -91,7 +65,6 @@ def pagerank(
         out = nodes.select("node", F.lit(0.0).alias("rank"))
         nodes.unpersist()
         return out
-    register_tracked_frame(nodes)
 
     outdeg = tracked_persist(
         e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
@@ -113,12 +86,10 @@ def pagerank(
         ).select("node", F.coalesce("_d", F.lit(True)).alias("is_dangling"))
     )
 
-    spark = edges.sparkSession
-    ranks = tracked_persist(
+    gens = Generations()
+    ranks = gens.step(
         flagged.select("node", F.lit(1.0 / n).alias("rank"), "is_dangling")
     )
-    pending: list[DataFrame] = [ranks]  # persisted gens awaiting a boundary
-    ranks_ckpt_ids: set[int] = set()  # ids backing a checkpointed generation
     base = (1.0 - damping) / n
     for i in range(iterations):
         recv = (
@@ -143,32 +114,7 @@ def pagerank(
                 "is_dangling",
             )
         )
-        if (i + 1) % checkpoint_every == 0 and i != iterations - 1:
-            # Truncate lineage at interior boundaries: without this the
-            # logical plan grows per round and Catalyst planning time
-            # dominates by iteration ~15. The final round uses the cheaper
-            # persist (an eager checkpoint re-caches every partition; the
-            # caller's first action materializes the persist anyway).
-            # Checkpoint generations are id-tracked so the storage — which
-            # DataFrame.unpersist() cannot touch — is released when the
-            # generation is superseded (operators/_ckpt.py). The eager
-            # checkpoint has materialized every pending lazy persist
-            # beneath it, so superseded generations release HERE.
-            new_ranks, new_ids = tracked_local_checkpoint(new_ranks)
-            for g in pending:
-                g.unpersist()
-            pending.clear()
-            release_rdd_ids(spark, ranks_ckpt_ids)
-            ranks_ckpt_ids = new_ids
-        else:
-            new_ranks = tracked_persist(new_ranks)
-            pending.append(new_ranks)
-        ranks = new_ranks
-    # setup frames and the ≤checkpoint_every generations still pending are
-    # consumed by the caller's first action — their storage is registered
-    # (tracked_persist) for session-scope release via clear_pipeline_cache;
-    # a final-round checkpoint's ids release the same way
-    register_tracked_ckpt_ids(spark, ranks_ckpt_ids)
+        ranks = gens.step(new_ranks, last=i == iterations - 1)
     return ranks.select("node", "rank")
 
 
@@ -181,7 +127,6 @@ def label_propagation(
     node_col: str = "node",
     label_col: str = "label",
     fixed_col: str = "fixed",
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Synchronous label propagation: semi-supervised labeling over a graph.
 
@@ -199,23 +144,13 @@ def label_propagation(
     """
     # Persisted: every round joins against the same edge table, and an
     # unpersisted edge lineage (e.g. the kNN scoring join) would re-execute
-    # once per round. Lazy persists + session-scope release (r16, the
-    # pagerank rationale above): each generation still evaluates once —
-    # both its consumers (the labeled filter and the state join) read the
-    # cache — but no per-round driver-blocking count() job runs. r17
-    # (ADVICE r16 #4): superseded generations release at interior eager
-    # localCheckpoint boundaries exactly like pagerank — the checkpoint has
-    # materialized every pending persist beneath it, so the release is safe
-    # — bounding residency at O(checkpoint_every) node-sized frames (and
-    # plan depth with it) for callers passing a large iteration count; at
-    # the catalog's iterations=2 no boundary fires and plans are unchanged.
-    from ._ckpt import tracked_persist
-
-    spark = edges.sparkSession
+    # once per round. At the catalog's iterations=2 no checkpoint boundary
+    # fires.
     e = tracked_persist(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     )
-    state = tracked_persist(
+    gens = Generations()
+    state = gens.step(
         seeds.select(
             F.col(node_col).alias("node"),
             F.col(label_col).alias("lab"),
@@ -224,8 +159,6 @@ def label_propagation(
     )
     from pyspark.sql import Window
 
-    pending: list[DataFrame] = [state]
-    state_ckpt_ids: set[int] = set()
     for i in range(iterations):
         labeled = state.filter(F.col("lab").isNotNull()).select(
             F.col("node").alias("src"), F.col("lab").alias("vote")
@@ -248,18 +181,7 @@ def label_propagation(
             .alias("lab"),
             "fixed",
         )
-        if (i + 1) % checkpoint_every == 0 and i != iterations - 1:
-            new_state, new_ids = tracked_local_checkpoint(new_state)
-            for g in pending:
-                g.unpersist()
-            pending.clear()
-            release_rdd_ids(spark, state_ckpt_ids)
-            state_ckpt_ids = new_ids
-        else:
-            new_state = tracked_persist(new_state)
-            pending.append(new_state)
-        state = new_state
-    register_tracked_ckpt_ids(spark, state_ckpt_ids)
+        state = gens.step(new_state, last=i == iterations - 1)
     return state.select("node", F.col("lab").alias("label"))
 
 

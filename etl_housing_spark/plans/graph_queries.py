@@ -24,12 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators import graph as G
-from ..operators._ckpt import (
-    register_tracked_ckpt_ids,
-    release_rdd_ids,
-    single_shot_checkpoint,
-    tracked_local_checkpoint,
-)
+from ..operators._ckpt import Generations, single_shot_checkpoint
 from .registry import query
 from .vector_queries import _RP
 
@@ -243,7 +238,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # iterations makes the composed plan tree explode (an un-truncated run
     # OOMed the driver just *printing* the plan).
     edges = single_shot_checkpoint(_knn_edges(spark, sf_dir))
-    pr = G.pagerank(edges, damping=0.85, iterations=4, checkpoint_every=5)
+    pr = G.pagerank(edges, damping=0.85, iterations=4)
     return pr.select("node", F.round("rank", 8).alias("rank"))
 
 
@@ -529,16 +524,13 @@ def q_pagerank_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = nodes.crossJoin(F.broadcast(nt)).select(
         "node", (F.lit(1.0) / F.col("n")).alias("r")
     )
-    r_ids: set[int] = set()
+    gens = Generations()
     for _ in range(4):
-        # localCheckpoint keeps the composed plan linear in iterations (the
-        # rank frame is consumed twice per step: dangling + contributions);
-        # materialization does not change the decimal-exact values. The
-        # superseded round's checkpoint storage is released as soon as the
-        # next one materializes (operators/_ckpt.py — unpersist() can't).
-        prev_ids = r_ids
-        r, r_ids = tracked_local_checkpoint(r)
-        release_rdd_ids(spark, prev_ids)
+        # a checkpoint per round keeps the composed plan linear in
+        # iterations (the rank frame is consumed twice per step: dangling +
+        # contributions); materialization does not change the decimal-exact
+        # values
+        r = gens.checkpoint(r)
         dang = (
             r.join(od, "node", "left")
             .where(F.col("d").isNull())
@@ -576,9 +568,6 @@ def q_pagerank_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("r"),
             )
         )
-    # the final round's checkpoint backs the returned plan — registered so
-    # clear_pipeline_cache releases it once the result is consumed
-    register_tracked_ckpt_ids(spark, r_ids)
     return r.select("node", F.round("r", 8).alias("rank"))
 
 
@@ -628,13 +617,9 @@ def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
     lab = emb.select(F.col("vec_id").alias("node"), F.col("vec_id").alias("lab"))
-    lab_ids: set[int] = set()
+    gens = Generations()
     for _ in range(4):
-        # superseded round's checkpoint storage released once the next
-        # round materializes (operators/_ckpt.py)
-        prev_ids = lab_ids
-        lab, lab_ids = tracked_local_checkpoint(lab)
-        release_rdd_ids(spark, prev_ids)
+        lab = gens.checkpoint(lab)
         nm = (
             und.join(lab.withColumnRenamed("node", "src"), "src")
             .groupBy(F.col("dst").alias("node"))
@@ -644,5 +629,4 @@ def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             "node",
             F.least(F.col("lab"), F.coalesce(F.col("nm"), F.col("lab"))).alias("lab"),
         )
-    register_tracked_ckpt_ids(spark, lab_ids)  # final generation: released
-    return lab.select("node", F.col("lab").alias("component_id"))  # by clear_pipeline_cache
+    return lab.select("node", F.col("lab").alias("component_id"))

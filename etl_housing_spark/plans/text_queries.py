@@ -2219,7 +2219,7 @@ def _unigram_viterbi_oracle() -> str:
 )
 def q_unigram_viterbi_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    w, vocab, best = _unigram_chain(spark, docs)
+    w, vocab, best = _unigram_chain(docs)
     em = best.select("w", F.explode(F.split("path", " ")).alias("piece")).join(
         w, "w"
     )
@@ -2231,16 +2231,12 @@ def q_unigram_viterbi_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _unigram_chain(spark: SparkSession, docs: DataFrame):
+def _unigram_chain(docs: DataFrame):
     """The shared unigram-LM scaffolding: distinct-word table, seed vocab,
     and the 8-round Viterbi 1-best segmentation. Returns (w, vocab, best)
     — all distinct-word/vocab sized, ready for the trainer's E-step or the
     encoder's broadcast-back-onto-the-corpus join."""
-    from ..operators._ckpt import (
-        register_tracked_ckpt_ids,
-        tracked_local_checkpoint,
-        tracked_persist,
-    )
+    from ..operators._ckpt import single_shot_checkpoint, tracked_persist
 
     w = (
         docs.select(F.explode(F.split("text", " ")).alias("w"))
@@ -2279,7 +2275,6 @@ def _unigram_chain(spark: SparkSession, docs: DataFrame):
             F.lit("").alias("path"),
         )
     ]
-    all_ids: set[int] = set()
     for j in range(1, 9):
         # arcs ending at j start at j-4..j-1: union those b-frames only
         prev = b[max(0, j - 4)]
@@ -2319,11 +2314,8 @@ def _unigram_chain(spark: SparkSession, docs: DataFrame):
         )
         # eager per-round checkpoint: bounded lineage (8 rounds, each
         # referenced by up to 4 later rounds — unchecked the plan grows
-        # 4-ary-exponentially); ids released session-scope via the registry
-        bj, ids = tracked_local_checkpoint(bj)
-        all_ids |= ids
-        b.append(bj)
-    register_tracked_ckpt_ids(spark, all_ids)
+        # 4-ary-exponentially); every round stays live until the final union
+        b.append(single_shot_checkpoint(bj))
     best = b[1]
     for i in range(2, 9):
         best = best.unionByName(b[i])
@@ -2366,7 +2358,7 @@ def _unigram_chain(spark: SparkSession, docs: DataFrame):
 )
 def q_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    _, _, best = _unigram_chain(spark, docs)
+    _, _, best = _unigram_chain(docs)
     v = best.select("w", F.size(F.split("path", " ")).alias("n_tok"))
     tokd = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("w")

@@ -865,6 +865,57 @@ def test_pagerank_matches_numpy_power_iteration(spark):
     assert deg[3] == (2, 3) and deg[4] == (1, 0) and deg[5] == (0, 1)
 
 
+def test_label_propagation_crosses_checkpoint_boundaries(spark):
+    """label_propagation past two checkpoint boundaries (iterations=9) vs a
+    pure-Python synchronous majority vote with the same count-desc,
+    label-asc tie-break; after one action the resident generations stay
+    within operators/_ckpt.Generations' stated bound."""
+    from etl_housing_spark.operators._ckpt import (
+        CHECKPOINT_EVERY,
+        _persistent_ids,
+        clear_pipeline_cache,
+    )
+    from etl_housing_spark.operators.graph import label_propagation
+
+    # a 24-node path in both directions, plus chords and a duplicated edge
+    # that make vote ties; labels still change in rounds 5-7, past the
+    # first checkpoint boundary
+    n = 24
+    edges = [(i, i + 1) for i in range(n - 1)] + [(i + 1, i) for i in range(n - 1)]
+    edges += [(0, 5), (23, 5), (3, 12), (12, 3), (20, 9), (20, 9), (17, 9)]
+    fixed = {0: "b", 23: "a", 12: "c", 20: "a"}
+    seeds = [(v, fixed.get(v), v in fixed) for v in range(n)]
+    iters = 9
+
+    lab = {v: lb for v, lb, _ in seeds}
+    for _ in range(iters):
+        votes: dict[int, dict[str, int]] = {}
+        for s, t in edges:
+            if lab[s] is not None:
+                votes.setdefault(t, {}).setdefault(lab[s], 0)
+                votes[t][lab[s]] += 1
+        lab = {
+            v: lb
+            if v in fixed or v not in votes
+            else min(votes[v].items(), key=lambda kv: (-kv[1], kv[0]))[0]
+            for v, lb in lab.items()
+        }
+
+    clear_pipeline_cache(blocking=True)
+    before = _persistent_ids(spark)
+    out = label_propagation(
+        spark.createDataFrame(edges, "src long, dst long"),
+        spark.createDataFrame(seeds, "node long, label string, fixed boolean"),
+        iterations=iters,
+    )
+    got = {r.node: r.label for r in out.collect()}
+    assert got == lab
+    # the persisted edge table plus at most CHECKPOINT_EVERY + 1 generations
+    resident = _persistent_ids(spark) - before
+    assert 2 <= len(resident) <= 1 + CHECKPOINT_EVERY + 1, resident
+    clear_pipeline_cache(blocking=True)
+
+
 def test_phash_media_known_patterns(spark):
     from etl_housing_spark.operators.multimodal import phash_media
 
@@ -1454,21 +1505,26 @@ def test_vocab_rank_injective_and_rarest_first(spark):
     assert all(a < b for a, b in zip(tids, tids[1:]))  # monotone in (df, sh)
 
 
-def test_dedup_clusters_cadence_invariant(spark):
+def test_dedup_clusters_cadence_invariant(spark, monkeypatch):
     """r17 (VERDICT r16 ask #5): the checkpoint cadence moves bytes, never
-    labels — every checkpoint_every (including the old per-round form)
+    labels — every CHECKPOINT_EVERY (including the old per-round form)
     yields identical components on a graph needing several propagation
     rounds."""
+    from etl_housing_spark.operators import _ckpt
     from etl_housing_spark.operators.dedup import dedup_clusters
 
     # path 1-…-8 has diameter 7 → min-label needs multiple rounds; plus an
     # island and a triangle
     edges = [(i, i + 1) for i in range(1, 8)] + [(20, 21), (21, 22), (20, 22), (30, 31)]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    want = {r.id: r.cluster_id for r in dedup_clusters(pairs, checkpoint_every=1).collect()}
+
+    def labels(k):
+        monkeypatch.setattr(_ckpt, "CHECKPOINT_EVERY", k)
+        return {r.id: r.cluster_id for r in dedup_clusters(pairs).collect()}
+
+    want = labels(1)
     for k in (2, 3, 4):
-        got = {r.id: r.cluster_id for r in dedup_clusters(pairs, checkpoint_every=k).collect()}
-        assert got == want, k
+        assert labels(k) == want, k
     assert want[8] == 1 and want[22] == 20 and want[31] == 30
 
 

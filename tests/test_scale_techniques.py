@@ -353,3 +353,69 @@ def test_graph_single_shot_checkpoints_are_released(spark):
     assert n_persistent() <= before, (  # <= : see baseline note above
         f"orphan persistent RDDs after graph queries: {before} -> {n_persistent()}"
     )
+
+
+def test_dedup_clusters_returned_generation_drains(spark):
+    """The generation dedup_clusters returns is a checkpoint that
+    DataFrame.unpersist() cannot release: it must sit in the session
+    registry, so one drain after the result is consumed returns storage to
+    baseline."""
+    from etl_housing_spark.operators._ckpt import _persistent_ids, clear_pipeline_cache
+    from etl_housing_spark.operators.dedup import dedup_clusters
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 44, 2)], "id_a int, id_b int"
+    )
+    clear_pipeline_cache(blocking=True)
+    before = _persistent_ids(spark)
+    assert dedup_clusters(pairs, max_iters=6).count() == 44
+    clear_pipeline_cache(blocking=True)
+    leaked = _persistent_ids(spark) - before
+    assert not leaked, leaked
+
+
+@pytest.mark.parametrize("op", ["dedup_clusters", "pagerank", "label_propagation"])
+def test_failed_round_releases_what_the_loop_pinned(spark, monkeypatch, op):
+    """A round whose checkpoint raises (the 2nd eager localCheckpoint of
+    the call: dedup_clusters' round 4 after its edge checkpoint, the
+    round-8 boundary of pagerank / label_propagation) must leave nothing
+    pinned outside the session registry: one drain returns storage to
+    baseline."""
+    from etl_housing_spark.operators._ckpt import _persistent_ids, clear_pipeline_cache
+    from etl_housing_spark.operators.dedup import dedup_clusters
+    from etl_housing_spark.operators.graph import label_propagation, pagerank
+
+    path = [(i, i + 1) for i in range(1, 12)]  # path graph 1…12
+    if op == "dedup_clusters":
+        pairs = spark.createDataFrame(path, "id_a long, id_b long")
+        run = lambda: dedup_clusters(pairs, max_iters=8)  # noqa: E731
+    elif op == "pagerank":
+        edges = spark.createDataFrame(path, "src long, dst long")
+        run = lambda: pagerank(edges, iterations=9)  # noqa: E731
+    else:
+        edges = spark.createDataFrame(path, "src long, dst long")
+        seeds = spark.createDataFrame(
+            [(v, "a" if v == 1 else None, v == 1) for v in range(1, 13)],
+            "node long, label string, fixed boolean",
+        )
+        run = lambda: label_propagation(edges, seeds, iterations=9)  # noqa: E731
+
+    cls = type(spark.range(1))
+    real = cls.localCheckpoint
+    calls = []
+
+    def flaky(self, *args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("injected checkpoint failure")
+        return real(self, *args, **kwargs)
+
+    clear_pipeline_cache(blocking=True)
+    before = _persistent_ids(spark)
+    with monkeypatch.context() as m:
+        m.setattr(cls, "localCheckpoint", flaky)
+        with pytest.raises(RuntimeError, match="injected"):
+            run()
+    clear_pipeline_cache(blocking=True)
+    leaked = _persistent_ids(spark) - before
+    assert not leaked, leaked
