@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .sampling import md5_u32
+
 __all__ = ["bloom_build", "bloom_probe"]
 
 _WORD_BITS = 32  # 32-bit words: 1 << 31 stays positive in a signed BIGINT
@@ -59,17 +61,13 @@ def _positions(df: DataFrame, key: str, m_bits: int, k_hashes: int) -> DataFrame
     non-negative BIGINT arithmetic (h1 + 63*h2 < 2^38), bit-reproducible
     in DuckDB.
     """
-    h1 = F.conv(F.substring(F.md5(F.col(key)), 1, 8), 16, 10).cast("long")
+    h1 = md5_u32(key)
     # h2 forced ODD: with a power-of-two m, an even h2 strides only a
     # subset of bit positions (and h2=0 collapses all K probes to one),
     # inflating FPR above the k-hash bound. Odd h2 is coprime to 2^j so
     # the probe stride always covers the full ring. Mirrored bit-for-bit
     # in the DuckDB oracle (_bloom_sql, plans/bloom_queries.py).
-    h2 = (
-        F.conv(F.substring(F.md5(F.col(key)), 9, 8), 16, 10)
-        .cast("long")
-        .bitwiseOR(1)
-    )
+    h2 = md5_u32(key, word=2).bitwiseOR(1)
     return (
         df.withColumn("h1", h1)
         .withColumn("h2", h2)
@@ -112,13 +110,11 @@ def bloom_probe(
     pipeline inside one codegen stage instead)."""
     probe_cols = probes.columns
     df = probes.withColumn(
-        "_h1", F.conv(F.substring(F.md5(F.col(key)), 1, 8), 16, 10).cast("long")
+        "_h1", md5_u32(key)
     ).withColumn(
         # h2 forced odd — same stride-degeneracy guard as _positions
         "_h2",
-        F.conv(F.substring(F.md5(F.col(key)), 9, 8), 16, 10)
-        .cast("long")
-        .bitwiseOR(1),
+        md5_u32(key, word=2).bitwiseOR(1),
     )
     hits = []
     for i in range(k_hashes):

@@ -23,10 +23,16 @@ re-attaches its own payload; the self-join, id-pair distinct and
 partitioning live only in ``band_pairs``. ``ngrams`` is the one word
 n-gram rule every shingle builder uses.
 
-All hash functions are Spark's built-in ``hash``/``xxhash64`` (JVM murmur3 —
-deterministic across runs/executors), so these are rows-only queries: DuckDB
-cannot reproduce Spark's hash, but the *exact* jaccard verifier
-(``ngram_jaccard_pairs``) is oracle-checkable and q_neardup_ngram checks it.
+Each sketch has ONE core over an ``(id, h)`` frame of 32-bit base hashes
+in [0, 2^32): ``minhash_sigs`` → ``minhash_bands`` → ``minhash_pairs`` and
+``simhash_sigs`` → ``simhash_pairs``. The base hash is the only thing a
+caller chooses: the production entry points (``minhash_near_dups``,
+``simhash_near_dups``) fill ``h`` with one Spark murmur3 ``hash`` per
+shingle (``murmur3_u32``), which DuckDB cannot reproduce, so their queries
+are rows-only; the portable queries (plans/) fill it with the md5 prefix
+(``operators.sampling.md5_u32``) and are oracle-checked, so the oracles
+prove every stage of production except that one hash expression.
+``ngram_jaccard_pairs`` is exact and oracle-checked by q_neardup_ngram.
 """
 
 from __future__ import annotations
@@ -310,16 +316,85 @@ def containment_pairs(
     )
 
 
+# The affine MinHash family h_i(x) = (a_i·x + b_i) mod p over one 32-bit
+# base hash x per shingle. x < 2^32 and a_i, b_i < 2^30 keep a_i·x + b_i
+# < 2^62, inside BIGINT on both engines (an overflow would be an ANSI
+# error, never silent corruption). The first 16 pairs are the literals of
+# the q_minhash_portable oracle: extend the table, never edit it.
+_MH_A = [1014583970, 671191146, 734632613, 963375983, 620936792, 832886167,
+         895125968, 241814379, 59626578, 322301094, 306088397, 937970869,
+         979921692, 5653578, 536641975, 881787299,
+         301176315, 32569738, 470140056, 196202919, 712403269, 130500545,
+         520234964, 958014690, 851631721, 562125443, 1008614666, 569638892,
+         560027282, 808969135, 596032094, 1011780444, 594207388, 918731826,
+         354126017, 630419505, 189312991, 512837534, 993469631, 1050872738,
+         550819401, 426128805, 590508400, 604998897, 92762770, 191566989,
+         761329168, 198955834, 175650667, 271451161, 338170848, 971056871,
+         482589714, 819844075, 606407287, 146605235, 761526288, 912019032,
+         4657919, 350976463, 1049081268, 191263281, 857747028, 13420965]
+_MH_B = [141133399, 855846782, 127864392, 502441329, 876672786, 325378590,
+         366793889, 298957224, 772526012, 273664135, 1063498084, 477897044,
+         513408455, 541754567, 625500707, 594313256,
+         181030693, 774229077, 694346597, 819470255, 735538783, 1063144895,
+         814273646, 352476471, 516746845, 661661414, 692815704, 757639796,
+         860911272, 689303356, 921672555, 649291333, 785928225, 151270569,
+         297405790, 373216481, 756742148, 894713313, 810928582, 82979158,
+         619864734, 631695715, 658892058, 340376066, 654398821, 917060229,
+         994147620, 175803495, 329050560, 898178112, 11947906, 621882471,
+         1055800837, 1055203348, 759007616, 273763746, 189130258, 267195809,
+         824348918, 377954423, 733351550, 200783950, 1046914064, 325131686]
+_MH_P = 4294967311  # smallest prime > 2^32
+
+
+def murmur3_u32(col: Column | str) -> Column:
+    """Spark's built-in murmur3 ``hash`` masked to [0, 2^32): the
+    production base hash (deterministic across runs and executors, but
+    engine-private)."""
+    return F.hash(col).cast("long").bitwiseAND(F.lit(0xFFFFFFFF))
+
+
+def minhash_sigs(hashed: DataFrame, num_hashes: int = 16) -> DataFrame:
+    """The one MinHash signature core: (id, h) base hashes → (id, sig:
+    array<bigint>), sig[i] = min over the doc's h of (a_i·h + b_i) mod p.
+    One groupBy of num_hashes partial-aggregating MINs — fully map-side
+    combinable, so the shuffle carries one row per document regardless of
+    text length."""
+    if not 1 <= num_hashes <= len(_MH_A):
+        raise ValueError(
+            f"minhash: num_hashes={num_hashes} must be in [1, {len(_MH_A)}] "
+            "(the affine table's size)"
+        )
+    mins = [
+        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(_MH_P))
+        for a, b in zip(_MH_A[:num_hashes], _MH_B[:num_hashes])
+    ]
+    return hashed.groupBy("id").agg(F.array(*mins).alias("sig"))
+
+
 def minhash_signatures(
     df: DataFrame, id_col: str, text_col: str, num_hashes: int = 16, shingle_size: int = 1
 ) -> DataFrame:
-    """(id, sig: array<int>) — one explode + one groupBy with num_hashes
-    partial-aggregating MIN columns; fully map-side combinable, so the
-    shuffle carries one row per document regardless of text length."""
+    """Production signatures (id, sig: array<bigint>): ``minhash_sigs``
+    over one murmur3 base hash per distinct shingle."""
     sh = shingles(df, id_col, text_col, shingle_size)
-    mins = [F.min(F.hash(F.col("sh"), F.lit(i))).alias(f"h{i}") for i in range(num_hashes)]
-    sig = sh.groupBy("id").agg(*mins)
-    return sig.select("id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig"))
+    return minhash_sigs(sh.select("id", murmur3_u32("sh").alias("h")), num_hashes)
+
+
+def minhash_bands(sig: DataFrame, bands: int, rows: int) -> DataFrame:
+    """The one band-key rule: (id, sig) → (id, band, bkey) where band k's
+    key is the exact signature slice sig[k·rows, (k+1)·rows). Equal keys
+    iff equal slices, so no key collision ever adds a candidate; the
+    oracles spell the same key as the comma-joined slice values, which
+    are equal exactly when the slices are."""
+    keys = [F.slice("sig", k * rows + 1, rows) for k in range(bands)]
+    return sig.select("id", F.posexplode(F.array(*keys)).alias("band", "bkey"))
+
+
+def sig_agreement(a: Column | str, b: Column | str) -> Column:
+    """Number of positions where two signature arrays agree (BIGINT) — the
+    one MinHash agreement count; / length is the Jaccard estimate."""
+    eq = F.zip_with(a, b, lambda x, y: (x == y).cast("long"))
+    return F.aggregate(eq, F.lit(0).cast("long"), lambda acc, e: acc + e)
 
 
 def band_pairs(banded: DataFrame) -> DataFrame:
@@ -375,6 +450,49 @@ def band_pairs(banded: DataFrame) -> DataFrame:
     )
 
 
+def _attach(frame: DataFrame, col: str, side: str) -> DataFrame:
+    """(id, col) renamed to the (id_{side}, col_{side}) attach dim of a
+    pair frame — broadcast when its source scan is provably tiny
+    (layout.broadcast_if_tiny), plain equi-join at production sizes. Build
+    it BEFORE persisting ``frame``: a cached plan hides its source files,
+    so the check would never broadcast."""
+    from ..layout import broadcast_if_tiny
+
+    return broadcast_if_tiny(
+        frame.select(F.col("id").alias(f"id_{side}"), F.col(col).alias(f"{col}_{side}"))
+    )
+
+
+def minhash_pairs(sig: DataFrame, bands: int, rows: int) -> DataFrame:
+    """The one MinHash pair operator: (id, sig) → (id_a, id_b, n_match,
+    est_jaccard) for every pair sharing a band (``minhash_bands`` →
+    :func:`band_pairs`), n_match = ``sig_agreement`` and est_jaccard =
+    n_match / (bands·rows).
+
+    The signatures re-attach by unique id after the candidate distinct.
+    The signature frame feeds the band table and both attach dims, so it
+    is tracked_persist-ed, and deliberately UNCONDITIONALLY (r17, VERDICT
+    r16 ask #4 measured and closed): an A/B with the persist removed read
+    q_dedup_minhash 6.1–6.8 s vs 2.0–2.4 s and q_dedup_clusters 19–21.5 s
+    vs 8–10 s (the signature subtree re-evaluates once per consumer),
+    while the single-consumer-ish pairs benches gained at most ~0.2 s
+    (q_minhash_pairs_murmur3 0.74–1.03 s action vs 0.95–0.97 s — within
+    run-to-run noise). No metadata distinguishes the callers, and the
+    trade is 10:1 against the conditional."""
+    from ._ckpt import tracked_persist
+
+    siga, sigb = _attach(sig, "sig", "a"), _attach(sig, "sig", "b")
+    sig = tracked_persist(sig)
+    n = sig_agreement("sig_a", "sig_b")
+    return (
+        band_pairs(minhash_bands(sig, bands, rows))
+        .join(siga, "id_a")
+        .join(sigb, "id_b")
+        .select("id_a", "id_b", n.alias("n_match"))
+        .withColumn("est_jaccard", F.col("n_match") / F.lit(float(bands * rows)))
+    )
+
+
 def minhash_near_dups(
     df: DataFrame,
     id_col: str,
@@ -384,59 +502,27 @@ def minhash_near_dups(
     shingle_size: int = 1,
     threshold: float = 0.7,
 ) -> DataFrame:
-    """MinHash+LSH near-dup pairs with signature-estimated jaccard.
+    """MinHash+LSH near-dup pairs (id_a, id_b, est_jaccard) over production
+    signatures (``minhash_signatures``) and ``minhash_pairs``.
 
     banding: a pair collides if any band of the signature matches exactly —
     the classic S-curve selectivity. Estimated jaccard = fraction of equal
     signature positions; pairs below ``threshold`` are dropped after the
     candidate join, so the expensive exact verify never runs on the long tail.
     ``bands`` must divide ``num_hashes``: an empty band (bands > num_hashes)
-    hashes to one constant key for every doc and turns the candidates into
+    keys every doc to the one empty slice and turns the candidates into
     all pairs, and a remainder would leave signature rows unbanded.
-
-    Candidates come from :func:`band_pairs`; the 16-long signatures
-    re-attach by unique id afterwards, broadcast when the source scan is
-    provably tiny (layout.broadcast_if_tiny), plain equi-join at production
-    sizes.
-
-    The signature frame feeds the band table and both attach dims, so it is
-    tracked_persist-ed, and deliberately UNCONDITIONALLY (r17, VERDICT r16
-    ask #4 measured and closed): an A/B with the persist removed read
-    q_dedup_minhash 6.1–6.8 s vs 2.0–2.4 s and q_dedup_clusters 19–21.5 s
-    vs 8–10 s (the signature subtree re-evaluates once per consumer),
-    while the single-consumer-ish pairs benches gained at most ~0.2 s
-    (q_minhash_pairs_murmur3 0.74–1.03 s action vs 0.95–0.97 s — within
-    run-to-run noise). No metadata distinguishes the callers, and the
-    trade is 10:1 against the conditional."""
-    from ..layout import broadcast_if_tiny
-    from ._ckpt import tracked_persist
-
+    ``num_hashes`` is bounded by the affine table (``minhash_sigs``)."""
     if bands < 1 or num_hashes % bands != 0:
         raise ValueError(
             f"minhash_near_dups: bands={bands} must be >= 1 and divide "
             f"num_hashes={num_hashes}"
         )
-    rows = num_hashes // bands
-    sig = tracked_persist(
-        minhash_signatures(df, id_col, text_col, num_hashes, shingle_size)
-    )
-    keys = [F.hash(F.slice(F.col("sig"), k * rows + 1, rows)) for k in range(bands)]
-    cand = band_pairs(
-        sig.select("id", F.posexplode(F.array(*keys)).alias("band", "bkey"))
-    )
-    siga = broadcast_if_tiny(
-        sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")), df
-    )
-    sigb = broadcast_if_tiny(
-        sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b")), df
-    )
-    eq = F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0))
-    est = F.aggregate(eq, F.lit(0), lambda acc, x: acc + x) / F.lit(num_hashes)
+    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_size)
     return (
-        cand.join(siga, "id_a")
-        .join(sigb, "id_b")
-        .select("id_a", "id_b", est.alias("est_jaccard"))
+        minhash_pairs(sig, bands, num_hashes // bands)
         .filter(F.col("est_jaccard") >= threshold)
+        .select("id_a", "id_b", "est_jaccard")
     )
 
 
@@ -567,106 +653,77 @@ def canonicalize(df: DataFrame, clusters: DataFrame, id_col: str) -> DataFrame:
     return df.join(keep, id_col, "leftsemi").unionByName(unclustered)
 
 
-def minhash_near_dups_mllib(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_features: int = 1 << 16,
-    num_tables: int = 8,
-    max_jaccard_distance: float = 0.3,
-) -> DataFrame:
-    """MLlib-backed near-dup pairs: HashingTF shingle vectors → MinHashLSH →
-    ``approxSimilarityJoin`` (library alternative to the hand-rolled
-    ``minhash_near_dups``; same banding idea, OR-amplified over
-    ``num_tables`` hash tables, distance = 1 - jaccard).
+def simhash_sigs(hashed: DataFrame, bits: int = 32) -> DataFrame:
+    """The one SimHash core: (id, h) base hashes → (id, simhash: bigint),
+    bit j set iff more of the doc's hashes have bit j set than clear.
 
-    The MLlib path is the off-the-shelf choice when sparse-vector features
-    already exist (e.g. a CountVectorizer pipeline); the hand-rolled one
-    keeps the shuffle payload at num_hashes ints/doc and composes with
-    plain DataFrame ops. Both are O(candidates), never O(n²).
-    """
-    from pyspark.ml.feature import HashingTF, MinHashLSH, Tokenizer
-
-    tok = Tokenizer(inputCol=text_col, outputCol="__toks")
-    tf = HashingTF(inputCol="__toks", outputCol="__vec", numFeatures=num_features, binary=True)
-    vecs = tf.transform(tok.transform(df.select(id_col, text_col)))
-    # MinHashLSH requires at least one non-zero entry per vector
-    vecs = vecs.filter(F.size("__toks") > 0)
-    lsh = MinHashLSH(inputCol="__vec", outputCol="__hashes", numHashTables=num_tables, seed=7)
-    model = lsh.fit(vecs)
-    pairs = model.approxSimilarityJoin(vecs, vecs, max_jaccard_distance, distCol="jdist")
-    a_id, b_id = F.col(f"datasetA.{id_col}"), F.col(f"datasetB.{id_col}")
-    return (
-        pairs.filter(a_id < b_id)
-        .select(a_id.alias("id_a"), b_id.alias("id_b"), (1 - F.col("jdist")).alias("jaccard"))
-        .distinct()
+    Per-bit vote columns are plain ±1 SUMs — one groupBy, map-side
+    combinable, the shuffle carries ``bits`` longs per doc — then a
+    map-only recombination Σ (vote_j > 0) · 2^j."""
+    votes = [
+        F.sum(F.when(F.shiftright("h", j).bitwiseAND(1) == 1, 1).otherwise(-1)).alias(f"v{j}")
+        for j in range(bits)
+    ]
+    fp = sum(
+        F.when(F.col(f"v{j}") > 0, F.lit(1 << j)).otherwise(0).cast("long")
+        for j in range(bits)
     )
+    return hashed.groupBy("id").agg(*votes).select("id", fp.alias("simhash"))
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFrame:
-    """32-bit SimHash over distinct tokens → (id, simhash: long).
-
-    Per-bit vote columns are plain SUMs over the exploded tokens — one
-    groupBy, map-side combinable. Token hash is Spark murmur3 (built-in)."""
+    """Production 32-bit SimHash over distinct tokens → (id, simhash:
+    long): ``simhash_sigs`` over one murmur3 base hash per token."""
     toks = shingles(df, id_col, text_col, 1)
-    h = F.hash(F.col("sh"))
-    votes = [
-        F.sum(F.when(F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)).alias(f"v{j}")
-        for j in range(bits)
-    ]
-    voted = toks.groupBy("id").agg(*votes)
-    fp = None
-    for j in range(bits):
-        bit = F.when(F.col(f"v{j}") > 0, F.lit(2**j).cast("long")).otherwise(F.lit(0).cast("long"))
-        fp = bit if fp is None else fp + bit
-    return voted.select("id", fp.alias("simhash"))
+    return simhash_sigs(toks.select("id", murmur3_u32("sh").alias("h")), bits)
 
 
-def simhash_near_dups(
-    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3, bits: int = 32, chunks: int = 4
+def simhash_pairs(
+    sh: DataFrame, max_hamming: int = 3, bits: int = 32, chunks: int = 4
 ) -> DataFrame:
-    """SimHash pairs within Hamming distance ``max_hamming``.
+    """The one SimHash pair operator: (id, simhash) → (id_a, id_b,
+    hamming) for pairs within Hamming distance ``max_hamming``.
 
     Pigeonhole banding: any pair within distance < chunks must agree on at
-    least one of the ``chunks`` bit-chunks, so candidates come from an
-    equi-join on (chunk_idx, chunk_value) — never a cross join. The
-    guarantee needs ``max_hamming < chunks`` and ``chunks`` dividing
-    ``bits``; any other layout silently loses recall, so it is rejected.
+    least one of the ``chunks`` bit-chunks, so candidates come from
+    :func:`band_pairs` over the (id, chunk, value) table — never a cross
+    join. The guarantee needs ``max_hamming < chunks`` and ``chunks``
+    dividing ``bits``; any other layout silently loses recall, so it is
+    rejected.
 
-    Candidates come from :func:`band_pairs` over the (id, chunk, value)
-    table; the simhash frame feeds that table and the attach dims, so it
-    is tracked_persist-ed instead of re-running the corpus-wide 32-vote
-    aggregate per consumer, and the 64-bit fingerprints re-attach by unique
-    id afterwards — broadcast when the source scan is provably tiny, plain
-    equi-join at production sizes."""
-    from ..layout import broadcast_if_tiny
+    The simhash frame feeds the band table and both attach dims, so it is
+    tracked_persist-ed instead of re-running the corpus-wide vote
+    aggregate per consumer; fingerprints re-attach by unique id after the
+    candidate distinct."""
     from ._ckpt import tracked_persist
 
     if chunks < 1 or bits % chunks != 0 or max_hamming >= chunks:
         raise ValueError(
-            f"simhash_near_dups: need max_hamming={max_hamming} < chunks={chunks} "
+            f"simhash_pairs: need max_hamming={max_hamming} < chunks={chunks} "
             f"and chunks dividing bits={bits} (pigeonhole)"
         )
     width = bits // chunks
-    mask = (1 << width) - 1
-    sh = tracked_persist(simhash(df, id_col, text_col, bits))
+    sha, shb = _attach(sh, "simhash", "a"), _attach(sh, "simhash", "b")
+    sh = tracked_persist(sh)
     keys = [
-        F.shiftright(F.col("simhash"), c * width).bitwiseAND(F.lit(mask))
+        F.shiftright(F.col("simhash"), c * width).bitwiseAND(F.lit((1 << width) - 1))
         for c in range(chunks)
     ]
     cand = band_pairs(
         sh.select("id", F.posexplode(F.array(*keys)).alias("band", "bkey"))
     )
-    sha = broadcast_if_tiny(
-        sh.select(F.col("id").alias("id_a"), F.col("simhash").alias("sh_a")), df
-    )
-    shb = broadcast_if_tiny(
-        sh.select(F.col("id").alias("id_b"), F.col("simhash").alias("sh_b")), df
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
         cand.join(sha, "id_a")
         .join(shb, "id_b")
         .select("id_a", "id_b", hamming.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
     )
+
+
+def simhash_near_dups(
+    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3, bits: int = 32, chunks: int = 4
+) -> DataFrame:
+    """Production SimHash pairs within Hamming distance ``max_hamming``:
+    ``simhash_pairs`` over ``simhash``."""
+    return simhash_pairs(simhash(df, id_col, text_col, bits), max_hamming, bits, chunks)

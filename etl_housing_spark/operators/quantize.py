@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import fast_sums
+from .sampling import md5_u32
 
 
 def dimension_ranges(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
@@ -753,9 +754,7 @@ def pq_residual_codebooks(
     # map-side-combinable aggregate over the cap-bounded sample.
     per_sub = dim // subspaces
     rsub = _residual_subs(assigned, cents, subspaces, per_sub, id_col)
-    hv = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10
-    ).cast("long")
+    hv = md5_u32(F.col(id_col).cast("string"))
     samp = rsub.filter(hv <= F.lit((train_cap * 4294967296 - 1) // n))
     from pyspark.sql import Window
 

@@ -33,7 +33,18 @@ from pyspark.sql import functions as F
 # 8 hex chars = 32 bits: uniform in [0, 2^32), plenty for percent buckets
 # while staying inside BIGINT range in both engines.
 _HEX_CHARS = 8
-_SPACE = 16 ** _HEX_CHARS
+
+
+def md5_u32(key: Column | str, word: int = 1) -> Column:
+    """The portable 32-bit hash: hex word ``word`` of md5(key) (word 1 =
+    hex chars 1-8, word 2 = chars 9-16) as a BIGINT in [0, 2^32).
+
+    Spark ``conv(substring(md5(k), 1, 8), 16, 10)`` equals DuckDB
+    ``CAST('0x' || substr(md5(k), 1, 8) AS BIGINT)`` bit for bit — the one
+    Spark spelling of every md5-derived hash an oracle reproduces."""
+    k = F.col(key) if isinstance(key, str) else key
+    start = 1 + (word - 1) * _HEX_CHARS
+    return F.conv(F.substring(F.md5(k), start, _HEX_CHARS), 16, 10).cast("long")
 
 
 def hash_bucket(*cols: Column | str, buckets: int = 100, salt: str = "") -> Column:
@@ -45,8 +56,7 @@ def hash_bucket(*cols: Column | str, buckets: int = 100, salt: str = "") -> Colu
     """
     cs = [F.col(c) if isinstance(c, str) else c for c in cols]
     key = F.concat_ws("\x1f", F.lit(salt), *[c.cast("string") for c in cs])
-    h = F.conv(F.substring(F.md5(key), 1, _HEX_CHARS), 16, 10).cast("long")
-    return (h % buckets).alias("bucket")
+    return (md5_u32(key) % buckets).alias("bucket")
 
 
 def deterministic_split(

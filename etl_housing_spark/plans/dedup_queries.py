@@ -1,17 +1,23 @@
 """Near-duplicate detection queries over documents (SURVEY.md §2.13).
 
-q_neardup_ngram is the oracle-checked exact set-similarity form; the
-MinHash/SimHash queries use Spark's built-in hash (not reproducible in
-DuckDB) and are declared rows-only — their correctness is covered by unit
-tests against the exact form (tests/test_operators.py).
+q_neardup_ngram is the oracle-checked exact set-similarity form. The
+MinHash/SimHash queries here and their portable twins run the same cores
+(operators/dedup.py: signatures, band keys, pairs) and differ only in the
+base-hash column: the production queries (q_dedup_minhash,
+q_minhash_pairs_murmur3, q_dedup_simhash, q_dedup_clusters) hash with
+Spark's murmur3, which DuckDB cannot reproduce, and are rows-only; the
+portable ones hash with the md5 prefix (``md5_hashed``) and are
+oracle-checked, so every stage but that hash expression is value-proven.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators import dedup as D
+from ..operators.sampling import md5_u32
 from .registry import query
 
 
@@ -85,7 +91,7 @@ def q_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_minhash",
-    oracle=None,  # Spark murmur3 signatures — rows-only (⊘, SURVEY §2.13)
+    oracle=None,  # murmur3 base hash — rows-only (⊘, SURVEY §2.13)
     description="MinHash+LSH near-dup candidates (shingle→minhash→band→bucket-join), "
     "estimated jaccard ≥ 0.7 — the linear-cost scale path for q_neardup_ngram",
     tags=("dedup",),
@@ -97,32 +103,40 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Portable MinHash signatures — the oracle-CHECKED twin of q_dedup_minhash.
-# The fast path hashes shingles with Spark's murmur3 (engine-private →
-# rows-only by contract); this variant derives the base hash from md5,
-# which both engines compute identically, and applies k affine hash
-# functions (a_i·h + b_i) mod p with inlined literal coefficients — every
-# signature value is reproducible bit-for-bit in DuckDB, promoting the
-# dedup family's core primitive from rows-only to hash-checked. Bounds:
-# h < 2^32 and a_i < 2^30 keep a_i·h < 2^62, inside BIGINT on both engines
-# (an overflow would be an ANSI error, never silent corruption).
-# Plan shape is identical to the fast path: shingle explode → one grouped
-# aggregate with k MINs (map-side combinable — the shuffle carries k longs
-# per doc regardless of document length).
+# Same core (operators/dedup.minhash_sigs: the first 16 affine maps
+# (a_i·h + b_i) mod p over one base hash per shingle) with the base hash
+# taken from md5, which both engines compute identically: every signature
+# value is reproducible bit-for-bit in DuckDB.
 # --------------------------------------------------------------------------
 
-_MH_A = [1014583970, 671191146, 734632613, 963375983, 620936792, 832886167,
-         895125968, 241814379, 59626578, 322301094, 306088397, 937970869,
-         979921692, 5653578, 536641975, 881787299]
-_MH_B = [141133399, 855846782, 127864392, 502441329, 876672786, 325378590,
-         366793889, 298957224, 772526012, 273664135, 1063498084, 477897044,
-         513408455, 541754567, 625500707, 594313256]
-_MH_P = 4294967311  # smallest prime > 2^32
+_K = 16  # signature length of every portable MinHash query
+
+
+def md5_hashed(sh: DataFrame) -> DataFrame:
+    """(doc_id, sh) shingles → the (id, h) portable base-hash frame of the
+    operators/dedup cores."""
+    return sh.select(F.col("doc_id").alias("id"), md5_u32("sh").alias("h"))
+
+
+def portable_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(id, sig) portable MinHash signatures over the family-shared
+    persisted shingle explode (corpus_shingles)."""
+    from .pipeline_queries import corpus_shingles
+
+    return D.minhash_sigs(md5_hashed(corpus_shingles(spark, sf_dir)), _K)
+
+
+def sig_columns(sig: DataFrame) -> DataFrame:
+    """(id, sig) → the registered (doc_id, sig_0..sig_15) schema."""
+    return sig.select(
+        F.col("id").alias("doc_id"), *[F.col("sig")[i].alias(f"sig_{i}") for i in range(_K)]
+    )
 
 
 def _mh_oracle() -> str:
     mins = ",\n           ".join(
-        f"MIN(({a} * h + {b}) % {_MH_P}) AS sig_{i}"
-        for i, (a, b) in enumerate(zip(_MH_A, _MH_B))
+        f"MIN(({a} * h + {b}) % {D._MH_P}) AS sig_{i}"
+        for i, (a, b) in enumerate(zip(D._MH_A[:_K], D._MH_B[:_K]))
     )
     return f"""
     WITH t AS (
@@ -148,51 +162,29 @@ def _mh_oracle() -> str:
 @query(
     "q_minhash_portable",
     oracle=_mh_oracle(),
-    description="portable MinHash signatures (word 3-gram shingles, k=16 md5-derived "
-    "affine hashes) — the oracle-checked twin of the murmur3 fast path: every "
-    "signature value reproduced bit-for-bit by the DuckDB oracle; one grouped "
-    "aggregate, k map-side-combinable MINs, shuffle carries k longs per doc",
+    description="portable MinHash signatures (word 3-gram shingles, k=16 affine "
+    "hashes of one md5-derived base hash) — the oracle-checked twin of "
+    "production MinHash, same signature core with only the base hash swapped "
+    "for murmur3: every signature value reproduced bit-for-bit by the DuckDB "
+    "oracle; one grouped aggregate, k map-side-combinable MINs, shuffle "
+    "carries k longs per doc",
     tags=("dedup",),
 )
 def q_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .pipeline_queries import corpus_shingles
-
-    # The family-shared persisted shingle explode (which carries the
-    # bind-the-token-array-once lesson internally: Catalyst does not CSE
-    # inside lambda bodies, so the bound projection evaluates split() once
-    # per doc, not 3x per shingle index). One materialization now serves
-    # the whole MinHash + decontamination surface in a session.
-    return minhash_sigs_from(corpus_shingles(spark, sf_dir))
-
-
-def minhash_sigs_from(sh: DataFrame) -> DataFrame:
-    """Portable md5 MinHash signatures (doc_id, sig_0..sig_15) over a
-    (doc_id, sh) shingle frame — the q_minhash_portable body as a
-    reusable core: signatures are per-doc, so a caller with a restricted
-    corpus (the density-safe consensus) gets byte-identical signatures
-    for the docs it keeps while paying only for its subset."""
-    from pyspark.sql import functions as F
-
-    h = F.conv(F.substring(F.md5("sh"), 1, 8), 16, 10).cast("long")
-    hashed = sh.select("doc_id", h.alias("h"))
-    mins = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(_MH_P)).alias(f"sig_{i}")
-        for i, (a, b) in enumerate(zip(_MH_A, _MH_B))
-    ]
-    return hashed.groupBy("doc_id").agg(*mins)
+    return sig_columns(portable_sigs(spark, sf_dir))
 
 
 @query(
     "q_minhash_pairs_murmur3",
-    oracle=None,  # murmur3 signatures have no SQL twin — rows-only (⊘);
-    # the md5-portable pipeline q_minhash_pairs_portable IS the value check
-    # for this exact topology (same shingles, banding, agreement estimate)
-    description="the murmur3 PRODUCTION MinHash→LSH pipeline on the portable "
-    "twin's exact workload (word 3-gram shingles, k=16, 4 bands × 4 rows, "
+    oracle=None,  # murmur3 base hash has no SQL twin — rows-only (⊘);
+    # q_minhash_pairs_portable runs the same signature, band-key and pair
+    # code on an md5 base hash and IS the value check for this topology
+    description="the PRODUCTION MinHash→LSH pipeline on the portable twin's "
+    "exact workload (word 3-gram shingles, k=16, 4 bands × 4 rows, "
     "est_jaccard ≥ 0.75): operators.dedup.minhash_near_dups end to end — "
-    "bench-tagged so the fast path (one JVM hash per shingle vs md5+conv in "
-    "the portable twin) is finally timed alongside its oracle-checked twin "
-    "(VERDICT r06 'Next round' #2); same never-all-pairs banding shape",
+    "bench-tagged so the production base hash (one JVM murmur3 per shingle "
+    "vs md5+conv in the portable twin) is timed alongside its "
+    "oracle-checked twin, which shares every other stage",
     tags=("dedup", "bench"),
 )
 def q_minhash_pairs_murmur3(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -204,7 +196,8 @@ def q_minhash_pairs_murmur3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_simhash",
-    oracle=None,  # Spark murmur3 bit votes — rows-only (⊘)
+    oracle=None,  # murmur3 base hash — rows-only (⊘); q_simhash_pairs_portable
+    # runs the same vote and pair code on an md5 base hash
     description="SimHash near-dup pairs within Hamming distance 3 (32-bit, chunk-banded)",
     tags=("dedup",),
 )
@@ -257,7 +250,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     docs = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy(F.md5(F.lower(F.trim(F.col("text"))))).orderBy(
@@ -335,7 +327,6 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     from ..functions import text as T
 
@@ -471,28 +462,29 @@ def _oph_oracle() -> str:
     tags=("dedup",),
 )
 def q_minhash_oph_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
+    return sig_columns(oph_sigs(spark, sf_dir))
 
+
+def oph_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(id, sig) one-permutation signatures over the family-shared
+    shingle explode — the (id, sig) input of the operators/dedup pair
+    operator and agreement count."""
     from .pipeline_queries import corpus_shingles
 
-    # family-shared persisted shingle explode (bound-token form inside)
-    sh = corpus_shingles(spark, sf_dir)
-    h = F.conv(F.substring(F.md5("sh"), 1, 8), 16, 10).cast("long")
-    hashed = sh.select("doc_id", h.alias("h"))
-    binned = hashed.groupBy("doc_id").agg(
+    binned = md5_hashed(corpus_shingles(spark, sf_dir)).groupBy("id").agg(
         *[
             F.min(F.when(F.col("h") % _OPH_K == b, F.col("h"))).alias(f"m_{b}")
             for b in range(_OPH_K)
         ]
     )
-    sig_cols = [
+    sig = F.array(*[
         F.coalesce(
             *[
                 (F.col(f"m_{(i + d) % _OPH_K}") + F.lit(d * _OPH_C)) if d
                 else F.col(f"m_{i}")
                 for d in range(_OPH_K)
             ]
-        ).alias(f"sig_{i}")
+        )
         for i in range(_OPH_K)
-    ]
-    return binned.select("doc_id", *sig_cols)
+    ])
+    return binned.select("id", sig.alias("sig"))

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.sampling import md5_u32
 from ._util import dsum, dsum_wide, sql_dsum, sql_dsum_wide
 from .registry import query
 
@@ -235,11 +236,7 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat_ws("\x1f", F.lit(""), F.col("doc_id").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("bigint")
+        md5_u32(F.concat_ws("\x1f", F.lit(""), F.col("doc_id").cast("string")))
         % 10000
     )
     labeled = docs.select(

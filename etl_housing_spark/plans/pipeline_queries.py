@@ -22,7 +22,9 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..layout import fan_out
 from ..operators._ckpt import tracked_persist
+from ..operators import dedup as D
 from ..operators.dedup import band_pairs, ngrams, shingles
+from ..operators.sampling import md5_u32
 from ..sources.warehouse import sql_zorder_key
 from ._util import sql_davg, sql_dsum
 from .registry import query
@@ -272,23 +274,15 @@ def q_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _simhash_exprs() -> tuple[list[str], list[str], str, str]:
-    """Per-bit vote aggregates + recombination, identical arithmetic on both
-    engines: token hash = first 8 hex chars of md5 (32-bit), vote_i =
-    Σ ±1 by bit i, simhash = Σ (vote_i > 0) · 2^i."""
-    spark_votes = [
-        f"SUM(CASE WHEN (shiftright(h, {i}) & 1) = 1 THEN 1 ELSE -1 END) AS v_{i}"
-        for i in range(32)
-    ]
-    duck_votes = [
-        f"SUM(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS v_{i}"
-        for i in range(32)
-    ]
-    combine = " + ".join(f"(CASE WHEN v_{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(32))
-    return spark_votes, duck_votes, f"CAST({combine} AS BIGINT)", combine
-
-
-_SH_SPARK_VOTES, _SH_DUCK_VOTES, _SH_COMBINE, _ = _simhash_exprs()
+# DuckDB spelling of operators/dedup.simhash_sigs over the md5 base hash:
+# vote_i = Σ ±1 by bit i, simhash = Σ (vote_i > 0) · 2^i
+_SH_DUCK_VOTES = [
+    f"SUM(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS v_{i}"
+    for i in range(32)
+]
+_SH_COMBINE = "CAST({} AS BIGINT)".format(
+    " + ".join(f"(CASE WHEN v_{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(32))
+)
 
 
 @query(
@@ -304,23 +298,22 @@ _SH_SPARK_VOTES, _SH_DUCK_VOTES, _SH_COMBINE, _ = _simhash_exprs()
     SELECT doc_id, {_SH_COMBINE} AS simhash FROM votes
     """,
     description="portable SimHash (32-bit, md5-derived token hashes) — the "
-    "oracle-checked twin of operators.dedup.simhash_near_dups' murmur3 fast path: "
-    "every signature reproduced bit-for-bit by the DuckDB oracle. One grouped "
-    "aggregate with 32 map-side-combinable ±1 vote sums, then a map-only bit "
-    "recombination — shuffle carries 32 longs per doc, no pairs",
+    "oracle-checked twin of production SimHash: the same vote core "
+    "(operators.dedup.simhash_sigs) with only the base hash swapped for "
+    "murmur3, every signature reproduced bit-for-bit by the DuckDB oracle. One "
+    "grouped aggregate with 32 map-side-combinable ±1 vote sums, then a "
+    "map-only bit recombination — shuffle carries 32 longs per doc, no pairs",
     tags=("dedup", "pipeline"),
 )
 def q_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.explode(F.array_distinct(F.split(F.col("text"), " "))).alias("tok")
-    )
-    hashed = tok.select(
-        "doc_id",
-        F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long").alias("h"),
-    )
-    votes = hashed.groupBy("doc_id").agg(*[F.expr(v) for v in _SH_SPARK_VOTES])
-    return votes.select("doc_id", F.expr(_SH_COMBINE).alias("simhash"))
+    return _portable_simhash(spark, sf_dir).withColumnRenamed("id", "doc_id")
+
+
+def _portable_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(id, simhash) over distinct unigram tokens with the md5 base hash —
+    operators/dedup.simhash with md5_u32 in place of murmur3_u32."""
+    toks = shingles(load_table(spark, sf_dir, "documents"), "doc_id", "text", 1)
+    return D.simhash_sigs(toks.select("id", md5_u32("sh").alias("h")))
 
 
 @query(
@@ -409,34 +402,23 @@ def q_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _band_exprs() -> tuple[str, str]:
-    """4 bands × 4 signature rows: band key = comma-joined sig values —
-    identical string construction on both engines."""
-    spark_stack = "stack(4, " + ", ".join(
-        f"{b}, concat_ws(',', " + ", ".join(f"sig_{4 * b + j}" for j in range(4)) + ")"
-        for b in range(4)
-    ) + ") AS (b, bkey)"
-    duck_union = "\n      UNION ALL ".join(
-        f"SELECT doc_id, {b} AS b, concat_ws(',', "
-        + ", ".join(f"sig_{4 * b + j}" for j in range(4))
-        + ") AS bkey FROM sigs"
-        for b in range(4)
-    )
-    return spark_stack, duck_union
-
-
-_BAND_STACK, _BAND_UNION = _band_exprs()
+# DuckDB spelling of operators/dedup.minhash_bands at 4 bands × 4 rows: the
+# comma-joined slice values are equal exactly when the slices are
+_BAND_UNION = "\n      UNION ALL ".join(
+    f"SELECT doc_id, {b} AS b, concat_ws(',', "
+    + ", ".join(f"sig_{4 * b + j}" for j in range(4))
+    + ") AS bkey FROM sigs"
+    for b in range(4)
+)
 _MATCH_DUCK = " + ".join(
     f"(CASE WHEN sa.sig_{i} = sb.sig_{i} THEN 1 ELSE 0 END)" for i in range(16)
-)
-_MATCH_SPARK = " + ".join(
-    f"(CASE WHEN a_{i} = b_{i} THEN 1 ELSE 0 END)" for i in range(16)
 )
 
 
 def _mh_pairs_oracle(oph: bool = False) -> str:
-    """Oracle of _mh_pairs_from over the k-wise (q_minhash_portable) or the
-    one-permutation (q_minhash_oph_portable) signature CTE."""
+    """Oracle of operators/dedup.minhash_pairs at 4 × 4 over the k-wise
+    (q_minhash_portable) or the one-permutation (q_minhash_oph_portable)
+    signature CTE."""
     from .dedup_queries import _mh_oracle, _oph_oracle
 
     return f"""
@@ -461,51 +443,19 @@ def _mh_pairs_oracle(oph: bool = False) -> str:
     oracle=_mh_pairs_oracle(),
     description="the FULL MinHash→LSH candidate pipeline, oracle-checked end to end: "
     "portable md5-derived signatures (q_minhash_portable) → 4 bands × 4 rows, band "
-    "key = joined sig values → equi-self-join per band bucket → distinct candidate "
-    "pairs → Jaccard estimate = matching-signature fraction. This is the "
-    "oracle-proven twin of operators.dedup.minhash_near_dups' murmur3 fast path — "
-    "every stage (signature, banding, candidate join, estimate) hash-matches "
-    "DuckDB. Scale shape: candidates come from band-bucket equi-joins (never "
-    "all-pairs); est_jaccard = n_match/16 is exact dyadic arithmetic",
+    "key = the signature slice → equi-self-join per band bucket → distinct candidate "
+    "pairs → Jaccard estimate = matching-signature fraction. It runs production "
+    "MinHash's own signature, band-key and pair code (operators.dedup) with only "
+    "the base hash swapped for murmur3 — every stage (signature, banding, candidate "
+    "join, estimate) hash-matches DuckDB. Scale shape: candidates come from "
+    "band-bucket equi-joins (never all-pairs); est_jaccard = n_match/16 is exact "
+    "dyadic arithmetic",
     tags=("dedup", "pipeline", "bench"),
 )
 def q_minhash_pairs_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup_queries import q_minhash_portable
+    from .dedup_queries import portable_sigs
 
-    return _mh_pairs_from(q_minhash_portable(spark, sf_dir))
-
-
-def _mh_bands(sigs: DataFrame) -> DataFrame:
-    """The 4 band × 4 row table of a (doc_id, sig_0..sig_15) frame, as the
-    (id, band, bkey) input of operators.dedup.band_pairs."""
-    return sigs.selectExpr("doc_id AS id", _BAND_STACK).withColumnRenamed(
-        "b", "band"
-    )
-
-
-def _mh_pairs_from(sigs: DataFrame) -> DataFrame:
-    """MinHash-LSH candidate pairs + n_match/est_jaccard over a signature
-    frame (doc_id, sig_0..sig_15) — the q_minhash_pairs_portable body as a
-    reusable core, so the density-safe consensus can feed it a
-    keeper-restricted signature frame (signatures are per-doc, banding and
-    matching are pairwise, so restriction commutes with detection)."""
-    pairs = band_pairs(_mh_bands(sigs))
-    sa = sigs.select(
-        F.col("doc_id").alias("id_a"), *[F.col(f"sig_{i}").alias(f"a_{i}") for i in range(16)]
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("id_b"), *[F.col(f"sig_{i}").alias(f"b_{i}") for i in range(16)]
-    )
-    return (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.expr(f"CAST({_MATCH_SPARK} AS BIGINT)").alias("n_match"),
-            F.expr(f"({_MATCH_SPARK}) / CAST(16 AS DOUBLE)").alias("est_jaccard"),
-        )
-    )
+    return D.minhash_pairs(portable_sigs(spark, sf_dir), 4, 4)
 
 
 _TRUTH_SQL = f"""sh AS ({_SHINGLE_DUCK}),
@@ -714,18 +664,12 @@ def _lsh_band_sweep_oracle() -> str:
     tags=("dedup", "pipeline"),
 )
 def q_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup_queries import q_minhash_portable
+    from .dedup_queries import portable_sigs
 
-    sigs = tracked_persist(q_minhash_portable(spark, sf_dir))
+    sigs = tracked_persist(portable_sigs(spark, sf_dir))
     cands = None
     for b, r in _SWEEP_LAYOUTS:
-        stack = f"stack({b}, " + ", ".join(
-            f"{k}, concat_ws(',', "
-            + ", ".join(f"sig_{k * r + j}" for j in range(r))
-            + ")"
-            for k in range(b)
-        ) + ") AS (band, bkey)"
-        c = band_pairs(sigs.selectExpr("doc_id AS id", stack)).select(
+        c = band_pairs(D.minhash_bands(sigs, b, r)).select(
             F.lit(f"b{b}r{r}").alias("layout"), "id_a", "id_b"
         )
         cands = c if cands is None else cands.unionByName(c)
@@ -1246,7 +1190,7 @@ def q_class_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simhash_sql_cte() -> str:
-    """The q_simhash_portable pipeline as a reusable CTE body."""
+    """The q_simhash_portable oracle as a reusable CTE body."""
     return f"""
     WITH tok AS (
       SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS tok
@@ -1283,30 +1227,15 @@ def _simhash_sql_cte() -> str:
     description="the FULL SimHash near-dup pipeline, oracle-checked end to end: "
     "portable 32-bit signatures (q_simhash_portable) → pigeonhole banding (4 × "
     "8-bit chunks: Hamming ≤ 3 guarantees a shared chunk) → per-chunk equi-join "
-    "candidates → exact Hamming verify via bit_count(xor). The oracle-proven twin "
-    "of operators.dedup.simhash_near_dups' murmur3 fast path; candidates only, "
-    "never all-pairs",
+    "candidates → exact Hamming verify via bit_count(xor). It runs production "
+    "SimHash's own vote and pair code (operators.dedup.simhash_sigs / "
+    "simhash_pairs) with only the base hash swapped for murmur3; candidates "
+    "only, never all-pairs",
     tags=("dedup", "pipeline"),
 )
 def q_simhash_pairs_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # three consumers (band table + both attach sides): one signature pass
-    sigs = tracked_persist(q_simhash_portable(spark, sf_dir))
-    pairs = band_pairs(
-        sigs.select(
-            F.col("doc_id").alias("id"),
-            F.explode(F.sequence(F.lit(0), F.lit(3))).alias("band"),
-            "simhash",
-        ).select("id", "band", F.expr("shiftright(simhash, 8 * band) & 255").alias("bkey"))
-    )
-    sa = sigs.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("sh_a"))
-    sb = sigs.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("sh_b"))
-    ham = F.expr("bit_count(sh_a ^ sh_b)")
-    return (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .filter(ham <= 3)
-        .select("id_a", "id_b", ham.cast("long").alias("hamming"))
-    )
+    pairs = D.simhash_pairs(_portable_simhash(spark, sf_dir), max_hamming=3, chunks=4)
+    return pairs.select("id_a", "id_b", F.col("hamming").cast("long"))
 
 
 _MAX_DF = 20  # similarity vocabulary cap: tokens in more docs carry ~no
@@ -2233,9 +2162,7 @@ def q_dsir_weight(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "is_tgt",
-            (F.conv(F.substring(F.md5("b"), 1, 8), 16, 10).cast("long") % _DSIR_B).alias(
-                "bucket"
-            ),
+            (md5_u32("b") % _DSIR_B).alias("bucket"),
         )
     )
     stats = bg.groupBy("bucket").agg(
@@ -2670,7 +2597,7 @@ def _fineweb_oracle() -> str:
 )
 def q_fineweb_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import text as T
-    from .dedup_queries import q_minhash_portable
+    from .dedup_queries import portable_sigs
     from .text_queries import gopher_metrics, gopher_rule_flags
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2760,11 +2687,11 @@ def q_fineweb_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # S5: near-dup drop — a survivor with a smaller surviving band-mate is
     # the id_b side of some survivor pair (distinct: it may have several)
-    sigs = q_minhash_portable(spark, sf_dir).join(
-        s4.filter(F.col("p4") == 1).select("doc_id"), "doc_id"
+    sigs = portable_sigs(spark, sf_dir).join(
+        s4.filter(F.col("p4") == 1).select(F.col("doc_id").alias("id")), "id"
     )
     drp = (
-        band_pairs(_mh_bands(sigs))
+        band_pairs(D.minhash_bands(sigs, 4, 4))
         .select(F.col("id_b").alias("doc_id"))
         .distinct()
         .withColumn("hit", F.lit(1))
@@ -2923,9 +2850,7 @@ def q_quality_classifier_portable(spark: SparkSession, sf_dir: str) -> DataFrame
         .select(
             "doc_id",
             "is_tgt",
-            (F.conv(F.substring(F.md5("b"), 1, 8), 16, 10).cast("long") % _DSIR_B).alias(
-                "bucket"
-            ),
+            (md5_u32("b") % _DSIR_B).alias("bucket"),
         )
     )
     x = bg.groupBy("doc_id", "is_tgt", "bucket").agg(
@@ -3112,12 +3037,9 @@ def q_lm_heldout_jm(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "pipeline", "bench"),
 )
 def q_oph_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup_queries import q_minhash_oph_portable
+    from .dedup_queries import oph_sigs
 
-    # three consumers (band stack + both verification sides) — one
-    # materialization of the signature pass, the q_minhash_pairs_portable
-    # convention; without it the explode+16-min agg plan runs per consumer
-    return _mh_pairs_from(tracked_persist(q_minhash_oph_portable(spark, sf_dir)))
+    return D.minhash_pairs(oph_sigs(spark, sf_dir), 4, 4)
 
 
 def _oph_vs_kwise_oracle() -> str:
@@ -3154,29 +3076,21 @@ def _oph_vs_kwise_oracle() -> str:
     tags=("dedup", "pipeline"),
 )
 def q_oph_vs_kwise(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup_queries import q_minhash_oph_portable, q_minhash_portable
+    from .dedup_queries import oph_sigs, portable_sigs
 
     truth = _jaccard_decile_truth(spark, sf_dir).filter(F.col("d") >= 5)
-    k_match = " + ".join(f"(CASE WHEN ka_{i} = kb_{i} THEN 1 ELSE 0 END)" for i in range(16))
-    o_match = " + ".join(f"(CASE WHEN oa_{i} = ob_{i} THEN 1 ELSE 0 END)" for i in range(16))
-    ks = q_minhash_portable(spark, sf_dir)
-    os_ = q_minhash_oph_portable(spark, sf_dir)
-    ka = ks.select(F.col("doc_id").alias("id_a"), *[F.col(f"sig_{i}").alias(f"ka_{i}") for i in range(16)])
-    kb = ks.select(F.col("doc_id").alias("id_b"), *[F.col(f"sig_{i}").alias(f"kb_{i}") for i in range(16)])
-    oa = os_.select(F.col("doc_id").alias("id_a"), *[F.col(f"sig_{i}").alias(f"oa_{i}") for i in range(16)])
-    ob = os_.select(F.col("doc_id").alias("id_b"), *[F.col(f"sig_{i}").alias(f"ob_{i}") for i in range(16)])
-    return (
-        truth.join(ka, "id_a")
-        .join(kb, "id_b")
-        .join(oa, "id_a")
-        .join(ob, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            "d",
-            F.expr(f"CAST({k_match} AS BIGINT)").alias("n_match_kwise"),
-            F.expr(f"CAST({o_match} AS BIGINT)").alias("n_match_oph"),
-        )
+    for name, sig in (("k", portable_sigs(spark, sf_dir)), ("o", oph_sigs(spark, sf_dir))):
+        for side in ("a", "b"):
+            truth = truth.join(
+                sig.select(F.col("id").alias(f"id_{side}"), F.col("sig").alias(name + side)),
+                f"id_{side}",
+            )
+    return truth.select(
+        "id_a",
+        "id_b",
+        "d",
+        D.sig_agreement("ka", "kb").alias("n_match_kwise"),
+        D.sig_agreement("oa", "ob").alias("n_match_oph"),
     )
 
 

@@ -243,16 +243,9 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     docs = load_table(spark, sf_dir, "documents")
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws("\x1f", F.lit("ws"), F.col("doc_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        / F.lit(4294967296.0)
-    )
+    u = SA.md5_u32(
+        F.concat_ws("\x1f", F.lit("ws"), F.col("doc_id").cast("string"))
+    ) / F.lit(4294967296.0)
     weight = F.least(F.col("n_chars") / 400.0, F.lit(1.0))
     return (
         docs.select("doc_id", "n_chars", weight.alias("weight"), u.alias("u"))

@@ -20,13 +20,15 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators._ckpt import single_shot_checkpoint
+from ..operators.dedup import _MH_A, _MH_B
+from ..operators.dedup import _MH_P as _P
+from ..operators.sampling import md5_u32
 from .registry import query
 
-_P = 4294967311  # smallest prime > 2^32 (the q_minhash_portable modulus)
-# Four independent affine hash rows for the count-min depth (d=4, w=256):
-# err ≤ 2N/w with prob 1 − (1/2)^4 per probe.
-_CM_A = [1014583970, 671191146, 734632613, 963375983]
-_CM_B = [141133399, 855846782, 127864392, 502441329]
+# Four independent affine hash rows for the count-min depth (d=4, w=256),
+# the first four of the MinHash family: err ≤ 2N/w with prob 1 − (1/2)^4
+# per probe.
+_CM_A, _CM_B = _MH_A[:4], _MH_B[:4]
 _CM_W = 256
 
 _H32 = "CAST('0x' || substr(md5(tok), 1, 8) AS BIGINT)"
@@ -77,7 +79,7 @@ def q_countmin_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     occ = docs.select(F.explode(F.split("text", " ")).alias("tok"))
     tc = occ.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
-    h = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("bigint")
+    h = md5_u32("tok")
     hashed = tc.select("tok", h.alias("h"), "c")
     cells = hashed.select(
         "c",
@@ -192,7 +194,7 @@ def q_hll_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame — without this each branch replays the explode+distinct shuffle
     # over the full corpus.
     vals = single_shot_checkpoint(docs.select(F.explode(grams).alias("tok")).distinct())
-    h = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("bigint")
+    h = md5_u32("tok")
     hashed = vals.select(h.alias("h"))
     suffix = (F.col("h") / 64).cast("bigint") % 67108864  # 26-bit suffix
     rho = F.when(suffix == 0, F.lit(27)).otherwise(27 - F.length(F.bin(suffix)))

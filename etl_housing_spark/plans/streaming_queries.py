@@ -345,16 +345,17 @@ def q_stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Two-batch replay (shared _two_batch_replay harness): banded signatures
     # are computed map-side by the portable MinHash chain; the corpus
     # (doc_id % 5 <> 0) seeds state, then the ingest batch is gated.
-    from .dedup_queries import q_minhash_portable
-    from .pipeline_queries import _BAND_STACK
+    from ..operators.dedup import minhash_bands
+    from .dedup_queries import portable_sigs
 
-    sigs = q_minhash_portable(spark, sf_dir)
-    bands = sigs.selectExpr("doc_id", _BAND_STACK)
+    bands = minhash_bands(portable_sigs(spark, sf_dir), 4, 4).select(
+        F.col("id").alias("doc_id"), F.col("band").alias("b"), "bkey"
+    )
     hits = _two_batch_replay(
         spark,
         bands,
         F.col("doc_id") % 5 == 0,
-        "doc_id BIGINT, b INT, bkey STRING",
+        "doc_id BIGINT, b INT, bkey ARRAY<BIGINT>",
         jobs.neardup_gate_stream,
         "ehs_gate_replay_",
     )

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..operators._ckpt import tracked_persist
 from ..functions import text as T
+from ..operators.sampling import md5_u32
 from .registry import query
 
 _STOPSET_SQL = "['the', 'a', 'of', 'and', 'to']"  # == functions.text.STOPWORDS['en']
@@ -1832,10 +1833,7 @@ def _video_fp_from(docs: DataFrame) -> DataFrame:
 )
 def q_rolling_fingerprint_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    hs = F.expr(
-        "transform(split(text, ' '),"
-        " x -> cast(conv(substring(md5(x), 1, 8), 16, 10) AS BIGINT))"
-    )
+    hs = F.transform(F.split(F.col("text"), " "), lambda x: md5_u32(x))
     rfp = F.expr(
         "aggregate(slice(hs, 2, size(hs) - 1), hs[0],"
         " (a, x) -> (a * 31 + x) % 2147483647)"
@@ -3582,8 +3580,9 @@ def _consensus_safe_oracle() -> str:
 )
 def q_multimodal_consensus_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators._ckpt import single_shot_checkpoint, tracked_persist
-    from .dedup_queries import minhash_sigs_from
-    from .pipeline_queries import _mh_pairs_from, shingles_from
+    from ..operators.dedup import minhash_pairs, minhash_sigs
+    from .dedup_queries import md5_hashed
+    from .pipeline_queries import shingles_from
 
     ph = tracked_persist(q_image_phash(spark, sf_dir))
     afp = tracked_persist(q_audio_fingerprint(spark, sf_dir))
@@ -3607,11 +3606,11 @@ def q_multimodal_consensus_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # byte-identical signatures while paying the explode + 16
     # min-aggregations for the distinct-content subset, not the corpus —
     # at sf10 that pass over 500 k docs was the dominant text cost
-    sigs = minhash_sigs_from(
+    sigs = minhash_sigs(md5_hashed(
         shingles_from(
             docs.select("doc_id", "text").join(F.broadcast(keep), "doc_id")
         )
-    )
+    ))
     # four independent detector-leg jobs submitted concurrently (r16,
     # guide §2.6 — wall approaches max(legs), values unchanged); the
     # shared persisted fingerprint frames fill under per-partition cache
@@ -3619,7 +3618,7 @@ def q_multimodal_consensus_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators._ckpt import concurrent_checkpoints
 
     txt_f, img_f, aud_f, vid_f = concurrent_checkpoints([
-        _mh_pairs_from(sigs)
+        minhash_pairs(sigs, 4, 4)
         .filter(F.col("n_match") >= _CONSENSUS_TEXT_NMATCH)
         .select("id_a", "id_b"),
         _banded_cands_spark(

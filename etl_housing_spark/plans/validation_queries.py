@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.sampling import md5_u32
 from .registry import query
 
 
@@ -103,7 +104,7 @@ def q_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority"),
         F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss"),
     )
-    h = F.conv(F.substring(F.md5(row_str), 1, 8), 16, 10).cast("bigint")
+    h = md5_u32(row_str)
     return orders.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_rows"),
         (F.sum(h.cast("decimal(38,0)")) % F.lit(10**18)).cast("bigint").alias("checksum"),

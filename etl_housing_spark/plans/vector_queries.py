@@ -14,6 +14,7 @@ from ..catalog import load_table
 from ..functions import vectors as V
 from ..layout import fan_out
 from ..operators import similarity as S
+from ..operators.sampling import md5_u32
 from ._util import DEC
 from .registry import query
 
@@ -3028,9 +3029,7 @@ def q_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned, _cents = kmeans_fit(emb, k=4, rounds=2)
     sizes = assigned.groupBy("cid").agg(F.count(F.lit(1)).alias("n_c"))
     h = assigned.select("vec_id", "cid").join(F.broadcast(sizes), "cid")
-    hv = F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10).cast(
-        "long"
-    )
+    hv = md5_u32(F.col("vec_id").cast("string"))
     return h.select(
         "vec_id",
         "cid",

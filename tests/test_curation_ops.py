@@ -382,14 +382,14 @@ def test_fineweb_funnel_every_stage_binds(spark, tmp_path):
 
     # s5 ground truth from the independently hash-checked primitive: a
     # survivor drops iff it shares a band bucket with a SMALLER survivor
-    from etl_housing_spark.plans.dedup_queries import q_minhash_portable
-    from etl_housing_spark.plans.pipeline_queries import _BAND_STACK
+    from etl_housing_spark.operators.dedup import minhash_bands
+    from etl_housing_spark.plans.dedup_queries import portable_sigs
 
     survivors = {1, 5, 6, 7, 8}
     bands = {}
-    for r in q_minhash_portable(spark, sf).selectExpr("doc_id", _BAND_STACK).collect():
-        if r.doc_id in survivors:
-            bands.setdefault((r.b, r.bkey), []).append(r.doc_id)
+    for r in minhash_bands(portable_sigs(spark, sf), 4, 4).collect():
+        if r.id in survivors:
+            bands.setdefault((r.band, tuple(r.bkey)), []).append(r.id)
     for i in sorted(survivors):
         expected = 0 if any(
             min(ids) < i for ids in bands.values() if i in ids

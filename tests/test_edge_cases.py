@@ -57,6 +57,19 @@ def test_minhash_rejects_bands_not_dividing_hashes(spark):
         minhash_near_dups(one, "doc_id", "text", num_hashes=16, bands=3)
 
 
+def test_minhash_rejects_no_hashes(spark):
+    one = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="num_hashes"):
+        minhash_near_dups(one, "doc_id", "text", num_hashes=0, bands=4)
+
+
+def test_minhash_rejects_more_hashes_than_the_table(spark):
+    # the affine table holds 64 pairs: zip would silently truncate past it
+    one = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="num_hashes"):
+        minhash_near_dups(one, "doc_id", "text", num_hashes=128, bands=4)
+
+
 def test_simhash_rejects_max_hamming_at_chunks(spark):
     # pigeonhole needs max_hamming < chunks
     one = spark.createDataFrame([(1, "a b")], "doc_id long, text string")

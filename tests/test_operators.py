@@ -114,6 +114,41 @@ def test_band_pairs_matches_bruteforce(spark):
         band_pairs(banded.withColumn("sig", F.lit(1)))
 
 
+@pytest.mark.parametrize("bands,rows", [(4, 4), (8, 2)])
+def test_minhash_pairs_matches_bruteforce(spark, bands, rows):
+    """minhash_pairs law on planted signature arrays: the candidates are
+    exactly the pairs sharing a band slice, with n_match and est_jaccard
+    equal to a pure-Python agreement count."""
+    from itertools import combinations
+
+    from etl_housing_spark.operators.dedup import minhash_pairs
+
+    base = list(range(100, 116))
+    sigs = {
+        1: base,
+        2: base[:4] + [0] * 12,  # shares only the first 4 positions
+        3: [0] * 14 + base[14:],  # shares only the last 2 positions
+        4: base[:2] + [9] * 14,  # shares positions 0-1: one 8x2 band only
+        5: [7] * 16,  # shares nothing
+        6: base[:8] + [5] * 8,  # same band prefix as 1 and 2 in 4x4
+    }
+    frame = spark.createDataFrame(list(sigs.items()), "id long, sig array<bigint>")
+    got = {
+        (r.id_a, r.id_b): (r.n_match, r.est_jaccard)
+        for r in minhash_pairs(frame, bands, rows).collect()
+    }
+    want = {}
+    for a, b in combinations(sorted(sigs), 2):
+        sa, sb = sigs[a], sigs[b]
+        if any(sa[k * rows:(k + 1) * rows] == sb[k * rows:(k + 1) * rows]
+               for k in range(bands)):
+            n = sum(x == y for x, y in zip(sa, sb))
+            want[(a, b)] = (n, n / 16)
+    assert got == want
+    assert (1, 4) in got if rows == 2 else (1, 4) not in got
+    assert not any(5 in p for p in got)
+
+
 def test_skinny_pair_attach_matches_reference(spark, docs):
     """The r16 skinny-pairs forms (candidates carry ids only; signatures /
     fingerprints re-attach by id after the distinct) must reproduce the
@@ -430,16 +465,6 @@ def test_decode_media_isolates_short_and_pil_style_failures(spark):
         decode_media(df2, strict=True).collect()
     out = resize_media(df2, 2, 2).collect()[0]  # resize isolates it too
     assert out.width is None
-
-
-def test_minhash_mllib_agrees_with_handrolled(docs):
-    from etl_housing_spark.operators.dedup import minhash_near_dups_mllib
-
-    pairs = minhash_near_dups_mllib(docs, "doc_id", "text", max_jaccard_distance=0.5)
-    got = {(r.id_a, r.id_b) for r in pairs.collect()}
-    assert (1, 4) in got  # identical docs: distance 0, always found
-    assert (1, 2) in got  # near-dup within the distance budget
-    assert not any(3 in p for p in got)
 
 
 def test_minhash_estimate_tracks_true_jaccard(spark):
