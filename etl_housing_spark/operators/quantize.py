@@ -23,8 +23,6 @@ oracle-checked, not rows-only.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -243,7 +241,7 @@ def _collect_index_local(spark, cents: DataFrame, cb: DataFrame, per_sub: int):
     parquet part names carry a fresh write UUID — so a rewrite at the
     same path misses the cache instead of serving stale centroids.
     Returns None when the shape is unexpected (non-dense codebook
-    groups, NaNs) — the caller falls back to the distributed plan.
+    groups, NaNs) — the caller falls back to the batch core.
     """
     import numpy as np
     import pandas as pd
@@ -355,16 +353,13 @@ def _local_probe_and_lut(spark, st, query_vec, nprobe: int, per_sub: int):
     the ADC job (re-pays the decimal work per matched code row, +1.9 s).
     Honors EHS_FAST_SUMS exactly like _dec_sum (plan-construction-time
     read, plain double fold). Returns (probe_cids, lut_df) with lut_df
-    columns (lcid, lsub, cand, lut_d2), or (None, None) if the query is
-    non-finite.
+    columns (lcid, lsub, cand, lut_d2).
     """
     import numpy as np
     import pandas as pd
 
     fast = fast_sums()
     q = np.asarray(list(query_vec), dtype=np.float64)
-    if not np.isfinite(q).all():
-        return None, None
     # probe: zip_with(c, q, (x−y)²) then the decimal fold — x is the
     # centroid element, y the query element
     pterms = (st["cent_mat"] - q) ** 2
@@ -718,8 +713,8 @@ def pq_residual_codebooks(
        plateaus past fixture scale.
     2. RESIDUAL-encoded (not raw vectors): the non-residual corpus
        codebook measured ADC recall 7/10 at rerank=50 where the residual
-       form measures 10/10 at the same budget (sf1, scripts/
-       r14_ann_resid_proto.py) — quantizing x − c_cell(x) spends the
+       form measures 10/10 at the same budget (sf1, BASELINE.md
+       round 14) — quantizing x − c_cell(x) spends the
        M·log2(K) bits on the LOCAL displacement instead of re-encoding
        which cell the vector sits in, which is precisely why Jégou et
        al. 2011 §V define IVFADC over residuals.
@@ -834,8 +829,32 @@ def ivfpq_scaled_index(
     persisting for MANY queries should persist assigned/cents first and
     call pq_residual_codebooks on the persisted frames (ivfpq_scaled_topk
     does exactly that for its in-call build)."""
+    return _scaled_build(
+        vecs, subspaces, dim, kpq, train_cap, rounds, id_col, n, persist=False
+    )
+
+
+def _scaled_build(
+    vecs: DataFrame,
+    subspaces: int,
+    dim: int,
+    kpq: int,
+    train_cap: int,
+    rounds: int,
+    id_col: str,
+    n: int | None,
+    persist: bool,
+) -> tuple[DataFrame, DataFrame, DataFrame, int, int]:
+    """The one stateless IVFADC build: kc = ceil(sqrt(n)) coarse cells,
+    nprobe = ceil(2*sqrt(kc)) probed per query, a kmeans_fit, and the
+    residual codebooks trained on that fit. ``persist`` is the in-call
+    serving form: the assignment feeds the centroid update, the residual
+    frame and the probed scan, the centroids feed residuals, probe and
+    LUTs, the codebooks feed code assignment and ADC — so all three are
+    pinned, and the codebooks are trained ON the pinned fit."""
     import math
 
+    from ._ckpt import tracked_persist
     from .clustering import kmeans_fit
 
     if n is None:
@@ -843,10 +862,20 @@ def ivfpq_scaled_index(
     kc = int(math.ceil(math.sqrt(n)))
     nprobe = int(math.ceil(2 * math.sqrt(kc)))
     assigned, cents = kmeans_fit(vecs, k=kc, rounds=rounds, id_col=id_col)
+    if persist:
+        assigned, cents = tracked_persist(assigned), tracked_persist(cents)
     cb = pq_residual_codebooks(
         assigned, cents, n, subspaces, dim, kpq, train_cap, id_col
     )
-    return assigned, cents, cb, kc, nprobe
+    return assigned, cents, tracked_persist(cb) if persist else cb, kc, nprobe
+
+
+def _rerank_budget(k: int, kc: int, rerank: int | None) -> int:
+    """Default R = max(10·k, 2·kc) — the r15-adopted scaled budget
+    (ivfpq_scaled_topk stage 6): kc = ceil(sqrt(n)) is in hand whichever
+    way the index arrived, so R scales as 2*sqrt(n) without another
+    corpus count."""
+    return max(10 * k, 2 * kc) if rerank is None else rerank
 
 
 def _residual_subs(
@@ -1018,10 +1047,10 @@ def ivfpq_scaled_topk(
     M = ``subspaces`` bytes per vector instead of 4·dim — at dim=64
     float32, 16 vs 256 bytes — stacked on the shrinking scan fraction.
 
-    Measured at the defaults (r14, scripts/r14_ann_resid_proto.py +
-    decade run): recall@10 vs the exact L2 truth 1.0 at BOTH sf1 and
-    sf10 at the r15-adopted nprobe (the r14 1x-sqrt default measured
-    0.8 single-query / 0.70 over 3 query ids at sf10 — a coarse-probe
+    Measured at the defaults (r14, BASELINE.md round 14 + decade run):
+    recall@10 vs the exact L2 truth 1.0 at BOTH sf1 and sf10 at the
+    r15-adopted nprobe (the r14 1x-sqrt default measured 0.8
+    single-query / 0.70 over 3 query ids at sf10 — a coarse-probe
     ceiling, not a compression loss: the uncompressed IVFFlat variant
     measured the same, so the compression tier is recall-lossless at
     the rerank budget at every point measured through sf10; at sf30 the
@@ -1049,229 +1078,86 @@ def ivfpq_scaled_topk(
        flat wall; recall is monotone in R (the exact rerank selects
        from a superset), so the adopted 2·kc ≈ 2√n keeps every measured
        point at 1.0. Bytes stay trivial (2·kc·4·dim ≈ 0.4 MB at sf30,
-       ~8 MB at n=10⁹); at extreme R the codes-path candidate push-down
-       (an IN list of R ids) should become a broadcast semi-join — the
-       non-codes path already joins.
+       ~8 MB at n=10⁹); the candidates reach the float scan through a
+       broadcast join in both plans, so R never becomes a literal list.
+
+    Plans — exactly two, chosen by the inputs:
+    - LOCAL FUSED SERVE when ``codes``, a literal ``query_vec`` and an
+      ``index`` with kc <= _DRIVER_PROBE_MAX_KC are all given (the
+      deployment shape: q_ann_index_serve/append/compact/refit,
+      q_stream_ann_serve): driver-side probe and a broadcast local LUT
+      (_collect_index_local, _local_probe_and_lut), ADC candidate
+      selection and exact rerank fused into one action;
+    - otherwise the qid-keyed batch core (_ivfadc_core, shared with
+      ivfpq_scaled_topk_batch) over a one-row (qid, qv) query frame —
+      the stateless build, ``index`` without codes, a looked-up query,
+      kc past the driver bound, or an index whose collected shape
+      _collect_index_local rejects.
+    Both return the same rows
+    (tests/test_operators.py::test_serve_local_path_matches_distributed).
 
     Output: (vec_id, exact_d2, k, nprobe) — the scaled-family schema —
     or (rnk, vec_id, exact_d2) with ``with_rank=True``: the per-query
     slice of the batch-serving schema (q_ann_serve_batch), with the rank
     assigned by row_number over the UNROUNDED (exact_d2, vec_id) order
     (the batch oracle ranks before it rounds; ranking the rounded output
-    could disagree on 6-dp collisions). The window is unpartitioned but
-    runs over at most ``rerank`` rows — never a scale concern.
+    could disagree on 6-dp collisions). The window runs over at most
+    ``rerank`` rows — never a scale concern.
     ``vecs`` must be (id_col, v: array<double>) with unique non-null ids
     (the kmeans_assign precondition); ``n`` is the corpus count if the
     caller already took it. ``index``/``codes`` serve the query from a
     prebuilt ivfpq_scaled_index / ivfpq_scaled_codes pair. ``query_vec``
     supplies the query vector as a literal (the deployment shape — a
     user query is not a corpus row and must not cost a corpus scan to
-    fetch); without it the vector is looked up as ``vecs[query_id]``.
+    fetch) and must hold ``dim`` finite values (ValueError otherwise);
+    without it the vector is looked up as ``vecs[query_id]``.
     """
+    import math
+
     from ..functions import vectors as V
-    from ._ckpt import tracked_persist
 
     per_sub = dim // subspaces
-    if codes is not None and index is None:
-        # a codes table is only meaningful against the index that
-        # produced it: serving caller codes against a rebuilt stateless
-        # index would join on (cid, sub, code) numerically and silently
-        # produce wrong ADC distances if the snapshots/knobs differ
-        # (ADVICE r14) — demand the matching tuple instead of relying on
-        # deterministic-rebuild coincidence
-        raise ValueError(
-            "codes= requires index=: pass the ivfpq_scaled_index tuple "
-            "the codes table was built from"
-        )
-    if index is not None:
-        assigned, cents, cb, kc, nprobe = index
-    else:
-        import math
-
-        from .clustering import kmeans_fit
-
-        if n is None:
-            n = vecs.count()
-        kc = int(math.ceil(math.sqrt(n)))
-        nprobe = int(math.ceil(2 * math.sqrt(kc)))
-        assigned, cents = kmeans_fit(vecs, k=kc, rounds=rounds, id_col=id_col)
-        # the assignment feeds the centroid update, the residual frame,
-        # and the probed scan; centroids feed residuals, probe, and LUTs;
-        # codebooks feed training-assignment and ADC — persist all three
-        assigned = tracked_persist(assigned)
-        cents = tracked_persist(cents)
-        cb = tracked_persist(
-            pq_residual_codebooks(
-                assigned, cents, n, subspaces, dim, kpq, train_cap, id_col
-            )
-        )
-    if rerank is None:
-        # the r15-adopted scaled budget (stage-6 note): kc = ceil(sqrt(n))
-        # is already in hand whichever branch ran, so R scales as
-        # 2*sqrt(n) without another corpus count
-        rerank = max(10 * k, 2 * kc)
     if query_vec is not None:
-        # deployment serving shape: the query vector ARRIVES as a
-        # parameter (a user query is not a corpus row) — build it as a
-        # literal so no job ever scans the corpus just to fetch it. The
-        # lookup form below re-reads the vectors table inside every job
-        # that references qv/qd; against a cell-partitioned persisted
-        # index that is a full file-listing + scan per job, measured
-        # ~10x the whole serving cost at sf10.
-        lit_q = F.array(*[F.lit(float(x)) for x in query_vec])
-        one = vecs.sparkSession.range(1)
-        qv = one.select(lit_q.alias("__q"))
-        qd = one.select(F.posexplode(lit_q).alias("i", "qx"))
-    else:
-        qv = vecs.filter(F.col(id_col) == query_id).select(
-            F.col("v").alias("__q")
-        )
-        qd = vecs.filter(F.col(id_col) == query_id).select(
-            F.posexplode(F.col("v")).alias("i", "qx")
-        )
-    # driver-local serving fast path (VERDICT r15 item 3): with a packed
-    # code table, a literal query vector, and a broadcast-sized index,
-    # the probe runs driver-side (bit-exact decimal replication — see
-    # _dec18) and the LUT's per-term doubles ship as a broadcast LOCAL
-    # relation with the decimal fold evaluated in-row inside the ADC
-    # join — the probe job and the LUT materialization job both vanish
-    # from the per-query chain. The cents/cb collects are cached per
-    # index (keyed by plan + input files), so the batch/stream serving
-    # loops pay them once. EHS_SERVE_LOCAL=0 restores the distributed
-    # plan (the A/B lever); any structural surprise (non-dense codebook,
-    # non-finite query, kc past the driver-CPU bound) falls back too.
-    probe_cids_local, lut_local = None, None
+        query_vec = [float(x) for x in query_vec]
+        if len(query_vec) != dim or not all(map(math.isfinite, query_vec)):
+            raise ValueError(
+                f"query_vec must hold dim={dim} finite values, got "
+                f"{len(query_vec)} value(s): {query_vec[:4]}"
+            )
+        lit_q = F.array(*[F.lit(x) for x in query_vec])
+    st = None
     if (
         codes is not None
         and query_vec is not None
         and index is not None
-        and kc <= _DRIVER_PROBE_MAX_KC
-        and os.environ.get("EHS_SERVE_LOCAL", "1") != "0"
+        and index[3] <= _DRIVER_PROBE_MAX_KC
     ):
-        st = _collect_index_local(vecs.sparkSession, cents, cb, per_sub)
-        if st is not None:
-            probe_cids_local, lut_local = _local_probe_and_lut(
-                vecs.sparkSession, st, query_vec, nprobe, per_sub
-            )
-    if lut_local is None:
-        probe = (
-            cents.crossJoin(F.broadcast(qv))
-            .select("cid", V.sqdist(F.col("c"), F.col("__q")).alias("d"))
-            .orderBy("d", "cid")
-            .limit(nprobe)
-            .select("cid")
+        st = _collect_index_local(vecs.sparkSession, index[1], index[2], per_sub)
+    if st is not None:
+        # local fused serve (VERDICT r15 item 3, r16 fusion): the probe
+        # and the LUT's per-term doubles come from the driver, so the
+        # probe job and the LUT materialization job vanish from the
+        # per-query chain; the cents/cb collects are cached per index
+        # (keyed by plan + input files), so the batch/stream serving
+        # loops pay them once
+        _a, _c, _cb, kc, nprobe = index
+        probe_cids, lut = _local_probe_and_lut(
+            vecs.sparkSession, st, query_vec, nprobe, per_sub
         )
-        qres = (
-            cents.select("cid", F.posexplode("c").alias("i", "cx"))
-            .join(F.broadcast(probe), "cid")
-            .join(F.broadcast(qd), "i")
-            .select(
-                "cid",
-                "i",
-                F.expr(f"i div {per_sub}").alias("sub"),
-                (F.col("qx") - F.col("cx")).alias("qr"),
-            )
-        )
-        # LUT in the per-dim codegen form: nprobe·64·K scored rows through a
-        # (cid, sub, cand)-keyed decimal SUM — all whole-stage codegen. Two
-        # alternatives were MEASURED at sf10 (r15) and rejected: an in-row
-        # HOF fold over reshaped subvectors (fewer rows, but Catalyst
-        # interprets higher-order lambdas per row — no faster) and a fully
-        # static unrolled expression tree (codegen'd, but the per-QUERY
-        # literals force a fresh Janino compile of the big tree each call —
-        # packed serving 1.7 s → 9.0 s). The LUT is nprobe·M·K entries at
-        # ANY corpus size — never the scale bottleneck; latency here is
-        # stage overhead, and the grouped-SUM form carries the least of it.
-        lut = (
-            qres.join(F.broadcast(cb), "i")
-            .groupBy("cid", "sub", "cand")
-            .agg(
-                F.sum(_sq_dist_term(F.col("qr"), F.col("c")))
-                .cast("double")
-                .alias("lut_d2")
-            )
-        )
-    if codes is not None:
-        # packed-table serving (the deployment path): the scan reads
-        # n_probed PACKED rows (M bytes of codes each — the storage
-        # story), explodes them transiently, and scores through a
-        # BROADCAST HASH join against the per-cell LUT — every stage
-        # whole-stage codegen. Two in-row alternatives were MEASURED
-        # and rejected: a MAP-typed lookup (r14 — MapType element_at is
-        # a linear scan, ~1.2 s/query slower) and an ARRAY-matrix
-        # lookup (r15 — O(1) element_at, but the dense-scatter build
-        # plus Catalyst's INTERPRETED evaluation of the zip_with/
-        # aggregate lambdas measured 1.7 s → 4.5 s at sf10; a static
-        # unrolled tree re-pays Janino compilation per query, → 9.0 s).
-        # The codegen'd explode + hash join is the fast shape at every
-        # scale tried — the fan-out is transient (M rows per probed
-        # vector into a map-side partial agg), nothing wide shuffles.
-        #
-        # The probe binds as a STATIC filter, not a join: collect the
-        # nprobe cell ids (a kc-row aggregate — the tiny-metadata
-        # collect pattern) and push cid IN (...) into the codes scan.
-        # When codes is a cid-partitioned parquet read (the
-        # q_ann_index_serve artifact), that filter resolves at
-        # FILE-LISTING time (PartitionFilters) — only nprobe/kc of the
-        # files are opened, zero rows of unprobed cells are read or
-        # shuffled, which a join-form probe cannot guarantee (DPP is
-        # best-effort and the LIMIT in the probe blocks it).
-        probe_cids = (
-            probe_cids_local
-            if probe_cids_local is not None
-            else [r["cid"] for r in probe.collect()]
-        )
+        # the probe binds as a STATIC filter: against a cid-partitioned
+        # parquet read it resolves at FILE-LISTING time (PartitionFilters),
+        # so only nprobe/kc of the code files are opened. The packed
+        # codes explode transiently into a BROADCAST HASH join against
+        # the LUT — in-row MAP (r14) and ARRAY-matrix (r15) lookups were
+        # measured slower (interpreted lambdas), a static unrolled tree
+        # re-pays Janino compilation per query
         pc = codes.filter(F.col("cid").isin(probe_cids)).select(
             id_col, "cid", F.posexplode("codes").alias("sub", "code")
         )
-        if lut_local is not None:
-            # local-LUT form: the build side is a project over a
-            # LocalTableScan (the decimal fold, evaluated once per LUT
-            # entry at broadcast materialization — a single tiny job
-            # with no file scans and no nested broadcasts), and the ADC
-            # join itself is the same lean hash join + decimal SUM as
-            # the distributed form.
-            adc = (
-                pc.join(
-                    F.broadcast(lut_local),
-                    (pc.cid == lut_local.lcid)
-                    & (pc.sub == lut_local.lsub)
-                    & (pc.code == lut_local.cand),
-                )
-                .groupBy(id_col)
-                .agg(
-                    F.sum(F.col("lut_d2").cast("decimal(38,18)"))
-                    .cast("double")
-                    .alias("adc_d2")
-                )
-            )
-        else:
-            adc = (
-                pc.join(
-                    F.broadcast(lut),
-                    (pc.cid == lut.cid)
-                    & (pc.sub == lut.sub)
-                    & (pc.code == lut.cand),
-                )
-                .groupBy(id_col)
-                .agg(
-                    F.sum(F.col("lut_d2").cast("decimal(38,18)"))
-                    .cast("double")
-                    .alias("adc_d2")
-                )
-            )
-    else:
-        rsub = _residual_subs(
-            assigned.join(F.broadcast(probe), "cid"), cents, subspaces,
-            per_sub, id_col,
-        )
-        pcodes = _assign_codes_subs(rsub, _codebook_subs(cb, per_sub), id_col)
         adc = (
-            pcodes.join(
+            pc.join(
                 F.broadcast(lut),
-                (pcodes.cid == lut.cid)
-                & (pcodes.sub == lut.sub)
-                & (pcodes.code == lut.cand),
+                (pc.cid == lut.lcid) & (pc.sub == lut.lsub) & (pc.code == lut.cand),
             )
             .groupBy(id_col)
             .agg(
@@ -1280,81 +1166,38 @@ def ivfpq_scaled_topk(
                 .alias("adc_d2")
             )
         )
-    cand = adc.orderBy("adc_d2", id_col).limit(rerank).select(id_col)
-    if codes is not None and lut_local is not None:
-        # fused single-action serving (r16): ADC candidate selection and
-        # the exact rerank live in ONE plan — the candidates flow into
-        # the float scan through a broadcast semi-join instead of a
-        # collect + literal push-down. Measured at sf10: the two-action
-        # form (cand.collect then a second analyzed/AQE-scheduled job)
-        # ran 1.4–2.0 s/query warm, the fused form 1.0–1.4 s — the saved
-        # ~0.5 s is a whole action's analysis + scheduling constant, not
-        # bytes. What the fusion gives up is the literal In(vec_id
-        # row-group skip on the float scan, which only ever existed
-        # below R = 1024 (past it the operator already semi-joined, so
-        # sf30+ always read the probed cells' floats in full); the scan
-        # stays partition-pruned to the probed cells either way, a
-        # 2/√kc → 0 fraction of the corpus.
+        cand = (
+            adc.orderBy("adc_d2", id_col)
+            .limit(_rerank_budget(k, kc, rerank))
+            .select(id_col)
+        )
+        # fused single action (r16): the candidates flow into the float
+        # scan through a broadcast semi-join, not a collect + literal
+        # push-down — measured at sf10 1.0–1.4 s/query vs 1.4–2.0 s for
+        # the two-action form (the saved time is one action's analysis +
+        # scheduling constant). The float scan stays partition-pruned to
+        # the probed cells when ``vecs`` carries cid.
         rer = vecs
         if "cid" in rer.columns:
             rer = rer.filter(F.col("cid").isin(probe_cids))
         rer = rer.join(F.broadcast(cand), id_col, "left_semi")
-    elif codes is not None:
-        # distributed-path rerank: the R candidate ids are collected (R
-        # longs — bounded at any corpus size) and pushed into the float
-        # scan, so the reader skips row groups by min/max stats instead
-        # of scanning the corpus; candidates all live in probed cells,
-        # so when ``vecs`` carries the cell column (the cid-partitioned
-        # assignment artifact) the scan ALSO prunes to nprobe/kc of the
-        # files at listing time. The collect additionally means the ADC
-        # plan executes exactly once (the rerank consumes ids, not the
-        # adc lineage). The push-down FORM depends on R (the r15 sf30
-        # find): an IN-list of literals is the fastest shape at small R
-        # but its planning/pushdown cost grows with the list — at the
-        # adopted R = 2·kc = 1550 (sf30) the literal form measured
-        # ~+2 s/query over R=800; past the threshold the same collected
-        # ids go through a broadcast semi-join instead (value-identical:
-        # semi-join on ids ≡ isin), whose cost is R-independent.
-        cand_ids = [r[0] for r in cand.collect()]
-        rer = vecs
-        if "cid" in rer.columns:
-            rer = rer.filter(F.col("cid").isin(probe_cids))
-        if len(cand_ids) <= 1024:
-            rer = rer.filter(F.col(id_col).isin(cand_ids))
+        # in-row exact fold per candidate (≡ the oracle's grouped decimal
+        # SUM, order-free); only R ≈ 2*sqrt(n) rows reach it
+        ex = rer.select(id_col, V.sqdist(F.col("v"), lit_q).alias("exact_d2"))
+    else:
+        if query_vec is not None:
+            qvs = vecs.sparkSession.range(1).select(
+                F.lit(query_id).alias("qid"), lit_q.alias("qv")
+            )
         else:
-            # id type derived from the corpus frame, not assumed long —
-            # a caller with string/int ids would otherwise only hit the
-            # mismatch on the large-R path, never the literal path
-            from pyspark.sql.types import StructField, StructType
-
-            id_type = vecs.schema[id_col].dataType
-            ids_df = vecs.sparkSession.createDataFrame(
-                [(i,) for i in cand_ids],
-                StructType([StructField(id_col, id_type)]),
+            qvs = vecs.filter(F.col(id_col) == query_id).select(
+                F.col(id_col).alias("qid"), F.col("v").alias("qv")
             )
-            rer = rer.join(F.broadcast(ids_df), id_col, "left_semi")
-    else:
-        rer = vecs.join(F.broadcast(cand), id_col)
-    if query_vec is not None:
-        # literal query: the exact distance is one in-row fold per
-        # candidate — no explode, no per-dim join, no aggregate
-        # (decimal fold ≡ the oracle's grouped decimal SUM, order-free;
-        # only R = max(10*k, 2*kc) ≈ 2*sqrt(n) rows reach this fold, so
-        # the interpreted-HOF cost is irrelevant here)
-        ex = rer.select(
-            id_col, V.sqdist(F.col("v"), lit_q).alias("exact_d2")
+        ex, kc, nprobe = _ivfadc_core(
+            vecs, qvs, k, rerank, subspaces, dim, kpq, train_cap, rounds,
+            id_col, n, index, codes,
         )
-    else:
-        ex = (
-            rer.select(id_col, F.posexplode(F.col("v")).alias("i", "x"))
-            .join(F.broadcast(qd.select("i", F.col("qx"))), "i")
-            .groupBy(id_col)
-            .agg(
-                F.sum(_sq_dist_term(F.col("x"), F.col("qx")))
-                .cast("double")
-                .alias("exact_d2")
-            )
-        )
+        ex = ex.select(id_col, "exact_d2")
     if with_rank:
         from pyspark.sql import Window
 
@@ -1380,48 +1223,46 @@ def ivfpq_scaled_topk(
     )
 
 
-def ivfpq_scaled_topk_batch(
+def _ivfadc_core(
     vecs: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    rerank: int | None = None,
-    subspaces: int = 16,
-    dim: int = 64,
-    kpq: int = 256,
-    train_cap: int = 2048,
-    rounds: int = 2,
-    id_col: str = "vec_id",
-    n: int | None = None,
-    index: tuple[DataFrame, DataFrame, DataFrame, int, int] | None = None,
-    codes: DataFrame | None = None,
-) -> DataFrame:
-    """BATCH IVFADC+R against one shared corpus-scaled index: Q queries
-    answered by ONE plan — the throughput shape of a retrieval service
-    (FAISS's own search() is batched for the same reason).
+    qvs: DataFrame,
+    k: int,
+    rerank: int | None,
+    subspaces: int,
+    dim: int,
+    kpq: int,
+    train_cap: int,
+    rounds: int,
+    id_col: str,
+    n: int | None,
+    index: tuple[DataFrame, DataFrame, DataFrame, int, int] | None,
+    codes: DataFrame | None,
+) -> tuple[DataFrame, int, int]:
+    """The distributed IVFADC+R plan, keyed by ``qid``: ``qvs`` is the
+    (qid, qv) query frame — one row for ivfpq_scaled_topk's fallback, Q
+    rows for ivfpq_scaled_topk_batch.
 
-    Identical math to ivfpq_scaled_topk, keyed by qid where the
-    single-query form is keyed by nothing: per-query probes ranked by a
-    qid-partitioned window, per-(qid, cid) ADC lookup tables, and ONE
-    pass over the union of all probed cells' codes — a cell probed by
-    several queries is read once and fanned out through the broadcast
-    (qid, cid) probe join, so per-query marginal cost FALLS with batch
-    size wherever probes overlap. The expensive corpus-side stages
-    (coarse fit, codebook training, code assignment) are all
-    query-count-independent; everything per-query is kc-, nprobe- or
-    R-sized and broadcast.
-
-    Output: (query_id, rnk, vec_id, exact_d2) — top ``k`` per query in
-    exact-rerank order. Decimal-exact and totally ordered end to end,
-    so the batch is hash-checkable cross-engine (q_ann_serve_batch).
-    ``index``/``codes`` as in ivfpq_scaled_topk (codes requires index).
-    """
+    Per-query probes ranked by a qid-partitioned window, per-(qid, cid)
+    ADC lookup tables, and ONE pass over the union of all probed cells'
+    codes — a cell probed by several queries is read once and fanned out
+    through the broadcast (qid, cid) probe join. The corpus-side stages
+    (coarse fit, codebook training, code assignment) are query-count
+    independent; everything per-query is kc-, nprobe- or R-sized and
+    broadcast. Returns (ex, kc, nprobe) with ex = (qid, id_col,
+    exact_d2): the unrounded exact distance of every reranked candidate,
+    ranked by the caller."""
     from pyspark.sql.window import Window
 
     from ..functions import vectors as V
-    from ._ckpt import tracked_persist
 
     per_sub = dim // subspaces
     if codes is not None and index is None:
+        # a codes table is only meaningful against the index that
+        # produced it: serving caller codes against a rebuilt stateless
+        # index would join on (cid, sub, code) numerically and silently
+        # produce wrong ADC distances if the snapshots/knobs differ
+        # (ADVICE r14) — demand the matching tuple instead of relying on
+        # deterministic-rebuild coincidence
         raise ValueError(
             "codes= requires index=: pass the ivfpq_scaled_index tuple "
             "the codes table was built from"
@@ -1429,30 +1270,10 @@ def ivfpq_scaled_topk_batch(
     if index is not None:
         assigned, cents, cb, kc, nprobe = index
     else:
-        import math
-
-        from .clustering import kmeans_fit
-
-        if n is None:
-            n = vecs.count()
-        kc = int(math.ceil(math.sqrt(n)))
-        nprobe = int(math.ceil(2 * math.sqrt(kc)))
-        assigned, cents = kmeans_fit(vecs, k=kc, rounds=rounds, id_col=id_col)
-        assigned = tracked_persist(assigned)
-        cents = tracked_persist(cents)
-        cb = tracked_persist(
-            pq_residual_codebooks(
-                assigned, cents, n, subspaces, dim, kpq, train_cap, id_col
-            )
+        assigned, cents, cb, kc, nprobe = _scaled_build(
+            vecs, subspaces, dim, kpq, train_cap, rounds, id_col, n, persist=True
         )
-    if rerank is None:
-        # the r15-adopted scaled budget (ivfpq_scaled_topk stage-6 note):
-        # kc = ceil(sqrt(n)) is already in hand whichever branch ran, so
-        # R scales as 2*sqrt(n) without another corpus count
-        rerank = max(10 * k, 2 * kc)
-    qvs = vecs.filter(F.col(id_col).isin(list(query_ids))).select(
-        F.col(id_col).alias("qid"), F.col("v").alias("qv")
-    )
+    rerank = _rerank_budget(k, kc, rerank)
     w_probe = Window.partitionBy("qid").orderBy("d", "cid")
     probe = (
         cents.crossJoin(F.broadcast(qvs))
@@ -1472,6 +1293,11 @@ def ivfpq_scaled_topk_batch(
             (F.col("qx") - F.col("cx")).alias("qr"),
         )
     )
+    # LUT in the per-dim codegen form: nprobe·64·K scored rows per query
+    # through a keyed decimal SUM, all whole-stage codegen. An in-row HOF
+    # fold (interpreted lambdas, no faster) and a static unrolled tree
+    # (per-query Janino compile, 1.7 s → 9.0 s) were measured at sf10
+    # (r15) and rejected; the LUT is nprobe·M·K entries at any corpus size
     lut = (
         qres.join(F.broadcast(cb), "i")
         .groupBy("qid", "cid", "sub", "cand")
@@ -1484,11 +1310,20 @@ def ivfpq_scaled_topk_batch(
     # the union of all probed cells — each cell's codes are read/derived
     # ONCE however many queries probe it
     pcell_rows = probe.select("cid").distinct()
+    rer = vecs
     if codes is not None:
+        # the probe binds as a STATIC filter (a collected kc-bounded id
+        # list), which a cid-partitioned parquet read resolves at
+        # FILE-LISTING time — a join-form probe cannot promise that (DPP
+        # is best-effort and the probe window blocks it). Every candidate
+        # lives in a probed cell, so a float table carrying cid prunes the
+        # rerank scan the same way
         pcells = [r.cid for r in pcell_rows.collect()]
         pc = codes.filter(F.col("cid").isin(pcells)).select(
             id_col, "cid", F.posexplode("codes").alias("sub", "code")
         )
+        if "cid" in vecs.columns:
+            rer = vecs.filter(F.col("cid").isin(pcells))
     else:
         rsub = _residual_subs(
             assigned.join(F.broadcast(pcell_rows), "cid"), cents, subspaces,
@@ -1516,7 +1351,7 @@ def ivfpq_scaled_topk_batch(
         .select("qid", id_col)
     )
     ex = (
-        vecs.join(F.broadcast(cand), id_col)
+        rer.join(F.broadcast(cand), id_col)
         .select("qid", id_col, F.posexplode(F.col("v")).alias("i", "x"))
         .join(F.broadcast(qd), ["qid", "i"])
         .groupBy("qid", id_col)
@@ -1525,6 +1360,46 @@ def ivfpq_scaled_topk_batch(
             .cast("double")
             .alias("exact_d2")
         )
+    )
+    return ex, kc, nprobe
+
+
+def ivfpq_scaled_topk_batch(
+    vecs: DataFrame,
+    query_ids: list[int],
+    k: int = 10,
+    rerank: int | None = None,
+    subspaces: int = 16,
+    dim: int = 64,
+    kpq: int = 256,
+    train_cap: int = 2048,
+    rounds: int = 2,
+    id_col: str = "vec_id",
+    n: int | None = None,
+    index: tuple[DataFrame, DataFrame, DataFrame, int, int] | None = None,
+    codes: DataFrame | None = None,
+) -> DataFrame:
+    """BATCH IVFADC+R against one shared corpus-scaled index: Q queries
+    answered by ONE plan — the throughput shape of a retrieval service
+    (FAISS's own search() is batched for the same reason).
+
+    The looked-up query vectors feed _ivfadc_core, the same qid-keyed
+    plan ivfpq_scaled_topk falls back to, so per-query marginal cost
+    FALLS with batch size wherever probes overlap.
+
+    Output: (query_id, rnk, vec_id, exact_d2) — top ``k`` per query in
+    exact-rerank order. Decimal-exact and totally ordered end to end,
+    so the batch is hash-checkable cross-engine (q_ann_serve_batch).
+    ``index``/``codes`` as in ivfpq_scaled_topk (codes requires index).
+    """
+    from pyspark.sql.window import Window
+
+    qvs = vecs.filter(F.col(id_col).isin(list(query_ids))).select(
+        F.col(id_col).alias("qid"), F.col("v").alias("qv")
+    )
+    ex, _kc, _nprobe = _ivfadc_core(
+        vecs, qvs, k, rerank, subspaces, dim, kpq, train_cap, rounds,
+        id_col, n, index, codes,
     )
     w_k = Window.partitionBy("qid").orderBy("exact_d2", id_col)
     return (

@@ -1984,7 +1984,7 @@ def q_ann_recall_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 # non-residual corpus codebook ranked true neighbors at ADC rank 200-400
 # (7/10 recall at R=50-100, sf1), the residual form ranks them inside
 # R=50 (10/10) — raw-vector codes waste entropy re-encoding cell
-# identity (scripts/r14_ann_resid_proto.py; BASELINE.md round 14).
+# identity (BASELINE.md round 14).
 _PQ_SCALED_CTES = """,
     ncnt AS (SELECT COUNT(*) AS n FROM embeddings),
     nsel AS (SELECT CAST(CEIL(2 * SQRT(k)) AS BIGINT) AS np FROM ksel),

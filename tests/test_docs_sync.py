@@ -30,20 +30,46 @@ def test_every_query_has_description_and_distinct_columns():
 
 
 def test_docstring_test_file_references_exist():
-    """Every ``tests/<name>.py`` mentioned in package source must exist —
-    stale pointers (e.g. a renamed test module) fail here instead of
-    shipping broken cross-references to the judge."""
+    """Every ``tests/<name>.py`` and ``scripts/<name>.py`` mentioned in
+    package source must exist (a docstring may wrap after the slash) —
+    stale pointers (e.g. a renamed test module or a deleted profiler)
+    fail here instead of shipping broken cross-references."""
     import re
 
     root = Path(__file__).resolve().parents[1]
     pkg = root / "etl_housing_spark"
-    pat = re.compile(r"tests/([A-Za-z0-9_]+\.py)")
+    pat = re.compile(r"\b(tests|scripts)/\s*([A-Za-z0-9_]+\.py)")
     stale = []
     for py in pkg.rglob("*.py"):
-        for ref in pat.findall(py.read_text()):
-            if not (root / "tests" / ref).is_file():
-                stale.append(f"{py.relative_to(root)} -> tests/{ref}")
-    assert not stale, f"stale test-file references: {stale}"
+        for folder, ref in pat.findall(py.read_text()):
+            if not (root / folder / ref).is_file():
+                stale.append(f"{py.relative_to(root)} -> {folder}/{ref}")
+    assert not stale, f"stale file references: {stale}"
+
+
+def test_package_reads_only_the_known_environment():
+    """The package reads exactly three environment variables: the
+    session sizing pair and the exact/fast numeric mode. A user-set
+    variable that selects a plan is a second code path no parity check
+    pins, so a new read fails here instead of arriving unnoticed; a read
+    whose name is not a string literal fails too, since it cannot be
+    audited."""
+    import re
+
+    pkg = Path(__file__).resolve().parents[1] / "etl_housing_spark"
+    any_read = re.compile(r"\benviron\b|\bgetenv\b")
+    named = re.compile(
+        r"\b(?:environ(?:\.get)?\s*[\[(]|getenv\s*\()\s*[\"']([A-Za-z0-9_]+)[\"']"
+    )
+    names, opaque = set(), []
+    for py in sorted(pkg.rglob("*.py")):
+        text = py.read_text()
+        found = named.findall(text)
+        names.update(found)
+        if len(any_read.findall(text)) != len(found):
+            opaque.append(py.name)
+    assert not opaque, f"environment reads without a literal name in {opaque}"
+    assert names == {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM", "EHS_FAST_SUMS"}
 
 
 def test_driver_window_rotation_policy():

@@ -15,6 +15,7 @@ from etl_housing_spark.operators.dedup import (
 )
 from etl_housing_spark.operators.encode import get_dummies, keyword_flags
 from etl_housing_spark.operators.multimodal import frame_sample, synthesize_media
+from etl_housing_spark.operators.quantize import ivfpq_scaled_topk
 from etl_housing_spark.operators.similarity import topk_bruteforce
 
 LISTING_SCHEMA = (
@@ -68,6 +69,19 @@ def test_minhash_rejects_more_hashes_than_the_table(spark):
     one = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
     with pytest.raises(ValueError, match="num_hashes"):
         minhash_near_dups(one, "doc_id", "text", num_hashes=128, bands=4)
+
+
+@pytest.mark.parametrize(
+    "query_vec",
+    [[0.5], [0.5] * 63, [float("nan")] + [0.5] * 63],
+    ids=["len1", "dim-1", "nan"],
+)
+def test_ivfpq_serve_rejects_malformed_query(spark, query_vec):
+    # a short vector would broadcast through the driver probe and
+    # null-pad the exact distance; a NaN one has no distance order
+    one = spark.createDataFrame([(0, [0.0] * 64)], "vec_id long, v array<double>")
+    with pytest.raises(ValueError, match="query_vec"):
+        ivfpq_scaled_topk(one, dim=64, query_vec=query_vec)
 
 
 def test_simhash_rejects_max_hamming_at_chunks(spark):

@@ -1456,28 +1456,44 @@ def test_dec18_matches_spark_cast(spark):
         assert _dec18_fold(a, fast=False) == r.d
 
 
-def test_serve_local_path_matches_distributed(spark):
-    """Serving-path law (r16): the driver-local fast path (driver-side
-    decimal probe, broadcast local LUT, fused semi-join rerank) returns
-    EXACTLY the distributed plan's rows — the fast path moves jobs and
-    bytes, never values. Pinned against the persisted q_ann_index_serve
-    artifacts at the smoke SF."""
-    import os
-
+def test_serve_local_path_matches_distributed(spark, monkeypatch):
+    """Serving-path law (r16): the local fused serve (driver-side decimal
+    probe, broadcast local LUT, fused semi-join rerank) returns EXACTLY
+    the rows of the batch core ivfpq_scaled_topk falls back to past the
+    driver kc bound — the fast path moves jobs and bytes, never values.
+    Checked for the top-k schema and for the with_rank schema
+    q_stream_ann_serve writes, on one build of the persisted
+    q_ann_index_serve artifacts at the smoke SF."""
     from pyspark.sql import functions as F
 
-    from etl_housing_spark.plans import all_queries
+    from etl_housing_spark.operators import quantize
+    from etl_housing_spark.plans.vector_queries import _write_serve_artifacts
 
-    sf = "/root/testdata/sf0.001"
-    fn = all_queries()["q_ann_index_serve"].fn
-    os.environ["EHS_SERVE_LOCAL"] = "0"
-    try:
-        dist = [tuple(r) for r in fn(spark, sf).collect()]
-    finally:
-        os.environ["EHS_SERVE_LOCAL"] = "1"
-    local = [tuple(r) for r in fn(spark, sf).collect()]
-    del os.environ["EHS_SERVE_LOCAL"]
-    assert dist == local and len(local) == 10
+    p_assign, p_cells, p_cb, p_codes, kc, nprobe = _write_serve_artifacts(
+        spark, "/root/testdata/sf0.001"
+    )
+    qvec = list(p_assign.filter(F.col("vec_id") == 0).select("v").first()[0])
+
+    def serve(with_rank):
+        return [
+            tuple(r)
+            for r in quantize.ivfpq_scaled_topk(
+                p_assign,
+                index=(p_assign, p_cells, p_cb, kc, nprobe),
+                codes=p_codes,
+                query_vec=qvec,
+                with_rank=with_rank,
+            ).collect()
+        ]
+
+    def serve_both():
+        # top-k rows come back ordered; ranked rows carry rnk first
+        return serve(False), sorted(serve(True))
+
+    local = serve_both()
+    monkeypatch.setattr(quantize, "_DRIVER_PROBE_MAX_KC", 0)
+    dist = serve_both()
+    assert dist == local and [len(rows) for rows in local] == [10, 10]
 
 
 def test_refit_serve_matches_fresh_build(spark):
