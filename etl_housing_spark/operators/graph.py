@@ -11,13 +11,19 @@ Scale design: each PageRank iteration is one equi-join (ranks ⋈ edges on
 src — both sides hash-partitioned on the join key, so successive iterations
 reuse the same shuffle layout) plus one partial-agg groupBy(dst). Dangling
 mass (nodes with no out-edges) is a one-row aggregate broadcast back in-plan
-— no collect() in the loop. Round persistence, lineage truncation and
-release follow operators/_ckpt.Generations. Per-round work is one
+— no collect() in the loop. Both sums accumulate in DECIMAL(38,18): exact
+and order-free, so the rank vector is the same double on any partitioning
+and on DuckDB (q_pagerank_portable hash-checks it). Each term rounds by at
+most 0.5e-18 on the way in, far below the queries' round(·, 8). Round
+persistence, lineage truncation and release follow
+operators/_ckpt.Generations. Per-round work is one
 O(|E|/p)-per-task stage pair: the textbook distributed PageRank shape, good
 for any |E| that one shuffle can move.
 """
 
 from __future__ import annotations
+
+from decimal import Decimal
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -26,6 +32,8 @@ from ._ckpt import Generations, tracked_persist
 
 __all__ = ["pagerank", "degree_stats", "label_propagation"]
 
+_DEC = "decimal(38,18)"
+
 
 def pagerank(
     edges: DataFrame,
@@ -33,14 +41,18 @@ def pagerank(
     dst: str = "dst",
     damping: float = 0.85,
     iterations: int = 10,
+    nodes: DataFrame | None = None,
 ) -> DataFrame:
     """Power-iteration PageRank on a directed edge list.
 
-    Returns ``(node, rank)`` with Σ rank = 1 (dangling-node mass is
-    redistributed uniformly each round, the standard correction). Fixed
-    iteration count keeps the result deterministic up to float summation
-    order — callers needing convergence control can compare successive
-    rank vectors themselves.
+    ``nodes`` is a one-column ``node`` frame, one row per node, that holds
+    every edge endpoint; nodes without edges rank as dangling nodes. The
+    default is the edge endpoints. Returns ``(node, rank)`` with Σ rank = 1
+    (dangling-node mass is redistributed uniformly each round, the standard
+    correction). Contributions and dangling mass sum in DECIMAL(38,18), so a
+    fixed iteration count gives the same doubles on any partitioning;
+    callers needing convergence control can compare successive rank vectors
+    themselves.
     """
     # Persist the edge list BEFORE deriving nodes/outdeg/fanout: all three
     # setup frames consume it, and without the persist each one re-executes
@@ -52,11 +64,13 @@ def pagerank(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
     )
-    nodes = tracked_persist(
-        e.select(F.col("src").alias("node"))
-        .unionAll(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    if nodes is None:
+        nodes = (
+            e.select(F.col("src").alias("node"))
+            .unionAll(e.select(F.col("dst").alias("node")))
+            .distinct()
+        )
+    nodes = tracked_persist(nodes.select("node"))
     # One setup-time action (like MLlib's iterative fits): N is a plan
     # constant for every subsequent iteration. This count also materializes
     # the edge persist — the only eager job before the caller's action.
@@ -90,16 +104,21 @@ def pagerank(
     ranks = gens.step(
         flagged.select("node", F.lit(1.0 / n).alias("rank"), "is_dangling")
     )
-    base = (1.0 - damping) / n
+    # The teleport numerator is the double nearest the DECIMAL 1 − damping
+    # (0.15 for 0.85), as SQL's CAST(0.15 AS DOUBLE) reads it; binary
+    # 1.0 - 0.85 is 0.15000000000000002.
+    base = float(1 - Decimal(repr(damping))) / n
     for i in range(iterations):
         recv = (
             fanout.join(ranks, fanout["src"] == ranks["node"])
-            .select("dst", (F.col("rank") / F.col("outdeg")).alias("w"))
+            .select("dst", (F.col("rank") / F.col("outdeg")).cast(_DEC).alias("w"))
             .groupBy("dst")
-            .agg(F.sum("w").alias("recv"))
+            .agg(F.sum("w").cast("double").alias("recv"))
         )
         dangling = ranks.filter("is_dangling").agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dmass")
+            F.coalesce(F.sum(F.col("rank").cast(_DEC)), F.lit(0).cast(_DEC))
+            .cast("double")
+            .alias("dmass")
         )
         new_ranks = (
             flagged.join(recv, flagged["node"] == recv["dst"], "left")

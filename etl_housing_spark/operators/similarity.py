@@ -8,6 +8,11 @@ Three tiers, increasing scale:
 - ``lsh_neardup_pairs`` — random-hyperplane LSH bucketing for all-pairs
                           near-dup: candidates only within a bucket, recall
                           traded for the end of the O(n²) cross join.
+                          Its core ``_lsh_neardup`` takes the hyperplane
+                          tables: ``sign_bucket`` → ``dedup.band_pairs``
+                          → ``cosine_pairs``. The oracle-checked
+                          q_embed_neardup_portable runs the same core over
+                          its fixed Rademacher table.
 - ``ivf_topk``          — IVF-style: coarse cells from a trained/assigned
                           quantizer (here: the label column or LSH bucket),
                           query probes ``nprobe`` nearest cells only.
@@ -20,7 +25,7 @@ competitive, but at d=64 the built-ins win by skipping serialization.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
@@ -77,19 +82,28 @@ def _hyperplanes(dim: int, planes: int, seed: int = 42) -> list[list[float]]:
     return rng.standard_normal((planes, dim)).tolist()
 
 
+def sign_bucket(vec_col, planes: list) -> Column:
+    """Σ 2^p·[dot_seq(v, h_p) > 0]: the sign-bit bucket of ``vec_col``
+    against the plane columns ``planes`` — literal arrays, or
+    ``element_at`` of a broadcast row that carries the planes as data
+    (:func:`_lsh_neardup`). The one sign-bit bucket expression of the
+    hyperplane families (LSH tables, the kNN graph's candidate tables)."""
+    b = F.lit(0)
+    for p, h in enumerate(planes):
+        b = b + F.when(V.dot_seq(vec_col, h) > 0, F.lit(2**p)).otherwise(F.lit(0))
+    return b
+
+
 def lsh_bucket(vec_col, dim: int, planes: int = 8, seed: int = 42):
     """Random-hyperplane signature → int bucket in [0, 2^planes).
 
     Hyperplanes are generated driver-side from a fixed seed and inlined as
     literal arrays — deterministic across runs and executors (no RAND() in
     the plan). sign(v·h_p) contributes bit p."""
-    hps = _hyperplanes(dim, planes, seed)
-    bucket = F.lit(0)
-    for p, hp in enumerate(hps):
-        h = F.array(*[F.lit(float(x)) for x in hp])
-        bit = F.when(V.dot_seq(vec_col, h) > 0, F.lit(2**p)).otherwise(F.lit(0))
-        bucket = bucket + bit
-    return bucket
+    return sign_bucket(
+        vec_col,
+        [F.array(*[F.lit(float(x)) for x in hp]) for hp in _hyperplanes(dim, planes, seed)],
+    )
 
 
 def lsh_neardup_pairs(
@@ -108,11 +122,33 @@ def lsh_neardup_pairs(
     pairs survive, the O(n²) bulk never joins. A single table misses pairs that
     straddle a hyperplane; ``tables`` > 1 draws fresh hyperplanes per table and
     unions the candidate sets, lifting recall to 1 - (1 - (1-θ/π)^b)^T at T×
-    the bucketing cost — still O(candidates), never O(n²). Candidate pairs are
-    deduplicated on (id_a, id_b) before scoring so each survives exactly once
-    regardless of how many tables bucket it together.
+    the bucketing cost — still O(candidates), never O(n²).
 
-    Scoring is a map-side JVM lambda; the distance computation never
+    Table t draws seeded Gaussian hyperplanes (``seed + t``); the pairs come
+    from :func:`_lsh_neardup`, the core the oracle-checked twin
+    q_embed_neardup_portable runs over its fixed Rademacher table.
+    """
+    return _lsh_neardup(
+        emb,
+        [_hyperplanes(dim, planes, seed=seed + t) for t in range(tables)],
+        threshold,
+        id_col,
+        vec_col,
+    )
+
+
+def _lsh_neardup(
+    emb: DataFrame,
+    tables: list[list[list[float]]],
+    threshold: float,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(id_a, id_b, cos) pairs with id_a < id_b sharing a sign-bit bucket in
+    at least one hyperplane table of ``tables`` (each a list of planes),
+    verified by :func:`cosine_pairs` (cosine >= ``threshold``, the unrounded
+    value, as in :func:`exact_neardup_pairs`) and reported rounded to 6
+    places. Scoring is a map-side JVM lambda; the distance computation never
     touches Python.
 
     r16 (guide §2.4 shuffle fewer bytes, §7.2 duplicated subtrees): the T
@@ -121,39 +157,34 @@ def lsh_neardup_pairs(
     via posexplode and pairs colliding in ANY table meet on the composite
     key, the identical candidate set the union of per-table joins produced
     (measured: the 16-way union-of-joins plan alone cost ~5.8 s of Catalyst
-    analysis per call). Vectors and per-vector norms re-attach by unique
-    id AFTER the id-pair dedup, broadcast when the corpus scan is provably
-    tiny (layout.broadcast_if_tiny; plain equi-join at production sizes).
-    Same candidate set, same cosine value → identical rows.
+    analysis per call). Each pair survives once however many tables bucket
+    it together.
     """
-    from ..layout import broadcast_if_tiny, fan_out
+    from ..layout import fan_out
     from ._ckpt import tracked_persist
     from .dedup import band_pairs
 
-    spark = emb.sparkSession
     tagged = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    # Hyperplanes travel as broadcast DATA (one row holding the T·planes
-    # nested double array), not as inlined literals: the literal form put
-    # T·planes·dim ≈ 4096 literal nodes into the projection, and Catalyst
-    # analysis + codegen of that tree dominated the whole query (measured
-    # 5.8–8.6 s of mk per call; 32 s with codegen cold). Same IEEE doubles,
-    # same sign tests → identical buckets.
-    hps = [
-        [float(x) for x in hp]
-        for t in range(tables)
-        for hp in _hyperplanes(dim, planes, seed=seed + t)
+    # Hyperplanes travel as broadcast DATA (one row holding the nested
+    # tables × planes × dim double array), not as inlined literals: the
+    # literal form put T·planes·dim ≈ 4096 literal nodes into the
+    # projection, and Catalyst analysis + codegen of that tree dominated the
+    # whole query (measured 5.8–8.6 s of mk per call; 32 s with codegen
+    # cold). Same IEEE doubles, same sign tests → identical buckets.
+    hrow = emb.sparkSession.createDataFrame(
+        [([[[float(x) for x in hp] for hp in table] for table in tables],)],
+        schema="h array<array<array<double>>>",
+    )
+    buckets = [
+        sign_bucket(
+            F.col("v"),
+            [
+                F.element_at(F.element_at(F.col("h"), t + 1), p + 1)
+                for p in range(len(table))
+            ],
+        )
+        for t, table in enumerate(tables)
     ]
-    hrow = spark.createDataFrame([(hps,)], schema="h array<array<double>>")
-
-    def _bucket(t: int):
-        b = F.lit(0)
-        for p in range(planes):
-            h = F.element_at(F.col("h"), t * planes + p + 1)
-            b = b + F.when(V.dot_seq(F.col("v"), h) > 0, F.lit(2**p)).otherwise(
-                F.lit(0)
-            )
-        return b
-
     # fan_out: the T·planes dot_seq bucket folds run in the scan's
     # partitioning (one task for a single-file corpus); the skinny
     # (id, table, bucket) band table then evaluates ONCE — the self-join
@@ -169,35 +200,47 @@ def lsh_neardup_pairs(
         tracked_persist(
             fan_out(tagged, "id")
             .crossJoin(F.broadcast(hrow))
-            .select(
-                "id",
-                F.posexplode(
-                    F.array(*[_bucket(t) for t in range(tables)])
-                ).alias("band", "bkey"),
-            )
+            .select("id", F.posexplode(F.array(*buckets)).alias("band", "bkey"))
         )
     )
-    # per-VECTOR norms once in the attach dim (identical decimal fold on the
-    # identical array → identical doubles), not per pair — 2 of cosine's 3
-    # folds leave the pair stream
-    w = tagged.select("id", "v", V.norm(F.col("v")).alias("nrm"))
-    wa = broadcast_if_tiny(
-        w.select(
-            F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
-        ),
-        emb,
+    return cosine_pairs(cands, tagged, threshold, probe=emb).select(
+        "id_a", "id_b", F.round("cos", 6).alias("cos")
     )
-    wb = broadcast_if_tiny(
-        w.select(
-            F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-        ),
-        emb,
+
+
+def cosine_pairs(
+    cands: DataFrame, vecs: DataFrame, threshold: float, probe: DataFrame
+) -> DataFrame:
+    """The verify step of the bucketed cosine pair families: (id_a, id_b)
+    candidates → (id_a, id_b, cos) with the decimal-exact cosine of the
+    ``vecs`` (id, v) rows >= ``threshold``.
+
+    The vectors and per-VECTOR norms re-attach by unique id after the
+    candidate distinct (the same V.norm fold on the same array → the same
+    doubles as per pair, so 2 of cosine's 3 folds leave the pair stream),
+    broadcast when ``probe``'s scan is provably tiny
+    (layout.broadcast_if_tiny; plain equi-join at production sizes). The
+    cosine is symmetric bit for bit, so a caller may swap id_a and id_b
+    afterwards."""
+    from ..layout import broadcast_if_tiny
+
+    w = vecs.select("id", "v", V.norm(F.col("v")).alias("nrm"))
+    wa, wb = (
+        broadcast_if_tiny(
+            w.select(
+                F.col("id").alias(f"id_{s}"),
+                F.col("v").alias(f"v{s}"),
+                F.col("nrm").alias(f"n{s}"),
+            ),
+            probe,
+        )
+        for s in "ab"
     )
     cos = V.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
     return (
         cands.join(wa, "id_a")
         .join(wb, "id_b")
-        .select("id_a", "id_b", F.round(cos, 6).alias("cos"))
+        .select("id_a", "id_b", cos.alias("cos"))
         .filter(F.col("cos") >= threshold)
     )
 

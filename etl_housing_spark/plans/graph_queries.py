@@ -9,12 +9,12 @@ diagnostic that says whether the rank-propagation join needs salting at
 scale.
 
 ``q_graph_degree`` is fully oracle-checked (the edge construction and the
-degree aggregation are both plain SQL). ``q_pagerank`` registers rows-only:
-its per-iteration float sums are order-dependent by nature; the value-level
-check lives in tests/test_operators.py against a NumPy power iteration.
-``q_pagerank_portable`` closes that gap: four unrolled iterations with
-DECIMAL(38,18) contribution sums are order-free, so the rank vector itself
-hash-matches DuckDB.
+degree aggregation are both plain SQL). Both PageRank queries run
+operators.graph.pagerank, whose DECIMAL(38,18) sums are order-free:
+``q_pagerank_portable`` ranks every embedding and hash-matches DuckDB;
+``q_pagerank`` ranks the edge endpoints and stays rows-only because no
+oracle is registered for it — its value-level check lives in
+tests/test_operators.py against a NumPy power iteration.
 """
 
 from __future__ import annotations
@@ -23,7 +23,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators import dedup as D
 from ..operators import graph as G
+from ..operators import similarity as S
 from ..operators._ckpt import Generations, single_shot_checkpoint
 from .registry import query
 from .vector_queries import _RP
@@ -39,9 +41,9 @@ from .vector_queries import _RP
 # in BOTH engines), candidates are pairs sharing a bucket in at least one of
 # two independent tables (the multi-table recall knob of
 # operators/similarity.py hyperplane LSH), and the edge set is the
-# deterministic top-k by (score DESC, dst) within candidates. The plan is a
-# pair of shuffled equi-joins + one per-src window — no CartesianProduct /
-# BroadcastNestedLoopJoin anywhere (pinned by tests/test_plan_quality.py).
+# deterministic top-k by (score DESC, dst) within candidates. The plan is
+# one dedup.band_pairs equi-join + one per-src window — no CartesianProduct
+# / BroadcastNestedLoopJoin anywhere (pinned by tests/test_plan_quality.py).
 #
 # Scale story: bucket bit-width is the layout knob. Expected candidate count
 # is 2·n²/2^bits, so holding per-bucket occupancy constant (bits ≈ log2(n/c))
@@ -100,83 +102,48 @@ def _edge_cte(tables: tuple[tuple[int, ...], ...], blocked: bool, k: int = 3) ->
 _EDGE_SQL = _edge_cte(_BLOCKED_TABLES, blocked=True)
 
 
-def _bucketed_vectors(emb: DataFrame, tables: tuple[tuple[int, ...], ...]) -> DataFrame:
-    from ..functions import vectors as V
-
-    cols = []
-    for t, bits in enumerate(tables):
-        expr = sum(
-            (
-                F.when(
-                    V.dot_seq(F.col("embedding"), F.array(*[F.lit(s) for s in _RP[k]])) > 0,
-                    F.lit(1 << j),
-                ).otherwise(F.lit(0))
-                for j, k in enumerate(bits)
-            ),
-            start=F.lit(0),
-        ).cast("long")
-        cols.append(expr.alias("ba" if t == 0 else "bb"))
-    return emb.select("vec_id", "label", "embedding", *cols)
-
-
 def _bucketed_knn(
     emb: DataFrame, tables: tuple[tuple[int, ...], ...], blocked: bool, k: int
 ) -> DataFrame:
     """Top-k kNN edges over hyperplane-bucketed candidates (Spark twin of
-    :func:`_edge_cte`): two shuffled equi-joins on (label?, bucket), a
-    distinct union of the candidate tables, one per-src window.
+    :func:`_edge_cte`). Each table is one band of :func:`dedup.band_pairs`,
+    keyed by its sign-bit bucket over the table's _RP rows, or by (label,
+    bucket) when blocked (labels are non-null). band_pairs yields each
+    undirected candidate pair once; it is scored once — dot_seq is
+    symmetric bit for bit — and emitted in both directions, then one
+    per-src window keeps the top k by (score DESC, dst).
 
-    r16 shape (the skinny-pairs pattern, guide §2.3, §2.5, §7.2): the
-    bucket projection (8 dot_seq folds per row) fed four consumers —
-    both sides of both branch joins — so it is tracked_persist-ed and
-    evaluated once; the branch joins and the distinct carry ONLY
-    (src, dst) (the score is a function of the pair, so distinct-on-ids
-    is the identical candidate set); the deduped pair frame is
-    explicitly repartitioned to session parallelism and the embeddings
-    re-attach by unique id (broadcast when the corpus scan is provably
-    tiny), so the per-pair dot_seq scoring — the expensive stage — runs
-    ONCE per distinct pair, parallel, instead of once per branch
-    occurrence inside byte-tiny AQE-coalesced join stages. Same
-    candidate set, same rounded score expression, same window → the
-    edge set is identical."""
+    The band table is tracked_persist-ed: its bucket projection (8 dot_seq
+    folds per row) feeds both sides of the self-join. The embeddings
+    re-attach by unique id after the candidate distinct (dedup._attach)."""
     from ..functions import vectors as V
-    from ..layout import broadcast_if_tiny
     from ..operators._ckpt import tracked_persist
 
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    b = tracked_persist(_bucketed_vectors(emb, tables))
-    qcols = [F.col("vec_id").alias("src"), F.col("ba").alias("q_ba"),
-             F.col("bb").alias("q_bb")]
-    ecols = [F.col("vec_id").alias("dst"), F.col("ba").alias("n_ba"),
-             F.col("bb").alias("n_bb")]
-    if blocked:
-        qcols.append(F.col("label").alias("q_label"))
-        ecols.append(F.col("label").alias("n_label"))
-    q = b.select(*qcols).repartition(par, "src")
-    e = b.select(*ecols)
-    branches = []
-    for qb, nb in (("q_ba", "n_ba"), ("q_bb", "n_bb")):
-        cond = F.col(qb) == F.col(nb)
-        if blocked:
-            cond = cond & (F.col("q_label") == F.col("n_label"))
-        branches.append(
-            q.join(e, cond)
-            .filter(F.col("src") != F.col("dst"))
-            .select("src", "dst")
+    keys = []
+    for bits in tables:
+        bucket = S.sign_bucket(
+            F.col("embedding"), [F.array(*[F.lit(s) for s in _RP[b]]) for b in bits]
         )
-    cand = (
-        branches[0].union(branches[1]).distinct().repartition(par, "src", "dst")
+        keys.append(F.struct("label", bucket.alias("bucket")) if blocked else bucket)
+    banded = tracked_persist(
+        emb.select(
+            F.col("vec_id").alias("id"),
+            F.posexplode(F.array(*keys)).alias("band", "bkey"),
+        )
     )
-    qa = broadcast_if_tiny(
-        b.select(F.col("vec_id").alias("src"), F.col("embedding").alias("q_emb")),
-        emb,
+    vecs = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
+    score = F.round(V.dot_seq(F.col("v_a"), F.col("v_b")), 6).alias("score")
+    both_ways = F.array(
+        F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+        F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
     )
-    ea = broadcast_if_tiny(
-        b.select(F.col("vec_id").alias("dst"), F.col("embedding").alias("n_emb")),
-        emb,
+    scored = (
+        D.band_pairs(banded)
+        .join(D._attach(vecs, "v", "a"), "id_a")
+        .join(D._attach(vecs, "v", "b"), "id_b")
+        .select("id_a", "id_b", score)
+        .select(F.inline(both_ways), "score")
     )
-    score = F.round(V.dot_seq(F.col("q_emb"), F.col("n_emb")), 6).alias("score")
-    scored = cand.join(qa, "src").join(ea, "dst").select("src", "dst", score)
     w = Window.partitionBy("src").orderBy(F.desc("score"), "dst")
     return (
         scored.withColumn("rk", F.row_number().over(w))
@@ -219,10 +186,10 @@ def q_graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_pagerank",
-    # rows-only: each power iteration sums float contributions in partition
-    # order, so cross-engine bit-parity is not defined; the numeric contract
-    # (matches NumPy power iteration to 1e-9, Σrank = 1) is enforced in
-    # tests/test_operators.py.
+    # rows-only: no oracle is registered for the endpoint-node form (the
+    # checked twin is q_pagerank_portable, same operator over every
+    # embedding); the numeric contract (matches NumPy power iteration to
+    # 1e-9, Σrank = 1) is enforced in tests/test_operators.py.
     oracle=None,
     description="PageRank centrality over the embedding kNN graph (centrality-"
     "weighted data selection): 4 power iterations, dangling mass from a static "
@@ -234,7 +201,7 @@ def q_graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the edge list before iterating: the bucketed-kNN lineage
-    # (two hyperplane-literal joins + union + window) replayed under 4 power
+    # (hyperplane-literal band join + window) replayed under 4 power
     # iterations makes the composed plan tree explode (an un-truncated run
     # OOMed the driver just *printing* the plan).
     edges = single_shot_checkpoint(_knn_edges(spark, sf_dir))
@@ -482,19 +449,14 @@ _PR_ITER = """
       LEFT JOIN c{i} ON nodes.node = c{i}.node)
 """
 
-_PR_DEC = "decimal(38,18)"
-
 
 @query(
     "q_pagerank_portable",
-    # The hash-checked PageRank twin: q_pagerank's float iteration sums in
-    # partition order (rows-only by nature), but with every per-iteration
-    # aggregate routed through DECIMAL(38,18) the rank vector after each
-    # synchronous step is the SAME double on both engines — so four unrolled
-    # power iterations (damping 0.85, dangling mass redistributed uniformly)
-    # are fully oracle-checkable, the same promotion the portable
-    # MinHash/SimHash/sketch twins made. Production path remains the
-    # operators.graph.pagerank loop (checkpointed, arbitrary iterations).
+    # The hash-checked PageRank twin: operators.graph.pagerank itself, whose
+    # per-iteration aggregates all accumulate in DECIMAL(38,18), so the rank
+    # vector after each synchronous step is the SAME double on both engines
+    # — the oracle unrolls the same four power iterations (damping 0.85,
+    # dangling mass redistributed uniformly) over every embedding as a node.
     oracle=_EDGE_SQL
     + """,
     nodes AS (SELECT vec_id AS node FROM embeddings),
@@ -507,7 +469,8 @@ _PR_DEC = "decimal(38,18)"
     + """
     SELECT node, ROUND(r, 8) AS rank FROM r4
     """,
-    description="oracle-checked PageRank over the kNN graph: 4 unrolled "
+    description="oracle-checked PageRank over the kNN graph: "
+    "operators.graph.pagerank with every embedding as a node, 4 "
     "synchronous power iterations (damping 0.85, uniform dangling-mass "
     "redistribution) with every incoming-contribution and dangling sum "
     "accumulated in DECIMAL(38,18) — order-free, so each iteration's rank "
@@ -518,57 +481,8 @@ _PR_DEC = "decimal(38,18)"
 def q_pagerank_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     edges = single_shot_checkpoint(_knn_edges(spark, sf_dir))
-    nodes = emb.select(F.col("vec_id").alias("node"))
-    nt = nodes.agg(F.count(F.lit(1)).alias("n"))
-    od = edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("d"))
-    r = nodes.crossJoin(F.broadcast(nt)).select(
-        "node", (F.lit(1.0) / F.col("n")).alias("r")
-    )
-    gens = Generations()
-    for _ in range(4):
-        # a checkpoint per round keeps the composed plan linear in
-        # iterations (the rank frame is consumed twice per step: dangling +
-        # contributions); materialization does not change the decimal-exact
-        # values
-        r = gens.checkpoint(r)
-        dang = (
-            r.join(od, "node", "left")
-            .where(F.col("d").isNull())
-            .agg(
-                F.coalesce(
-                    F.sum(F.col("r").cast(_PR_DEC)), F.lit(0).cast(_PR_DEC)
-                )
-                .cast("double")
-                .alias("dang")
-            )
-        )
-        contrib = (
-            edges.join(r.withColumnRenamed("node", "src"), "src")
-            .join(od.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(
-                F.sum((F.col("r") / F.col("d")).cast(_PR_DEC))
-                .cast("double")
-                .alias("c")
-            )
-        )
-        r = (
-            nodes.crossJoin(F.broadcast(nt))
-            .crossJoin(F.broadcast(dang))
-            .join(contrib, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(0.15) / F.col("n")
-                    + F.lit(0.85)
-                    * (
-                        F.coalesce(F.col("c"), F.lit(0.0))
-                        + F.col("dang") / F.col("n")
-                    )
-                ).alias("r"),
-            )
-        )
-    return r.select("node", F.round("r", 8).alias("rank"))
+    pr = G.pagerank(edges, nodes=emb.select(F.col("vec_id").alias("node")), iterations=4)
+    return pr.select("node", F.round("rank", 8).alias("rank"))
 
 
 _CC_ITER = """

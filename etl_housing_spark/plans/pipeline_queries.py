@@ -23,7 +23,7 @@ from ..catalog import load_table
 from ..layout import fan_out
 from ..operators._ckpt import tracked_persist
 from ..operators import dedup as D
-from ..operators.dedup import band_pairs, ngrams, shingles
+from ..operators.dedup import ngrams, shingles
 from ..operators.sampling import md5_u32
 from ..sources.warehouse import sql_zorder_key
 from ._util import sql_davg, sql_dsum
@@ -669,7 +669,7 @@ def q_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = tracked_persist(portable_sigs(spark, sf_dir))
     cands = None
     for b, r in _SWEEP_LAYOUTS:
-        c = band_pairs(D.minhash_bands(sigs, b, r)).select(
+        c = D.band_pairs(D.minhash_bands(sigs, b, r)).select(
             F.lit(f"b{b}r{r}").alias("layout"), "id_a", "id_b"
         )
         cands = c if cands is None else cands.unionByName(c)
@@ -2691,7 +2691,7 @@ def q_fineweb_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         s4.filter(F.col("p4") == 1).select(F.col("doc_id").alias("id")), "id"
     )
     drp = (
-        band_pairs(D.minhash_bands(sigs, 4, 4))
+        D.band_pairs(D.minhash_bands(sigs, 4, 4))
         .select(F.col("id_b").alias("doc_id"))
         .distinct()
         .withColumn("hit", F.lit(1))

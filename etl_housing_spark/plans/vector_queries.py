@@ -333,11 +333,13 @@ def _rp_bucket_sql() -> str:
 
 @query(
     "q_embed_neardup_portable",
-    # Candidates from the deterministic hyperplane bucket equi-join (the
-    # sign matrix is a plan literal on both engines), verified with the
-    # DECIMAL(38,18)-exact cosine of q_embed_neardup — so unlike the exact
-    # all-pairs oracle twin, this one never materializes O(n²) anything,
-    # yet still hash-matches DuckDB end to end.
+    # The production LSH core (operators.similarity._lsh_neardup) over ONE
+    # table: the 8 deterministic Rademacher sign planes of
+    # q_random_projection instead of seeded Gaussian ones, so the buckets
+    # are reproducible in SQL. Candidates are band_pairs over that table,
+    # verified with the DECIMAL(38,18)-exact cosine of q_embed_neardup — so
+    # unlike the exact all-pairs oracle twin, this one never materializes
+    # O(n²) anything, yet still hash-matches DuckDB end to end.
     oracle=f"""
     WITH b AS (
       SELECT vec_id, CAST({_rp_bucket_sql()} AS BIGINT) AS bucket FROM embeddings),
@@ -362,32 +364,17 @@ def _rp_bucket_sql() -> str:
     description="oracle-checked embedding near-dup at the SCALE shape: candidates "
     "from the deterministic random-hyperplane sign-bucket equi-join (the "
     "q_random_projection construction — 256 buckets, never all-pairs), then "
-    "decimal-exact cosine verification of candidates only. The portable twin of "
-    "q_embed_neardup_lsh's seeded fast path, and the scale-safe counterpart of "
+    "decimal-exact cosine verification of candidates only. Runs "
+    "q_embed_neardup_lsh's code (sign buckets → band_pairs → cosine verify) over "
+    "one fixed Rademacher table instead of seeded Gaussian ones, and is the "
+    "scale-safe counterpart of "
     "the O(n²) q_embed_neardup oracle form; single-bucket recall is the "
     "documented tradeoff (multi-table union is the operator's recall knob)",
     tags=("vector", "dedup", "pipeline"),
 )
 def q_embed_neardup_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    proj = [
-        V.dot_seq(F.col("embedding"), F.array(*[F.lit(s) for s in _RP[k]]))
-        for k in range(8)
-    ]
-    bucket = sum(
-        (F.when(proj[k] > 0, F.lit(1 << k)).otherwise(F.lit(0)) for k in range(8)),
-        start=F.lit(0),
-    ).cast("long")
-    b = emb.select("vec_id", "embedding", bucket.alias("bucket"))
-    a = b.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea"), "bucket")
-    c = b.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("eb"), "bucket")
-    pairs = a.join(c, "bucket").filter(F.col("id_a") < F.col("id_b"))
-    dot = V.dot(F.col("ea"), F.col("eb"))
-    na, nb = V.norm(F.col("ea")), V.norm(F.col("eb"))
-    cos = dot / (na * nb)
-    return pairs.filter(cos >= 0.4).select(
-        "id_a", "id_b", F.round(cos, 6).alias("cos")
-    )
+    return S._lsh_neardup(emb, [_RP], threshold=0.4)
 
 
 @query(
@@ -1521,67 +1508,28 @@ def semdedup_pairs(assigned: DataFrame, threshold: float = 0.5) -> DataFrame:
     shared by q_semdedup, q_dedup_tiered and q_semdedup_sweep (the Spark
     twin of _semdedup_pairs_sql).
 
-    r16 shape (guide §2.4 shuffle fewer bytes, §2.5 skew, §5): the old
-    form joined the ARRAY-carrying frames on cid and evaluated
-    ``dot/(norm·norm)`` — three 64-element decimal folds — per pair
-    INSIDE the join projection. Two compounding problems, measured as a
-    72 s stage at sf0.1 (~500 k pairs): norms were recomputed per PAIR
-    instead of per VECTOR (2 of the 3 folds are redundant), and the
-    cid join's shuffle is byte-tiny, so AQE coalesced it to ~1 partition
-    and the whole decimal stream ran on one core — byte-based
-    coalescing cannot see compute-heavy rows. Now: per-vector norms are
-    computed once in a pre-join projection (the same ``V.norm`` fold on
-    the same ``v`` → bit-identical doubles), the candidate join carries
-    only (cid, vec_id) — arrays never enter the pair shuffle — and the
-    skinny pair frame is EXPLICITLY repartitioned to session parallelism
-    (a numbered repartition, which AQE by contract never coalesces)
-    before the vectors+norms attach by id. The attach is a broadcast
-    join when the source scan is provably tiny (layout.FAN_OUT_MAX_BYTES
-    — the bench/testdata case; stream-side partitioning, and therefore
-    the explicit fan-out, is preserved), and a plain shuffle equi-join
-    on the unique id otherwise (production: unskewed by construction,
-    and the pair volume then dwarfs the attach shuffle). The input is
-    tracked_persist-ed because this function alone consumes it three
-    times (two candidate sides + the attach dim), on top of the caller's
-    own reuse. Values: same cosine expression over the same operands —
-    the filter set is identical."""
-    from ..layout import broadcast_if_tiny
+    A cluster is a one-band bucket: the candidates are
+    :func:`dedup.band_pairs` over (id=vec_id, band=0, bkey=cid), which owns
+    the skinny-pair shape (the cid join carries only ids, and the pair
+    frame is repartitioned to session parallelism so AQE cannot coalesce
+    the decimal folds onto one core — r16 measured a 72 s single-core
+    stage at sf0.1). :func:`similarity.cosine_pairs` verifies them with
+    per-vector norms. band_pairs emits id_a < id_b, so the columns swap at
+    the end. The input is tracked_persist-ed because this function alone
+    consumes it twice (the band table and the attach dims), on top of the
+    caller's own reuse."""
+    from ..operators import dedup
     from ..operators._ckpt import tracked_persist
 
     assigned = tracked_persist(assigned)
-    spark = assigned.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    slim = assigned.select("cid", "vec_id")
-    cand = (
-        slim.select(F.col("cid"), F.col("vec_id").alias("id_a"))
-        .join(slim.select(F.col("cid"), F.col("vec_id").alias("id_b")), "cid")
-        .filter(F.col("id_b") < F.col("id_a"))
-        .select("id_a", "id_b")
-        .repartition(par, "id_a", "id_b")
+    cand = dedup.band_pairs(
+        assigned.select(
+            F.col("vec_id").alias("id"), F.lit(0).alias("band"), F.col("cid").alias("bkey")
+        )
     )
-    w = assigned.select("vec_id", "v", V.norm(F.col("v")).alias("nrm"))
-    wa = broadcast_if_tiny(
-        w.select(
-            F.col("vec_id").alias("id_a"),
-            F.col("v").alias("va"),
-            F.col("nrm").alias("na"),
-        ),
-        assigned,
-    )
-    wb = broadcast_if_tiny(
-        w.select(
-            F.col("vec_id").alias("id_b"),
-            F.col("v").alias("vb"),
-            F.col("nrm").alias("nb"),
-        ),
-        assigned,
-    )
-    cos = V.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    return (
-        cand.join(wa, "id_a")
-        .join(wb, "id_b")
-        .filter(cos >= F.lit(threshold))
-        .select("id_a", "id_b")
+    vecs = assigned.select(F.col("vec_id").alias("id"), "v")
+    return S.cosine_pairs(cand, vecs, threshold, probe=assigned).select(
+        F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b")
     )
 
 

@@ -16,7 +16,11 @@ from etl_housing_spark.operators.dedup import (
 from etl_housing_spark.operators.encode import get_dummies, keyword_flags
 from etl_housing_spark.operators.multimodal import frame_sample, synthesize_media
 from etl_housing_spark.operators.quantize import ivfpq_scaled_topk
-from etl_housing_spark.operators.similarity import topk_bruteforce
+from etl_housing_spark.operators.similarity import (
+    exact_neardup_pairs,
+    lsh_neardup_pairs,
+    topk_bruteforce,
+)
 
 LISTING_SCHEMA = (
     "name string, address string, unit string, sqft string, bed string, bath string, "
@@ -103,6 +107,28 @@ def test_topk_k_larger_than_corpus(spark):
     )
     out = topk_bruteforce(emb, query_id=1, k=100, metric="cosine")
     assert out.count() == 2  # limit beyond corpus returns the corpus
+
+
+def test_lsh_neardup_filters_the_unrounded_cosine(spark):
+    """A pair whose cosine only ROUNDS to the threshold (0.39999996 → 0.4)
+    is not a near-dup: lsh_neardup_pairs verifies the raw value, like
+    exact_neardup_pairs and the DuckDB oracles. Every LSH pair is a true
+    pair."""
+    import math
+
+    x = 0.39999996
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [x, math.sqrt(1 - x * x)])],
+        "vec_id long, embedding array<double>",
+    )
+
+    def lsh(t):
+        return lsh_neardup_pairs(emb, threshold=t, planes=1, dim=2, tables=16).collect()
+
+    # the pair IS a candidate (16 tables of one plane collide it)
+    assert [(r.id_a, r.id_b, r.cos) for r in lsh(0.39)] == [(1, 2, 0.4)]
+    assert exact_neardup_pairs(emb, threshold=0.4).count() == 0
+    assert lsh(0.4) == []
 
 
 def test_encode_empty_vocabulary(spark):

@@ -852,11 +852,13 @@ def test_ewma_portable_binds_operator_series(spark):
         assert final == _pytest.approx(last[uid][1], rel=1e-12)
 
 
-def test_pagerank_matches_numpy_power_iteration(spark):
+@pytest.mark.parametrize("isolated", [(), (6,)], ids=["endpoints", "isolated_node"])
+def test_pagerank_matches_numpy_power_iteration(spark, isolated):
     """operators/graph.py pagerank vs a dense NumPy power iteration with the
     identical dangling-mass-redistribution update, on a graph that exercises
     every branch: a cycle, a hub, a dangling node (5→ nothing), and a node
-    with no in-edges (4)."""
+    with no in-edges (4). With ``isolated``, a ``nodes`` frame adds node 6,
+    which has no edge at all: dangling, in-degree 0."""
     import numpy as np
 
     edges = [(1, 2), (1, 3), (2, 3), (3, 1), (4, 3), (5, 3)][:5] + [(3, 5)]
@@ -864,9 +866,16 @@ def test_pagerank_matches_numpy_power_iteration(spark):
     from etl_housing_spark.operators.graph import degree_stats, pagerank
 
     iters, d = 12, 0.85
-    got = {r.node: r.rank for r in pagerank(df, iterations=iters, damping=d).collect()}
+    nodes = sorted({n for e in edges for n in e} | set(isolated))
+    node_df = (
+        spark.createDataFrame([(n_,) for n_ in nodes], "node long") if isolated else None
+    )
+    got = {
+        r.node: r.rank
+        for r in pagerank(df, iterations=iters, damping=d, nodes=node_df).collect()
+    }
+    assert sorted(got) == nodes
 
-    nodes = sorted({n for e in edges for n in e})
     idx = {n: i for i, n in enumerate(nodes)}
     n = len(nodes)
     out = np.zeros(n)

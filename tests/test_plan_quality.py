@@ -232,22 +232,52 @@ def test_join_salted_no_cartesian(spark):
     assert "Python" not in plan
 
 
-@pytest.mark.parametrize(
-    "qid",
-    [
-        "q_minhash_pairs_portable",
-        "q_oph_pairs",
-        "q_lsh_band_sweep",
-        "q_image_neardup_banded",
-        "q_image_neardup_phash",
-    ],
-)
+_BANDED_PAIR_IDS = [
+    "q_minhash_pairs_portable",
+    "q_oph_pairs",
+    "q_lsh_band_sweep",
+    "q_image_neardup_banded",
+    "q_image_neardup_phash",
+]
+
+
+@pytest.mark.parametrize("qid", _BANDED_PAIR_IDS)
 def test_minhash_pairs_candidates_from_band_equi_join(spark, qid):
     plan = _plan(_q(spark, qid))
     # candidate pairs come from band-bucket equi-joins, never all-pairs
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "Python" not in plan
+
+
+@pytest.mark.parametrize(
+    "qid",
+    [
+        "q_embed_neardup_portable",
+        "q_embed_neardup_lsh",
+        "q_semdedup",
+        "q_graph_degree",
+        "q_label_propagation",
+        *_BANDED_PAIR_IDS,
+    ],
+)
+def test_pair_families_take_candidates_from_band_pairs(spark, monkeypatch, qid):
+    """Every bucketed pair family (LSH tables, single-bucket clusters, the
+    kNN graph's candidate tables, MinHash/pHash bands) builds its candidates
+    with operators/dedup.band_pairs — no family keeps a self-join of its
+    own."""
+    from etl_housing_spark.operators import dedup
+
+    calls = []
+    real = dedup.band_pairs
+
+    def spy(banded):
+        calls.append(1)
+        return real(banded)
+
+    monkeypatch.setattr(dedup, "band_pairs", spy)
+    _q(spark, qid)
+    assert calls, f"{qid} built its candidates without band_pairs"
 
 
 def test_winsorize_single_scan_histogram(spark):
@@ -500,7 +530,7 @@ def test_interpolate_single_entity_shuffle(spark):
 
 def test_graph_edge_construction_never_all_pairs(spark):
     """Round-4 de-quadratification, pinned: the kNN graph's edge candidates
-    come from hyperplane-bucket equi-joins (union of two hash tables), so no
+    come from one band_pairs equi-join over two hyperplane-bucket tables, so no
     graph query may plan a CartesianProduct or BroadcastNestedLoopJoin in
     its edge construction — the round-1..3 all-pairs crossJoin must never
     come back."""
