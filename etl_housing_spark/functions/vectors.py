@@ -33,13 +33,16 @@ def fast_sums() -> bool:
     an oracle flips this on and erases the decimal tax (1.4–6.3× per
     sum-heavy query, q_pricing_summary 6.3×, measured at sf10 — table in
     BASELINE.md; since r13 the switch also covers the vector family's
-    array folds, :func:`_dec_sum` — k-means assignment, SemDeDup
-    cosine, ADC scoring); results then agree with the exact sum to double
+    array folds, :func:`_dec_sum` — every ``clustering.nearest`` argmin
+    (k-means assignment, PQ label-codebook and residual code assignment,
+    centroid confusion), the IVF probe's ``dot``, SemDeDup cosine, ADC
+    scoring); results then agree with the exact sum to double
     round-off on the documented 6dp domain (|Δ|/Σ ≲ n·2⁻⁵³ — at 1e12 rows
     still ~1e-4 relative worst-case, ~1e-10 typical random-sign error).
     That round-off bound holds for the SUMS themselves; consumers that
-    pass a fast sum through a discrete decision — k-means argmin, a
-    SemDeDup/near-dup threshold, an ADC top-k cut — can see a near-tied
+    pass a fast sum through a discrete decision — a ``clustering.nearest``
+    argmin, the IVF probe's top-nprobe cut, a SemDeDup/near-dup
+    threshold, an ADC top-k cut — can see a near-tied
     comparison flip, so fast mode there can change a cluster assignment
     or top-k member outright (still valid-quality output, but discretely
     different, not a round-off delta; ADVICE r13).
@@ -61,11 +64,14 @@ def _dec_sum(arr: Column) -> Column:
     plain sequential double fold: same plan shape, no per-element
     BigDecimal, not bit-reproducible against the DuckDB oracle. This is
     the switch that erases the decimal tax from the vector family's hot
-    paths (k-means assignment, SemDeDup cosine, ADC scan).
+    paths (every ``clustering.nearest`` argmin — k-means assignment, PQ
+    label-codebook and residual code assignment, centroid confusion —
+    the IVF probe, SemDeDup cosine, ADC scan).
 
     ARGMIN/THRESHOLD CONSUMERS (ADVICE r13): for plain sums the fast
-    fold differs from the exact fold only by round-off — but k-means
-    assignment, SemDeDup keep/drop, and ADC top-k all pass these sums
+    fold differs from the exact fold only by round-off — but the
+    ``clustering.nearest`` argmins, the IVF probe, SemDeDup keep/drop,
+    and ADC top-k all pass these sums
     through a DISCRETE decision (argmin, threshold, limit), and a
     round-off-level distance delta can flip which cluster/candidate wins
     when two are near-tied. Fast-mode output for those consumers can
@@ -127,41 +133,3 @@ def sqdist(a: Column, b: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
-
-
-def dec_sum_static(terms: list[Column]) -> Column:
-    """Statically unrolled ``_dec_sum`` over a known list of double terms:
-    left-associated additions with the same running (28,18) casts as the
-    fold (decimal addition is exact, so the value is identical), but a
-    plain expression tree Catalyst whole-stage-codegens — the HOF fold is
-    interpreted per row. Honors EHS_FAST_SUMS like ``_dec_sum`` (plain
-    left-associated double sum, bitwise the fast fold's order)."""
-    if fast_sums():
-        acc = terms[0]
-        for t in terms[1:]:
-            acc = acc + t
-        return acc
-    acc = (F.lit(0).cast(_ACC) + terms[0].cast(_ACC)).cast(_ACC)
-    for t in terms[1:]:
-        acc = (acc + t.cast(_ACC)).cast(_ACC)
-    return acc.cast("double")
-
-
-def sqdist_static(a: Column, b: Column, dim: int) -> Column:
-    """``sqdist`` as a STATICALLY UNROLLED expression tree for a known
-    ``dim`` — value-identical (left-associated additions with the same
-    running (28,18) casts as the fold; decimal addition is exact, so
-    association cannot change the value) but whole-stage-codegen'd where
-    the ``aggregate``/``zip_with`` higher-order form is INTERPRETED
-    per-row (Catalyst does not codegen HOF lambdas; measured r15: the
-    sf10 ADC/LUT scoring jobs spend most of their wall in ArrayAggregate
-    interpretation). Use on scan-side scoring with fixed dimensionality;
-    keep ``sqdist`` for dynamic dims. Honors EHS_FAST_SUMS identically
-    (plain left-associated double sum — the same order the fast fold
-    takes, so the two forms agree bitwise in BOTH modes)."""
-    terms = [
-        (a.getItem(i).cast("double") - b.getItem(i).cast("double"))
-        * (a.getItem(i).cast("double") - b.getItem(i).cast("double"))
-        for i in range(dim)
-    ]
-    return dec_sum_static(terms)

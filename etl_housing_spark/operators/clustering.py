@@ -1,16 +1,29 @@
-"""Distributed k-means over ``array`` embedding columns (SURVEY §2.13 /
-§2.10 extension; the reference has no clustering surface).
+"""Nearest-centroid core and distributed k-means over ``array`` embedding
+columns (SURVEY §2.13 / §2.10 extension; the reference has no clustering
+surface).
+
+The vector family's two cross-engine decisions are written here once:
+
+- :func:`dim_means` — the decimal-exact per-key, per-dimension mean. It
+  builds k-means centroids, the label-conditioned PQ codebooks, the
+  residual-PQ codebook update, the IVF cells of ``similarity.ivf_topk``
+  and the SemDeDup / confusion-matrix centroids.
+- :func:`nearest` — the argmin under the total (exact d², cand) order,
+  folded in-row over a candidate array. It is k-means assignment, PQ code
+  assignment (full vectors and residuals), residual-PQ training and
+  nearest-centroid classification. :func:`cand_arrays` turns a long
+  (cand, i, c) codebook into the per-subspace arrays it folds over.
+
+Sites outside this module reach them through the module attribute
+(``C.nearest``), not a name bound at import, so a spy on
+``clustering.nearest`` sees every call
+(tests/test_plan_quality.py::test_vector_argmins_go_through_nearest).
 
 The fit is the textbook distributed Lloyd step, driver-unrolled like
 MLlib's KMeans: assignment BROADCASTs the k tiny centroids against the
 vector scan (no shuffle on the big side), the update is one (cid, dim)
-partial-agg shuffle. Every cross-engine decision point is exact so the fit
-is value-verifiable against a SQL oracle (q_kmeans_portable): squared
-distances accumulate per-dim double products in DECIMAL(28,18)
-(functions.vectors.sqdist — associative, so the in-row fold equals a
-grouped decimal SUM bit-for-bit), assignment is argmin under a total
-(dist, cid) order, and centroid means are decimal-exact sums divided once
-in double.
+partial-agg shuffle. Every decision point is exact, so the fit is
+value-verifiable against a SQL oracle (q_kmeans_portable).
 
 Downstream use: the learned assignment IS an IVF coarse quantizer —
 ``q_ann_ivf_kmeans`` probes the trained cells instead of the testdata's
@@ -19,14 +32,118 @@ pre-assigned label column.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
+from ..functions.vectors import _ACC
 
-_ACC = "decimal(28,18)"  # same lossless accumulator as functions.vectors
+__all__ = [
+    "dim_means",
+    "dim_means_long",
+    "centroids",
+    "cand_arrays",
+    "nearest",
+    "seed_centroids",
+    "kmeans_assign",
+    "kmeans_update",
+    "kmeans_fit",
+]
 
-__all__ = ["seed_centroids", "kmeans_assign", "kmeans_update", "kmeans_fit"]
+
+def dim_means(df: DataFrame, keys: list[str], vec_col: str = "v") -> DataFrame:
+    """(keys…, i, c, n): per key, the mean ``c`` of every dimension ``i``
+    of ``vec_col`` over the key's ``n`` rows — :func:`dim_means_long` over
+    the posexploded vectors."""
+    return dim_means_long(
+        df.select(*keys, F.posexplode(vec_col).alias("i", "x")), keys
+    )
+
+
+def dim_means_long(long: DataFrame, keys: list[str]) -> DataFrame:
+    """(keys…, i, c, n) from a long (keys…, i, x) frame: the mean ``c`` of
+    x per (keys, i) over its ``n`` rows.
+
+    Each x is cast to double, then to DECIMAL(28,18), and summed in
+    decimal: the sum is exact, so it cannot depend on row or partition
+    order, and it is divided once in double. The oracles'
+    ``SUM(CAST(x AS DECIMAL(p,18))) / COUNT(*)`` reach the same double,
+    because every such cast rounds the double at scale 18. One
+    (keys, i)-keyed partial+final aggregate; the output has |keys|·dim
+    rows whatever the corpus size."""
+    return long.groupBy(*keys, "i").agg(
+        (
+            F.sum(F.col("x").cast("double").cast(_ACC)).cast("double")
+            / F.count(F.lit(1))
+        ).alias("c"),
+        F.count(F.lit(1)).alias("n"),
+    )
+
+
+def _assemble(long: DataFrame, *keys: str) -> DataFrame:
+    """Long (keys…, i, c) → (keys…, c: array<double>) in dimension order."""
+    return long.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("i", "c"))), lambda s: s["c"]
+        ).alias("c")
+    )
+
+
+def centroids(df: DataFrame, key: str, vec_col: str = "v") -> DataFrame:
+    """(key, c: array<double>): each key's :func:`dim_means` vector."""
+    return _assemble(dim_means(df, [key], vec_col), key)
+
+
+def cand_arrays(cb: DataFrame, per_sub: int | None = None) -> DataFrame:
+    """A long (cand, i, c) codebook → the candidate arrays :func:`nearest`
+    folds over: one (sub, cands) row per subspace of ``per_sub`` dims, or a
+    single (cands) row of full vectors when ``per_sub`` is None. Each
+    element of ``cands`` is struct(cand, c: array<double>). Two tiny
+    aggregates over the codebook; every consumer broadcasts the result."""
+    if per_sub is None:
+        return _assemble(cb, "cand").agg(
+            F.collect_list(F.struct("cand", "c")).alias("cands")
+        )
+    subs = _assemble(cb.withColumn("sub", F.expr(f"i div {per_sub}")), "sub", "cand")
+    return subs.groupBy("sub").agg(F.collect_list(F.struct("cand", "c")).alias("cands"))
+
+
+def nearest(v: Column, cands: Column) -> Column:
+    """struct(d2, cand) of the candidate in ``cands`` nearest to ``v``:
+    ``array_min`` over struct(``V.sqdist(v, c)``, cand) for an in-row
+    array of struct(cand, c) elements.
+
+    Why this equals the SQL oracle's grouped argmin
+    (``SUM(CAST((x − c)² AS DECIMAL(p,18)))`` per (row, cand), then
+    ``ROW_NUMBER() OVER (ORDER BY d2, cand) = 1``):
+    - each per-dim (x − c)² is one double product; ``V.sqdist`` casts it
+      to DECIMAL(28,18) and the oracles to DECIMAL(28,18) or (38,18),
+      which round the same double at the same scale 18;
+    - decimal addition is exact, so the in-row fold and the grouped SUM
+      reach the same d² bit for bit (one final cast to double);
+    - ``array_min`` compares structs lexicographically, the same (d2, cand)
+      order as ``min(struct(d2, cand))`` or the oracle's window. The order
+      is total when cand ids are distinct, so an exact tie goes to the
+      lower cand, and the order of ``collect_list``'s elements cannot
+      change the winner.
+
+    The in-row fold replaced the per-dimension plan (explode to (row, i),
+    join the codebook on i, SUM per (row, cand), then argmin): that pushed
+    n·K groups through a shuffle and spilled >60 GB at sf30 (r14). A
+    statically unrolled sum over the dims was measured 2× slower than this
+    interpreted fold in r16, because the 64-term decimal chain falls out of
+    codegen.
+
+    Under ``EHS_FAST_SUMS=1`` d² is the plain double fold, so a near-tie
+    can flip (functions.vectors.fast_sums)."""
+    return F.array_min(
+        F.transform(
+            cands,
+            lambda s: F.struct(
+                V.sqdist(v, s["c"]).alias("d2"), s["cand"].alias("cand")
+            ),
+        )
+    )
 
 
 def seed_centroids(vecs: DataFrame, k: int, id_col: str = "vec_id") -> DataFrame:
@@ -43,26 +160,16 @@ def seed_centroids(vecs: DataFrame, k: int, id_col: str = "vec_id") -> DataFrame
 
 
 def kmeans_assign(vecs: DataFrame, cents: DataFrame, id_col: str = "vec_id") -> DataFrame:
-    """(id, v) × broadcast centroids → (id, v, cid) by decimal-exact argmin
-    under the total (dist, cid) order.
+    """(id, v) × broadcast centroids → (id, v, cid) by :func:`nearest`.
 
-    r16 form (guide §2.4 "remove shuffles outright"): the argmin is
-    ``array_min`` over an IN-ROW array of (d, cid) structs — the centroid
-    set arrives as ONE broadcast single-row array (a lazy
+    The centroid set arrives as ONE broadcast single-row array (a lazy
     ``collect_list(struct(cid, c))`` aggregate, kc·dim doubles ≈ 400 KB
     at sf30's kc=775, ~16 MB at kc≈32k/n=10⁹), and each vector row folds
-    over it locally. ``array_min`` on structs uses the same lexicographic
-    (d, cid) ordering as the previous ``min(struct(d, cid))``
-    SortAggregate and ``collect_list``'s row order cannot matter under a
-    total min, so the assignment is bit-identical (asserted by every
-    kmeans-chain oracle parity) — but the n·k scored stream, its
-    SortAggregate, the best-row shuffle AND the v join-back (which
-    re-evaluated the vecs lineage) are all gone: the whole operator is
-    one shuffle-free projection over the (fanned-out) scan. History: the
-    r13 form ``min(struct(d, cid, v))`` sort-spilled ~250 GB at sf30;
-    the r15 narrow-struct form fixed the spill but still paid two
-    exchanges and a double scan per assign round. The in-row fold has no
-    sort, no shuffle, and touches each input row once.
+    over it locally: the whole operator is one shuffle-free projection
+    over the (fanned-out) scan. History: the r13 form
+    ``min(struct(d, cid, v))`` sort-spilled ~250 GB at sf30; the r15
+    narrow-struct form fixed the spill but still paid two exchanges and a
+    double scan per assign round.
 
     PRECONDITION (ADVICE r13): ``id_col`` must be unique and non-null —
     callers' downstream equi-joins on it assume so (every in-repo caller
@@ -75,37 +182,16 @@ def kmeans_assign(vecs: DataFrame, cents: DataFrame, id_col: str = "vec_id") -> 
     from ..layout import fan_out
 
     vecs = fan_out(vecs, id_col)
-    # NOT the static unroll (r16 negative result, guide §1.1): swapping the
-    # HOF fold for V.sqdist_static(..., dim=64) here measured 2× SLOWER
-    # per-row on the warm assign stages (0.44→0.89 s assign1) — the 64-term
-    # decimal chain with per-step casts defeats codegen (method-size
-    # fallback) while doubling the (a[i]-b[i]) subexpressions; the
-    # interpreted zip_with fold wins. Same verdict as r15's per-query
-    # unrolled ADC trees.
-    carr = cents.agg(F.collect_list(F.struct("cid", "c")).alias("cs"))
-    best = F.array_min(
-        F.transform(
-            F.col("cs"),
-            lambda s: F.struct(
-                V.sqdist(F.col("v"), s["c"]).alias("d"), s["cid"].alias("cid")
-            ),
-        )
-    )["cid"]
+    carr = cents.agg(
+        F.collect_list(F.struct(F.col("cid").alias("cand"), "c")).alias("cands")
+    )
+    best = nearest(F.col("v"), F.col("cands"))["cand"]
     return vecs.crossJoin(F.broadcast(carr)).select(id_col, "v", best.alias("cid"))
 
 
 def kmeans_update(assigned: DataFrame) -> DataFrame:
-    """Assigned vectors → new (cid, c) centroids: decimal-exact per-dim
-    sums, one double division, dims reassembled in index order."""
-    pe = assigned.select("cid", F.posexplode("v").alias("dim", "val"))
-    per_dim = pe.groupBy("cid", "dim").agg(
-        (F.sum(F.col("val").cast(_ACC)).cast("double") / F.count(F.lit(1))).alias("m")
-    )
-    return per_dim.groupBy("cid").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "m"))), lambda s: s["m"]
-        ).alias("c")
-    )
+    """Assigned vectors → new (cid, c) :func:`centroids`."""
+    return centroids(assigned, "cid")
 
 
 def kmeans_fit(

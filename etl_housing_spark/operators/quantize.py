@@ -26,7 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import vectors as V
 from ..functions.vectors import fast_sums
+from . import clustering as C
 from .sampling import md5_u32
 
 
@@ -107,43 +109,50 @@ def pq_codes(
     lookup table instead of touching floats.
 
     Codebook "training" here is deterministic, mirroring the IVF coarse
-    quantizer (operators/similarity.py ann_ivf, q_ann_ivf_portable): the
-    per-subspace codebook is the label-conditioned mean of that subvector —
+    quantizer (operators/similarity.py ivf_topk): the per-subspace
+    codebook is the label-conditioned mean of that subvector —
     assignment-based seeding rather than k-means iterations, so every stage
     is reproducible and oracle-checkable. Swapping in iterated Lloyd rounds
     changes only the codebook frame, not the assignment/search plan.
 
     Plan shape (no collect, no UDF):
-    1. codebooks: posexplode → (label, pos) decimal-exact means — one
-       aggregate, output M·K·(D/M) = D·K rows, independent of corpus size;
-    2. assignment: posexplode × broadcast codebook join on pos →
-       per-(id, subspace, candidate) squared-distance decimal sums (one
-       partial+final aggregate, map-side combinable on the id-bearing key)
-       → struct-min argmin with label tie-break. Work is O(n·D·K), linear
-       in corpus size with K, D fixed.
+    1. codebooks: ``clustering.dim_means`` per label — one aggregate,
+       output D·K rows, independent of corpus size;
+    2. assignment: each vector splits into M subvector rows, which join
+       the broadcast per-subspace candidate arrays and take
+       ``clustering.nearest`` in-row (d², label tie-break). Shuffle-free
+       past the codebook; work is O(n·D·K), linear in corpus size.
     """
-    best = _pq_assign(emb, subspaces, dim, id_col, vec_col, label_col)
-    return best.select(
+    cb = _pq_codebooks(emb, vec_col, label_col)
+    return _nearest_codes(emb, cb, subspaces, dim, id_col, vec_col).select(
         id_col,
-        F.col("sub").cast("long").alias("subspace"),
+        F.col("sub").alias("subspace"),
         F.col("b.cand").cast("long").alias("code"),
         F.round(F.col("b.d2"), 6).alias("d2"),
     )
 
 
 def _pq_codebooks(emb: DataFrame, vec_col: str, label_col: str) -> DataFrame:
-    """Per-(candidate, dimension) codebook values — decimal-exact means."""
-    return (
-        emb.select(label_col, F.posexplode(F.col(vec_col)).alias("i", "v"))
-        .groupBy(label_col, "i")
-        .agg(
-            (
-                F.sum(F.col("v").cast("double").cast("decimal(38,18)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("c")
-        )
-        .select(F.col(label_col).alias("cand"), "i", "c")
+    """Label-conditioned codebook (cand, i, c, n): each label's per-dim
+    mean (``clustering.dim_means``)."""
+    return C.dim_means(emb, [label_col], vec_col).withColumnRenamed(label_col, "cand")
+
+
+def _nearest_codes(
+    emb: DataFrame,
+    cb: DataFrame,
+    subspaces: int,
+    dim: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(id, sub, b{d2, cand}) — nearest ``cb`` entry per raw subvector."""
+    per_sub = dim // subspaces
+    subs = _subvector_rows(
+        emb, [id_col], subspaces,
+        lambda s: F.slice(F.col(vec_col), s * per_sub + 1, per_sub),
     )
+    return _assign_subs(subs, cb, per_sub, [id_col])
 
 
 def _sq_dist_term(x, c):
@@ -400,35 +409,6 @@ def _local_probe_and_lut(spark, st, query_vec, nprobe: int, per_sub: int):
     return probe_cids, lut_df
 
 
-def _pq_assign(
-    emb: DataFrame,
-    subspaces: int,
-    dim: int,
-    id_col: str,
-    vec_col: str,
-    label_col: str,
-    codebooks: DataFrame | None = None,
-) -> DataFrame:
-    """(id, sub, b{d2, cand}) — nearest codebook entry per subspace.
-
-    ``codebooks`` lets a caller train on one frame and assign on another
-    (IVFPQ assigns only the probed cells' vectors against the FULL-corpus
-    codebooks); default trains on ``emb`` itself."""
-    per_sub = dim // subspaces
-    expl = emb.select(
-        id_col, F.posexplode(F.col(vec_col)).alias("i", "x")
-    ).withColumn("sub", F.expr(f"i div {per_sub}"))
-    cent = codebooks if codebooks is not None else _pq_codebooks(emb, vec_col, label_col)
-    d2 = (
-        expl.join(F.broadcast(cent), "i")
-        .groupBy(id_col, "sub", "cand")
-        .agg(F.sum(_sq_dist_term(F.col("x").cast("double"), F.col("c"))).cast("double").alias("d2"))
-    )
-    return d2.groupBy(id_col, "sub").agg(
-        F.min(F.struct(F.col("d2"), F.col("cand"))).alias("b")
-    )
-
-
 def pq_adc_topk(
     emb: DataFrame,
     k: int = 10,
@@ -461,34 +441,59 @@ def pq_adc_topk(
     """
     from ._ckpt import tracked_persist
 
-    per_sub = dim // subspaces
     # the codebook aggregate feeds both the assignment and the LUT —
     # persist it once (same multi-branch fan-out ADVICE r11 flagged on
     # the IVFPQ composition)
     cent = tracked_persist(_pq_codebooks(emb, vec_col, label_col))
-    codes = _pq_assign(
-        emb, subspaces, dim, id_col, vec_col, label_col, codebooks=cent
-    ).select(id_col, "sub", F.col("b.cand").alias("code"))
-    qdims = (
-        emb.filter(F.col(id_col) == query_id)
-        .select(F.posexplode(F.col(vec_col)).alias("i", "qx"))
-        .withColumn("sub", F.expr(f"i div {per_sub}"))
+    codes = _nearest_codes(emb, cent, subspaces, dim, id_col, vec_col).select(
+        id_col, "sub", F.col("b.cand").alias("code")
     )
-    lut = (
-        qdims.join(F.broadcast(cent), "i")
-        .groupBy("sub", "cand")
-        .agg(F.sum(_sq_dist_term(F.col("qx").cast("double"), F.col("c"))).cast("double").alias("lut_d2"))
-    )
+    lut = _query_lut(emb, cent, query_id, dim // subspaces, id_col, vec_col)
+    return _adc(codes, lut, id_col).orderBy("adc_d2", id_col).limit(k)
+
+
+def _adc(codes: DataFrame, lut: DataFrame, id_col: str) -> DataFrame:
+    """(id, adc_d2): per vector, the decimal-exact sum of its M codes'
+    broadcast LUT entries, rounded to 6 dp."""
     return (
         codes.join(
             F.broadcast(lut),
             (codes.sub == lut.sub) & (codes.code == lut.cand),
         )
         .groupBy(id_col)
-        .agg(F.round(F.sum(F.col("lut_d2").cast("decimal(38,18)")).cast("double"), 6).alias("adc_d2"))
-        .orderBy("adc_d2", id_col)
-        .limit(k)
+        .agg(
+            F.round(
+                F.sum(F.col("lut_d2").cast("decimal(38,18)")).cast("double"), 6
+            ).alias("adc_d2")
+        )
     )
+
+
+def _query_lut(
+    emb: DataFrame,
+    cent: DataFrame,
+    query_id: int,
+    per_sub: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """ADC lookup table (sub, cand, lut_d2): the query row's decimal-exact
+    squared distance to every codebook entry, per subspace — M·K rows."""
+    qdims = (
+        emb.filter(F.col(id_col) == query_id)
+        .select(F.posexplode(F.col(vec_col)).alias("i", "qx"))
+        .withColumn("sub", F.expr(f"i div {per_sub}"))
+    )
+    return (
+        qdims.join(F.broadcast(cent), "i")
+        .groupBy("sub", "cand")
+        .agg(
+            F.sum(_sq_dist_term(F.col("qx").cast("double"), F.col("c")))
+            .cast("double")
+            .alias("lut_d2")
+        )
+    )
+
 
 def _ivfpq_parts(
     emb: DataFrame,
@@ -500,8 +505,8 @@ def _ivfpq_parts(
     vec_col: str,
     label_col: str,
     codebooks: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """(cent, qdims, lut, probe) — the shared IVFPQ query-side frames.
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(cent, lut, probe) — the shared IVFPQ query-side frames.
 
     Extracted so the operating-point sweep (q_ivfpq_sweep) measures its
     scanned fraction against the EXACT probe the search uses, instead of
@@ -515,25 +520,13 @@ def _ivfpq_parts(
     """
     from ._ckpt import tracked_persist
 
-    per_sub = dim // subspaces
     cent = (
         codebooks
         if codebooks is not None
         else tracked_persist(_pq_codebooks(emb, vec_col, label_col))
     )
-    qdims = (
-        emb.filter(F.col(id_col) == query_id)
-        .select(F.posexplode(F.col(vec_col)).alias("i", "qx"))
-        .withColumn("sub", F.expr(f"i div {per_sub}"))
-    )
     lut = tracked_persist(
-        qdims.join(F.broadcast(cent), "i")
-        .groupBy("sub", "cand")
-        .agg(
-            F.sum(_sq_dist_term(F.col("qx").cast("double"), F.col("c")))
-            .cast("double")
-            .alias("lut_d2")
-        )
+        _query_lut(emb, cent, query_id, dim // subspaces, id_col, vec_col)
     )
     # IVF coarse probe: full-dim L2 distance query↔centroid — exactly the
     # sum of that cell's subspace LUT entries (cell id == candidate id),
@@ -546,7 +539,7 @@ def _ivfpq_parts(
         .limit(nprobe)
         .select(F.col("cand").alias(label_col))
     )
-    return cent, qdims, lut, probe
+    return cent, lut, probe
 
 
 def ivfpq_adc_topk(
@@ -560,7 +553,7 @@ def ivfpq_adc_topk(
     vec_col: str = "embedding",
     label_col: str = "label",
     rerank: int | None = 50,
-    parts: tuple[DataFrame, DataFrame, DataFrame, DataFrame] | None = None,
+    parts: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """FAISS-IVFPQ-shaped search: IVF cell pruning THEN PQ/ADC scoring.
 
@@ -583,10 +576,12 @@ def ivfpq_adc_topk(
     L2 ADC would.
 
     Every stage reuses the proven cross-engine-exact constructions:
-    decimal-exact codebook means, decimal squared-distance sums,
-    (distance ASC, cell/id) tie-breaks. Plan: two broadcast-sized
-    aggregates (centroids, LUT; the probe is a K-row rollup of the LUT)
-    + one pruned assignment + one code join — the corpus-sized work is
+    decimal-exact codebook means (``clustering.dim_means``), decimal
+    squared-distance sums, (distance ASC, cell/id) tie-breaks. Plan: two
+    broadcast-sized aggregates (centroids, LUT; the probe is a K-row
+    rollup of the LUT) + one pruned in-row assignment
+    (``clustering.nearest`` over subvectors, as in pq_codes) + one code
+    join — the corpus-sized work is
     the probed-cell assignment alone, and in a deployment with
     precomputed codes even that reduces to the code join. The centroid
     and LUT frames fan into several plan branches (LUT, probe, pruned
@@ -601,7 +596,9 @@ def ivfpq_adc_topk(
     codes many near neighbors share a code, so the plain ADC cut is
     tie-break noise — the measured recall@10 = 0.1 diagnosis); the exact
     pass touches only ``rerank`` vectors, so the 100 TB scan shape is
-    unchanged. Output schema swaps adc_d2 for exact_d2.
+    unchanged. It is one in-row ``V.sqdist`` per candidate row against the
+    broadcast query vector, as in the scaled rerank. Output schema swaps
+    adc_d2 for exact_d2.
 
     The DEFAULTS (subspaces=16, nprobe=4, rerank=50) are the operating
     point q_ivfpq_sweep measured at recall@10 = 0.8 scanning ~38% of the
@@ -625,46 +622,24 @@ def ivfpq_adc_topk(
     have been built with the same (query_id, nprobe, subspaces) or the
     search contract is the caller's bug.
     """
-    cent, qdims, lut, probe = parts or _ivfpq_parts(
+    cent, lut, probe = parts or _ivfpq_parts(
         emb, query_id, nprobe, subspaces, dim, id_col, vec_col, label_col
     )
     pruned = emb.join(F.broadcast(probe), label_col)
-    codes = _pq_assign(
-        pruned, subspaces, dim, id_col, vec_col, label_col, codebooks=cent
-    ).select(id_col, "sub", F.col("b.cand").alias("code"))
-    adc = (
-        codes.join(
-            F.broadcast(lut),
-            (codes.sub == lut.sub) & (codes.code == lut.cand),
-        )
-        .groupBy(id_col)
-        .agg(
-            F.round(
-                F.sum(F.col("lut_d2").cast("decimal(38,18)")).cast("double"), 6
-            ).alias("adc_d2")
-        )
+    codes = _nearest_codes(pruned, cent, subspaces, dim, id_col, vec_col).select(
+        id_col, "sub", F.col("b.cand").alias("code")
     )
+    adc = _adc(codes, lut, id_col)
     if rerank is None:
         return adc.orderBy("adc_d2", id_col).limit(k)
     cand = adc.orderBy("adc_d2", id_col).limit(rerank).select(id_col)
+    q = emb.filter(F.col(id_col) == query_id).select(F.col(vec_col).alias("__q"))
     ex = (
         emb.join(F.broadcast(cand), id_col)
-        .select(id_col, F.posexplode(F.col(vec_col)).alias("i", "x"))
-        .join(F.broadcast(qdims.select("i", "qx")), "i")
-        .groupBy(id_col)
-        .agg(
-            F.sum(
-                _sq_dist_term(
-                    F.col("x").cast("double"), F.col("qx").cast("double")
-                )
-            )
-            .cast("double")
-            .alias("exact_d2")
-        )
+        .crossJoin(F.broadcast(q))
+        .select(id_col, V.sqdist(F.col(vec_col), F.col("__q")).alias("exact_d2"))
     )
     return ex.orderBy("exact_d2", id_col).limit(k)
-
-
 
 
 def _residual_long(
@@ -737,23 +712,16 @@ def pq_residual_codebooks(
     # per-DIM — sample rows ⋈ broadcast seeds on the dim index fanned
     # cap·D·K ≈ 33 M rows into a (id, sub, cand)-keyed SUM and a second
     # argmin aggregate (measured ~5-6 s per build at sf0.1, the largest
-    # single stage of the scaled-ANN build). Now both the candidate
-    # distances AND the argmin are in-row over subvector arrays: seeds
-    # collect into one per-sub broadcast array (K·M·per_sub doubles ≈
-    # 130 KB) and each sampled (id, sub, rv) row folds to its nearest
-    # seed locally — V.sqdist's (28,18) fold rounds each (x−c)² double
-    # to scale 18 exactly like the old per-term DECIMAL(38,18) cast and
-    # decimal addition is exact in both, so the double d2 (and the
-    # (d2, cand) array_min ≡ min(struct(d2, cand)) argmin) is
-    # bit-identical. Only the final (cand, i) mean update shuffles — one
-    # map-side-combinable aggregate over the cap-bounded sample.
+    # single stage of the scaled-ANN build). Now the seeds collect into
+    # one per-sub broadcast array (K·M·per_sub doubles ≈ 130 KB) and each
+    # sampled (id, sub, rv) row takes clustering.nearest locally. Only the
+    # final (cand, i) mean update shuffles — one map-side-combinable
+    # aggregate over the cap-bounded sample.
     per_sub = dim // subspaces
     rsub = _residual_subs(assigned, cents, subspaces, per_sub, id_col)
     hv = md5_u32(F.col(id_col).cast("string"))
     samp = rsub.filter(hv <= F.lit((train_cap * 4294967296 - 1) // n))
     from pyspark.sql import Window
-
-    from ..functions import vectors as V
 
     seed_ids = (
         assigned.orderBy(id_col)
@@ -765,40 +733,21 @@ def pq_residual_codebooks(
     )
     seedarr = (
         rsub.join(F.broadcast(seed_ids), id_col)
-        .select("cand", "sub", F.col("rv").alias("cv"))
         .groupBy("sub")
-        .agg(F.collect_list(F.struct("cand", "cv")).alias("cands"))
+        .agg(F.collect_list(F.struct("cand", F.col("rv").alias("c"))).alias("cands"))
     )
-    best = F.array_min(
-        F.transform(
-            F.col("cands"),
-            lambda s: F.struct(
-                V.sqdist(F.col("rv"), s["cv"]).alias("d2"),
-                s["cand"].alias("cand"),
-            ),
-        )
-    )["cand"]
     chosen = samp.join(F.broadcast(seedarr), "sub").select(
-        "sub", best.alias("cand"), "rv"
+        "sub", C.nearest(F.col("rv"), F.col("cands"))["cand"].alias("cand"), "rv"
     )
-    return (
-        chosen.select("cand", "sub", F.posexplode("rv").alias("j", "x"))
+    long = chosen.select("cand", "sub", F.posexplode("rv").alias("j", "x")).select(
+        "cand",
         # cast keeps i at the old per-dim posexplode IntegerType (sub is
         # long in _residual_subs) — downstream joins/hashes see the same
         # column type as the long-form trainer produced
-        .select(
-            "cand",
-            (F.col("sub") * per_sub + F.col("j")).cast("int").alias("i"),
-            "x",
-        )
-        .groupBy("cand", "i")
-        .agg(
-            (
-                F.sum(F.col("x").cast("decimal(38,18)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("c")
-        )
+        (F.col("sub") * per_sub + F.col("j")).cast("int").alias("i"),
+        "x",
     )
+    return C.dim_means_long(long, ["cand"]).select("cand", "i", "c")
 
 
 def ivfpq_scaled_index(
@@ -878,6 +827,19 @@ def _rerank_budget(k: int, kc: int, rerank: int | None) -> int:
     return max(10 * k, 2 * kc) if rerank is None else rerank
 
 
+def _subvector_rows(df: DataFrame, cols: list[str], subspaces: int, sub_vec) -> DataFrame:
+    """(cols…, sub, rv): one row per subspace s, ``rv = sub_vec(s)`` — the
+    subvector rows ``_assign_subs`` folds over, built in-row (no explode to
+    dim rows)."""
+    subs = F.array(
+        *[
+            F.struct(F.lit(s).cast("long").alias("sub"), sub_vec(s).alias("rv"))
+            for s in range(subspaces)
+        ]
+    )
+    return df.select(*cols, F.inline(subs))
+
+
 def _residual_subs(
     assigned: DataFrame,
     cents: DataFrame,
@@ -886,82 +848,51 @@ def _residual_subs(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Subvector-form residuals (id, cid, sub, rv: array<double>[per_sub])
-    — built IN-ROW (broadcast centroid join + slice/zip_with), no explode
-    to dim rows. The code-assignment consumer computes each candidate
-    distance as an in-row fold over rv, so no per-dim rows ever exist."""
+    — broadcast centroid join + slice/zip_with, in-row."""
     pairs = assigned.join(F.broadcast(cents), "cid")
-    subs = F.array(
-        *[
-            F.struct(
-                F.lit(s).cast("long").alias("sub"),
-                F.zip_with(
-                    F.slice(F.col("v"), s * per_sub + 1, per_sub),
-                    F.slice(F.col("c"), s * per_sub + 1, per_sub),
-                    lambda a, b: a - b,
-                ).alias("rv"),
-            )
-            for s in range(subspaces)
-        ]
-    )
-    return pairs.select(id_col, "cid", F.inline(subs))
-
-
-def _codebook_subs(cb: DataFrame, per_sub: int) -> DataFrame:
-    """Codebook reshaped to subvector arrays (sub, cand, cv) — K·M rows,
-    one tiny aggregate, broadcast by every consumer."""
-    return (
-        cb.withColumn("sub", F.expr(f"i div {per_sub}"))
-        .groupBy("sub", "cand")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "c"))), lambda s: s["c"]
-            ).alias("cv")
-        )
+    return _subvector_rows(
+        pairs,
+        [id_col, "cid"],
+        subspaces,
+        lambda s: F.zip_with(
+            F.slice(F.col("v"), s * per_sub + 1, per_sub),
+            F.slice(F.col("c"), s * per_sub + 1, per_sub),
+            lambda a, b: a - b,
+        ),
     )
 
 
-def _assign_codes_subs(
-    rsub: DataFrame, cbsub: DataFrame, id_col: str = "vec_id"
+def _assign_subs(
+    rsub: DataFrame, cb: DataFrame, per_sub: int, cols: list[str]
 ) -> DataFrame:
-    """(id, cid, sub, code): nearest codebook entry per subvector, computed
-    SHUFFLE-FREE up to the argmin — the r14 spill fix.
+    """(cols…, sub, b{d2, cand}): ``clustering.nearest`` entry of the long
+    (cand, i, c) codebook ``cb`` per subvector row of ``rsub``.
 
-    The per-dim form (explode to (id, i) rows ⋈ codebook on i → SUM keyed
-    (id, cid, sub, cand) → argmin) pushes n·M·K GROUPS through the sum
-    aggregation: at sf30 that is 2.5 G groups whose partial-aggregate
-    hash tables overflow to sort-spill — measured FILLING THE DISK
-    (>60 GB) during the r14 code-table build, the same disease as the
-    r13 wide-argmin crash one operator over. Here each candidate
-    distance is an in-row decimal fold over the per_sub-element
-    subvectors (functions.vectors.sqdist — exact mode bit-equal to the
-    oracle's DECIMAL(38,18) SUM, since decimal addition is order-free
-    and both are exact), and — r16 — the argmin is in-row too: the K
-    candidates arrive as ONE per-sub broadcast array (collect_list over
-    the M·K codebook frame, M·K·per_sub doubles ≈ 130 KB) and
-    ``array_min`` folds over the (d2, cand) structs locally.
-    ``array_min`` uses the same lexicographic (d2, cand) ordering as the
-    previous ``min(struct(d2, cand))`` SortAggregate, and collect_list's
-    row order cannot matter under a total min, so codes are
-    bit-identical — but the n·M·K scored stream, its partial/final
-    SortAggregate pair and the argmin exchange are gone: the operator is
-    a shuffle-free projection over rsub (the broadcast sub-join never
-    repartitions)."""
-    from ..functions import vectors as V
-
-    cbarr = cbsub.groupBy("sub").agg(
-        F.collect_list(F.struct("cand", "cv")).alias("cands")
+    SHUFFLE-FREE past the codebook: the K candidates of each subspace
+    arrive as one broadcast array (``clustering.cand_arrays``, M·K·per_sub
+    doubles ≈ 130 KB) and the (d2, cand) argmin folds in-row, so the
+    operator is a projection over rsub (the broadcast sub-join never
+    repartitions). The per-dim form (explode to (id, i) rows ⋈ codebook on
+    i → SUM keyed (id, sub, cand) → argmin) pushed n·M·K groups through
+    the sum aggregation: at sf30 that was 2.5 G groups, which sort-spilled
+    and filled the disk (>60 GB) during the r14 code-table build."""
+    return rsub.join(F.broadcast(C.cand_arrays(cb, per_sub)), "sub").select(
+        *cols, "sub", C.nearest(F.col("rv"), F.col("cands")).alias("b")
     )
-    best = F.array_min(
-        F.transform(
-            F.col("cands"),
-            lambda s: F.struct(
-                V.sqdist(F.col("rv"), s["cv"]).alias("d2"),
-                s["cand"].alias("cand"),
-            ),
-        )
-    )["cand"]
-    return rsub.join(F.broadcast(cbarr), "sub").select(
-        id_col, "cid", "sub", best.alias("code")
+
+
+def _residual_codes(
+    assigned: DataFrame,
+    cents: DataFrame,
+    cb: DataFrame,
+    subspaces: int,
+    per_sub: int,
+    id_col: str,
+) -> DataFrame:
+    """(id, cid, sub, code): each residual subvector's nearest ``cb`` entry."""
+    rsub = _residual_subs(assigned, cents, subspaces, per_sub, id_col)
+    return _assign_subs(rsub, cb, per_sub, [id_col, "cid"]).select(
+        id_col, "cid", "sub", F.col("b.cand").alias("code")
     )
 
 
@@ -992,9 +923,9 @@ def ivfpq_scaled_codes(
     to the stateless path
     (tests/test_operators.py::test_codes_served_matches_stateless).
 
-    Assignment runs in the subvector form (_assign_codes_subs): in-row
-    candidate distances, argmin the only aggregate — the per-dim form's
-    n·M·K-group sum spilled >60 GB and filled the disk at sf30.
+    Assignment runs in the subvector form (_assign_subs): in-row
+    candidate distances and argmin — the per-dim form's n·M·K-group sum
+    spilled >60 GB and filled the disk at sf30.
 
     Output is PACKED, one row per vector with codes in subspace order
     (FAISS's own storage layout): the served ADC is then an in-row fold
@@ -1003,8 +934,7 @@ def ivfpq_scaled_codes(
     16-bytes-per-vector story instead of carrying M× row overhead."""
     per_sub = dim // subspaces
     assigned, cents, cb, _kc, _np = index
-    rsub = _residual_subs(assigned, cents, subspaces, per_sub, id_col)
-    long_codes = _assign_codes_subs(rsub, _codebook_subs(cb, per_sub), id_col)
+    long_codes = _residual_codes(assigned, cents, cb, subspaces, per_sub, id_col)
     return long_codes.groupBy(id_col, "cid").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("sub", "code"))),
@@ -1113,8 +1043,6 @@ def ivfpq_scaled_topk(
     without it the vector is looked up as ``vecs[query_id]``.
     """
     import math
-
-    from ..functions import vectors as V
 
     per_sub = dim // subspaces
     if query_vec is not None:
@@ -1253,8 +1181,6 @@ def _ivfadc_core(
     ranked by the caller."""
     from pyspark.sql.window import Window
 
-    from ..functions import vectors as V
-
     per_sub = dim // subspaces
     if codes is not None and index is None:
         # a codes table is only meaningful against the index that
@@ -1325,11 +1251,10 @@ def _ivfadc_core(
         if "cid" in vecs.columns:
             rer = vecs.filter(F.col("cid").isin(pcells))
     else:
-        rsub = _residual_subs(
-            assigned.join(F.broadcast(pcell_rows), "cid"), cents, subspaces,
-            per_sub, id_col,
+        pc = _residual_codes(
+            assigned.join(F.broadcast(pcell_rows), "cid"), cents, cb,
+            subspaces, per_sub, id_col,
         )
-        pc = _assign_codes_subs(rsub, _codebook_subs(cb, per_sub), id_col)
     adc = (
         pc.join(F.broadcast(probe), "cid")
         .join(

@@ -15,7 +15,9 @@ Three tiers, increasing scale:
                           its fixed Rademacher table.
 - ``ivf_topk``          — IVF-style: coarse cells from a trained/assigned
                           quantizer (here: the label column or LSH bucket),
-                          query probes ``nprobe`` nearest cells only.
+                          query probes its ``nprobe`` best cells only, by
+                          decimal-exact centroid dot with a cell-id
+                          tie-break; q_ann_ivf_portable hash-checks it.
 
 Scoring uses functions.vectors (zip_with/aggregate — JVM lambdas); at
 very high dimensionality a vectorized Pandas UDF over Arrow batches becomes
@@ -29,6 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
+from . import clustering as C
 
 
 def topk_bruteforce(
@@ -301,27 +304,27 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF-style top-k: vectors are pre-assigned to coarse cells
     (``cell_col`` — a trained quantizer's assignment; the testdata ``label``
-    column stands in). Centroids are computed once (tiny aggregate),
-    the query probes its ``nprobe`` nearest cells, and the scan touches only
-    those partitions — the inverted-file pruning that makes ANN linear in
-    the probed fraction instead of the corpus.
+    column stands in). The query probes its ``nprobe`` best cells, and the
+    scan touches only those partitions — the inverted-file pruning that
+    makes ANN linear in the probed fraction instead of the corpus
+    (the bucketed search of *Continuously Adaptive Similarity Search*).
+
+    Every stage is exact, so q_ann_ivf_portable hash-checks this code
+    against DuckDB:
+    1. centroids: ``clustering.centroids`` (decimal-exact per-dim means)
+       per cell, |cells| rows, broadcastable;
+    2. probe: decimal-exact ``V.dot`` of each centroid with the query,
+       top ``nprobe`` by (score DESC, cell) — the cell id breaks exact
+       ties, so the probed set does not depend on partitioning;
+    3. scan: the probed cells' vectors scored by ``V.dot_seq`` (bitwise
+       DuckDB's ``list_dot_product``), top ``k`` by (score DESC, id).
     """
-    # centroids: per-cell mean vector (|cells| rows — broadcastable)
-    dim_idx = F.sequence(F.lit(0), F.size(F.col(vec_col)) - 1)
-    exploded = emb.select(cell_col, F.posexplode(vec_col).alias("i", "x"))
-    centroids = (
-        exploded.groupBy(cell_col, "i")
-        .agg(F.avg("x").alias("cx"))
-        .groupBy(cell_col)
-        .agg(F.array_sort(F.collect_list(F.struct("i", "cx"))).alias("pairs"))
-        .select(cell_col, F.transform("pairs", lambda s: s["cx"]).alias("centroid"))
-    )
-    _ = dim_idx  # (kept simple: posexplode path above)
+    cents = C.centroids(emb, cell_col, vec_col)
     q = emb.filter(F.col(id_col) == query_id).select(F.col(vec_col).alias("__q"))
     probed = (
-        centroids.crossJoin(F.broadcast(q))
-        .select(cell_col, V.dot_seq(F.col("centroid"), F.col("__q")).alias("cscore"))
-        .orderBy(F.desc("cscore"))
+        cents.crossJoin(F.broadcast(q))
+        .select(cell_col, V.dot(F.col("c"), F.col("__q")).alias("cscore"))
+        .orderBy(F.desc("cscore"), cell_col)
         .limit(nprobe)
         .select(cell_col)
     )

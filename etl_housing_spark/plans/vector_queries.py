@@ -276,49 +276,19 @@ def q_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM embeddings e JOIN probe p ON e.label = p.label, q
     ORDER BY score DESC, e.vec_id LIMIT 10
     """,
-    description="oracle-checked IVF approximate nearest neighbors: coarse quantizer "
-    "= per-label centroids (decimal-exact per-dimension means), query scores the "
-    "k centroids (a tiny aggregate), probes the top-4 cells (raised from 2 in "
-    "r13 with ivf_topk's default — the exact top-10 spans ~6 of the 10 "
-    "overlapping testdata cells, so nprobe=2 capped recall at 0.3; see "
-    "q_ann_recall), and scans ONLY those cells for the exact top-10 — the "
-    "inverted-file pruning that turns a full-corpus scan into an O(probed "
-    "cells) scan at 100 TB. Deterministic twin of the operators.similarity."
-    "ivf_topk fast path; every stage hash-matches DuckDB",
+    description="oracle-checked IVF approximate nearest neighbors: runs "
+    "operators.similarity.ivf_topk (the q_ann_ivf code) and hash-checks it. "
+    "Coarse quantizer = per-label centroids (decimal-exact per-dimension "
+    "means), the query scores the k centroids by decimal-exact dot (a tiny "
+    "aggregate), probes the top-4 cells by (score DESC, label) (raised from "
+    "2 in r13 — the exact top-10 spans ~6 of the 10 overlapping testdata "
+    "cells, so nprobe=2 capped recall at 0.3; see q_ann_recall), and scans "
+    "ONLY those cells for the exact top-10 — the inverted-file pruning that "
+    "turns a full-corpus scan into an O(probed cells) scan at 100 TB",
     tags=("vector", "pipeline"),
 )
 def q_ann_ivf_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    # centroids: explode to (label, dim, value), decimal-exact mean per cell
-    cent = (
-        emb.select("label", F.posexplode(F.col("embedding")).alias("i", "v"))
-        .groupBy("label", "i")
-        .agg(
-            (
-                F.sum(F.col("v").cast("double").cast("decimal(38,18)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("c")
-        )
-    )
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
-    qdims = q.select(F.posexplode(F.col("qe")).alias("i", "qv"))
-    lscore = (
-        cent.join(F.broadcast(qdims), "i")
-        .groupBy("label")
-        .agg(
-            F.sum((F.col("c") * F.col("qv").cast("double")).cast("decimal(38,18)"))
-            .cast("double")
-            .alias("s")
-        )
-    )
-    probe = lscore.orderBy(F.desc("s"), "label").limit(4).select("label")
-    return (
-        emb.join(F.broadcast(probe), "label")
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", F.round(V.dot_seq(F.col("embedding"), F.col("qe")), 6).alias("score"))
-        .orderBy(F.desc("score"), "vec_id")
-        .limit(10)
-    )
+    return S.ivf_topk(load_table(spark, sf_dir, "embeddings"), query_id=0, k=10, nprobe=4)
 
 
 def _rp_bucket_sql() -> str:
@@ -413,10 +383,11 @@ def q_embed_neardup_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="product-quantization codes (PQ, Jégou et al. 2011 / FAISS IVFPQ): "
     "4 independent 16-dim subspace codebooks (deterministic label-conditioned "
     "decimal-exact means — the assignment-based seeding of the IVF coarse "
-    "quantizer), each vector assigned per-subspace to its nearest centroid via "
-    "order-free decimal squared-distance sums + struct-min argmin. 64× storage "
-    "cut (4 codes vs 256 float bytes) for the ADC candidate-scoring path; "
-    "O(n·D·K) map-side-combinable work, no UDF, no collect",
+    "quantizer), each vector assigned per-subspace to its nearest centroid by "
+    "clustering.nearest: an in-row decimal-exact squared-distance fold over a "
+    "broadcast candidate array, (d2, code) argmin. 64× storage cut (4 codes "
+    "vs 256 float bytes) for the ADC candidate-scoring path; O(n·D·K) "
+    "shuffle-free work past the codebook aggregate, no UDF, no collect",
     tags=("vector",),
 )
 def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -609,52 +580,26 @@ def q_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     description="nearest-centroid classification confusion matrix over the "
     "embedding space (the label-coherence evaluation an embedding pipeline "
-    "reports): decimal-exact per-label centroids, order-free decimal squared-"
-    "distance sums per (vector, candidate), struct-min argmin, then one "
-    "grouped count of (true, predicted) cells — matrix size K², independent "
-    "of corpus size; O(n·D·K) map-side-combinable work, no UDF",
+    "reports): decimal-exact per-label centroids broadcast as one candidate "
+    "array, clustering.nearest per vector (in-row decimal-exact squared "
+    "distances, (d2, label) argmin), then one grouped count of (true, "
+    "predicted) cells — matrix size K², independent of corpus size; O(n·D·K) "
+    "shuffle-free work before the count, no UDF",
     tags=("vector",),
 )
 def q_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators import clustering as C
+    from ..operators.quantize import _pq_codebooks
+
     emb = load_table(spark, sf_dir, "embeddings")
-    expl = emb.select("vec_id", "label", F.posexplode("embedding").alias("i", "x"))
-    cent = (
-        emb.select(F.col("label").alias("cand"), F.posexplode("embedding").alias("i", "v"))
-        .groupBy("cand", "i")
-        .agg(
-            (
-                F.sum(F.col("v").cast("double").cast("decimal(38,18)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("c")
-        )
+    cents = _pq_codebooks(emb, "embedding", "label")
+    pred = emb.crossJoin(F.broadcast(C.cand_arrays(cents))).select(
+        "label", C.nearest(F.col("embedding"), F.col("cands"))["cand"].alias("pred")
     )
-    term = (
-        (F.col("x").cast("double") - F.col("c"))
-        * (F.col("x").cast("double") - F.col("c"))
-    ).cast("decimal(38,18)")
-    d2 = (
-        expl.join(F.broadcast(cent), "i")
-        .groupBy("vec_id", "cand")
-        .agg(
-            F.min("label").alias("true_label"),
-            F.sum(term).cast("double").alias("d2"),
-        )
-    )
-    best = (
-        d2.groupBy("vec_id")
-        .agg(
-            F.min("true_label").alias("true_label"),
-            F.min(F.struct(F.col("d2"), F.col("cand"))).alias("b"),
-        )
-        .select("true_label", F.col("b.cand").alias("pred_label"))
-    )
-    return (
-        best.groupBy(
-            F.col("true_label").cast("long").alias("true_label"),
-            F.col("pred_label").cast("long").alias("pred_label"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    return pred.groupBy(
+        F.col("label").cast("long").alias("true_label"),
+        F.col("pred").cast("long").alias("pred_label"),
+    ).agg(F.count(F.lit(1)).alias("n"))
 
 
 @query(
@@ -1105,7 +1050,7 @@ def q_ivfpq_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         parts = _ivfpq_parts(
             emb, 0, np_, m, 64, "vec_id", "embedding", "label", codebooks=cent
         )
-        probe = parts[3]
+        probe = parts[2]
         approx = ivfpq_adc_topk(
             emb, nprobe=np_, subspaces=m, rerank=rr, parts=parts
         ).select("vec_id")
@@ -1313,9 +1258,6 @@ def q_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KM_ACC = "decimal(28,18)"  # same lossless accumulator as functions.vectors
-
-
 _KM_CTES = """
     WITH e AS (
       SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -1388,23 +1330,17 @@ _KM_CTES = """
     tags=("vector", "ml"),
 )
 def q_kmeans_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.clustering import kmeans_fit
+    from ..operators.clustering import dim_means, kmeans_fit
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
     a2, _c2 = kmeans_fit(emb, k=4, rounds=2)
-    return (
-        a2.select("cid", F.posexplode("v").alias("dim", "val"))
-        .groupBy("cid", "dim")
-        .agg(
-            F.count(F.lit(1)).alias("n_members"),
-            F.round(
-                F.sum(F.col("val").cast(_KM_ACC)).cast("double")
-                / F.count(F.lit(1)),
-                6,
-            ).alias("c_val"),
-        )
+    return dim_means(a2, ["cid"]).select(
+        "cid",
+        F.col("i").alias("dim"),
+        F.col("n").alias("n_members"),
+        F.round("c", 6).alias("c_val"),
     )
 
 
@@ -3074,16 +3010,13 @@ _SEMDEDUP_TAU = 0.3  # within-cluster cosine above this = semantic duplicate
     tags=("vector", "dedup", "pipeline"),
 )
 def q_semdedup_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.clustering import dim_means
+
     emb = load_table(spark, sf_dir, "embeddings")
     dims = emb.select(
         "vec_id", "label", F.posexplode(F.col("embedding")).alias("i", "v")
     ).withColumn("v", F.col("v").cast("double"))
-    cent = dims.groupBy("label", "i").agg(
-        (
-            F.sum(F.col("v").cast("decimal(38,18)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("c")
-    )
+    cent = dim_means(emb, ["label"], "embedding")
     nc = cent.groupBy("label").agg(
         F.sqrt(
             F.sum((F.col("c") * F.col("c")).cast("decimal(38,18)")).cast("double")

@@ -230,6 +230,107 @@ def test_ivf_topk_prunes_to_probed_cells(emb):
     assert out2.count() == 5
 
 
+@pytest.mark.parametrize("nparts", [1, 4])
+def test_ivf_topk_probe_breaks_score_ties_by_cell(spark, nparts):
+    """Cells 2 and 7 both have centroid (0.625, 0.625), so the query (1, 1)
+    scores them equally (1.25, exact in decimal and double). With
+    nprobe=1 the probe must take the lower cell id whatever the
+    partitioning: ivf_topk orders the probe by (score DESC, cell)."""
+    rows = [
+        (2, [0.5, 0.75], 7),
+        (3, [0.75, 0.5], 7),
+        (0, [1.0, 1.0], 2),
+        (1, [0.25, 0.25], 2),
+    ]
+    emb = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label long"
+    ).repartition(nparts)
+    out = ivf_topk(emb, query_id=0, k=10, nprobe=1)
+    assert {r.vec_id for r in out.collect()} == {0, 1}
+
+
+def _nearest_cases():
+    """(dim, cands, codebook rows, vectors) with planted exact ties and
+    near-ties.
+
+    cand 7 repeats cand 3's vector (an exact tie: 3 must win) and is
+    listed first. cands 9 and 10 are (0.25 + 1 ulp, 0, …) and (0.25, 0, …):
+    from the zero vector their d² are two ulps apart (0.0625 + 2⁻⁵⁵ vs
+    0.0625), so the HIGHER id 10 must win on d², while on the all-zero
+    second subvector they tie exactly and 9 must win. Rows are
+    cand 3's vector, the zero vector and seeded Gaussian draws."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    dim = 8
+    cands = {c: rng.normal(0, 0.5, dim) for c in range(9) if c != 7}
+    cands[7] = cands[3].copy()
+    cands[9] = np.zeros(dim)
+    cands[9][0] = np.nextafter(0.25, 1.0)
+    cands[10] = np.zeros(dim)
+    cands[10][0] = 0.25
+    order = [7, 10, 9] + [c for c in range(9) if c != 7]
+    cb = [(c, i, float(cands[c][i])) for c in order for i in range(dim)]
+    vecs = [cands[3], np.zeros(dim)] + [rng.normal(0, 0.5, dim) for _ in range(40)]
+    return dim, cands, cb, [[float(x) for x in v] for v in vecs]
+
+
+def _brute_nearest(v, cands, lo, hi):
+    """NumPy brute force over dims [lo, hi): per-dim double (x − c)²,
+    the decimal(p,18) fold replicated exactly (quantize._dec18_fold),
+    argmin by (d2, cand)."""
+    import numpy as np
+
+    from etl_housing_spark.operators.quantize import _dec18_fold
+
+    x = np.asarray(v[lo:hi])
+    scored = sorted(
+        (_dec18_fold(((x - c[lo:hi]) ** 2).tolist(), fast=False), cid)
+        for cid, c in cands.items()
+    )
+    return scored[0], scored[1]
+
+
+def test_nearest_matches_numpy_bruteforce(spark):
+    """clustering.nearest law: over full vectors and over subvectors (the
+    PQ form), the (d2, cand) winner equals a NumPy brute force with the
+    decimal fold replicated exactly — exact ties go to the lower cand,
+    near-ties one ulp apart resolve by the exact d², and neither the
+    codebook's row order nor its partitioning can change the winner."""
+    import numpy as np
+
+    from etl_housing_spark.operators import clustering as C
+    from etl_housing_spark.operators.quantize import _nearest_codes
+
+    dim, cands, cb_rows, vecs = _nearest_cases()
+    emb = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<double>"
+    )
+    cb = spark.createDataFrame(cb_rows, "cand long, i int, c double").repartition(3)
+
+    full = emb.crossJoin(F.broadcast(C.cand_arrays(cb))).select(
+        "vec_id", C.nearest(F.col("embedding"), F.col("cands")).alias("b")
+    )
+    got = {r.vec_id: (r.b.d2, r.b.cand) for r in full.collect()}
+    for vid, v in enumerate(vecs):
+        assert got[vid] == _brute_nearest(v, cands, 0, dim)[0], vid
+    assert got[0] == (0.0, 3)  # exact tie with cand 7
+    assert got[1] == (0.0625, 10)
+    best, second = _brute_nearest(vecs[1], cands, 0, dim)
+    assert second[1] == 9 and 0 < second[0] - best[0] <= 2 * np.spacing(best[0])
+
+    per_sub = 4
+    subs = _nearest_codes(emb, cb, dim // per_sub, dim, "vec_id", "embedding")
+    got_sub = {(r.vec_id, r.sub): (r.b.d2, r.b.cand) for r in subs.collect()}
+    assert len(got_sub) == len(vecs) * (dim // per_sub)
+    for (vid, sub), val in got_sub.items():
+        lo = sub * per_sub
+        assert val == _brute_nearest(vecs[vid], cands, lo, lo + per_sub)[0], (vid, sub)
+    assert got_sub[(0, 0)][1] == 3 and got_sub[(0, 1)][1] == 3
+    assert got_sub[(1, 0)] == (0.0625, 10)
+    assert got_sub[(1, 1)] == (0.0, 9)  # cands 9 and 10 tie exactly here
+
+
 # ---------------------------------------------------------------- encode ----
 
 

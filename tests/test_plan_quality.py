@@ -280,6 +280,35 @@ def test_pair_families_take_candidates_from_band_pairs(spark, monkeypatch, qid):
     assert calls, f"{qid} built its candidates without band_pairs"
 
 
+@pytest.mark.parametrize(
+    "qid",
+    [
+        "q_kmeans_portable",
+        "q_pq_codes",
+        "q_ivfpq_search",
+        "q_centroid_confusion",
+        "q_ann_index_persist",
+    ],
+)
+def test_vector_argmins_go_through_nearest(spark, monkeypatch, qid):
+    """k-means assignment, label-codebook PQ codes, IVFPQ's pruned
+    assignment, nearest-centroid classification and the residual-PQ index
+    build all take their argmin from operators/clustering.nearest — no
+    site keeps an argmin of its own."""
+    from etl_housing_spark.operators import clustering
+
+    calls = []
+    real = clustering.nearest
+
+    def spy(v, cands):
+        calls.append(1)
+        return real(v, cands)
+
+    monkeypatch.setattr(clustering, "nearest", spy)
+    _q(spark, qid)
+    assert calls, f"{qid} built its argmin without clustering.nearest"
+
+
 def test_winsorize_single_scan_histogram(spark):
     plan = _plan(_q(spark, "q_winsorize"))
     # bounds AND the clipped aggregate both come from the one (group, value)
