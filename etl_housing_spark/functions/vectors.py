@@ -33,19 +33,20 @@ def fast_sums() -> bool:
     an oracle flips this on and erases the decimal tax (1.4–6.3× per
     sum-heavy query, q_pricing_summary 6.3×, measured at sf10 — table in
     BASELINE.md; since r13 the switch also covers the vector family's
-    array folds, :func:`_dec_sum` — every ``clustering.nearest`` argmin
-    (k-means assignment, PQ label-codebook and residual code assignment,
-    centroid confusion), the IVF probe's ``dot``, SemDeDup cosine, ADC
-    scoring); results then agree with the exact sum to double
-    round-off on the documented 6dp domain (|Δ|/Σ ≲ n·2⁻⁵³ — at 1e12 rows
-    still ~1e-4 relative worst-case, ~1e-10 typical random-sign error).
-    That round-off bound holds for the SUMS themselves; consumers that
-    pass a fast sum through a discrete decision — a ``clustering.nearest``
-    argmin, the IVF probe's top-nprobe cut, a SemDeDup/near-dup
-    threshold, an ADC top-k cut — can see a near-tied
-    comparison flip, so fast mode there can change a cluster assignment
-    or top-k member outright (still valid-quality output, but discretely
-    different, not a round-off delta; ADVICE r13).
+    array folds, :func:`_dec_sum` — the IVF probe's ``dot``, SemDeDup
+    cosine, ADC scoring and the reranks' ``sqdist``); results then agree
+    with the exact sum to double round-off on the documented 6dp domain
+    (|Δ|/Σ ≲ n·2⁻⁵³ — at 1e12 rows still ~1e-4 relative worst-case,
+    ~1e-10 typical random-sign error). That round-off bound holds for the
+    SUMS themselves; consumers that pass a fast sum through a discrete
+    decision — the IVF probe's top-nprobe cut, a SemDeDup/near-dup
+    threshold, an ADC top-k cut — can see a near-tied comparison flip, so
+    fast mode there can change a top-k member outright (still
+    valid-quality output, but discretely different, not a round-off
+    delta; ADVICE r13). ``clustering.nearest`` (every k-means, PQ code
+    and centroid-confusion argmin) does not read the switch: it prunes in
+    double and verifies in decimal in both modes, so its winner is exact
+    either way.
 
     Scope and timing: the flag is read by each dsum()/davg() CALL during
     driver-side plan construction — set it before building the query and
@@ -60,30 +61,38 @@ def fast_sums() -> bool:
 
 
 def _dec_sum(arr: Column) -> Column:
-    """Order-exact array fold — or, in fast mode (:func:`fast_sums`), a
-    plain sequential double fold: same plan shape, no per-element
-    BigDecimal, not bit-reproducible against the DuckDB oracle. This is
-    the switch that erases the decimal tax from the vector family's hot
-    paths (every ``clustering.nearest`` argmin — k-means assignment, PQ
-    label-codebook and residual code assignment, centroid confusion —
-    the IVF probe, SemDeDup cosine, ADC scan).
+    """Order-exact array fold (:func:`_exact_sum`) — or, in fast mode
+    (:func:`fast_sums`), the plain sequential double fold
+    (:func:`_double_sum`): same plan shape, no per-element BigDecimal, not
+    bit-reproducible against the DuckDB oracle. This is the switch that
+    erases the decimal tax from the vector family's hot paths (the IVF
+    probe, SemDeDup cosine, ADC scan, the reranks).
 
     ARGMIN/THRESHOLD CONSUMERS (ADVICE r13): for plain sums the fast
-    fold differs from the exact fold only by round-off — but the
-    ``clustering.nearest`` argmins, the IVF probe, SemDeDup keep/drop,
-    and ADC top-k all pass these sums
-    through a DISCRETE decision (argmin, threshold, limit), and a
-    round-off-level distance delta can flip which cluster/candidate wins
-    when two are near-tied. Fast-mode output for those consumers can
-    therefore differ DISCRETELY from exact mode (a different — still
-    valid-quality — assignment or top-k member), not just in trailing
-    digits. Exact mode remains the verification default; conftest fails
-    fast if the switch leaks into a verification session."""
-    if fast_sums():
-        return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
+    fold differs from the exact fold only by round-off — but the IVF
+    probe, SemDeDup keep/drop, and ADC top-k all pass these sums through
+    a DISCRETE decision (threshold, limit), and a round-off-level
+    distance delta can flip which candidate wins when two are near-tied.
+    Fast-mode output for those consumers can therefore differ DISCRETELY
+    from exact mode (a different — still valid-quality — top-k member),
+    not just in trailing digits. ``clustering.nearest`` calls the two
+    folds directly and is exact in both modes. Exact mode remains the
+    verification default; conftest fails fast if the switch leaks into a
+    verification session."""
+    return _double_sum(arr) if fast_sums() else _exact_sum(arr)
+
+
+def _exact_sum(arr: Column) -> Column:
+    """The decimal fold whatever the mode: each element cast to
+    DECIMAL(28,18), summed exactly, one final cast to double."""
     return F.aggregate(
         arr, F.lit(0).cast(_ACC), lambda acc, x: (acc + x.cast(_ACC)).cast(_ACC)
     ).cast("double")
+
+
+def _double_sum(arr: Column) -> Column:
+    """The plain left-to-right double fold of the same elements."""
+    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -107,7 +116,7 @@ def dot_seq(a: Column, b: Column) -> Column:
     top of the bitwise agreement.
     """
     prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
+    return _double_sum(prods)
 
 
 def norm(a: Column) -> Column:
@@ -118,17 +127,22 @@ def norm(a: Column) -> Column:
 def sqdist(a: Column, b: Column) -> Column:
     """Exact-accumulated squared L2 distance of two array columns.
 
-    Each per-dim (x−y)² is one double product cast to DECIMAL(28,18);
-    decimal addition is associative, so the in-row fold here equals a
-    grouped decimal SUM over exploded dims bit-for-bit — which is exactly
-    how the k-means oracle mirrors it (q_kmeans_portable)."""
-    diffs = F.zip_with(
+    Each per-dim (x−y)² (:func:`_sq_terms`) is one double product cast to
+    DECIMAL(28,18); decimal addition is associative, so the in-row fold
+    here equals a grouped decimal SUM over exploded dims bit-for-bit —
+    which is exactly how the k-means oracle mirrors it
+    (q_kmeans_portable)."""
+    return _dec_sum(_sq_terms(a, b))
+
+
+def _sq_terms(a: Column, b: Column) -> Column:
+    """The per-dim double terms (x−y)² that :func:`sqdist` folds."""
+    return F.zip_with(
         a,
         b,
         lambda x, y: (x.cast("double") - y.cast("double"))
         * (x.cast("double") - y.cast("double")),
     )
-    return _dec_sum(diffs)
 
 
 def cosine(a: Column, b: Column) -> Column:

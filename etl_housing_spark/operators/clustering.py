@@ -9,9 +9,11 @@ The vector family's two cross-engine decisions are written here once:
   residual-PQ codebook update, the IVF cells of ``similarity.ivf_topk``
   and the SemDeDup / confusion-matrix centroids.
 - :func:`nearest` — the argmin under the total (exact d², cand) order,
-  folded in-row over a candidate array. It is k-means assignment, PQ code
-  assignment (full vectors and residuals), residual-PQ training and
-  nearest-centroid classification. :func:`cand_arrays` turns a long
+  folded in-row over a candidate array: a double-precision filter with a
+  proven error bound, then the decimal fold over the survivors only, so
+  the winner is exact in both numeric modes. It is k-means assignment,
+  PQ code assignment (full vectors and residuals), residual-PQ training
+  and nearest-centroid classification. :func:`cand_arrays` turns a long
   (cand, i, c) codebook into the per-subspace arrays it folds over.
 
 Sites outside this module reach them through the module attribute
@@ -108,16 +110,42 @@ def cand_arrays(cb: DataFrame, per_sub: int | None = None) -> DataFrame:
     return subs.groupBy("sub").agg(F.collect_list(F.struct("cand", "c")).alias("cands"))
 
 
+# Past this f a candidate is never pruned: a tenth of DECIMAL(28,18)'s
+# range, so every pruned candidate's exact fold provably stays in range.
+_DEC_SAFE = 1e9
+
+
+def _slack(n):
+    """(a, b) of E(f) = a·f + b, the bound on |exact d² − f| for an
+    n-term double fold f (derived in :func:`nearest`). Plain arithmetic,
+    so it evaluates on Python numbers and on Columns alike."""
+    return (n + 8) * 2.0**-52, n * 1e-18
+
+
+def _limit(m, n):
+    """t with t − E(t) = m + E(m): :func:`nearest` keeps every candidate
+    whose double fold f ≤ t, m the smallest f."""
+    a, b = _slack(n)
+    return (m * (1 + a) + 2 * b) / (1 - a)
+
+
+def _let(value: Column, body) -> Column:
+    """``body(value)`` with ``value`` evaluated once: a one-element
+    ``transform`` binds it to a lambda variable, which Spark does not
+    inline into the body."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
 def nearest(v: Column, cands: Column) -> Column:
     """struct(d2, cand) of the candidate in ``cands`` nearest to ``v``:
-    ``array_min`` over struct(``V.sqdist(v, c)``, cand) for an in-row
-    array of struct(cand, c) elements.
+    the minimum under the (d2, cand) order, d2 = ``V.sqdist(v, c)``'s
+    decimal fold, over an in-row array of struct(cand, c) elements.
 
     Why this equals the SQL oracle's grouped argmin
     (``SUM(CAST((x − c)² AS DECIMAL(p,18)))`` per (row, cand), then
     ``ROW_NUMBER() OVER (ORDER BY d2, cand) = 1``):
-    - each per-dim (x − c)² is one double product; ``V.sqdist`` casts it
-      to DECIMAL(28,18) and the oracles to DECIMAL(28,18) or (38,18),
+    - each per-dim (x − c)² is one double product; the decimal fold casts
+      it to DECIMAL(28,18) and the oracles to DECIMAL(28,18) or (38,18),
       which round the same double at the same scale 18;
     - decimal addition is exact, so the in-row fold and the grouped SUM
       reach the same d² bit for bit (one final cast to double);
@@ -127,23 +155,91 @@ def nearest(v: Column, cands: Column) -> Column:
       lower cand, and the order of ``collect_list``'s elements cannot
       change the winner.
 
+    Certificate: only the winner and its near-ties need the exact d², so
+    one in-row expression filters in double and verifies in decimal:
+    1. score every candidate with f, the plain double fold
+       (``V._double_sum``) of the same per-dim terms tᵢ = (x − c)²;
+    2. take m = min f;
+    3. keep each candidate with f − E(f) ≤ m + E(m), E(f) = a·f + b
+       (:func:`_slack`). f − E(f) = (1 − a)·f − b grows with f, so that is
+       f ≤ t for the one t = :func:`_limit` (m, n) computed per row;
+    4. ``array_min`` over struct(d2, cand) of the survivors only, d2 the
+       decimal fold (``V._exact_sum``, which no numeric mode switches).
+    The scored array and t are each bound once (:func:`_let`), so no fold
+    is evaluated twice. ``EHS_FAST_SUMS`` is not read: both modes get the
+    exact winner.
+
+    The bound. For n terms tᵢ ≥ 0, S = Σtᵢ exactly, u = 2⁻⁵³:
+    - Spark's cast of tᵢ to DECIMAL(28,18) rounds the decimal string of
+      tᵢ (``Double.toString``, which reads back as tᵢ, so it lies within
+      ½ulp(tᵢ) ≤ u·tᵢ of it) half-up at scale 18 (±0.5e-18); a
+      subnormal tᵢ rounds to 0, off by tᵢ < 0.5e-18. So the exact
+      decimal sum D obeys |D − S| ≤ u·S + n·0.5e-18;
+    - the sequential double fold of nonnegative terms errs by at most
+      γₙ₋₁·S, γₖ = k·u / (1 − k·u) (Higham, *Accuracy and Stability of
+      Numerical Algorithms*, §4.2);
+    - the final cast of D to double (``BigDecimal.doubleValue``, correctly
+      rounded) errs by at most u·D.
+    Summed, |d2 − f| ≤ (n + 1)·u·S·(1 + O(n·u)) + n·0.5e-18·(1 + u),
+    with S ≤ f / (1 − γₙ₋₁). E(f) = (n + 8)·2u·f + n·1e-18 covers that
+    with about (n + 15)·u·f and n·0.5e-18 to spare. The spare absorbs the
+    filter's own roundings: t is six double operations, each off by at
+    most u of its result, so the computed t is at most 6u·t low.
+    ``test_nearest_slack_bounds_the_exact_fold``
+    (tests/test_dsum_props.py) checks the bound against the exact fold.
+
+    Why pruning cannot change the winner: let w be the (d2, cand) winner
+    over all candidates, and i a fast winner (f_i = m; it always
+    survives, since t ≥ m·(1 + a)/(1 − a) stays above m after rounding).
+    A pruned candidate j has f_j > t, at most 6u·t below the exact t,
+    so with the spare d2_j > m + E(m) ≥ d2_i, and (d2_i, cand_i) orders
+    strictly before it: j ≠ w. Hence w
+    survives, and the minimum over a subset that holds w is w: the same
+    (d2, cand), bit for bit. Exact ties and near-ties within E all reach
+    the decimal step, so the cand tie-break is unchanged. A candidate
+    whose f is null, NaN, infinite or ≥ ``_DEC_SAFE`` is never pruned, so
+    malformed or out-of-range input (null dims, mismatched lengths, a
+    fold that overflows DECIMAL(28,18)) behaves exactly as the full
+    decimal form.
+
     The in-row fold replaced the per-dimension plan (explode to (row, i),
     join the codebook on i, SUM per (row, cand), then argmin): that pushed
     n·K groups through a shuffle and spilled >60 GB at sf30 (r14). A
     statically unrolled sum over the dims was measured 2× slower than this
     interpreted fold in r16, because the 64-term decimal chain falls out of
-    codegen.
+    codegen."""
+    n = F.size(v)
+    scored = F.transform(
+        cands,
+        lambda s: F.struct(
+            V._double_sum(V._sq_terms(v, s["c"])).alias("f"),
+            s["cand"].alias("cand"),
+            s["c"].alias("c"),
+        ),
+    )
 
-    Under ``EHS_FAST_SUMS=1`` d² is the plain double fold, so a near-tie
-    can flip (functions.vectors.fast_sums)."""
-    return F.array_min(
-        F.transform(
-            cands,
-            lambda s: F.struct(
-                V.sqdist(v, s["c"]).alias("d2"), s["cand"].alias("cand")
+    def verify(sc: Column) -> Column:
+        # a null or NaN f (or a null t) compares to null or false: kept
+        kept = _let(
+            _limit(F.array_min(F.transform(sc, lambda e: e["f"])), n),
+            lambda t: F.filter(
+                sc,
+                lambda e: ~F.coalesce(
+                    (e["f"] < _DEC_SAFE) & (e["f"] > t), F.lit(False)
+                ),
             ),
         )
-    )
+        return F.array_min(
+            F.transform(
+                kept,
+                lambda e: F.struct(
+                    V._exact_sum(V._sq_terms(v, e["c"])).alias("d2"),
+                    e["cand"].alias("cand"),
+                ),
+            )
+        )
+
+    return _let(scored, verify)
 
 
 def seed_centroids(vecs: DataFrame, k: int, id_col: str = "vec_id") -> DataFrame:

@@ -1275,16 +1275,12 @@ def _ivfadc_core(
         .filter(F.col("rn") <= rerank)
         .select("qid", id_col)
     )
+    # exact rerank: one in-row V.sqdist per (qid, candidate) row against
+    # the broadcast query vector, as in the local serve's rerank
     ex = (
         rer.join(F.broadcast(cand), id_col)
-        .select("qid", id_col, F.posexplode(F.col("v")).alias("i", "x"))
-        .join(F.broadcast(qd), ["qid", "i"])
-        .groupBy("qid", id_col)
-        .agg(
-            F.sum(_sq_dist_term(F.col("x"), F.col("qx")))
-            .cast("double")
-            .alias("exact_d2")
-        )
+        .join(F.broadcast(qvs), "qid")
+        .select("qid", id_col, V.sqdist(F.col("v"), F.col("qv")).alias("exact_d2"))
     )
     return ex, kc, nprobe
 

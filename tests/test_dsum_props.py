@@ -184,3 +184,36 @@ def test_fast_sums_covers_vector_fold(monkeypatch):
     assert fast == pytest.approx(exact, rel=1e-12)
     after = df.select(V.dot(F.col("a"), F.col("b")).alias("d")).collect()[0].d
     assert after == exact
+
+
+# nonnegative double terms from 1e-20 to 1e6 (log-spread mantissa × decade),
+# plus zeros and terms below 0.5e-18 that the scale-18 cast rounds to 0
+_TERM = st.one_of(
+    st.builds(
+        lambda m, e: m * 10.0**e,
+        st.floats(min_value=1.0, max_value=10.0),
+        st.integers(min_value=-20, max_value=5),
+    ),
+    st.floats(min_value=0.0, max_value=4.9e-19),
+    st.just(0.0),
+)
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.lists(_TERM, min_size=1, max_size=128))
+@example([1.0] + [2.0**-53] * 127)  # every addition rounds away a term
+@example([1e-20] * 128)  # every term rounds to 0 at scale 18
+@example([0.1] * 128)
+def test_nearest_slack_bounds_the_exact_fold(terms):
+    """clustering._slack is the certificate behind clustering.nearest:
+    for any n ≤ 128 nonnegative terms, the exact fold (each term cast to
+    DECIMAL(p,18), summed exactly, one cast to double — replicated by
+    quantize._dec18_fold) and the plain sequential double fold differ by
+    at most E(fast) = a·fast + b. Pure Python: no Spark."""
+    from etl_housing_spark.operators.clustering import _slack
+    from etl_housing_spark.operators.quantize import _dec18_fold
+
+    exact = _dec18_fold(terms, fast=False)
+    fast = _dec18_fold(terms, fast=True)
+    a, b = _slack(len(terms))
+    assert abs(exact - fast) <= a * fast + b, (exact, fast)

@@ -331,6 +331,95 @@ def test_nearest_matches_numpy_bruteforce(spark):
     assert got_sub[(1, 1)] == (0.0, 9)  # cands 9 and 10 tie exactly here
 
 
+def _reversed_pair(rng):
+    """Two 4-dim candidates p, q whose distances from the zero vector the
+    double fold orders opposite to the exact fold, in 4 dims and again
+    when each is repeated to 8 dims: q is a shuffle of p with one
+    coordinate moved one ulp toward 0, so its exact d² is smaller while
+    the shuffled fold order rounds it larger. Seeded search."""
+    import math
+
+    from etl_housing_spark.operators.quantize import _dec18_fold
+
+    def folds(c):
+        t = [x * x for x in c]
+        return _dec18_fold(t, fast=True), _dec18_fold(t, fast=False)
+
+    for _ in range(10_000):
+        p = [rng.gauss(0, 0.5) for _ in range(4)]
+        q = p[:]
+        rng.shuffle(q)
+        j = rng.randrange(4)
+        q[j] = math.nextafter(q[j], 0.0)
+        (fp, dp), (fq, dq) = folds(p), folds(q)
+        (f8p, d8p), (f8q, d8q) = folds(p + p), folds(q + q)
+        if fp < fq and dp > dq and f8p < f8q and d8p > d8q:
+            return p, q
+    raise AssertionError("no reversed pair found")
+
+
+def test_nearest_certificate_verifies_reversed_near_ties(spark, monkeypatch):
+    """clustering.nearest's double filter passes every near-tie to the
+    decimal verify: cand 4 (p) has the smallest double fold but cand 6
+    (q) the smaller exact d², and cand 9 (q reversed) ties cand 6 exactly
+    while folding differently in double. The winner equals the NumPy
+    brute force over full vectors and over subvectors; all three survive
+    the filter and the far candidates are pruned. Under EHS_FAST_SUMS=1
+    the rows are the same: nearest is exact in both modes."""
+    import random
+
+    import numpy as np
+
+    from etl_housing_spark.operators import clustering as C
+    from etl_housing_spark.operators.quantize import _dec18_fold, _nearest_codes
+
+    rng = random.Random(7)
+    p, q = _reversed_pair(rng)
+    dim = 8
+    cands = {4: p + p, 6: q + q, 9: (q + q)[::-1]}
+    for cid in (0, 1, 2, 3):
+        cands[cid] = [3.0 + rng.gauss(0, 0.5) for _ in range(dim)]
+    cands = {c: np.asarray(v) for c, v in cands.items()}
+    zero = [0.0] * dim
+    vecs = [zero] + [[rng.gauss(0, 0.7) for _ in range(dim)] for _ in range(20)]
+
+    # the filter, replicated: who survives to the decimal verify from 0
+    f = {c: _dec18_fold((v * v).tolist(), fast=True) for c, v in cands.items()}
+    m = min(f.values())
+    alive = {c for c, x in f.items() if x <= C._limit(m, dim)}
+    assert alive == {4, 6, 9}
+    assert min(f, key=lambda c: (f[c], c)) != 6
+
+    emb = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<double>"
+    )
+    cb_rows = [(c, i, float(v[i])) for c, v in cands.items() for i in range(dim)]
+
+    def run():
+        cb = spark.createDataFrame(cb_rows, "cand long, i int, c double")
+        full = emb.crossJoin(F.broadcast(C.cand_arrays(cb))).select(
+            "vec_id", C.nearest(F.col("embedding"), F.col("cands")).alias("b")
+        )
+        subs = _nearest_codes(emb, cb, 2, dim, "vec_id", "embedding")
+        return (
+            {r.vec_id: (r.b.d2, r.b.cand) for r in full.collect()},
+            {(r.vec_id, r.sub): (r.b.d2, r.b.cand) for r in subs.collect()},
+        )
+
+    got, got_sub = run()
+    for vid, v in enumerate(vecs):
+        assert got[vid] == _brute_nearest(v, cands, 0, dim)[0], vid
+        for sub in (0, 1):
+            lo = 4 * sub
+            want = _brute_nearest(v, cands, lo, lo + 4)[0]
+            assert got_sub[(vid, sub)] == want, (vid, sub)
+    assert got[0][1] == 6
+    assert got_sub[(0, 0)][1] == 6 and got_sub[(0, 1)][1] == 6
+
+    monkeypatch.setenv("EHS_FAST_SUMS", "1")
+    assert run() == (got, got_sub)
+
+
 # ---------------------------------------------------------------- encode ----
 
 
