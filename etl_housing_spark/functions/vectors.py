@@ -21,32 +21,39 @@ _ACC = "decimal(28,18)"
 
 
 def fast_sums() -> bool:
-    """Production fast mode: ``EHS_FAST_SUMS=1`` switches plans/_util's
-    ``dsum`` / ``davg`` / ``dsum_wide``, this module's array folds and the
-    IVF-PQ probe fold to plain double sums. This is the one reader of the
+    """Production fast mode: ``EHS_FAST_SUMS=1`` switches the decimal
+    sums below to plain double sums. This is the one reader of the
     variable; functions/ imports nothing from operators/ or plans/, so
     all three layers import it without a cycle.
+
+    What the switch covers — the one list (README points here):
+    - ``plans/_util``'s ``dsum`` / ``davg`` / ``dsum_wide`` and
+      ``plans/stats_queries._dsum12``, the catalog aggregates;
+    - this module's array folds (:func:`_dec_sum`, behind :func:`dot`,
+      :func:`norm`, :func:`sqdist` and :func:`cosine`). In the vector
+      family these are the IVF probes (``similarity.ivf_topk``'s centroid
+      ``dot``; the IVFADC probe's ``sqdist``, in the batch core and the
+      driver-local serve), SemDeDup cosine and the exact reranks.
+    Not covered, exact in both modes: ``clustering.nearest`` (every
+    k-means, PQ code and centroid-confusion argmin — it prunes in double
+    and verifies in decimal), the PQ lookup tables and the ADC sums
+    (``operators/quantize._lut`` / ``_adc``, which call
+    :func:`_exact_sum` and a decimal SUM directly).
 
     The decimal fold exists to make every aggregate BIT-IDENTICAL to the
     DuckDB oracle (order-free accumulation) — the verification contract,
     not a numerical-accuracy need. A deployment that does not diff against
     an oracle flips this on and erases the decimal tax (1.4–6.3× per
     sum-heavy query, q_pricing_summary 6.3×, measured at sf10 — table in
-    BASELINE.md; since r13 the switch also covers the vector family's
-    array folds, :func:`_dec_sum` — the IVF probe's ``dot``, SemDeDup
-    cosine, ADC scoring and the reranks' ``sqdist``); results then agree
-    with the exact sum to double round-off on the documented 6dp domain
-    (|Δ|/Σ ≲ n·2⁻⁵³ — at 1e12 rows still ~1e-4 relative worst-case,
-    ~1e-10 typical random-sign error). That round-off bound holds for the
-    SUMS themselves; consumers that pass a fast sum through a discrete
-    decision — the IVF probe's top-nprobe cut, a SemDeDup/near-dup
-    threshold, an ADC top-k cut — can see a near-tied comparison flip, so
-    fast mode there can change a top-k member outright (still
-    valid-quality output, but discretely different, not a round-off
-    delta; ADVICE r13). ``clustering.nearest`` (every k-means, PQ code
-    and centroid-confusion argmin) does not read the switch: it prunes in
-    double and verifies in decimal in both modes, so its winner is exact
-    either way.
+    BASELINE.md); results then agree with the exact sum to double
+    round-off on the documented 6dp domain (|Δ|/Σ ≲ n·2⁻⁵³ — at 1e12 rows
+    still ~1e-4 relative worst-case, ~1e-10 typical random-sign error).
+    That round-off bound holds for the SUMS themselves; a covered sum
+    that feeds a discrete decision — the IVF probe's top-nprobe cut, a
+    SemDeDup keep/drop threshold, a rerank's top-k cut — can see a
+    near-tied comparison flip, so fast mode there can change a member
+    outright (still valid-quality output, but discretely different, not
+    a round-off delta; ADVICE r13).
 
     Scope and timing: the flag is read by each dsum()/davg() CALL during
     driver-side plan construction — set it before building the query and
@@ -61,24 +68,12 @@ def fast_sums() -> bool:
 
 
 def _dec_sum(arr: Column) -> Column:
-    """Order-exact array fold (:func:`_exact_sum`) — or, in fast mode
-    (:func:`fast_sums`), the plain sequential double fold
-    (:func:`_double_sum`): same plan shape, no per-element BigDecimal, not
-    bit-reproducible against the DuckDB oracle. This is the switch that
-    erases the decimal tax from the vector family's hot paths (the IVF
-    probe, SemDeDup cosine, ADC scan, the reranks).
-
-    ARGMIN/THRESHOLD CONSUMERS (ADVICE r13): for plain sums the fast
-    fold differs from the exact fold only by round-off — but the IVF
-    probe, SemDeDup keep/drop, and ADC top-k all pass these sums through
-    a DISCRETE decision (threshold, limit), and a round-off-level
-    distance delta can flip which candidate wins when two are near-tied.
-    Fast-mode output for those consumers can therefore differ DISCRETELY
-    from exact mode (a different — still valid-quality — top-k member),
-    not just in trailing digits. ``clustering.nearest`` calls the two
-    folds directly and is exact in both modes. Exact mode remains the
-    verification default; conftest fails fast if the switch leaks into a
-    verification session."""
+    """Order-exact array fold (:func:`_exact_sum`) — or, in fast mode, the
+    plain sequential double fold (:func:`_double_sum`): same plan shape,
+    no per-element BigDecimal, not bit-reproducible against the DuckDB
+    oracle. Its consumers, and the near-tie caveat for those that feed a
+    discrete decision, are listed once in :func:`fast_sums`. Exact mode
+    remains the verification default."""
     return _double_sum(arr) if fast_sums() else _exact_sum(arr)
 
 

@@ -14,7 +14,8 @@ The vector family's two cross-engine decisions are written here once:
   the winner is exact in both numeric modes. It is k-means assignment,
   PQ code assignment (full vectors and residuals), residual-PQ training
   and nearest-centroid classification. :func:`cand_arrays` turns a long
-  (cand, i, c) codebook into the per-subspace arrays it folds over.
+  (cand, i, c) codebook into the per-subspace arrays it folds over, from
+  the same :func:`sub_rows` the PQ lookup tables score.
 
 Sites outside this module reach them through the module attribute
 (``C.nearest``), not a name bound at import, so a spy on
@@ -45,6 +46,7 @@ __all__ = [
     "dim_means_long",
     "centroids",
     "cand_arrays",
+    "sub_rows",
     "nearest",
     "seed_centroids",
     "kmeans_assign",
@@ -106,8 +108,17 @@ def cand_arrays(cb: DataFrame, per_sub: int | None = None) -> DataFrame:
         return _assemble(cb, "cand").agg(
             F.collect_list(F.struct("cand", "c")).alias("cands")
         )
-    subs = _assemble(cb.withColumn("sub", F.expr(f"i div {per_sub}")), "sub", "cand")
-    return subs.groupBy("sub").agg(F.collect_list(F.struct("cand", "c")).alias("cands"))
+    return sub_rows(cb, per_sub).groupBy("sub").agg(
+        F.collect_list(F.struct("cand", "c")).alias("cands")
+    )
+
+
+def sub_rows(cb: DataFrame, per_sub: int) -> DataFrame:
+    """A long (cand, i, c) codebook → (sub, cand, c: array<double>): one
+    row per entry of each subspace of ``per_sub`` dims, the rows
+    :func:`cand_arrays` collects and the PQ lookup tables
+    (``quantize._lut``) score."""
+    return _assemble(cb.withColumn("sub", F.expr(f"i div {per_sub}")), "sub", "cand")
 
 
 # Past this f a candidate is never pruned: a tenth of DECIMAL(28,18)'s

@@ -148,33 +148,89 @@ def _nearest_codes(
 ) -> DataFrame:
     """(id, sub, b{d2, cand}) — nearest ``cb`` entry per raw subvector."""
     per_sub = dim // subspaces
-    subs = _subvector_rows(
-        emb, [id_col], subspaces,
-        lambda s: F.slice(F.col(vec_col), s * per_sub + 1, per_sub),
-    )
+    subs = _raw_subs(emb, [id_col], subspaces, per_sub, vec_col)
     return _assign_subs(subs, cb, per_sub, [id_col])
 
 
-def _sq_dist_term(x, c):
-    return ((x - c) * (x - c)).cast("decimal(38,18)")
+def _raw_subs(
+    df: DataFrame, cols: list[str], subspaces: int, per_sub: int, vec_col: str
+) -> DataFrame:
+    """(cols…, sub, rv): ``vec_col`` cut into ``subspaces`` slices."""
+    return _subvector_rows(
+        df, cols, subspaces,
+        lambda s: F.slice(F.col(vec_col), s * per_sub + 1, per_sub),
+    )
 
 
 # ---------------------------------------------------------------------------
-# Driver-local serving state (VERDICT r15 item 3: cut the serving floor).
+# The PQ scoring core (Jégou et al. 2011): a lookup table (LUT) holds the
+# exact squared distance from each query subvector — or query residual
+# q − c_cell, one table per probed cell — to every codebook entry of its
+# subspace, and a vector's ADC score is the sum of its M codes' entries.
+# _lut and _adc are the only places either is written; every search path
+# (pq_adc_topk, ivfpq_adc_topk, the qid-keyed batch core and the local
+# fused serve) differs only in where its query rows come from.
 #
-# The per-query serving chain used to launch ~4 sequential Spark jobs —
-# probe collect, LUT broadcast materialization (itself nesting cb/probe/qd
-# broadcast builds), ADC, rerank — and the sf10 floor decomposition showed
-# ~1.4 s of the 2.1 s wall was job/stage setup, not bytes. Everything the
-# probe and LUT need is broadcast-sized BY CONSTRUCTION (kc centroids,
-# M·K·per_sub codebook entries), so the serve path now collects both ONCE
-# per index (cached across queries — the batch/stream forms re-enter per
-# micro-batch), computes the probe DRIVER-SIDE with a bit-exact replication
-# of the decimal fold, and ships the LUT's per-term values as a broadcast
-# LOCAL relation whose decimal fold runs in-row inside the ADC join — the
-# LUT job disappears entirely (a BroadcastExchange over a LocalTableScan
-# materializes without launching a job). The serving wall becomes
-# [ADC job] + [rerank job] + O(kc·D) driver arithmetic.
+# Exactness: each LUT entry is the decimal fold V._exact_sum of the per-dim
+# double terms (rv − c)², the same scale-18 cast per term and exact
+# decimal additions as the oracles' grouped SUM, so the in-row fold and
+# the grouped form agree bit for bit. The fold never reads EHS_FAST_SUMS,
+# and neither does the ADC sum.
+# ---------------------------------------------------------------------------
+
+
+def _lut(qrows: DataFrame, cbrows: DataFrame) -> DataFrame:
+    """The ADC lookup table (keys…, sub, cand, lut_d2).
+
+    ``qrows`` is (keys…, sub, rv) — query subvectors, or per-cell query
+    residuals keyed by (qid, cid) — and ``cbrows`` the (sub, cand, c)
+    codebook rows (``clustering.sub_rows``). The query rows broadcast and
+    each joined pair folds in-row: no explode to dims, no aggregate."""
+    keys = [c for c in qrows.columns if c not in ("sub", "rv")]
+    return cbrows.join(F.broadcast(qrows), "sub").select(
+        *keys,
+        "sub",
+        "cand",
+        V._exact_sum(V._sq_terms(F.col("rv"), F.col("c"))).alias("lut_d2"),
+    )
+
+
+def _adc(codes: DataFrame, lut: DataFrame, id_col: str) -> DataFrame:
+    """(keys…, id, adc_d2): per vector, the decimal-exact sum of its M
+    codes' entries in the broadcast ``lut``, unrounded.
+
+    ``codes`` is (id, [cid,] sub, code). The join is on every LUT column
+    the codes share, plus code = cand: (sub, code) for one query table,
+    (cid, sub, code) for per-cell tables. A LUT key the codes lack (the
+    batch core's qid) fans each code row out to every query whose table
+    matches, and the sum is kept per (qid, id)."""
+    lut = lut.withColumnRenamed("cand", "code")
+    on = [c for c in lut.columns if c in codes.columns]
+    keys = [c for c in lut.columns if c not in on and c != "lut_d2"]
+    return (
+        codes.join(F.broadcast(lut), on)
+        .groupBy(*keys, id_col)
+        .agg(
+            F.sum(F.col("lut_d2").cast("decimal(38,18)"))
+            .cast("double")
+            .alias("adc_d2")
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Driver-local serving state: the per-query serve of a prebuilt index in
+# one Spark action.
+#
+# Everything the probe and the LUT need is broadcast-sized by construction
+# (kc centroids, M·K codebook rows), so the serve collects both once per
+# index (cached across queries — the batch/stream forms re-enter per
+# micro-batch) and computes the probe on the driver with a bit-exact
+# replication of the decimal fold. Its query rows — the residuals q − c
+# per probed cell — ship as a tiny local relation into the one LUT core,
+# against the codebook rows cached in the JVM once per index; the LUT is
+# then a broadcast build inside the ADC action, not a job of its own. The
+# serving wall is [ADC + rerank action] + O(kc·D) driver arithmetic.
 #
 # Exactness contract (the repo's cross-engine parity bar): Spark's
 # Cast(double -> decimal(p,18)) goes through the double's SHORTEST decimal
@@ -194,8 +250,8 @@ _DRIVER_PROBE_MAX_KC = 4096
 def _dec18(t: float) -> int:
     """``t`` as Spark's decimal(p,18) unscaled integer (value × 10^18):
     shortest-repr decimal digits, HALF_UP at the 18th fractional digit —
-    bitwise the Cast(double→decimal) Spark applies inside _sq_dist_term
-    and the _dec_sum accumulator."""
+    bitwise the Cast(double→decimal) Spark applies to each term of the
+    decimal fold (``V._exact_sum``)."""
     s = repr(t)
     if "e" in s:
         m, _, e = s.partition("e")
@@ -237,23 +293,27 @@ _LOCAL_INDEX_CACHE_MAX = 8
 
 
 def _collect_index_local(spark, cents: DataFrame, cb: DataFrame, per_sub: int):
-    """Collect (centroids, codebooks) into driver state, cached per index.
+    """Collect (centroids, codebook rows) into driver state, cached per
+    index.
 
     State carries the centroid matrix (numpy, for the driver probe and
-    the per-cell query residuals) and a REUSABLE local codebook-quad
-    DataFrame (sub, cand, c0..c{per_sub−1}) — one row per codebook
-    entry with its per_sub dim values pivoted in-row, shipped to the
-    JVM once per index and joined by every query's LUT subtree.
+    the per-cell query residuals) and a REUSABLE local relation of the
+    (sub, cand, c) codebook rows (``clustering.sub_rows``), shipped to the
+    JVM once per index and scored by every query's LUT.
 
     Cache key includes the frames' input FILES, not just the plan: the
     lifecycle operators overwrite artifact paths in place (refit), and
     parquet part names carry a fresh write UUID — so a rewrite at the
     same path misses the cache instead of serving stale centroids.
-    Returns None when the shape is unexpected (non-dense codebook
-    groups, NaNs) — the caller falls back to the batch core.
+    Returns None when the shape is unexpected (a codebook entry short of
+    per_sub dims, NaNs) — the caller falls back to the batch core.
     """
+    import math
+
     import numpy as np
     import pandas as pd
+
+    from ._ckpt import tracked_persist
 
     try:
         key = (
@@ -273,8 +333,6 @@ def _collect_index_local(spark, cents: DataFrame, cb: DataFrame, per_sub: int):
         # fold stays parallelized instead of silently re-shuffling the
         # repartition per query
         if not hit["cbq"].storageLevel.useMemory:
-            from ._ckpt import tracked_persist
-
             hit["cbq"] = tracked_persist(hit["cbq"])
         return hit
     crows = cents.select("cid", "c").collect()
@@ -282,55 +340,35 @@ def _collect_index_local(spark, cents: DataFrame, cb: DataFrame, per_sub: int):
         return None
     cent_ids = np.array([r["cid"] for r in crows], dtype=np.int64)
     cent_mat = np.array([list(r["c"]) for r in crows], dtype=np.float64)
-    cbrows = cb.select("cand", "i", "c").collect()
-    if not cbrows:
+    cbrows = [
+        (int(r["sub"]), int(r["cand"]), [float(x) for x in r["c"]])
+        for r in C.sub_rows(cb, per_sub).collect()
+    ]
+    # every entry must carry all per_sub dims of its subspace — guaranteed
+    # by pq_residual_codebooks (a surviving cand has a mean for every
+    # dim), checked anyway so a future codebook variant degrades to the
+    # batch core instead of scoring short rows
+    if (
+        not cbrows
+        or any(len(c) != per_sub for _s, _c, c in cbrows)
+        or np.isnan(cent_mat).any()
+        or any(math.isnan(x) for _s, _c, c in cbrows for x in c)
+    ):
         return None
-    rows = sorted(
-        (
-            (int(r["i"]) // per_sub, int(r["cand"]), int(r["i"]), float(r["c"]))
-            for r in cbrows
-        )
-    )
-    ncb = len(rows)
-    if ncb % per_sub != 0:
-        return None
-    g = ncb // per_sub
-    sub_a = np.array([r[0] for r in rows], dtype=np.int64)
-    cand_a = np.array([r[1] for r in rows], dtype=np.int64)
-    c_a = np.array([r[3] for r in rows], dtype=np.float64)
-    # dense-group contract: every (sub, cand) group carries exactly
-    # per_sub consecutive dims — guaranteed by pq_residual_codebooks'
-    # construction (a surviving cand has a mean for every dim), checked
-    # anyway so a future codebook variant degrades to the Spark plan
-    # instead of mis-joining
-    sub_g = sub_a.reshape(g, per_sub)
-    cand_g = cand_a.reshape(g, per_sub)
-    if (sub_g != sub_g[:, :1]).any() or (cand_g != cand_g[:, :1]).any():
-        return None
-    if np.isnan(cent_mat).any() or np.isnan(c_a).any():
-        return None
-    cmat = c_a.reshape(g, per_sub)
-    cbq_pdf = {"sub": sub_g[:, 0], "cand": cand_g[:, 0]}
-    for j in range(per_sub):
-        cbq_pdf[f"c{j}"] = cmat[:, j]
-    # the codebook-quad is the STREAM side of every query's LUT join and
-    # carries the decimal fold — repartition + persist it once per index
+    # the codebook rows are the STREAM side of every query's LUT join and
+    # carry the decimal fold — repartition + persist them once per index
     # so the fold parallelizes (a raw local relation of a few thousand
     # rows lands in 1-2 partitions and the ~1.4M decimal ops ran there
     # single-threaded: measured 1.0-1.1 s/query at sf10 before this)
-    from ._ckpt import tracked_persist
-
     npart = max(2, spark.sparkContext.defaultParallelism)
     cbq = tracked_persist(
-        spark.createDataFrame(pd.DataFrame(cbq_pdf)).repartition(npart)
+        spark.createDataFrame(
+            pd.DataFrame(cbrows, columns=["sub", "cand", "c"]),
+            "sub long, cand long, c array<double>",
+        ).repartition(npart)
     )
     cbq.count()
-    state = {
-        "cent_ids": cent_ids,
-        "cent_mat": cent_mat,
-        "cbq": cbq,
-        "g": g,
-    }
+    state = {"cent_ids": cent_ids, "cent_mat": cent_mat, "cbq": cbq}
     if key is not None:
         if len(_LOCAL_INDEX_CACHE) >= _LOCAL_INDEX_CACHE_MAX:
             _LOCAL_INDEX_CACHE.pop(next(iter(_LOCAL_INDEX_CACHE)))
@@ -339,30 +377,29 @@ def _collect_index_local(spark, cents: DataFrame, cb: DataFrame, per_sub: int):
 
 
 def _local_probe_and_lut(spark, st, query_vec, nprobe: int, per_sub: int):
-    """Driver-side probe + local-relation LUT subtree for packed serving.
+    """Driver-side probe and per-cell LUT for the local fused serve.
 
     Probe: decimal-exact sqdist(q, c) per centroid (bit-equal to the
     V.sqdist fold — tests/test_operators.py pins this), top ``nprobe``
     by (d, cid) — the same total order the distributed probe's
-    orderBy("d", "cid").limit uses. LUT: the query residuals qr = q − c
-    per probed cell (pure IEEE subtraction, identical to the Spark
-    qx − cx) ship as a TINY local relation of nprobe·M rows with the
-    per_sub residual dims pivoted in-row (qr0..qr3); joined on ``sub``
-    against the per-index cached codebook-quad relation, every
-    (cid, sub, cand) row carries its 8 inputs in-row and the term
-    squares + decimal fold evaluate IN SPARK, in-row, no aggregate and
-    no shuffle — value-identical to F.sum(_sq_dist_term(...)) (same
-    scale-18 HALF_UP quantize per term, exact decimal additions, same
-    final double cast). Both join sides are LocalTableScans, so the
-    broadcast build of the resulting LUT is one mapper-only job with no
-    file scans and no nested broadcast builds. Two rejected shapes, both
-    MEASURED at sf10 (r16): shipping the full 173k-row per-term relation
-    through the driver (1.2 s — ConvertToLocalRelation evaluates the
-    fold single-threaded at optimization time), and folding post-join in
-    the ADC job (re-pays the decimal work per matched code row, +1.9 s).
-    Honors EHS_FAST_SUMS exactly like _dec_sum (plan-construction-time
-    read, plain double fold). Returns (probe_cids, lut_df) with lut_df
-    columns (lcid, lsub, cand, lut_d2).
+    (d, cid) window uses; honors EHS_FAST_SUMS exactly like _dec_sum
+    (plan-construction-time read, plain double fold).
+
+    LUT: the query residuals q − c per probed cell (pure IEEE
+    subtraction, identical to the Spark v − c) ship as a TINY local
+    relation of nprobe·M (cid, sub, rv) rows into :func:`_lut`, against
+    the per-index cached codebook rows — the same core and the same
+    values as every other LUT, exact in both modes. Join sides: the
+    persisted, repartitioned codebook rows STREAM (their cached
+    partitions parallelize the decimal fold) and the fresh residual
+    relation BROADCASTS — streaming the fresh local relation left the
+    fold on 1-2 partitions and measured 1.0-1.1 s/query at sf10. Two
+    more rejected shapes, both MEASURED at sf10 (r16): shipping the full
+    173k-row per-term relation through the driver (1.2 s —
+    ConvertToLocalRelation evaluates the fold single-threaded at
+    optimization time), and folding post-join in the ADC job (re-pays
+    the decimal work per matched code row, +1.9 s). Returns
+    (probe_cids, lut) with lut = (cid, sub, cand, lut_d2).
     """
     import numpy as np
     import pandas as pd
@@ -376,37 +413,20 @@ def _local_probe_and_lut(spark, st, query_vec, nprobe: int, per_sub: int):
     order = sorted(zip(d, st["cent_ids"].tolist()))[: int(nprobe)]
     probe_cids = [cid for _d, cid in order]
     rowidx = {int(c): j for j, c in enumerate(st["cent_ids"].tolist())}
-    m = len(st["cent_mat"][0]) // per_sub
-    qr_rows = np.stack(
-        [q - st["cent_mat"][rowidx[int(cid)]] for cid in probe_cids]
-    ).reshape(len(probe_cids) * m, per_sub)
-    qres_pdf = {
-        "lcid": np.repeat(np.array(probe_cids, dtype=np.int64), m),
-        "lsub": np.tile(np.arange(m, dtype=np.int64), len(probe_cids)),
-    }
-    for j in range(per_sub):
-        qres_pdf[f"qr{j}"] = qr_rows[:, j]
-    qres = spark.createDataFrame(pd.DataFrame(qres_pdf))
-    cbq = st["cbq"]
-    # the LUT fold is decimal in BOTH modes, mirroring the distributed
-    # form exactly: _sq_dist_term casts unconditionally, so the original
-    # LUT never honored EHS_FAST_SUMS (only the probe fold does)
-    acc = F.lit(0).cast("decimal(28,18)")
-    for j in range(per_sub):
-        t = (F.col(f"qr{j}") - F.col(f"c{j}")) * (
-            F.col(f"qr{j}") - F.col(f"c{j}")
-        )
-        acc = (acc + t.cast("decimal(28,18)")).cast("decimal(28,18)")
-    lut_val = acc.cast("double")
-    # join sides: the persisted, well-partitioned codebook-quad STREAMS
-    # (its 32 cached partitions parallelize the decimal fold) and the
-    # tiny per-query residual relation BROADCASTS — the reverse
-    # (streaming the fresh local relation) left the fold on 1-2
-    # partitions and measured 1.0-1.1 s/query at sf10
-    lut_df = cbq.join(F.broadcast(qres), qres.lsub == cbq.sub).select(
-        "lcid", "lsub", "cand", lut_val.alias("lut_d2")
+    m = len(q) // per_sub
+    qrows = []
+    for cid in probe_cids:
+        r = (q - st["cent_mat"][rowidx[int(cid)]]).tolist()
+        qrows += [
+            (int(cid), s, r[s * per_sub : (s + 1) * per_sub]) for s in range(m)
+        ]
+    # a pandas frame becomes a LocalRelation (a list becomes an RDD scan):
+    # its broadcast then materializes without launching a job
+    qres = spark.createDataFrame(
+        pd.DataFrame(qrows, columns=["cid", "sub", "rv"]),
+        "cid long, sub long, rv array<double>",
     )
-    return probe_cids, lut_df
+    return probe_cids, _lut(qres, st["cbq"])
 
 
 def pq_adc_topk(
@@ -423,7 +443,7 @@ def pq_adc_topk(
 
     The search half of PQ: the query is NOT quantized — instead a
     (subspace × codebook-entry) lookup table of exact query↔centroid
-    squared distances is built once (M·K rows, a tiny aggregate), and each
+    squared distances is built once (M·K rows, :func:`_lut`), and each
     corpus vector's approximate distance is the sum of M table lookups on
     its stored codes. The corpus scan therefore touches only the M-byte
     codes — the float vectors appear in NO per-candidate work — which is
@@ -437,7 +457,7 @@ def pq_adc_topk(
 
     Plan: codes (one O(n·D·K) assignment, amortized across queries in a
     real deployment) ⋈ broadcast LUT on (subspace, code) → one decimal sum
-    per vector → ascending top-k via TakeOrderedAndProject.
+    per vector (:func:`_adc`) → ascending top-k via TakeOrderedAndProject.
     """
     from ._ckpt import tracked_persist
 
@@ -448,51 +468,11 @@ def pq_adc_topk(
     codes = _nearest_codes(emb, cent, subspaces, dim, id_col, vec_col).select(
         id_col, "sub", F.col("b.cand").alias("code")
     )
-    lut = _query_lut(emb, cent, query_id, dim // subspaces, id_col, vec_col)
-    return _adc(codes, lut, id_col).orderBy("adc_d2", id_col).limit(k)
-
-
-def _adc(codes: DataFrame, lut: DataFrame, id_col: str) -> DataFrame:
-    """(id, adc_d2): per vector, the decimal-exact sum of its M codes'
-    broadcast LUT entries, rounded to 6 dp."""
-    return (
-        codes.join(
-            F.broadcast(lut),
-            (codes.sub == lut.sub) & (codes.code == lut.cand),
-        )
-        .groupBy(id_col)
-        .agg(
-            F.round(
-                F.sum(F.col("lut_d2").cast("decimal(38,18)")).cast("double"), 6
-            ).alias("adc_d2")
-        )
-    )
-
-
-def _query_lut(
-    emb: DataFrame,
-    cent: DataFrame,
-    query_id: int,
-    per_sub: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """ADC lookup table (sub, cand, lut_d2): the query row's decimal-exact
-    squared distance to every codebook entry, per subspace — M·K rows."""
-    qdims = (
-        emb.filter(F.col(id_col) == query_id)
-        .select(F.posexplode(F.col(vec_col)).alias("i", "qx"))
-        .withColumn("sub", F.expr(f"i div {per_sub}"))
-    )
-    return (
-        qdims.join(F.broadcast(cent), "i")
-        .groupBy("sub", "cand")
-        .agg(
-            F.sum(_sq_dist_term(F.col("qx").cast("double"), F.col("c")))
-            .cast("double")
-            .alias("lut_d2")
-        )
-    )
+    per_sub = dim // subspaces
+    q = _raw_subs(emb.filter(F.col(id_col) == query_id), [], subspaces, per_sub, vec_col)
+    lut = _lut(q, C.sub_rows(cent, per_sub))
+    adc = _adc(codes, lut, id_col).withColumn("adc_d2", F.round("adc_d2", 6))
+    return adc.orderBy("adc_d2", id_col).limit(k)
 
 
 def _ivfpq_parts(
@@ -525,9 +505,9 @@ def _ivfpq_parts(
         if codebooks is not None
         else tracked_persist(_pq_codebooks(emb, vec_col, label_col))
     )
-    lut = tracked_persist(
-        _query_lut(emb, cent, query_id, dim // subspaces, id_col, vec_col)
-    )
+    per_sub = dim // subspaces
+    q = _raw_subs(emb.filter(F.col(id_col) == query_id), [], subspaces, per_sub, vec_col)
+    lut = tracked_persist(_lut(q, C.sub_rows(cent, per_sub)))
     # IVF coarse probe: full-dim L2 distance query↔centroid — exactly the
     # sum of that cell's subspace LUT entries (cell id == candidate id),
     # so the probe and ADC share one metric and one decimal construction
@@ -578,8 +558,8 @@ def ivfpq_adc_topk(
     Every stage reuses the proven cross-engine-exact constructions:
     decimal-exact codebook means (``clustering.dim_means``), decimal
     squared-distance sums, (distance ASC, cell/id) tie-breaks. Plan: two
-    broadcast-sized aggregates (centroids, LUT; the probe is a K-row
-    rollup of the LUT) + one pruned in-row assignment
+    broadcast-sized frames (the centroid aggregate and the M·K-row LUT;
+    the probe is a K-row rollup of the LUT) + one pruned in-row assignment
     (``clustering.nearest`` over subvectors, as in pq_codes) + one code
     join — the corpus-sized work is
     the probed-cell assignment alone, and in a deployment with
@@ -629,7 +609,7 @@ def ivfpq_adc_topk(
     codes = _nearest_codes(pruned, cent, subspaces, dim, id_col, vec_col).select(
         id_col, "sub", F.col("b.cand").alias("code")
     )
-    adc = _adc(codes, lut, id_col)
+    adc = _adc(codes, lut, id_col).withColumn("adc_d2", F.round("adc_d2", 6))
     if rerank is None:
         return adc.orderBy("adc_d2", id_col).limit(k)
     cand = adc.orderBy("adc_d2", id_col).limit(rerank).select(id_col)
@@ -650,12 +630,12 @@ def _residual_long(
 ) -> DataFrame:
     """Long-form coarse residuals (id, cid, i, sub, x = v[i] − c_cid[i]).
 
-    The frame every stage of residual PQ consumes: codebook training,
-    code assignment, and (restricted to the query) the per-cell lookup
-    tables. Centroid components are the decimal-exact means cast to
-    double — the same IEEE values both engines compute (the pc2/c2
-    parity) — and the subtraction is a single deterministic IEEE op, so
-    residuals are bit-identical cross-engine."""
+    The per-dimension form of :func:`_residual_subs`, which training,
+    code assignment and the per-cell lookup tables consume; tests read it
+    as the reference for the residual range. Centroid components are the
+    decimal-exact means cast to double — the same IEEE values both
+    engines compute (the pc2/c2 parity) — and the subtraction is a single
+    deterministic IEEE op, so residuals are bit-identical cross-engine."""
     cx = cents.select("cid", F.posexplode("c").alias("i", "cx"))
     return (
         assigned.select(id_col, "cid", F.posexplode("v").alias("i", "x"))
@@ -1015,9 +995,10 @@ def ivfpq_scaled_topk(
     - LOCAL FUSED SERVE when ``codes``, a literal ``query_vec`` and an
       ``index`` with kc <= _DRIVER_PROBE_MAX_KC are all given (the
       deployment shape: q_ann_index_serve/append/compact/refit,
-      q_stream_ann_serve): driver-side probe and a broadcast local LUT
-      (_collect_index_local, _local_probe_and_lut), ADC candidate
-      selection and exact rerank fused into one action;
+      q_stream_ann_serve): driver-side probe and local query residual
+      rows into the one LUT core (_collect_index_local,
+      _local_probe_and_lut), ADC candidate selection and exact rerank
+      fused into one action;
     - otherwise the qid-keyed batch core (_ivfadc_core, shared with
       ivfpq_scaled_topk_batch) over a one-row (qid, qv) query frame —
       the stateless build, ``index`` without codes, a looked-up query,
@@ -1063,11 +1044,11 @@ def ivfpq_scaled_topk(
         st = _collect_index_local(vecs.sparkSession, index[1], index[2], per_sub)
     if st is not None:
         # local fused serve (VERDICT r15 item 3, r16 fusion): the probe
-        # and the LUT's per-term doubles come from the driver, so the
-        # probe job and the LUT materialization job vanish from the
-        # per-query chain; the cents/cb collects are cached per index
-        # (keyed by plan + input files), so the batch/stream serving
-        # loops pay them once
+        # and the LUT's query rows come from the driver, so the probe job
+        # and the LUT materialization job vanish from the per-query
+        # chain; the cents/cb collects are cached per index (keyed by
+        # plan + input files), so the batch/stream serving loops pay them
+        # once
         _a, _c, _cb, kc, nprobe = index
         probe_cids, lut = _local_probe_and_lut(
             vecs.sparkSession, st, query_vec, nprobe, per_sub
@@ -1082,18 +1063,7 @@ def ivfpq_scaled_topk(
         pc = codes.filter(F.col("cid").isin(probe_cids)).select(
             id_col, "cid", F.posexplode("codes").alias("sub", "code")
         )
-        adc = (
-            pc.join(
-                F.broadcast(lut),
-                (pc.cid == lut.lcid) & (pc.sub == lut.lsub) & (pc.code == lut.cand),
-            )
-            .groupBy(id_col)
-            .agg(
-                F.sum(F.col("lut_d2").cast("decimal(38,18)"))
-                .cast("double")
-                .alias("adc_d2")
-            )
-        )
+        adc = _adc(pc, lut, id_col)
         cand = (
             adc.orderBy("adc_d2", id_col)
             .limit(_rerank_budget(k, kc, rerank))
@@ -1171,9 +1141,10 @@ def _ivfadc_core(
     rows for ivfpq_scaled_topk_batch.
 
     Per-query probes ranked by a qid-partitioned window, per-(qid, cid)
-    ADC lookup tables, and ONE pass over the union of all probed cells'
-    codes — a cell probed by several queries is read once and fanned out
-    through the broadcast (qid, cid) probe join. The corpus-side stages
+    ADC lookup tables (:func:`_lut`), and ONE pass over the union of all
+    probed cells' codes — a cell probed by several queries is read once
+    and fanned out by the ADC join (:func:`_adc`) to every qid whose
+    table covers it. The corpus-side stages
     (coarse fit, codebook training, code assignment) are query-count
     independent; everything per-query is kc-, nprobe- or R-sized and
     broadcast. Returns (ex, kc, nprobe) with ex = (qid, id_col,
@@ -1208,31 +1179,13 @@ def _ivfadc_core(
         .filter(F.col("rn") <= nprobe)
         .select("qid", "cid")
     )
-    qd = qvs.select("qid", F.posexplode("qv").alias("i", "qx"))
-    qres = (
-        cents.select("cid", F.posexplode("c").alias("i", "cx"))
-        .join(F.broadcast(probe), "cid")
-        .join(F.broadcast(qd), ["qid", "i"])
-        .select(
-            "qid", "cid", "i",
-            F.expr(f"i div {per_sub}").alias("sub"),
-            (F.col("qx") - F.col("cx")).alias("qr"),
-        )
+    # per-(qid, cid) tables: each probed cell's query residual qv − c,
+    # cut into subvectors, scored by the one LUT core
+    qres = _residual_subs(
+        probe.join(F.broadcast(qvs), "qid").withColumnRenamed("qv", "v"),
+        cents, subspaces, per_sub, "qid",
     )
-    # LUT in the per-dim codegen form: nprobe·64·K scored rows per query
-    # through a keyed decimal SUM, all whole-stage codegen. An in-row HOF
-    # fold (interpreted lambdas, no faster) and a static unrolled tree
-    # (per-query Janino compile, 1.7 s → 9.0 s) were measured at sf10
-    # (r15) and rejected; the LUT is nprobe·M·K entries at any corpus size
-    lut = (
-        qres.join(F.broadcast(cb), "i")
-        .groupBy("qid", "cid", "sub", "cand")
-        .agg(
-            F.sum(_sq_dist_term(F.col("qr"), F.col("c")))
-            .cast("double")
-            .alias("lut_d2")
-        )
-    )
+    lut = _lut(qres, C.sub_rows(cb, per_sub))
     # the union of all probed cells — each cell's codes are read/derived
     # ONCE however many queries probe it
     pcell_rows = probe.select("cid").distinct()
@@ -1255,20 +1208,9 @@ def _ivfadc_core(
             assigned.join(F.broadcast(pcell_rows), "cid"), cents, cb,
             subspaces, per_sub, id_col,
         )
-    adc = (
-        pc.join(F.broadcast(probe), "cid")
-        .join(
-            F.broadcast(lut),
-            ["qid", "cid", "sub"],
-        )
-        .filter(F.col("code") == F.col("cand"))
-        .groupBy("qid", id_col)
-        .agg(
-            F.sum(F.col("lut_d2").cast("decimal(38,18)"))
-            .cast("double")
-            .alias("adc_d2")
-        )
-    )
+    # the LUT carries qid, so the (cid, sub, code) join fans each code row
+    # out to every query that probed its cell
+    adc = _adc(pc, lut, id_col)
     w_cand = Window.partitionBy("qid").orderBy("adc_d2", id_col)
     cand = (
         adc.withColumn("rn", F.row_number().over(w_cand))

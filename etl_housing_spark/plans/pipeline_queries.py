@@ -336,7 +336,7 @@ def _portable_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the block key makes it a shuffle join, O(block²) not O(n²); rank via "
     "per-query-vector window. Sequential-double dot scoring "
     "(list_dot_product-parity, see q_similarity_topk). At 100 TB the block key is "
-    "an IVF/cluster assignment (q_ann_ivf produces one) and block sizes are "
+    "an IVF/cluster assignment (q_ann_ivf_portable probes one) and block sizes are "
     "capped — same plan, bounded blocks",
     tags=("vector", "pipeline"),
 )

@@ -100,17 +100,6 @@ def q_embed_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.lsh_neardup_pairs(emb, threshold=0.4, planes=4, tables=16)
 
 
-@query(
-    "q_ann_ivf",
-    oracle=None,  # approximate by construction (probed subset) — rows-only (⊘)
-    description="IVF-style ANN top-k: coarse-cell pruning via centroid probe (§2.13)",
-    tags=("vector",),
-)
-def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    return S.ivf_topk(emb, query_id=0, k=10, nprobe=4)
-
-
 # --------------------------------------------------------------------------
 # Per-label centroid pooling — the mean-embedding reduction behind IVF
 # coarse quantizers, class prototypes, and cluster summarization. Shape:
@@ -277,7 +266,7 @@ def q_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY score DESC, e.vec_id LIMIT 10
     """,
     description="oracle-checked IVF approximate nearest neighbors: runs "
-    "operators.similarity.ivf_topk (the q_ann_ivf code) and hash-checks it. "
+    "operators.similarity.ivf_topk and hash-checks it. "
     "Coarse quantizer = per-label centroids (decimal-exact per-dimension "
     "means), the query scores the k centroids by decimal-exact dot (a tiny "
     "aggregate), probes the top-4 cells by (score DESC, label) (raised from "
@@ -609,7 +598,7 @@ def q_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The label-inequality join is the expensive direction (blocks don't
     # prune it); at this catalog's scale it runs as one shuffle join, and at
     # 100 TB the anchor side joins against an IVF cell list covering other
-    # labels (q_ann_ivf's layout) — same ranking logic, pruned candidates.
+    # labels (q_ann_ivf_portable's layout) — same ranking logic, pruned candidates.
     # Scores round to 6dp before ranking so rank order is engine-identical.
     oracle="""
     WITH scored AS (
@@ -1347,7 +1336,7 @@ def q_kmeans_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_ann_ivf_kmeans",
     # IVF with a LEARNED coarse quantizer — the full train->index->search
-    # chain, hash-checked end to end. q_ann_ivf probes the testdata's
+    # chain, hash-checked end to end. q_ann_ivf_portable probes the testdata's
     # pre-assigned label column ("a trained quantizer's assignment ...
     # stands in"); here the cells ARE the k-means fit (operators.clustering,
     # the q_kmeans_portable chain): 2 Lloyd rounds train 4 cells, the query

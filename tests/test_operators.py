@@ -420,6 +420,82 @@ def test_nearest_certificate_verifies_reversed_near_ties(spark, monkeypatch):
     assert run() == (got, got_sub)
 
 
+def test_pq_lut_and_adc_match_numpy_reference(spark, monkeypatch):
+    """PQ scoring law: every entry of quantize._lut is the exact decimal
+    fold of (rv − c)² over its subspace (NumPy terms, the fold replicated
+    by quantize._dec18_fold), for a label-codebook query table and for
+    per-cell residual tables of two qids that both probe cell 5; every
+    quantize._adc score is the exact sum of its codes' entries, and the
+    one (cid, sub, code) join fans cell 5's codes out to both qids. The
+    double fold differs from the exact one on some of these entries, and
+    under EHS_FAST_SUMS=1 the rows are the same: neither reads the switch."""
+    import numpy as np
+
+    from etl_housing_spark.operators import clustering as C
+    from etl_housing_spark.operators import quantize as Q
+    from etl_housing_spark.operators.quantize import _dec18_fold
+
+    rng = np.random.default_rng(11)
+    dim, per_sub, subspaces = 8, 4, 2
+    cbv = {c: rng.normal(0, 0.5, dim) for c in range(6)}
+    cents = {5: rng.normal(0, 1, dim), 6: rng.normal(0, 1, dim)}
+    qv = {1: rng.normal(0, 1, dim), 2: rng.normal(0, 1, dim)}
+    probes = [(1, 5), (2, 5), (2, 6)]
+    cells = {10: 5, 11: 5, 12: 6}
+    codes = [
+        (vid, cid, s, int(rng.integers(0, 6))) for vid, cid in cells.items()
+        for s in range(subspaces)
+    ]
+
+    def terms(x, s, c):
+        lo = s * per_sub
+        return ((x[lo : lo + per_sub] - cbv[c][lo : lo + per_sub]) ** 2).tolist()
+
+    folds = []
+
+    def exact(t):
+        folds.append(t)
+        return _dec18_fold(t, fast=False)
+
+    want_q = {(s, c): exact(terms(qv[1], s, c)) for s in range(subspaces) for c in cbv}
+    want_r = {
+        (q, cid, s, c): exact(terms(qv[q] - cents[cid], s, c))
+        for q, cid in probes for s in range(subspaces) for c in cbv
+    }
+    want_adc = {
+        (q, vid): exact([want_r[(q, cid, s, code)] for v, _c, s, code in codes if v == vid])
+        for q, cid in probes for vid, vcell in cells.items() if vcell == cid
+    }
+    assert set(want_adc) == {(1, 10), (1, 11), (2, 10), (2, 11), (2, 12)}
+    assert any(_dec18_fold(t, fast=True) != _dec18_fold(t, fast=False) for t in folds)
+
+    def run():
+        cb = spark.createDataFrame(
+            [(c, i, float(v[i])) for c, v in cbv.items() for i in range(dim)],
+            "cand long, i int, c double",
+        ).repartition(3)
+        cbrows = C.sub_rows(cb, per_sub)
+        emb = spark.createDataFrame([(0, qv[1].tolist())], "vec_id long, embedding array<double>")
+        qsubs = Q._raw_subs(emb, [], subspaces, per_sub, "embedding")
+        got_q = {(r.sub, r.cand): r.lut_d2 for r in Q._lut(qsubs, cbrows).collect()}
+        pairs = spark.createDataFrame(
+            [(q, cid, qv[q].tolist()) for q, cid in probes], "qid long, cid long, v array<double>"
+        )
+        cdf = spark.createDataFrame(
+            [(cid, c.tolist()) for cid, c in cents.items()], "cid long, c array<double>"
+        )
+        lut = Q._lut(Q._residual_subs(pairs, cdf, subspaces, per_sub, "qid"), cbrows)
+        got_r = {(r.qid, r.cid, r.sub, r.cand): r.lut_d2 for r in lut.collect()}
+        cdf = spark.createDataFrame(codes, "vec_id long, cid long, sub int, code int")
+        got_adc = {(r.qid, r.vec_id): r.adc_d2 for r in Q._adc(cdf, lut, "vec_id").collect()}
+        return got_q, got_r, got_adc
+
+    got = run()
+    assert got == (want_q, want_r, want_adc)
+    monkeypatch.setenv("EHS_FAST_SUMS", "1")
+    assert run() == got
+
+
 # ---------------------------------------------------------------- encode ----
 
 

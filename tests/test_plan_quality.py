@@ -309,6 +309,36 @@ def test_vector_argmins_go_through_nearest(spark, monkeypatch, qid):
     assert calls, f"{qid} built its argmin without clustering.nearest"
 
 
+@pytest.mark.parametrize(
+    "qid",
+    [
+        "q_pq_search",
+        "q_ivfpq_search",
+        "q_ivfpq_scaled",
+        "q_ann_serve_batch",
+        "q_ann_index_serve",
+    ],
+)
+def test_pq_luts_go_through_one_core(spark, monkeypatch, qid):
+    """Label-codebook PQ search, IVFPQ search, the stateless scaled
+    IVFADC, batch serving and the local fused serve all build their ADC
+    lookup table with operators/quantize._lut and sum it with _adc — no
+    path keeps a table or an ADC sum of its own."""
+    from etl_housing_spark.operators import quantize
+
+    calls = {"_lut": 0, "_adc": 0}
+    for name in calls:
+        real = getattr(quantize, name)
+
+        def spy(*args, _real=real, _name=name):
+            calls[_name] += 1
+            return _real(*args)
+
+        monkeypatch.setattr(quantize, name, spy)
+    _q(spark, qid)
+    assert calls["_lut"] and calls["_adc"], (qid, calls)
+
+
 def test_winsorize_single_scan_histogram(spark):
     plan = _plan(_q(spark, "q_winsorize"))
     # bounds AND the clipped aggregate both come from the one (group, value)
@@ -1027,8 +1057,9 @@ def test_ivfpq_scaled_no_cartesian_and_broadcast_pruning(spark):
 
 def _assert_fused_serve_plan(plan: str) -> None:
     """Shared invariants of the r16 FUSED single-action serving plan
-    (ivfpq_scaled_topk's local path: driver probe → broadcast local LUT →
-    ADC → broadcast-semi-join rerank → TakeOrdered, all one plan):
+    (ivfpq_scaled_topk's local path: driver probe → the one LUT core over
+    broadcast local residual rows → ADC → broadcast-semi-join rerank →
+    TakeOrdered, all one plan):
 
     - BOTH persisted scans (packed codes AND the floats the rerank reads)
       carry the probe as PartitionFilters on cid — bound at FILE-LISTING
@@ -1039,8 +1070,8 @@ def _assert_fused_serve_plan(plan: str) -> None:
     - at most TWO plain shuffle Exchanges: the R-row ADC aggregate (the
       only per-query shuffle — its input is the probed cells' exploded
       codes, partial-aggregated map-side) and the one-time repartition
-      inside the cached codebook-quad relation (executes once per index
-      at persist, not per query).
+      inside the cached (sub, cand, c) codebook-row relation the LUT
+      streams (executes once per index at persist, not per query).
 
     The r15 form asserted an Exchange-FREE final job with pushed
     In(vec_id literals — an artifact of splitting serving into two
