@@ -8,26 +8,44 @@ decode path via pure-stdlib codecs — PNG (functions/png.py), RIFF/WAV PCM16
 magic-byte sniff per payload; each is hash-checked through the production
 stage by q_image_decode / q_audio_decode / q_video_decode. The third-party
 decode libraries (Pillow/librosa/PyAV) are NOT in this container, so
-COMPRESSED payloads are the honestly-declared boundary: deterministic stub
-by default, ``NotImplementedError`` when strictness is asked for — while
-everything Spark-grade (schema, batch iteration, partitioning behavior,
-output contract) is real and tested either way.
+COMPRESSED payloads are the honestly-declared boundary.
+
+Every one-row-per-payload stage is a ``real(b)`` and a ``fallback(b)`` run
+by one kernel, :func:`_per_payload`, which states the family contract once:
+
+- a NULL payload gives an all-NULL row (``strict=True``: ``ValueError``);
+- ``real`` raising ``ValueError`` / ``NotImplementedError`` / ``OSError``
+  (malformed bytes, an unsupported codec subset, no codec sniffed) gives
+  the stage's ``fallback`` row — a deterministic stub, or NULLs — so one
+  bad row never kills the task; ``strict=True`` re-raises instead;
+- ``ImportError`` (a library the payload needs is missing on the worker,
+  e.g. a JPEG without Pillow) propagates in both modes: every such payload
+  in the corpus would stub to garbage.
+
+``frame_sample`` emits 0..n rows per payload and keeps its own loop under
+the same contract (a bad or NULL payload drops its frames unless strict).
 
 Batch shape matters at scale: ``mapInPandas`` receives an iterator of
 pandas DataFrames sized by ``spark.sql.execution.arrow.maxRecordsPerBatch``;
-the stubs stream batch-by-batch and never materialize a partition, so the
+the stages stream batch-by-batch and never materialize a partition, so the
 same code holds when a partition is 2 GB of JPEG bytes.
 """
 
 from __future__ import annotations
 
 import hashlib
+import io
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions import avi as _avi
+from ..functions import png as _png
+from ..functions import wav as _wav
 
 MEDIA_SCHEMA = (
     "media_id BIGINT, payload BINARY, "
@@ -58,9 +76,47 @@ def synthesize_media(df: DataFrame, id_col: str, seed_col: str) -> DataFrame:
     )
 
 
-def _decode_header(payload: bytes) -> tuple[int, int]:
-    w, h = struct.unpack(">II", payload[:8])
-    return w, h
+_NULLABLE_INT = {"INT": "Int32", "BIGINT": "Int64"}
+
+
+def _per_payload(
+    df: DataFrame,
+    schema: str,
+    real: Callable[[bytes], tuple],
+    fallback: Callable[[bytes], tuple] | None,
+    strict: bool,
+) -> DataFrame:
+    """The one loop of the one-row-per-payload stages: ``(media_id,
+    *real(bytes))`` per ``(media_id, payload)`` row, under the module's
+    isolate-or-raise contract (module docstring). ``fallback=None`` is the
+    all-NULL row. ``schema`` is a flat DDL string whose first column is
+    ``media_id``; its INT/BIGINT columns ship as pandas nullable
+    ``Int32``/``Int64`` built from Python ints (no float64 detour), so NULL
+    rows reach Arrow as INT + null and large BIGINTs stay exact."""
+    fields = [f.split() for f in schema.split(", ")]
+    names = [name for name, _ in fields]
+    ints = {name: _NULLABLE_INT[t] for name, t in fields if t in _NULLABLE_INT}
+    null = (None,) * (len(names) - 1)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
+                if payload is None:
+                    if strict:
+                        raise ValueError(f"NULL payload for media_id={mid}")
+                    rows.append((mid, *null))
+                    continue
+                b = bytes(payload)
+                try:
+                    rows.append((mid, *real(b)))
+                except (ValueError, NotImplementedError, OSError):
+                    if strict:
+                        raise
+                    rows.append((mid, *(null if fallback is None else fallback(b))))
+            yield pd.DataFrame(rows, columns=names, dtype=object).astype(ints)
+
+    return df.select("media_id", "payload").mapInPandas(run, schema)
 
 
 def pil_available() -> bool:
@@ -86,20 +142,22 @@ def _decode_real(payload: bytes) -> tuple[int, int, float]:
     Executes on the worker; import happens per-process (cached thereafter).
     Without Pillow, greyscale PNGs fall back to the pure-stdlib decoder
     (functions/png.py) — same numbers, no native codec — so the real-image
-    branch is exercisable in codec-free containers; JPEG/color stay the
-    honestly-declared Pillow boundary."""
-    import io
-
+    branch is exercisable in codec-free containers; a JPEG without Pillow
+    raises ImportError (a missing library, not a bad payload). A payload
+    with no image magic raises NotImplementedError."""
+    if not _is_real_image(payload):
+        raise NotImplementedError(
+            "no image codec sniffed: a real image decode requires "
+            "PIL/libjpeg — wire the codec here"
+        )
     try:
-        import numpy as np
         from PIL import Image
     except ImportError:
-        from ..functions import png as _png
-
         if payload[:8] == _PNG_MAGIC:
             return _png.decode_gray_stats(payload)
-        raise NotImplementedError(
-            "JPEG decode requires Pillow/libjpeg — not installed on this worker"
+        raise ImportError(
+            "payload is a JPEG but Pillow is not installed on this worker — "
+            "install PIL/libjpeg to decode it"
         ) from None
 
     img = Image.open(io.BytesIO(payload)).convert("L")
@@ -107,67 +165,26 @@ def _decode_real(payload: bytes) -> tuple[int, int, float]:
     return img.width, img.height, float(arr.mean() / 255.0)
 
 
+def _image_stub(b: bytes) -> tuple[int, int, float]:
+    digest = hashlib.sha256(b).digest()
+    if _is_real_image(b) or len(b) < 8:
+        # malformed real-magic or too-short payload: digest-derived dims
+        # (the 8-byte header convention belongs to fake/v1 payloads only)
+        w, h = 16 + digest[1] % 64, 16 + digest[2] % 64
+    else:
+        w, h = struct.unpack(">II", b[:8])
+    return w, h, digest[0] / 255.0
+
+
 def decode_media(df: DataFrame, strict: bool = False) -> DataFrame:
-    """Decode stage: binary → (width, height, mean_luma) via mapInPandas.
+    """Decode stage: binary → (width, height, mean_luma).
 
-    Codec dispatch is sniffed per payload: PNG/JPEG magic bytes route to a
-    real Pillow decode when the library is importable on the worker
-    (probed, not assumed — ``pil_available``); everything else (the
-    synthetic ``fake/v1`` payloads) takes the deterministic stub so
-    downstream stages and tests have stable values without codecs.
-    ``strict=True`` raises NotImplementedError wherever a stub would run —
-    the honestly-marked boundary for environments without media libraries.
+    PNG/JPEG magic bytes route to :func:`_decode_real` (Pillow when the
+    worker has it, the stdlib PNG decoder otherwise); every other payload
+    (the synthetic ``fake/v1`` ones) takes the deterministic digest stub
+    so downstream stages and tests have stable values without codecs.
     """
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        have_pil = pil_available()
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload)
-                decoded = None
-                if _is_real_image(b):
-                    if not have_pil and b[:3] == _JPEG_MAGIC:
-                        # missing LIBRARY, not a bad payload: every JPEG in
-                        # the corpus would stub to garbage — fail loudly in
-                        # either mode (environment boundary, pinned by test)
-                        raise NotImplementedError(
-                            "payload is a JPEG but Pillow is not installed on "
-                            "this worker — install PIL/libjpeg to decode it"
-                        )
-                    # PNG decodes with or without Pillow (pure-stdlib
-                    # fallback in functions/png.py for greyscale). OSError
-                    # covers Pillow's failure surface (UnidentifiedImageError,
-                    # truncated-file OSError) on workers that have it.
-                    try:
-                        decoded = _decode_real(b)
-                    except (ValueError, NotImplementedError, OSError):
-                        # malformed/unsupported-subset payload: one bad row
-                        # must not kill the task — stub unless strict (the
-                        # decode_audio / decode_video family contract)
-                        if strict:
-                            raise
-                if decoded is not None:
-                    w, h, mean_luma = decoded
-                else:
-                    if strict:
-                        raise NotImplementedError(
-                            "synthetic payload and strict=True: a real image decode "
-                            "requires PIL/libjpeg — wire the codec here"
-                        )
-                    digest = hashlib.sha256(b).digest()
-                    if _is_real_image(b) or len(b) < 8:
-                        # malformed real-magic or too-short payload:
-                        # digest-derived stub (the 8-byte header convention
-                        # belongs to well-formed fake/v1 payloads only)
-                        w, h = 16 + digest[1] % 64, 16 + digest[2] % 64
-                    else:
-                        w, h = _decode_header(b)
-                    mean_luma = digest[0] / 255.0
-                rows.append((mid, w, h, mean_luma))
-            yield pd.DataFrame(rows, columns=["media_id", "width", "height", "mean_luma"])
-
-    return df.select("media_id", "payload").mapInPandas(decode, DECODED_SCHEMA)
+    return _per_payload(df, DECODED_SCHEMA, _decode_real, _image_stub, strict)
 
 
 AUDIO_SCHEMA = (
@@ -176,61 +193,32 @@ AUDIO_SCHEMA = (
 )
 
 
+def _audio_stub(b: bytes) -> tuple[int, int, int, float, float]:
+    digest = hashlib.sha256(b).digest()
+    n = 1 + digest[1]
+    return 1, 8000, n, n / 8000, digest[0] / 255.0
+
 
 def decode_audio(df: DataFrame, strict: bool = False) -> DataFrame:
     """Audio decode stage: binary → (channels, rate, samples, duration, rms)
-    via mapInPandas — the audio twin of ``decode_media``.
+    — the audio twin of ``decode_media``.
 
-    Codec dispatch is sniffed per payload: RIFF/WAVE magic (not bare RIFF —
-    AVI shares it) routes to the REAL stdlib ``wave`` PCM decode
-    (functions/wav.py — no third-party library needed, so unlike images
-    this path is fully real in codec-free containers). Synthetic payloads
-    AND payloads the codec rejects (malformed/truncated → ValueError,
-    compressed/float → NotImplementedError, the declared librosa/soundfile
-    boundary) take the deterministic stub, so one bad payload never kills
-    the task; ``strict=True`` raises instead wherever the stub would run.
+    RIFF/WAVE magic (not bare RIFF — AVI shares it) routes to the REAL
+    stdlib PCM decode (functions/wav.py — no third-party library needed,
+    so unlike images this path is fully real in codec-free containers);
+    compressed/float WAVs are the declared librosa/soundfile boundary.
+    Everything else takes the deterministic digest stub.
     """
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import wav as _wav
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload)
-                decoded = None
-                if _wav.is_wav(b):  # RIFF alone is ambiguous — AVI shares it
-                    try:
-                        decoded = _wav.decode_stats(b)
-                    except (ValueError, NotImplementedError):
-                        # Malformed/compressed payload: one bad payload must
-                        # not kill the task — fall to the deterministic stub
-                        # unless strictness is asked for.
-                        if strict:
-                            raise
-                if decoded is not None:
-                    ch, rate, n, dur, rms = decoded
-                else:
-                    if strict:
-                        raise NotImplementedError(
-                            "synthetic payload and strict=True: a real audio "
-                            "decode requires a PCM WAV (stdlib) or "
-                            "librosa/soundfile for compressed codecs"
-                        )
-                    digest = hashlib.sha256(b).digest()
-                    ch, rate = 1, 8000
-                    n = 1 + digest[1]
-                    dur, rms = n / rate, digest[0] / 255.0
-                rows.append((mid, ch, rate, n, dur, rms))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_channels", "sample_rate", "n_samples",
-                    "duration_s", "rms",
-                ],
+    def real(b: bytes) -> tuple:
+        if not _wav.is_wav(b):
+            raise NotImplementedError(
+                "no WAV sniffed: a real audio decode requires a PCM WAV "
+                "(stdlib) or librosa/soundfile for compressed codecs"
             )
+        return _wav.decode_stats(b)
 
-    return df.select("media_id", "payload").mapInPandas(decode, AUDIO_SCHEMA)
+    return _per_payload(df, AUDIO_SCHEMA, real, _audio_stub, strict)
 
 
 VIDEO_SCHEMA = (
@@ -239,61 +227,32 @@ VIDEO_SCHEMA = (
 )
 
 
+def _video_stub(b: bytes) -> tuple[int, int, int, float, float]:
+    digest = hashlib.sha256(b).digest()
+    nf = 1 + digest[2] % 8
+    return 16 + digest[0] % 16, 16 + digest[1] % 16, nf, nf * 0.04, digest[3] / 255.0
+
 
 def decode_video(df: DataFrame, strict: bool = False) -> DataFrame:
     """Video decode stage: binary → (width, height, frames, duration, mean
-    luma) via mapInPandas — the video member of the decode_media /
-    decode_audio family.
+    luma) — the video member of the decode_media / decode_audio family.
 
-    Codec dispatch is sniffed per payload: a RIFF/AVI magic routes to the
-    REAL stdlib BI_RGB demux+decode (functions/avi.py — container walking
-    and DIB row unpacking are pure struct arithmetic, so uncompressed video
-    is fully real in codec-free containers). Synthetic payloads AND
-    payloads the codec rejects (malformed → ValueError, compressed →
-    NotImplementedError, the declared PyAV/ffmpeg boundary) take the
-    deterministic stub, so one bad payload never kills the task;
-    ``strict=True`` raises instead wherever the stub would run.
+    RIFF/AVI magic routes to the REAL stdlib BI_RGB demux+decode
+    (functions/avi.py — container walking and DIB row unpacking are pure
+    struct arithmetic, so uncompressed video is fully real in codec-free
+    containers); compressed streams are the declared PyAV/ffmpeg boundary.
+    Everything else takes the deterministic digest stub.
     """
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import avi as _avi
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload)
-                decoded = None
-                if _avi.is_avi(b):
-                    try:
-                        decoded = _avi.decode_stats(b)
-                    except (ValueError, NotImplementedError):
-                        # one malformed/compressed payload must not kill the
-                        # task — stub unless strictness is asked for
-                        if strict:
-                            raise
-                if decoded is not None:
-                    w, h, nf, dur, luma = decoded
-                else:
-                    if strict:
-                        raise NotImplementedError(
-                            "synthetic payload and strict=True: a real video "
-                            "decode requires a BI_RGB AVI (stdlib) or "
-                            "PyAV/ffmpeg for compressed codecs"
-                        )
-                    digest = hashlib.sha256(b).digest()
-                    w, h = 16 + digest[0] % 16, 16 + digest[1] % 16
-                    nf = 1 + digest[2] % 8
-                    dur, luma = nf * 0.04, digest[3] / 255.0
-                rows.append((mid, w, h, nf, dur, luma))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_frames",
-                    "duration_s", "mean_luma",
-                ],
+    def real(b: bytes) -> tuple:
+        if not _avi.is_avi(b):
+            raise NotImplementedError(
+                "no AVI sniffed: a real video decode requires a BI_RGB AVI "
+                "(stdlib) or PyAV/ffmpeg for compressed codecs"
             )
+        return _avi.decode_stats(b)
 
-    return df.select("media_id", "payload").mapInPandas(decode, VIDEO_SCHEMA)
+    return _per_payload(df, VIDEO_SCHEMA, real, _video_stub, strict)
 
 
 def extract_features(df: DataFrame, dim: int = 8) -> DataFrame:
@@ -301,16 +260,10 @@ def extract_features(df: DataFrame, dim: int = 8) -> DataFrame:
     embedding-model stand-in). Deterministic bytes→floats so the similarity
     operators downstream are testable on multimodal rows."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                digest = hashlib.sha256(bytes(payload)).digest()
-                feats = [b / 255.0 for b in digest[:dim]]
-                rows.append((mid, feats))
-            yield pd.DataFrame(rows, columns=["media_id", "features"])
+    def real(b: bytes) -> tuple:
+        return ([x / 255.0 for x in hashlib.sha256(b).digest()[:dim]],)
 
-    return df.select("media_id", "payload").mapInPandas(extract, FEATURE_SCHEMA)
+    return _per_payload(df, FEATURE_SCHEMA, real, None, strict=False)
 
 
 FRAME_SCHEMA = "media_id BIGINT, frame_idx INT, frame_payload BINARY"
@@ -325,7 +278,8 @@ def frame_sample(df: DataFrame, every_n: int = 2, strict: bool = False) -> DataF
     take the REAL stdlib BI_RGB demux (functions/avi.py — the sampled row
     carries the actual top-down RGB frame bytes); anything else is the
     deterministic stub slice (``strict=True`` raises there — the declared
-    PyAV/ffmpeg boundary for compressed containers). Output cardinality =
+    PyAV/ffmpeg boundary for compressed containers). A NULL or malformed
+    payload drops its frames unless strict. Output cardinality =
     Σ ceil(n_frames/every_n), each row carrying its own frame bytes — the
     shape a frame-level embedding stage consumes.
     """
@@ -338,27 +292,24 @@ def frame_sample(df: DataFrame, every_n: int = 2, strict: bool = False) -> DataF
     )
 
     def cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import avi as _avi
-
         for pdf in batches:
             # per-batch cache: k sampled frames of one video demux the
             # container once; dropped with the batch so memory stays bounded
             demux_cache: dict[int, list[bytes]] = {}
             rows = []
             for mid, payload, idx in zip(pdf["media_id"], pdf["payload"], pdf["frame_idx"]):
+                if payload is None:
+                    if strict:
+                        raise ValueError(f"NULL payload for media_id={mid}")
+                    continue
                 b = bytes(payload)
                 idx = int(idx)
                 if _avi.is_avi(b):
-                    # real demux; cached per media_id so k sampled frames
-                    # of one video demux the container once per batch run
                     mid_key = int(mid)
                     if mid_key not in demux_cache:
                         try:
                             demux_cache[mid_key] = _avi.decode_rgb24(b)[3]
                         except (ValueError, NotImplementedError):
-                            # malformed/compressed container: isolate the one
-                            # payload (skip its frames) unless strictness is
-                            # asked for — matching decode_audio/decode_video
                             if strict:
                                 raise
                             demux_cache[mid_key] = []
@@ -394,80 +345,36 @@ RESIZED_SCHEMA = "media_id BIGINT, payload BINARY, width INT, height INT"
 
 def resize_media(df: DataFrame, width: int, height: int, strict: bool = False) -> DataFrame:
     """REAL nearest-neighbor resize for decodable payloads (the stage
-    resize_stub only sketched): greyscale PNGs are decoded with the
-    pure-stdlib codec (functions/png.py), resampled on the classic floor
-    mapping ``src_x = x*w // W, src_y = y*h // H`` (vectorized numpy
-    index-gather — no per-pixel Python), and re-encoded as PNG, so the
-    output payload is again a decodable image the rest of the multimodal
-    chain accepts. Grey, RGB and RGBA PNGs all resample (the channel axis
-    rides along the same index gather); JPEG payloads remain the declared
-    Pillow boundary (strict=True raises; non-strict passes the payload
-    through untouched with NULL width/height — the bytes were not resized,
-    so reporting the target dims would misdescribe them), and malformed
-    payloads are isolated per row exactly like decode_media/decode_audio. The floor mapping is closed-form, which is
-    what lets q_image_resize hash-check the resampled pixels end to end.
+    resize_stub only sketched): PNGs are decoded with the pure-stdlib codec
+    (functions/png.py), resampled on the classic floor mapping
+    ``src_x = x*w // W, src_y = y*h // H`` (vectorized numpy index-gather —
+    no per-pixel Python), and re-encoded as PNG, so the output payload is
+    again a decodable image the rest of the multimodal chain accepts. Grey,
+    RGB and RGBA PNGs all resample (the channel axis rides along the same
+    index gather); other formats are the declared Pillow boundary. A
+    payload that is not resized passes through untouched with NULL
+    width/height — reporting the target dims would misdescribe the bytes.
+    The floor mapping is closed-form, which is what lets q_image_resize
+    hash-check the resampled pixels end to end.
 
-    Scale shape: mapInPandas iterator-of-batches, constant memory per
-    partition, embarrassingly parallel — no shuffle.
+    Scale shape: batch-by-batch, constant memory per partition,
+    embarrassingly parallel — no shuffle.
     """
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def real(b: bytes) -> tuple:
+        if b[:8] != _PNG_MAGIC:
+            raise NotImplementedError(
+                "real resize of non-PNG payloads requires Pillow — "
+                "not available in this container"
+            )
+        w, h, ch, samples = _png.decode(b)
+        arr = np.frombuffer(samples, dtype=np.uint8).reshape(h, w, ch)
+        rows_idx = (np.arange(height) * h) // height
+        cols_idx = (np.arange(width) * w) // width
+        out = arr[rows_idx][:, cols_idx]
+        return _png.encode_samples(width, height, ch, out.tobytes()), width, height
 
-        from ..functions import png as _png
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    # NULL payload: isolate like any malformed row (the
-                    # one-bad-row contract) — nothing to resize or pass on
-                    if strict:
-                        raise ValueError(f"NULL payload for media_id={mid}")
-                    rows.append((mid, None, None, None))
-                    continue
-                b = bytes(payload)
-                if b[:8] == _PNG_MAGIC:
-                    try:
-                        w, h, ch, samples = _png.decode(b)
-                        # grey, RGB and RGBA all resample with the same
-                        # (h, w, ch) index gather; the channel axis rides
-                        # along untouched
-                        arr = np.frombuffer(samples, dtype=np.uint8).reshape(h, w, ch)
-                        rows_idx = (np.arange(height) * h) // height
-                        cols_idx = (np.arange(width) * w) // width
-                        out = arr[rows_idx][:, cols_idx]
-                        rows.append(
-                            (
-                                mid,
-                                _png.encode_samples(width, height, ch, out.tobytes()),
-                                width,
-                                height,
-                            )
-                        )
-                        continue
-                    except (ValueError, NotImplementedError):
-                        if strict:
-                            raise
-                        # malformed/unsupported: isolate the one payload.
-                        # Dims are NULL — the bytes were NOT resized, and
-                        # reporting the target dims would misdescribe them.
-                        rows.append((mid, b, None, None))
-                        continue
-                if strict:
-                    raise NotImplementedError(
-                        "real resize of non-PNG payloads requires Pillow — "
-                        "not available in this container"
-                    )
-                rows.append((mid, b, None, None))
-            out_pdf = pd.DataFrame(rows, columns=["media_id", "payload", "width", "height"])
-            # pass-through rows carry NULL dims: use pandas nullable Int32 so
-            # Arrow ships them as INT + null, not a float column
-            out_pdf["width"] = out_pdf["width"].astype("Int32")
-            out_pdf["height"] = out_pdf["height"].astype("Int32")
-            yield out_pdf
-
-    return df.select("media_id", "payload").mapInPandas(resize, RESIZED_SCHEMA)
+    return _per_payload(df, RESIZED_SCHEMA, real, lambda b: (b, None, None), strict)
 
 
 def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
@@ -483,6 +390,14 @@ def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
             F.col("meta.n_frames").alias("n_frames"),
         ),
     )
+
+
+def _contour(e) -> int:
+    """Energy-contour bits: bit i is 1 iff e[i+1] > e[i]. Capped at the
+    first 63 transitions — bit 63 of a signed BIGINT would overflow at
+    Arrow conversion (the reason phash_media splits into hi/lo halves);
+    long inputs keep a valid 63-bit prefix signature."""
+    return sum(1 << i for i in range(min(len(e) - 1, 63)) if e[i + 1] > e[i])
 
 
 PHASH_SCHEMA = "media_id BIGINT, phash_hi BIGINT, phash_lo BIGINT, n_set_bits INT"
@@ -501,58 +416,31 @@ def phash_media(df: DataFrame, strict: bool = False) -> DataFrame:
     iff pixel(row, col) > pixel(row, col+1); the hash is emitted as two
     BIGINT halves (hi = bits 32..63, lo = bits 0..31) because bit 63 of a
     single signed 64-bit value would overflow identically-but-fragilely on
-    both engines. Malformed/unsupported payloads stub to NULL halves in
-    non-strict mode (the family isolation contract); strict raises.
+    both engines. Other payloads give a NULL row.
 
-    Scale shape: map-only mapInPandas, no shuffle; the hash is 12 bytes a
+    Scale shape: map-only, no shuffle; the hash is 12 bytes a
     row — the downstream Hamming-band join (group by hi, compare lo) is
     the image twin of the MinHash band-bucket join.
     """
 
-    def hsh(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from ..functions import png as _png
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    if strict:
-                        raise ValueError(f"NULL payload for media_id={mid}")
-                    rows.append((mid, None, None, None))
-                    continue
-                b = bytes(payload)
-                try:
-                    if b[:8] != _PNG_MAGIC:
-                        raise NotImplementedError(
-                            "dHash needs a decodable PNG — wire Pillow for "
-                            "other formats"
-                        )
-                    w, h, ch, samples = _png.decode(b)
-                    if ch != 1 or (w, h) != (9, 8):
-                        raise ValueError(
-                            f"dHash stage expects 9x8 greyscale input "
-                            f"(got {w}x{h}x{ch}) — chain resize_media(9, 8)"
-                        )
-                    arr = np.frombuffer(samples, dtype=np.uint8).reshape(8, 9)
-                    bits = (arr[:, :-1] > arr[:, 1:]).astype(np.uint64)
-                    weights = np.uint64(1) << np.arange(64, dtype=np.uint64).reshape(8, 8)
-                    val = int((bits * weights).sum())
-                    rows.append((mid, val >> 32, val & 0xFFFFFFFF, int(bits.sum())))
-                except (ValueError, NotImplementedError):
-                    if strict:
-                        raise
-                    rows.append((mid, None, None, None))
-            out = pd.DataFrame(
-                rows, columns=["media_id", "phash_hi", "phash_lo", "n_set_bits"]
+    def real(b: bytes) -> tuple:
+        if b[:8] != _PNG_MAGIC:
+            raise NotImplementedError(
+                "dHash needs a decodable PNG — wire Pillow for other formats"
             )
-            out["phash_hi"] = out["phash_hi"].astype("Int64")
-            out["phash_lo"] = out["phash_lo"].astype("Int64")
-            out["n_set_bits"] = out["n_set_bits"].astype("Int32")
-            yield out
+        w, h, ch, samples = _png.decode(b)
+        if ch != 1 or (w, h) != (9, 8):
+            raise ValueError(
+                f"dHash stage expects 9x8 greyscale input "
+                f"(got {w}x{h}x{ch}) — chain resize_media(9, 8)"
+            )
+        arr = np.frombuffer(samples, dtype=np.uint8).reshape(8, 9)
+        bits = (arr[:, :-1] > arr[:, 1:]).astype(np.uint64)
+        weights = np.uint64(1) << np.arange(64, dtype=np.uint64).reshape(8, 8)
+        val = int((bits * weights).sum())
+        return val >> 32, val & 0xFFFFFFFF, int(bits.sum())
 
-    return df.select("media_id", "payload").mapInPandas(hsh, PHASH_SCHEMA)
+    return _per_payload(df, PHASH_SCHEMA, real, None, strict)
 
 
 AUDIO_FP_SCHEMA = "media_id BIGINT, fp BIGINT, e_total BIGINT"
@@ -564,68 +452,32 @@ def audio_fingerprint(df: DataFrame, n_windows: int = 8, strict: bool = False) -
     absolute levels, because contours survive volume changes): the clip is
     split into ``n_windows`` fixed windows (sample i belongs to window
     ``n_windows*i // n``), per-window energy E_w = Σv² is exact integer
-    arithmetic, and bit w of the fingerprint is 1 iff E_{w+1} > E_w — a
+    arithmetic, and the fingerprint is the ``_contour`` of the E_w — a
     rising/falling energy shape in ``n_windows - 1`` bits. Two clips with
     equal fingerprints are near-dup candidates (group-by-fp, the band-join
     shape shared with MinHash and dHash).
 
-    PCM-WAV payloads decode through the stdlib codec; malformed/compressed
-    payloads stub to NULL per row (strict raises) — the family isolation
-    contract. Map-only, zero shuffle; the fingerprint is one BIGINT per
+    PCM-WAV payloads decode through the stdlib codec; other payloads give
+    a NULL row. Map-only, zero shuffle; the fingerprint is one BIGINT per
     clip downstream.
     """
 
-    def fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def real(b: bytes) -> tuple:
+        if not _wav.is_wav(b):
+            raise NotImplementedError("audio fingerprint needs a PCM WAV payload")
+        _ch, _rate, _nf, samples = _wav.decode_pcm16(b)
+        v = np.asarray(samples, dtype=np.int64)
+        n = len(v)
+        if n < n_windows:
+            raise ValueError(f"clip has {n} samples — fewer than {n_windows} windows")
+        w_idx = (n_windows * np.arange(n)) // n
+        # integer energies: bincount with weights goes float —
+        # accumulate exactly via add.at on an int64 buffer
+        e = np.zeros(n_windows, dtype=np.int64)
+        np.add.at(e, w_idx, v * v)
+        return _contour(e), int(e.sum())
 
-        from ..functions import wav as _wav
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    if strict:
-                        raise ValueError(f"NULL payload for media_id={mid}")
-                    rows.append((mid, None, None))
-                    continue
-                b = bytes(payload)
-                try:
-                    if not _wav.is_wav(b):
-                        raise NotImplementedError(
-                            "audio fingerprint needs a PCM WAV payload"
-                        )
-                    _ch, _rate, _nf, samples = _wav.decode_pcm16(b)
-                    v = np.asarray(samples, dtype=np.int64)
-                    n = len(v)
-                    if n < n_windows:
-                        raise ValueError(
-                            f"clip has {n} samples — fewer than {n_windows} windows"
-                        )
-                    w_idx = (n_windows * np.arange(n)) // n
-                    # integer energies: bincount with weights goes float —
-                    # accumulate exactly via add.at on an int64 buffer
-                    e = np.zeros(n_windows, dtype=np.int64)
-                    np.add.at(e, w_idx, v * v)
-                    # contour bits capped at 63: bit 63 of a signed BIGINT
-                    # would overflow at Arrow conversion (same guard as the
-                    # video path); clips with n_windows > 64 keep a valid
-                    # 63-bit prefix signature and e_total still covers all
-                    bits = sum(
-                        (1 << w)
-                        for w in range(min(n_windows - 1, 63))
-                        if e[w + 1] > e[w]
-                    )
-                    rows.append((mid, int(bits), int(e.sum())))
-                except (ValueError, NotImplementedError):
-                    if strict:
-                        raise
-                    rows.append((mid, None, None))
-            out = pd.DataFrame(rows, columns=["media_id", "fp", "e_total"])
-            out["fp"] = out["fp"].astype("Int64")
-            out["e_total"] = out["e_total"].astype("Int64")
-            yield out
-
-    return df.select("media_id", "payload").mapInPandas(fp, AUDIO_FP_SCHEMA)
+    return _per_payload(df, AUDIO_FP_SCHEMA, real, None, strict)
 
 
 VIDEO_FP_SCHEMA = "media_id BIGINT, fp BIGINT, e_total BIGINT"
@@ -634,59 +486,25 @@ VIDEO_FP_SCHEMA = "media_id BIGINT, fp BIGINT, e_total BIGINT"
 def video_fingerprint(df: DataFrame, strict: bool = False) -> DataFrame:
     """Temporal energy-contour video fingerprint — the video member of the
     fingerprint family (dHash for images, energy contour for audio): per
-    FRAME, the exact-integer sum of every channel byte; bit f of the
-    fingerprint is 1 iff frame f+1 is brighter than frame f. Scene cuts
-    and fades survive re-encoding brightness shifts the same way audio
-    contours survive volume changes — this is the shape real video
-    near-dup fingerprints (e.g. TMK-style temporal signatures) build on.
+    FRAME, the exact-integer sum of every channel byte; the fingerprint is
+    the ``_contour`` of those sums (bit f is 1 iff frame f+1 is brighter
+    than frame f). Scene cuts and fades survive re-encoding brightness
+    shifts the same way audio contours survive volume changes — this is
+    the shape real video near-dup fingerprints (e.g. TMK-style temporal
+    signatures) build on.
 
-    BI_RGB AVI payloads decode through the stdlib demuxer; malformed /
-    compressed payloads stub to NULL per row (strict raises) — the family
-    isolation contract. Map-only, zero shuffle; one BIGINT per clip whose
+    BI_RGB AVI payloads decode through the stdlib demuxer; other payloads
+    give a NULL row. Map-only, zero shuffle; one BIGINT per clip whose
     group-by is the candidate join.
     """
 
-    def fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import avi as _avi
+    def real(b: bytes) -> tuple:
+        if not _avi.is_avi(b):
+            raise NotImplementedError("video fingerprint needs a BI_RGB AVI payload")
+        _w, _h, _us, frames = _avi.decode_rgb24(b)
+        if len(frames) < 2:
+            raise ValueError("video fingerprint needs >= 2 frames for a contour")
+        e = [sum(f) for f in frames]  # exact ints
+        return _contour(e), sum(e)
 
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    if strict:
-                        raise ValueError(f"NULL payload for media_id={mid}")
-                    rows.append((mid, None, None))
-                    continue
-                b = bytes(payload)
-                try:
-                    if not _avi.is_avi(b):
-                        raise NotImplementedError(
-                            "video fingerprint needs a BI_RGB AVI payload"
-                        )
-                    _w, _h, _us, frames = _avi.decode_rgb24(b)
-                    if len(frames) < 2:
-                        raise ValueError(
-                            "video fingerprint needs >= 2 frames for a contour"
-                        )
-                    e = [sum(f) for f in frames]  # exact ints
-                    # contour bits are capped at the first 63 transitions:
-                    # bit 63 of a signed BIGINT would overflow (the reason
-                    # phash_media splits into hi/lo halves); long clips
-                    # keep a valid 63-bit prefix signature, and e_total
-                    # still covers every frame
-                    bits = sum(
-                        (1 << f)
-                        for f in range(min(len(e) - 1, 63))
-                        if e[f + 1] > e[f]
-                    )
-                    rows.append((mid, int(bits), int(sum(e))))
-                except (ValueError, NotImplementedError):
-                    if strict:
-                        raise
-                    rows.append((mid, None, None))
-            out = pd.DataFrame(rows, columns=["media_id", "fp", "e_total"])
-            out["fp"] = out["fp"].astype("Int64")
-            out["e_total"] = out["e_total"].astype("Int64")
-            yield out
-
-    return df.select("media_id", "payload").mapInPandas(fp, VIDEO_FP_SCHEMA)
+    return _per_payload(df, VIDEO_FP_SCHEMA, real, None, strict)

@@ -1355,10 +1355,16 @@ def test_pca_fast_matches_portable_within_fp(spark):
 
 def test_null_payload_isolated_in_every_fingerprint_stage(spark):
     """A NULL payload must stub to a NULL output row (not TypeError the
-    whole task) in non-strict mode, in all four round-9 media stages —
-    the same one-bad-row contract as malformed bytes (ADVICE r10)."""
+    whole task) in non-strict mode, in every media stage — the same
+    one-bad-row contract as malformed bytes; frame_sample drops the
+    payload's frames. Strict mode raises on the NULL row itself."""
     from etl_housing_spark.operators.multimodal import (
         audio_fingerprint,
+        decode_audio,
+        decode_media,
+        decode_video,
+        extract_features,
+        frame_sample,
         phash_media,
         resize_media,
         video_fingerprint,
@@ -1377,6 +1383,19 @@ def test_null_payload_isolated_in_every_fingerprint_stage(spark):
     assert a[1].fp is None
     v = {x.media_id: x for x in video_fingerprint(df).collect()}
     assert v[1].fp is None
+    d = {x.media_id: x for x in decode_media(df).collect()}
+    assert d[1].width is None and d[1].mean_luma is None
+    assert (d[2].width, d[2].height) == (9, 8)
+    au = {x.media_id: x for x in decode_audio(df).collect()}
+    assert au[1].n_samples is None and au[1].rms is None
+    assert au[2].sample_rate == 8000  # PNG bytes take the audio stub
+    vi = {x.media_id: x for x in decode_video(df).collect()}
+    assert vi[1].n_frames is None and vi[2].n_frames is not None
+    f = {x.media_id: x for x in extract_features(df).collect()}
+    assert f[1].features is None and len(f[2].features) == 8
+    framed = df.withColumn("meta", F.struct(F.lit(2).alias("n_frames")))
+    fs = frame_sample(framed, every_n=1).collect()
+    assert sorted((x.media_id, x.frame_idx) for x in fs) == [(2, 0), (2, 1)]
     # strict mode: the NULL row itself is the error (NULL-only frame so a
     # format mismatch on the good row can't mask it)
     nulls = spark.createDataFrame([(1, None)], "media_id long, payload binary")
@@ -1385,6 +1404,12 @@ def test_null_payload_isolated_in_every_fingerprint_stage(spark):
         lambda d: phash_media(d, strict=True),
         lambda d: audio_fingerprint(d, strict=True),
         lambda d: video_fingerprint(d, strict=True),
+        lambda d: decode_media(d, strict=True),
+        lambda d: decode_audio(d, strict=True),
+        lambda d: decode_video(d, strict=True),
+        lambda d: frame_sample(
+            d.withColumn("meta", F.struct(F.lit(2).alias("n_frames"))), strict=True
+        ),
     ):
         with pytest.raises(Exception, match="NULL payload"):
             stage(nulls).collect()
@@ -1405,6 +1430,22 @@ def test_audio_fingerprint_contour_bits_capped_at_63(spark):
     )
     r = audio_fingerprint(df, n_windows=70, strict=True).collect()[0]
     assert r.fp == (1 << 63) - 1  # bits 0..62 set, bit 63 never
+
+
+def test_bigint_stays_exact_beside_a_null_row_in_one_batch(spark):
+    """A BIGINT above 2**53 sharing an Arrow batch with a NULL output row
+    must ship exactly: building the column through float64 (NaN for the
+    NULL) rounds it, and the nullable-int cast then kills the task."""
+    from etl_housing_spark.functions.wav import encode_pcm16
+    from etl_housing_spark.operators.multimodal import audio_fingerprint
+
+    rising = [(i // 2 + 1) * 10 for i in range(140)]
+    df = spark.createDataFrame(
+        [(1, bytearray(encode_pcm16(8000, rising))), (2, bytearray(b"junk"))],
+        "media_id long, payload binary",
+    ).coalesce(1)
+    rows = {r.media_id: r.fp for r in audio_fingerprint(df, n_windows=70).collect()}
+    assert rows == {1: (1 << 63) - 1, 2: None}
 
 
 def test_oph_densification_fills_every_bin(spark):
