@@ -751,7 +751,7 @@ def ivfpq_scaled_index(
     ``cents`` the final kc centroids, ``codebooks`` the (cand, i, c)
     RESIDUAL PQ frame (pq_residual_codebooks). Frames are returned
     UNpersisted — the caller decides whether to tracked_persist (one
-    query) or write to tables (a served index: q_ann_index_persist).
+    query) or write to tables (a served index).
 
     NOTE the codebooks depend on (assigned, cents): persisting the
     returned assigned does not rewire the codebook lineage, so a caller
@@ -765,13 +765,14 @@ def ivfpq_scaled_index(
 
 def _scaled_build(
     vecs: DataFrame,
-    subspaces: int,
-    dim: int,
-    kpq: int,
-    train_cap: int,
-    rounds: int,
-    id_col: str,
-    n: int | None,
+    subspaces: int = 16,
+    dim: int = 64,
+    kpq: int = 256,
+    train_cap: int = 2048,
+    rounds: int = 2,
+    id_col: str = "vec_id",
+    n: int | None = None,
+    *,
     persist: bool,
 ) -> tuple[DataFrame, DataFrame, DataFrame, int, int]:
     """The one stateless IVFADC build: kc = ceil(sqrt(n)) coarse cells,
@@ -1001,7 +1002,8 @@ def ivfpq_scaled_topk(
       fused into one action;
     - otherwise the qid-keyed batch core (_ivfadc_core, shared with
       ivfpq_scaled_topk_batch) over a one-row (qid, qv) query frame —
-      the stateless build, ``index`` without codes, a looked-up query,
+      the stateless build, ``index`` without codes, a looked-up query
+      (q_ann_index_persist serves its tree this way),
       kc past the driver bound, or an index whose collected shape
       _collect_index_local rejects.
     Both return the same rows
@@ -1179,16 +1181,7 @@ def _ivfadc_core(
         .filter(F.col("rn") <= nprobe)
         .select("qid", "cid")
     )
-    # per-(qid, cid) tables: each probed cell's query residual qv − c,
-    # cut into subvectors, scored by the one LUT core
-    qres = _residual_subs(
-        probe.join(F.broadcast(qvs), "qid").withColumnRenamed("qv", "v"),
-        cents, subspaces, per_sub, "qid",
-    )
-    lut = _lut(qres, C.sub_rows(cb, per_sub))
-    # the union of all probed cells — each cell's codes are read/derived
-    # ONCE however many queries probe it
-    pcell_rows = probe.select("cid").distinct()
+    # each cell's codes are read/derived ONCE however many queries probe it
     rer = vecs
     if codes is not None:
         # the probe binds as a STATIC filter (a collected kc-bounded id
@@ -1196,8 +1189,17 @@ def _ivfadc_core(
         # FILE-LISTING time — a join-form probe cannot promise that (DPP
         # is best-effort and the probe window blocks it). Every candidate
         # lives in a probed cell, so a float table carrying cid prunes the
-        # rerank scan the same way
-        pcells = [r.cid for r in pcell_rows.collect()]
+        # rerank scan the same way. The Q·nprobe collected rows also stand
+        # in for the probe in the LUT, so the served plan does not run the
+        # probe window a second time; a pandas frame becomes a
+        # LocalRelation (a list becomes an RDD scan)
+        import pandas as pd
+
+        prows = probe.collect()
+        probe = vecs.sparkSession.createDataFrame(
+            pd.DataFrame(prows, columns=probe.columns), probe.schema
+        )
+        pcells = sorted({r.cid for r in prows})
         pc = codes.filter(F.col("cid").isin(pcells)).select(
             id_col, "cid", F.posexplode("codes").alias("sub", "code")
         )
@@ -1205,9 +1207,16 @@ def _ivfadc_core(
             rer = vecs.filter(F.col("cid").isin(pcells))
     else:
         pc = _residual_codes(
-            assigned.join(F.broadcast(pcell_rows), "cid"), cents, cb,
-            subspaces, per_sub, id_col,
+            assigned.join(F.broadcast(probe.select("cid").distinct()), "cid"),
+            cents, cb, subspaces, per_sub, id_col,
         )
+    # per-(qid, cid) tables: each probed cell's query residual qv − c,
+    # cut into subvectors, scored by the one LUT core
+    qres = _residual_subs(
+        probe.join(F.broadcast(qvs), "qid").withColumnRenamed("qv", "v"),
+        cents, subspaces, per_sub, "qid",
+    )
+    lut = _lut(qres, C.sub_rows(cb, per_sub))
     # the LUT carries qid, so the (cid, sub, code) join fans each code row
     # out to every query that probed its cell
     adc = _adc(pc, lut, id_col)

@@ -28,6 +28,7 @@ from ..operators.sampling import md5_u32
 from ..sources.warehouse import sql_zorder_key
 from ._util import sql_davg, sql_dsum
 from .registry import query
+from .vector_queries import _embeddings
 
 # -- shared shingle expression (same construction q_minhash_portable uses) --
 
@@ -3238,9 +3239,7 @@ def q_dedup_tiered(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("p2"),
         )
     )
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     assigned, _cents = kmeans_fit(emb, k=4, rounds=2)
     surv = mt.filter(F.col("p2") == 1).select(F.col("doc_id").alias("vec_id"))
     sa = assigned.join(surv, "vec_id")

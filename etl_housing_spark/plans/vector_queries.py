@@ -7,6 +7,8 @@ side uses, so scores hash identically.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -17,6 +19,14 @@ from ..operators import similarity as S
 from ..operators.sampling import md5_u32
 from ._util import DEC
 from .registry import query
+
+
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings table as the vector operators take it: (vec_id, v:
+    array<double>)."""
+    return load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
+    )
 
 
 
@@ -1321,9 +1331,7 @@ _KM_CTES = """
 def q_kmeans_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import dim_means, kmeans_fit
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     a2, _c2 = kmeans_fit(emb, k=4, rounds=2)
     return dim_means(a2, ["cid"]).select(
         "cid",
@@ -1373,9 +1381,7 @@ def q_kmeans_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import kmeans_fit
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     assigned, cents = kmeans_fit(emb, k=4, rounds=2)
     q = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("__q"))
     probed = (
@@ -1490,9 +1496,7 @@ def semdedup_pairs(assigned: DataFrame, threshold: float = 0.5) -> DataFrame:
 def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import kmeans_fit
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     assigned, _cents = kmeans_fit(emb, k=4, rounds=2)
     dups = (
         semdedup_pairs(assigned)
@@ -1565,9 +1569,7 @@ def q_semdedup_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators._ckpt import tracked_persist
     from ..operators.clustering import kmeans_fit
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     assigned, _cents = kmeans_fit(emb, k=4, rounds=2)
     assigned = tracked_persist(assigned)
     total = tracked_persist(emb.agg(F.count(F.lit(1)).alias("n_total")))
@@ -1680,9 +1682,7 @@ def q_semdedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators._ckpt import tracked_persist
     from ..operators.clustering import kmeans_fit
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     k = int(math.ceil(math.sqrt(emb.count())))
     # the fit fans into three plan branches (both pair-join legs + the
     # final left join); unpersisted, the n·k assignment would re-execute
@@ -1769,9 +1769,7 @@ def q_ann_ivf_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators._ckpt import tracked_persist
     from ..operators.clustering import kmeans_fit
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     n = emb.count()
     k = int(math.ceil(math.sqrt(n)))
     nprobe = int(math.ceil(2 * math.sqrt(k)))
@@ -2008,9 +2006,7 @@ _PQ_SCALED_CTES = """,
 def q_ivfpq_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.quantize import ivfpq_scaled_topk
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     return ivfpq_scaled_topk(emb)
 
 
@@ -2047,9 +2043,7 @@ def q_ivfpq_recall_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.quantize import ivfpq_scaled_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    vecs = _embeddings(spark, sf_dir)
     exact = _exact_l2_top10(emb)
     approx = ivfpq_scaled_topk(vecs).select("vec_id")
     hits = exact.join(approx, "vec_id", "semi").agg(
@@ -2077,6 +2071,141 @@ def _index_dir(sf_dir: str) -> str:
     return os.path.join(tempfile.gettempdir(), f"ehs_ann_idx_{slug}")
 
 
+# The persisted index is ONE directory tree per caller, written by
+# _write_tree (and appended to by _cell_writes) and read back by
+# _open_tree only: the coarse assignment (vec_id, v, cid) and the packed
+# codes (vec_id, cid, codes), both partitioned by cid, beside the cell
+# centroids and the residual codebooks. _BY_CELL names the two
+# cid-partitioned artifacts, which appends and compaction rewrite.
+_BY_CELL = ("assign_by_cell", "codes")
+
+
+def _cell_writes(assigned: DataFrame, codes: DataFrame, dest: str, mode: str):
+    """The write jobs of the tree's two cid-partitioned artifacts, as
+    thunks for concurrent_writes; ``mode`` is 'overwrite' for a build and
+    'append' for a growth batch (one new file per touched cell, no
+    existing file rewritten).
+
+    One directory per cell for BOTH the code table and the float vectors
+    (FAISS keeps the vectors in the inverted lists for exactly this
+    reason), so a probe's cid IN (...) prunes at file listing — "the probe
+    is partition pruning, not even a join" (ivfpq_scaled_codes docstring)
+    — for the ADC scan AND the rerank's candidate reads. kc =
+    ceil(sqrt(n)) directories: 775 at sf10, ~32k at n=10^9 — at the
+    extreme end a deployment would bucket cid ranges, same pruning law.
+    repartition("cid"): ONE file per cell directory per write instead of
+    (writer tasks × cells) shards — without it the sf10 artifact came out
+    as ~14k tiny files and every serving job paid the file-listing/open
+    cost (measured ~10x the query itself). sortWithinPartitions("cid")
+    states the sorted single-writer contract — each task holds O(1) open
+    parquet writers however many cell dirs it owns; Spark's planned write
+    inserts the same partition-column sort anyway (SURVEY "writer-heap
+    diagnosis corrected")."""
+    return [
+        lambda df=df, name=name: df.repartition("cid")
+        .sortWithinPartitions("cid")
+        .write.mode(mode)
+        .partitionBy("cid")
+        .parquet(f"{dest}/{name}")
+        for df, name in zip((assigned, codes), _BY_CELL)
+    ]
+
+
+def _write_tree(vecs: DataFrame, n: int, dest: str) -> tuple[int, int]:
+    """Build the corpus-scaled IVFADC index over ``vecs`` (``n`` rows)
+    and write its four artifacts into ``dest`` (overwrite). Returns (kc,
+    nprobe).
+
+    The build is quantize._scaled_build's persisted form: the fit and the
+    codebooks trained on it are pinned once, so the code table and the
+    four writes share one computed lineage instead of re-fitting per
+    write (the kmeans_assign double-eval note). The writes are
+    INDEPENDENT jobs over that lineage, submitted concurrently (r17,
+    guide §2.6; sources/warehouse.py::concurrent_writes): sequential they
+    cost the SUM (measured 7.0 s of the 12.6 s warm append wall),
+    overlapped the wall approaches the MAX and shared persist fills stay
+    single (block locks)."""
+    from ..operators.quantize import _scaled_build, ivfpq_scaled_codes
+    from ..sources.warehouse import concurrent_writes
+
+    assigned, cents, cb, kc, nprobe = _scaled_build(vecs, n=n, persist=True)
+    codes = ivfpq_scaled_codes((assigned, cents, cb, kc, nprobe))
+    concurrent_writes(
+        *_cell_writes(assigned, codes, dest, "overwrite"),
+        lambda: cents.write.mode("overwrite").parquet(dest + "/cells"),
+        lambda: cb.write.mode("overwrite").parquet(dest + "/codebooks"),
+    )
+    return kc, nprobe
+
+
+def _open_tree(
+    spark: SparkSession, dest: str
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """Read the tree under ``dest`` back: (p_assign, p_cells, p_cb,
+    p_codes), backed by the persisted parquet only. Doubles round-trip
+    parquet bit-exactly, so the opened tree serves the values the
+    in-memory index would. A read lists the files present when it is
+    made: open the tree again after an append, a compaction or a swap."""
+    p_assign, p_codes = (spark.read.parquet(f"{dest}/{a}") for a in _BY_CELL)
+    return (
+        p_assign.select("vec_id", "v", "cid"),
+        spark.read.parquet(dest + "/cells"),
+        spark.read.parquet(dest + "/codebooks"),
+        p_codes,
+    )
+
+
+def _serve_tree(
+    tree: Sequence[DataFrame],
+    kc: int,
+    nprobe: int,
+    query_vec: list[float] | None,
+    with_rank: bool = False,
+) -> DataFrame:
+    """Serve an opened tree: ivfpq_scaled_topk with the tree as its index
+    and code table, so the codes scan and the rerank's float scan both
+    prune to the probed cells. A literal ``query_vec`` takes the local
+    fused serve; None looks up corpus row 0 and takes the qid-keyed batch
+    core (the plan every index past _DRIVER_PROBE_MAX_KC takes)."""
+    from ..operators.quantize import ivfpq_scaled_topk
+
+    p_assign, p_cells, p_cb, p_codes = tree
+    return ivfpq_scaled_topk(
+        p_assign,
+        index=(p_assign, p_cells, p_cb, kc, nprobe),
+        codes=p_codes,
+        query_vec=query_vec,
+        with_rank=with_rank,
+    )
+
+
+def _row0(tree: Sequence[DataFrame]) -> list[float]:
+    """The fixture's query vector, corpus row 0, fetched once from the
+    tree: a deployment receives the query as a value, so no serving job
+    scans the corpus to find it."""
+    return list(tree[0].filter(F.col("vec_id") == 0).select("v").first()[0])
+
+
+def _write_serve_artifacts(
+    spark: SparkSession, sf_dir: str, suffix: str = "_serve"
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, int, int]:
+    """Build the corpus-scaled IVFADC index over the embeddings, write
+    its tree to the deterministic per-sf dir and open it: returns
+    (p_assign, p_cells, p_cb, p_codes, kc, nprobe).
+
+    ``suffix`` keys the tree per CALLER: each lifecycle query owns a
+    disjoint directory (persist = the bare _index_dir, serve = '_serve',
+    stream = '_stream', append = '_append'), so two lifecycle queries
+    running concurrently (a parallel test runner, overlapping harness
+    sessions) can never overwrite each other's cells/codebooks mid-read
+    — the failure mode a shared base dir produced under a concurrent
+    pytest + preflight session."""
+    vecs = _embeddings(spark, sf_dir)
+    out = _index_dir(sf_dir) + suffix
+    kc, nprobe = _write_tree(vecs, vecs.count(), out)
+    return (*_open_tree(spark, out), kc, nprobe)
+
+
 @query(
     "q_ann_index_persist",
     # The persisted-index LIFECYCLE (VERDICT r13 item 2): the registered
@@ -2084,175 +2213,45 @@ def _index_dir(sf_dir: str) -> str:
     # contract is stateless, but the deployment shape is build-once /
     # serve-many (BASELINE r13 measured 92.5 s build, then 0.5–1.0 s per
     # query). This query registers that shape: build the scaled IVFADC
-    # index state (coarse assignment, cell centroids, PQ codebooks),
-    # WRITE all three to parquet tables, read them BACK, and serve the
-    # search from the persisted frames only — the source corpus is never
-    # touched after the write (the query side reads its vectors from the
-    # persisted assignment). Parquet round-trips doubles bit-exactly, so
-    # the served answer is the same construction q_ivfpq_scaled's oracle
-    # computes — the lifecycle is hash-checked, not just rows-counted.
+    # index, WRITE its tree, read it BACK, and serve the search from the
+    # persisted frames only — the source corpus is never touched after
+    # the write (the query side reads its vector from the persisted
+    # assignment). It serves WITHOUT a literal query vector, so the
+    # search runs the qid-keyed batch core over the persisted code table
+    # — the plan every index past _DRIVER_PROBE_MAX_KC takes, hash-checked
+    # here. Parquet round-trips doubles bit-exactly, so the served answer
+    # is the same construction q_ivfpq_scaled's oracle computes.
     oracle=_KM_SCALED_CTES + _PQ_SCALED_CTES + """
     SELECT vec_id, ROUND(exact_d2, 6) AS exact_d2,
            (SELECT k FROM ksel) AS k, (SELECT np FROM nsel) AS nprobe
     FROM ex ORDER BY exact_d2, vec_id LIMIT 10
     """,
     description="persisted-ANN-index lifecycle: build the corpus-scaled "
-    "IVFADC index (coarse assignment + cell centroids + PQ codebooks), "
-    "write the three frames to parquet warehouse tables, read them back, "
-    "and serve the top-10 search FROM THE PERSISTED INDEX only — the "
-    "corpus is not rescanned after the build (query-side vectors come "
-    "from the persisted assignment table). Doubles round-trip parquet "
-    "bit-exactly, so the served answer hash-matches the same oracle as "
-    "the stateless q_ivfpq_scaled — the build-once/serve-many deployment "
-    "shape, value-verified. Scale shape: the write is one pass over the "
-    "corpus partitioned by nothing the search needs to shuffle later; "
-    "serving reads centroids (kc rows) + codebooks (<=16k rows) broadcast "
-    "and the probed slice of the assignment table",
+    "IVFADC index, write its four artifacts (cell-partitioned vectors and "
+    "packed codes, cell centroids, PQ codebooks) to parquet, read them "
+    "back, and serve the top-10 search FROM THE PERSISTED INDEX only — "
+    "the corpus is not rescanned after the build (the query vector is "
+    "looked up in the persisted assignment). The serve takes the "
+    "qid-keyed batch core: the probe is collected once and binds as a "
+    "static cid filter on both cell-partitioned scans. Doubles "
+    "round-trip parquet bit-exactly, so the served answer hash-matches "
+    "the same oracle as the stateless q_ivfpq_scaled — the "
+    "build-once/serve-many deployment shape, value-verified. Scale "
+    "shape: the write is the one amortized ingest pass; serving reads "
+    "centroids (kc rows) + codebooks (<=16k rows) broadcast and only the "
+    "probed cells' code and vector files",
     tags=("vector",),
 )
 def q_ann_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.quantize import ivfpq_scaled_index, ivfpq_scaled_topk
-
-    vecs = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    from ..operators._ckpt import tracked_persist
-    from ..operators.quantize import pq_residual_codebooks
-
-    n = vecs.count()
-    assigned, cents, cb, kc, nprobe = ivfpq_scaled_index(vecs, n=n)
-    # three writes follow; unpersisted, each would re-execute the fit
-    # lineage from scratch (the kmeans_assign double-eval note; the
-    # sf0.1 protocol row measured 116 s before this persist) — persist
-    # the fit once and rebuild the codebooks ON the persisted frames so
-    # the codebook write reuses the cached fit (the ivfpq_scaled_index
-    # docstring's build-for-many-queries recipe)
-    assigned = tracked_persist(assigned)
-    cents = tracked_persist(cents)
-    cb = pq_residual_codebooks(assigned, cents, n)
-    out = _index_dir(sf_dir)
-    # independent destinations over one persisted fit — overlapped
-    # (r17, guide §2.6; the _build_and_write_index rationale)
-    from ..sources.warehouse import concurrent_writes
-
-    concurrent_writes(
-        lambda: assigned.write.mode("overwrite").parquet(out + "/assign"),
-        lambda: cents.write.mode("overwrite").parquet(out + "/cells"),
-        lambda: cb.write.mode("overwrite").parquet(out + "/codebooks"),
-    )
-    p_assign = spark.read.parquet(out + "/assign")
-    p_cells = spark.read.parquet(out + "/cells")
-    p_cb = spark.read.parquet(out + "/codebooks")
-    served_vecs = p_assign.select("vec_id", "v")
-    return ivfpq_scaled_topk(
-        served_vecs, index=(p_assign, p_cells, p_cb, kc, nprobe)
-    )
-
-
-def _write_serve_artifacts(
-    spark: SparkSession, sf_dir: str, suffix: str = "_serve"
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, int, int]:
-    """Build the corpus-scaled IVFADC index and write the FOUR serving
-    artifacts (cell-partitioned vectors, centroids, codebooks,
-    cell-partitioned packed codes) to the deterministic per-sf dir, then
-    read them back — returns (p_assign, p_cells, p_cb, p_codes, kc,
-    nprobe), all backed by the persisted parquet only. Shared by the
-    latency (q_ann_index_serve) and streaming (q_stream_ann_serve)
-    serving forms; every layout decision is documented inline.
-
-    ``suffix`` keys the artifact tree per CALLER: each lifecycle query
-    owns a disjoint directory (persist = the bare _index_dir, serve =
-    '_serve', stream = '_stream', append = '_append'), so two lifecycle
-    queries running concurrently (a parallel test runner, overlapping
-    harness sessions) can never overwrite each other's cells/codebooks
-    mid-read — the failure mode a shared base dir produced under a
-    concurrent pytest + preflight session."""
-    vecs = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    out = _index_dir(sf_dir) + suffix
-    kc, nprobe = _build_and_write_index(spark, vecs, vecs.count(), out)
-    p_assign = spark.read.parquet(out + "/assign_by_cell").select(
-        "vec_id", "v", "cid"
-    )
-    p_cells = spark.read.parquet(out + "/cells")
-    p_cb = spark.read.parquet(out + "/codebooks")
-    p_codes = spark.read.parquet(out + "/codes")
-    return p_assign, p_cells, p_cb, p_codes, kc, nprobe
-
-
-def _build_and_write_index(
-    spark: SparkSession, vecs: DataFrame, n: int, dest: str
-) -> tuple[int, int]:
-    """Build the corpus-scaled IVFADC index over ``vecs`` and write the
-    four serving artifacts into ``dest`` (overwrite). Returns
-    (kc, nprobe). Shared by _write_serve_artifacts (fresh build at the
-    canonical per-sf dir) and q_ann_index_refit (rebuild into a staging
-    tree, then swap)."""
-    from ..operators._ckpt import tracked_persist
-    from ..operators.quantize import (
-        ivfpq_scaled_codes,
-        ivfpq_scaled_index,
-        pq_residual_codebooks,
-    )
-
-    assigned, cents, cb, kc, nprobe = ivfpq_scaled_index(vecs, n=n)
-    # persist the fit once; codebooks AND the code table both consume it
-    # (the kmeans_assign double-eval note), and the codebooks feed the
-    # code assignment — persist all three so the four writes share one
-    # computed lineage instead of re-fitting per write
-    assigned = tracked_persist(assigned)
-    cents = tracked_persist(cents)
-    cb = tracked_persist(pq_residual_codebooks(assigned, cents, n))
-    codes = ivfpq_scaled_codes((assigned, cents, cb, kc, nprobe))
-    # the deployment artifacts: one directory per cell for BOTH the code
-    # table and the float vectors (FAISS keeps the vectors in the
-    # inverted lists for exactly this reason), so a probe's cid IN (...)
-    # prunes at file listing — "the probe is partition pruning, not even
-    # a join" (ivfpq_scaled_codes docstring) — for the ADC scan AND the
-    # rerank's candidate reads. kc = ceil(sqrt(n)) directories: 775 at
-    # sf10, ~32k at n=10^9 — at the extreme end a deployment would
-    # bucket cid ranges, same pruning law
-    # repartition("cid") before the partitioned writes: ONE file per cell
-    # directory instead of (writer tasks × cells) shards — without it the
-    # sf10 artifact came out as ~14k tiny files and every serving job
-    # paid the file-listing/open cost (measured ~10x the query itself).
-    # sortWithinPartitions("cid") engages the sorted single-writer path
-    # of the dynamic-partition write — each task holds O(1) open parquet
-    # writers regardless of how many cell dirs it owns (the r15 sf30 8 g
-    # heap OOM was diagnosed as heap ∝ open-writer count)
-    # the four writes are INDEPENDENT jobs over one persisted lineage —
-    # submitted concurrently (r17, guide §2.6; sources/warehouse.py::
-    # concurrent_writes): sequential they cost the SUM (measured 7.0 s of
-    # the 12.6 s warm append wall; same shape here), overlapped the wall
-    # approaches the MAX and shared persist fills stay single (block locks)
-    from ..sources.warehouse import concurrent_writes
-
-    concurrent_writes(
-        lambda: assigned.repartition("cid")
-        .sortWithinPartitions("cid")
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(dest + "/assign_by_cell"),
-        lambda: cents.write.mode("overwrite").parquet(dest + "/cells"),
-        lambda: cb.write.mode("overwrite").parquet(dest + "/codebooks"),
-        lambda: codes.repartition("cid")
-        .sortWithinPartitions("cid")
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(dest + "/codes"),
-    )
-    return kc, nprobe
+    *tree, kc, nprobe = _write_serve_artifacts(spark, sf_dir, suffix="")
+    return _serve_tree(tree, kc, nprobe, None)
 
 
 @query(
     "q_ann_index_serve",
-    # The lifecycle's MISSING artifact (VERDICT r14 "What's wrong" #2):
-    # q_ann_index_persist writes (assignment, centroids, codebooks) but
-    # serves by RE-ASSIGNING probed cells' codes per query — the
-    # 2.5–3.9 s/query vs 0.44–1.0 s wall the packed code table exists to
-    # eliminate. This query completes the deployment shape the
-    # ivfpq_scaled_codes docstring names: the packed code table is
+    # The deployment shape the ivfpq_scaled_codes docstring names, served
+    # by the local fused plan (a literal query vector; q_ann_index_persist
+    # serves the same tree through the batch core): the packed code table is
     # computed ONCE at ingest, written partitionBy("cid"), and the
     # per-query probe binds as PartitionFilters at file-listing time —
     # only nprobe of kc cell directories are ever listed or read; the
@@ -2293,21 +2292,8 @@ def _build_and_write_index(
     tags=("vector", "bench"),
 )
 def q_ann_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.quantize import ivfpq_scaled_topk
-
-    p_assign, p_cells, p_cb, p_codes, kc, nprobe = _write_serve_artifacts(
-        spark, sf_dir
-    )
-    # the query vector arrives as a VALUE in a deployment; fetch it once
-    # here (the fixture's query is corpus row 0) so no serving job scans
-    # the corpus to find it
-    qvec = list(p_assign.filter(F.col("vec_id") == 0).select("v").first()[0])
-    return ivfpq_scaled_topk(
-        p_assign,
-        index=(p_assign, p_cells, p_cb, kc, nprobe),
-        codes=p_codes,
-        query_vec=qvec,
-    )
+    *tree, kc, nprobe = _write_serve_artifacts(spark, sf_dir)
+    return _serve_tree(tree, kc, nprobe, _row0(tree))
 
 
 # The incremental-assign chain: the scaled Lloyd fit run on the OLD 80%
@@ -2414,9 +2400,7 @@ def q_ann_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.clustering import kmeans_assign, kmeans_fit
 
-    vecs = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    vecs = _embeddings(spark, sf_dir)
     old = vecs.filter(F.col("vec_id") % 10 < 8)
     batch = vecs.filter(F.col("vec_id") % 10 >= 8)
     n_old = old.count()
@@ -2541,112 +2525,46 @@ _PQ_APPEND_CTES = """,
 
 def _append_artifacts(
     spark: SparkSession, sf_dir: str, out: str, old_mod: int = 8
-) -> tuple[DataFrame, DataFrame, int, int]:
-    """The build-then-append half of the maintenance lifecycle: persist
-    the four artifacts from the OLD ``old_mod``/10 of the corpus
-    (vec_id % 10 < old_mod; default the canonical 80%) under ``out``,
-    then assign + encode the NEW remainder batch against the frozen
-    centroids/codebooks and append it into the cid-partitioned dirs.
-    Returns (p_cells, p_cb, kc, nprobe). Shared by q_ann_index_append
-    (serve straight off the appended dirs), q_ann_index_compact
-    (compact the accreted files first), and q_ann_index_refit
-    (old_mod=6 — 40% growth pushes k_due past the 1.25·k_old refit
-    trigger that the canonical 20% growth deliberately stays under);
-    ``out`` keys the tree per caller (the suffix discipline)."""
+) -> tuple[int, int]:
+    """The build-then-append half of the maintenance lifecycle: write the
+    tree of the OLD ``old_mod``/10 of the corpus (vec_id % 10 < old_mod;
+    default the canonical 80%) under ``out``, then assign + encode the
+    NEW remainder batch against the frozen centroids/codebooks and append
+    it into the cid-partitioned dirs. Returns the old index's (kc,
+    nprobe). Shared by q_ann_index_append (serve straight off the
+    appended dirs), q_ann_index_compact (compact the accreted files
+    first), and q_ann_index_refit (old_mod=6 — 40% growth pushes k_due
+    past the 1.25·k_old refit trigger that the canonical 20% growth
+    deliberately stays under); ``out`` keys the tree per caller (the
+    suffix discipline)."""
     from ..operators._ckpt import tracked_persist
     from ..operators.clustering import kmeans_assign
-    from ..operators.quantize import (
-        ivfpq_scaled_codes,
-        ivfpq_scaled_index,
-        pq_residual_codebooks,
-    )
-
-    vecs = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    old = vecs.filter(F.col("vec_id") % 10 < old_mod)
-    batch = vecs.filter(F.col("vec_id") % 10 >= old_mod)
-    n_old = old.count()
-    assigned, cents, cb, kc, nprobe = ivfpq_scaled_index(old, n=n_old)
-    # persist the fit once — codebooks, the code table, and the writes
-    # all consume it (the q_ann_index_serve lineage discipline)
-    assigned = tracked_persist(assigned)
-    cents = tracked_persist(cents)
-    cb = tracked_persist(pq_residual_codebooks(assigned, cents, n_old))
-    codes_old = ivfpq_scaled_codes((assigned, cents, cb, kc, nprobe))
-    # concurrent independent writes (r17, guide §2.6 — the
-    # _build_and_write_index rationale; measured there) with the sorted
-    # single-writer path on the cid-partitioned pair (bytes/layout only,
-    # the r15 open-writer-heap discipline _build_and_write_index already
-    # carries)
+    from ..operators.quantize import ivfpq_scaled_codes
     from ..sources.warehouse import concurrent_writes
 
-    concurrent_writes(
-        lambda: assigned.repartition("cid")
-        .sortWithinPartitions("cid")
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(out + "/assign_by_cell"),
-        lambda: cents.write.mode("overwrite").parquet(out + "/cells"),
-        lambda: cb.write.mode("overwrite").parquet(out + "/codebooks"),
-        lambda: codes_old.repartition("cid")
-        .sortWithinPartitions("cid")
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(out + "/codes"),
-    )
-    p_cells = spark.read.parquet(out + "/cells")
-    p_cb = spark.read.parquet(out + "/codebooks")
+    vecs = _embeddings(spark, sf_dir)
+    old = vecs.filter(F.col("vec_id") % 10 < old_mod)
+    batch = vecs.filter(F.col("vec_id") % 10 >= old_mod)
+    kc, nprobe = _write_tree(old, old.count(), out)
+    _a, p_cells, p_cb, _c = _open_tree(spark, out)
     # THE APPEND: the batch is assigned to the frozen cells (broadcast
     # argmin — batch x kc work, the incremental query's law) and encoded
-    # against the frozen codebooks, then appended into the partitioned
-    # dirs — mode('append') + partitionBy adds one file per touched cell
-    # and never rewrites existing data; repeated batches accumulate one
-    # file per batch per cell until compact_table re-merges them
+    # against the frozen codebooks; repeated batches accumulate one file
+    # per batch per cell until compaction re-merges them. The two
+    # appends share only the ba persist — overlapped like the build writes
     ba = tracked_persist(kmeans_assign(batch, p_cells))
     codes_new = ivfpq_scaled_codes((ba, p_cells, p_cb, kc, nprobe))
-    # the two appends target disjoint directories and share only the ba
-    # persist — overlapped like the build writes above
-    concurrent_writes(
-        lambda: ba.select("vec_id", "v", "cid")
-        .repartition("cid")
-        .write.mode("append")
-        .partitionBy("cid")
-        .parquet(out + "/assign_by_cell"),
-        lambda: codes_new.repartition("cid")
-        .write.mode("append")
-        .partitionBy("cid")
-        .parquet(out + "/codes"),
-    )
-    return p_cells, p_cb, kc, nprobe
+    concurrent_writes(*_cell_writes(ba, codes_new, out, "append"))
+    return kc, nprobe
 
 
-def _serve_appended(
-    spark: SparkSession,
-    out: str,
-    p_cells: DataFrame,
-    p_cb: DataFrame,
-    kc: int,
-    nprobe: int,
-) -> DataFrame:
+def _serve_appended(spark: SparkSession, out: str, kc: int, nprobe: int) -> DataFrame:
     """Serve the top-10 for the fixture query from the (appended or
-    compacted) artifact tree under ``out`` — same partition-pruned path
-    as q_ann_index_serve, now answering over the grown corpus, with the
+    compacted) tree under ``out`` — same partition-pruned path as
+    q_ann_index_serve, now answering over the grown corpus, with the
     appended-neighbor flag."""
-    from ..operators.quantize import ivfpq_scaled_topk
-
-    p_assign = spark.read.parquet(out + "/assign_by_cell").select(
-        "vec_id", "v", "cid"
-    )
-    p_codes = spark.read.parquet(out + "/codes")
-    qvec = list(p_assign.filter(F.col("vec_id") == 0).select("v").first()[0])
-    res = ivfpq_scaled_topk(
-        p_assign,
-        index=(p_assign, p_cells, p_cb, kc, nprobe),
-        codes=p_codes,
-        query_vec=qvec,
-    )
-    return res.withColumn(
+    tree = _open_tree(spark, out)
+    return _serve_tree(tree, kc, nprobe, _row0(tree)).withColumn(
         "appended", (F.col("vec_id") % 10 >= 8).cast("int")
     )
 
@@ -2690,8 +2608,8 @@ def _serve_appended(
 )
 def q_ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _index_dir(sf_dir) + "_append"
-    p_cells, p_cb, kc, nprobe = _append_artifacts(spark, sf_dir, out)
-    return _serve_appended(spark, out, p_cells, p_cb, kc, nprobe)
+    kc, nprobe = _append_artifacts(spark, sf_dir, out)
+    return _serve_appended(spark, out, kc, nprobe)
 
 
 @query(
@@ -2736,13 +2654,12 @@ def q_ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.warehouse import compact_partitioned_table
 
     out = _index_dir(sf_dir) + "_compact"
-    p_cells, p_cb, kc, nprobe = _append_artifacts(spark, sf_dir, out)
-    compact_partitioned_table(spark, out + "/assign_by_cell", "cid")
-    compact_partitioned_table(spark, out + "/codes", "cid")
-    # the compaction contract, checked where it ran: exactly one parquet
-    # file per cell directory (the probe's file-open cost per probed
-    # cell is 1 again, however many batches were appended)
-    for sub in ("assign_by_cell", "codes"):
+    kc, nprobe = _append_artifacts(spark, sf_dir, out)
+    for sub in _BY_CELL:
+        compact_partitioned_table(spark, f"{out}/{sub}", "cid")
+        # the compaction contract, checked where it ran: exactly one
+        # parquet file per cell directory (the probe's file-open cost per
+        # probed cell is 1 again, however many batches were appended)
         for d in os.listdir(f"{out}/{sub}"):
             if d.startswith("cid="):
                 files = [
@@ -2751,7 +2668,7 @@ def q_ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
                     if f.endswith(".parquet")
                 ]
                 assert len(files) == 1, (sub, d, files)
-    return _serve_appended(spark, out, p_cells, p_cb, kc, nprobe)
+    return _serve_appended(spark, out, kc, nprobe)
 
 
 @query(
@@ -2805,17 +2722,14 @@ def q_ann_index_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
     import uuid as _uuid
 
-    from ..operators.quantize import ivfpq_scaled_topk
     from ..sources.warehouse import swap_directory
 
     out = _index_dir(sf_dir) + "_refit"
     # phase 1: the drifted state — frozen-fit artifacts grown 60% → 100%
-    _p_cells, _p_cb, kc_old, _nprobe_old = _append_artifacts(
-        spark, sf_dir, out, old_mod=6
-    )
+    kc_old, _nprobe_old = _append_artifacts(spark, sf_dir, out, old_mod=6)
     # phase 2: the trigger, computed exactly as q_ann_index_incremental
     # publishes it (integer form, no float boundary)
-    union = spark.read.parquet(out + "/assign_by_cell").select("vec_id", "v")
+    union = _open_tree(spark, out)[0].select("vec_id", "v")
     n_total = union.count()
     k_due = int(math.ceil(math.sqrt(n_total)))
     refit_due = 4 * k_due > 5 * kc_old
@@ -2825,22 +2739,11 @@ def q_ann_index_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (doubles round-trip parquet bit-exactly, so refit-from-tree ≡
     # refit-from-source)
     staging = f"{out}.staging-{_uuid.uuid4().hex[:8]}"
-    kc_new, nprobe_new = _build_and_write_index(spark, union, n_total, staging)
+    kc_new, nprobe_new = _write_tree(union, n_total, staging)
     swap_directory(staging, out)
     # phase 4: serve from the refitted tree — the fresh-build path
-    p_assign = spark.read.parquet(out + "/assign_by_cell").select(
-        "vec_id", "v", "cid"
-    )
-    p_cells = spark.read.parquet(out + "/cells")
-    p_cb = spark.read.parquet(out + "/codebooks")
-    p_codes = spark.read.parquet(out + "/codes")
-    qvec = list(p_assign.filter(F.col("vec_id") == 0).select("v").first()[0])
-    res = ivfpq_scaled_topk(
-        p_assign,
-        index=(p_assign, p_cells, p_cb, kc_new, nprobe_new),
-        codes=p_codes,
-        query_vec=qvec,
-    )
+    tree = _open_tree(spark, out)
+    res = _serve_tree(tree, kc_new, nprobe_new, _row0(tree))
     return res.select(
         "vec_id",
         "exact_d2",
@@ -2896,9 +2799,7 @@ _CLUSTER_CAP = 64  # expected per-cluster keep budget t
 def q_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import kmeans_fit
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     assigned, _cents = kmeans_fit(emb, k=4, rounds=2)
     sizes = assigned.groupBy("cid").agg(F.count(F.lit(1)).alias("n_c"))
     h = assigned.select("vec_id", "cid").join(F.broadcast(sizes), "cid")
@@ -3224,9 +3125,7 @@ _PQ_BATCH_CTES = """,
 def q_ann_serve_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.quantize import ivfpq_scaled_topk_batch
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     return ivfpq_scaled_topk_batch(emb, query_ids=[0, 17, 29])
 
 
@@ -3275,11 +3174,7 @@ def q_stream_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
     import pyarrow.parquet as papq
 
-    from ..operators.quantize import ivfpq_scaled_topk
-
-    p_assign, p_cells, p_cb, p_codes, kc, nprobe = _write_serve_artifacts(
-        spark, sf_dir, suffix="_stream"
-    )
+    *tree, kc, nprobe = _write_serve_artifacts(spark, sf_dir, suffix="_stream")
     base = _index_dir(sf_dir) + "_stream"
     qsrc = base + "/stream_queries"
     qsink = base + "/stream_results"
@@ -3298,7 +3193,7 @@ def q_stream_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # file per query — the file boundary IS the micro-batch boundary
     qrows = {
         r["vec_id"]: list(r["v"])
-        for r in p_assign.filter(F.col("vec_id").isin(qids))
+        for r in tree[0].filter(F.col("vec_id").isin(qids))
         .select("vec_id", "v")
         .collect()
     }
@@ -3322,12 +3217,8 @@ def q_stream_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         bdir = os.path.join(qsink, f"batch_id={int(batch_id)}")
         shutil.rmtree(bdir, ignore_errors=True)
         for row in batch_df.collect():
-            res = ivfpq_scaled_topk(
-                p_assign,
-                index=(p_assign, p_cells, p_cb, kc, nprobe),
-                codes=p_codes,
-                query_vec=list(row["v"]),
-                with_rank=True,
+            res = _serve_tree(
+                tree, kc, nprobe, list(row["v"]), with_rank=True
             ).select(
                 F.lit(int(row["qid"])).cast("long").alias("query_id"),
                 "rnk",

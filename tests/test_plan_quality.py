@@ -339,6 +339,58 @@ def test_pq_luts_go_through_one_core(spark, monkeypatch, qid):
     assert calls["_lut"] and calls["_adc"], (qid, calls)
 
 
+class _TreeWritten(Exception):
+    pass
+
+
+@pytest.mark.parametrize(
+    "qid,writes",
+    [
+        ("q_ann_index_persist", 1),
+        ("q_ann_index_serve", 1),
+        ("q_ann_index_append", 1),
+        ("q_ann_index_compact", 1),
+        ("q_ann_index_refit", 2),
+        ("q_stream_ann_serve", 1),
+    ],
+)
+def test_ann_lifecycle_writes_one_tree(spark, monkeypatch, qid, writes):
+    """Every lifecycle query that persists an index builds and writes its
+    artifact tree with plans/vector_queries._write_tree (refit twice: the
+    frozen-fit tree, then the staging tree) — no query keeps a layout or a
+    build-and-persist recipe of its own. The spy stops the query at its
+    last tree write; the serving that follows is pinned by the parity and
+    plan tests."""
+    from etl_housing_spark.plans import vector_queries
+
+    calls = []
+    real = vector_queries._write_tree
+
+    def spy(*args):
+        calls.append(args[-1])
+        if len(calls) == writes:
+            raise _TreeWritten
+        return real(*args)
+
+    monkeypatch.setattr(vector_queries, "_write_tree", spy)
+    with pytest.raises(_TreeWritten):
+        _q(spark, qid)
+    assert len(calls) == writes, (qid, calls)
+
+
+def test_ann_persist_serve_probes_once(spark):
+    """q_ann_index_persist serves its reopened tree through the qid-keyed
+    batch core with a code table: the probe window runs once, in the
+    collect that binds the static cid filter, and the served plan reads
+    the probe back as a local relation — no Window ordered by (d, cid)."""
+    import re
+
+    plan = _plan(_q(spark, "q_ann_index_persist"))
+    assert "PartitionFilters" in plan
+    probe_order = r"\[d#\d+ ASC NULLS FIRST, cid#\d+ ASC NULLS FIRST\]"
+    assert not re.findall(probe_order, plan), plan[:3000]
+
+
 def test_winsorize_single_scan_histogram(spark):
     plan = _plan(_q(spark, "q_winsorize"))
     # bounds AND the clipped aggregate both come from the one (group, value)
