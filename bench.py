@@ -50,7 +50,19 @@ Methodology (BASELINE.md "Benchmark protocol"):
 - session: local[$SPARK_GRAFT_CPUS], AQE on, shuffle partitions = cores
   (BASELINE.md configuration notes).
 
-Diagnostics go to stderr; --explain dumps formatted plans instead of timing.
+Every pass runs inside a ``perfbench.spans.Tracer`` span named
+``<qid>/mk``, ``<qid>/cold``, ``<qid>/warm`` or ``<qid>/fast``, so each Spark
+job of a line carries that query's job group and description. The span
+calls sit outside each timed interval, which stays exactly
+``materialize(df)``. Right after a line's exact passes its stage metrics are
+read back from the status store (which retains a bounded number of jobs)
+into ``artifacts/bench_detail.json`` under "lines": mk_s, cold_s and the
+jobs, stages, tasks, run/CPU/GC time, shuffle and spill of its mk and cold
+spans. Jobs a query starts from threads of its own (the concurrent
+artifact writes) carry no job group and are not counted.
+
+Diagnostics go to stderr. For a formatted plan of the bench layout, run
+``python -m etl_housing_spark run <qid> --explain --sf-dir .benchwh/<sf>``.
 """
 
 from __future__ import annotations
@@ -62,6 +74,7 @@ import time
 
 from etl_housing_spark.plans import all_queries
 from etl_housing_spark.session import get_session, graft_cpus
+from perfbench.spans import LoadWindow, Tracer, load_snapshot
 
 # Tables above this size get the multi-file layout; tiny dims stay 1 file
 # (splitting a 3 KB dim into 8 files is pure scheduler overhead).
@@ -83,61 +96,33 @@ def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-# ---------------------------------------------------------------- telemetry --
+# the per-line stage fields, as Tracer.stage_metrics sums them per span
+STAGE_FIELDS = ("jobs", "stages", "tasks", "run_ms", "cpu_ms", "gc_ms",
+                "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes")
 
 
-def _machine_cpu_jiffies() -> tuple[int, int, int]:
-    """(busy, total, steal) jiffies across all CPUs from /proc/stat line 1.
-    Steal is the hypervisor withholding cycles from this VM — the one
-    slowdown neither loadavg nor the per-process accounting can see
-    (measured round 8: same-day idle runs drift ±30% with steal ~0, so a
-    HIGH steal fraction is the smoking gun when totals blow out and
-    external_cpu_frac stays 0)."""
-    with open("/proc/stat") as fh:
-        fields = [int(x) for x in fh.readline().split()[1:]]
-    idle = fields[3] + (fields[4] if len(fields) > 4 else 0)  # idle + iowait
-    steal = fields[7] if len(fields) > 7 else 0
-    return sum(fields) - idle, sum(fields), steal
+def traced(tracer, name: str, fn):
+    """Run ``fn()`` inside tracer span ``name``; returns (seconds, result,
+    span id). The perf_counter pair sits inside the span, so its
+    setJobGroup calls are outside the timed interval."""
+    with tracer.span(name):
+        sid = tracer.spans[-1]["id"]
+        t0 = time.perf_counter()
+        out = fn()
+        dt = time.perf_counter() - t0
+    return dt, out, sid
 
 
-def _proc_tree_cpu_jiffies() -> int:
-    """utime+stime jiffies of this process and every live descendant (the
-    Spark JVM + executors/daemons live for the whole bench, so the tree sum
-    captures our own CPU; exited short-lived children are lost, which only
-    UNDERSTATES our share → conservatively OVERSTATES external load)."""
-    info: dict[int, tuple[int, int]] = {}
-    for pid in os.listdir("/proc"):
-        if not pid.isdigit():
-            continue
-        try:
-            with open(f"/proc/{pid}/stat") as fh:
-                rest = fh.read().rsplit(")", 1)[1].split()
-            info[int(pid)] = (int(rest[1]), int(rest[11]) + int(rest[12]))
-        except (OSError, IndexError, ValueError):
-            continue
-    kids: dict[int, list[int]] = {}
-    for pid, (ppid, _) in info.items():
-        kids.setdefault(ppid, []).append(pid)
-    total, stack, seen = 0, [os.getpid()], set()
-    while stack:
-        pid = stack.pop()
-        if pid in seen or pid not in info:
-            continue
-        seen.add(pid)
-        total += info[pid][1]
-        stack.extend(kids.get(pid, []))
-    return total
-
-
-def _load_snapshot() -> dict:
-    la1, la5, la15 = os.getloadavg()
-    try:
-        with open("/proc/loadavg") as fh:
-            running = int(fh.read().split()[3].split("/")[0])
-    except (OSError, ValueError, IndexError):
-        running = -1
-    return {"loadavg_1m": round(la1, 2), "loadavg_5m": round(la5, 2),
-            "loadavg_15m": round(la15, 2), "procs_running": running}
+def stage_record(tracer, sids, mk_s: float, cold_s: float) -> dict:
+    """One measured line: plan construction and action seconds plus the
+    summed stage metrics of spans ``sids``, read back from the status
+    store now (call it outside every timed window)."""
+    metrics = tracer.stage_metrics()
+    rec = {"mk_s": round(mk_s, 4), "cold_s": round(cold_s, 4)}
+    for f in STAGE_FIELDS:
+        v = sum(metrics.get(sid, {}).get(f, 0) for sid in sids)
+        rec[f] = round(v, 1) if isinstance(v, float) else v
+    return rec
 
 
 def _layout_stamp(sf_dir: str) -> str:
@@ -290,7 +275,7 @@ def main() -> None:
         threshold_5m=boot_threshold_5m,
         max_wait_s=float(os.environ.get("EHS_BENCH_MAX_WAIT_S", "600")),
     )
-    load_boot = _load_snapshot()
+    load_boot = load_snapshot()
     # one shared snapshot: gave_up and the loadavg_at_boot gate agree by
     # construction
     quiet_wait["gave_up"] = (
@@ -299,7 +284,6 @@ def main() -> None:
     )
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").split("sf")[-1]) if "sf" in sf_dir else -1.0
-    explain = "--explain" in sys.argv
 
     specs = {n: s for n, s in all_queries().items() if "bench" in s.tags}
     spark = get_session(app_name="ehs-bench")
@@ -326,43 +310,40 @@ def main() -> None:
 
     clear_pipeline_cache()  # warmup-pass residency is not the timed state
 
-    load_start = _load_snapshot()
-    mach0 = _machine_cpu_jiffies()
-    tree0 = _proc_tree_cpu_jiffies()
-    wall0 = time.perf_counter()
+    load_start = load_snapshot()
+    window = LoadWindow()
+    tracer = Tracer(spark, True)
 
     timings: dict[str, float] = {}
     warm: dict[str, float] = {}
     fast: dict[str, float] = {}
+    lines: dict[str, dict] = {}
     built: dict[str, object] = {}
 
-    def _timed(name, mk, sink_cold, sink_warm=None):
-        df = mk()
+    def _exact(name, mk):
+        mk_s, df, mk_sid = traced(tracer, f"{name}/mk", mk)
         built[name] = df
-        if explain:
-            print(f"==== {name}", file=sys.stderr)
-            df.explain(mode="formatted")
-            return
-        t0 = time.perf_counter()
-        materialize(df)
-        dt = round(time.perf_counter() - t0, 4)
-        sink_cold[name] = dt
-        if sink_warm is not None:
-            # warm = a second pass of the IDENTICAL plan (the documented
-            # methodology). Until r16 this re-ran mk() inside the timed
-            # window, which for the lifecycle queries whose function body
-            # eagerly writes artifacts (q_ann_index_serve) re-timed the
-            # whole index build (~9-11 s) against a 0.9 s cold serving
-            # action and permanently tripped the warm_gt_2x_cold sanity
-            # gate on an idle machine — every committed driver BENCH would
-            # self-flag contaminated forever. Re-materializing the built
-            # frame times what "warm" claims to time for every query.
-            t1 = time.perf_counter()
-            materialize(df)
-            sink_warm[name] = round(time.perf_counter() - t1, 4)
-            print(f"{name}: {dt:.3f}s (warm {sink_warm[name]:.3f}s)", file=sys.stderr)
-        else:
-            print(f"{name}: {dt:.3f}s", file=sys.stderr)
+        dt, _, sid = traced(tracer, f"{name}/cold", lambda: materialize(df))
+        # warm = a second pass of the IDENTICAL plan (the documented
+        # methodology). Until r16 this re-ran mk() inside the timed
+        # window, which for the lifecycle queries whose function body
+        # eagerly writes artifacts (q_ann_index_serve) re-timed the
+        # whole index build (~9-11 s) against a 0.9 s cold serving
+        # action and permanently tripped the warm_gt_2x_cold sanity
+        # gate on an idle machine — every committed driver BENCH would
+        # self-flag contaminated forever. Re-materializing the built
+        # frame times what "warm" claims to time for every query.
+        dw, _, _ = traced(tracer, f"{name}/warm", lambda: materialize(df))
+        timings[name], warm[name] = round(dt, 4), round(dw, 4)
+        print(f"{name}: {dt:.3f}s (warm {dw:.3f}s)", file=sys.stderr)
+        # read back now: the status store keeps only the newest jobs
+        lines[name] = stage_record(tracer, [mk_sid, sid], mk_s, dt)
+
+    def _fast(name, mk):
+        _, df, _ = traced(tracer, f"{name}/fast-mk", mk)
+        dt, _, _ = traced(tracer, f"{name}/fast", lambda: materialize(df))
+        fast[name] = round(dt, 4)
+        print(f"{name}: {dt:.3f}s", file=sys.stderr)
 
     # exact mode (the oracle-parity default): cold + warm pass per query,
     # with the pipeline cache drained BETWEEN queries (r17, VERDICT r16
@@ -378,14 +359,11 @@ def main() -> None:
     # Cross-round caveat: r16-and-earlier per-query values for the
     # cache-coupled lines (q_ivfpq_scaled) are NOT comparable to r17+ ones
     # — disclosed in OPTIMIZATION_r17.md and BASELINE.md.
-    from etl_housing_spark.operators._ckpt import clear_pipeline_cache as _drain
-
     for name in sorted(specs):
-        _timed(name, lambda name=name: specs[name].fn(spark, bench_dir),
-               timings, warm)
-        _drain(blocking=True)
-    _timed("q_join_sortmerge_bucketed",
-           lambda: join_sortmerge_bucketed(spark, bprefix), timings, warm)
+        _exact(name, lambda name=name: specs[name].fn(spark, bench_dir))
+        clear_pipeline_cache(blocking=True)
+    _exact("q_join_sortmerge_bucketed",
+           lambda: join_sortmerge_bucketed(spark, bprefix))
 
     # Self-clean retry (VERDICT r15): a warm pass landing >2x its cold
     # pass is, on this driver host, almost always a transient load spike
@@ -399,27 +377,25 @@ def main() -> None:
     # conservative (the retry can only read slower than the true warm
     # state), and min() keeps the better of the two readings.
     warm_retry: dict[str, float] = {}
-    if not explain:
-        flagged_now = sorted(
-            n for n in timings
-            if warm.get(n, 0.0) > 2.0 * timings[n] and warm.get(n, 0.0) > 0.5
+    flagged_now = sorted(
+        n for n in timings
+        if warm.get(n, 0.0) > 2.0 * timings[n] and warm.get(n, 0.0) > 0.5
+    )
+    if flagged_now:
+        print(f"warm retry for {flagged_now} after quiet-wait", file=sys.stderr)
+        _wait_until_quiet(
+            threshold=boot_threshold,
+            threshold_5m=boot_threshold_5m,
+            max_wait_s=float(os.environ.get("EHS_BENCH_RETRY_WAIT_S", "90")),
         )
-        if flagged_now:
-            print(f"warm retry for {flagged_now} after quiet-wait",
-                  file=sys.stderr)
-            _wait_until_quiet(
-                threshold=boot_threshold,
-                threshold_5m=boot_threshold_5m,
-                max_wait_s=float(os.environ.get("EHS_BENCH_RETRY_WAIT_S", "90")),
-            )
-            for name in flagged_now:
-                # same identical-plan discipline as the warm pass itself
-                t0 = time.perf_counter()
-                materialize(built[name])
-                warm_retry[name] = round(time.perf_counter() - t0, 4)
-                print(f"{name}: warm retry {warm_retry[name]:.3f}s "
-                      f"(first {warm[name]:.3f}s)", file=sys.stderr)
-                warm[name] = min(warm[name], warm_retry[name])
+        for name in flagged_now:
+            # same identical-plan discipline as the warm pass itself
+            dr, _, _ = traced(tracer, f"{name}/warm-retry",
+                              lambda name=name: materialize(built[name]))
+            warm_retry[name] = round(dr, 4)
+            print(f"{name}: warm retry {warm_retry[name]:.3f}s "
+                  f"(first {warm[name]:.3f}s)", file=sys.stderr)
+            warm[name] = min(warm[name], warm_retry[name])
 
     # drain tracked persists/checkpoints between phases: the fast phase must
     # not inherit the exact phase's resident sub-plans (it re-times from a
@@ -430,114 +406,105 @@ def main() -> None:
     # production fast mode (EHS_FAST_SUMS=1): plans rebuilt under the flag —
     # the flag is read at plan-construction time (plans/_util.py), so each
     # mk() here yields the double-sum plan; one timed pass per query
-    if not explain:
-        os.environ["EHS_FAST_SUMS"] = "1"
-        try:
-            for name in sorted(specs):
-                _timed(name, lambda name=name: specs[name].fn(spark, bench_dir),
-                       fast)
-                _drain(blocking=True)  # same per-query isolation as exact
-            _timed("q_join_sortmerge_bucketed",
-                   lambda: join_sortmerge_bucketed(spark, bprefix), fast)
-        finally:
-            del os.environ["EHS_FAST_SUMS"]
-        clear_pipeline_cache()
+    os.environ["EHS_FAST_SUMS"] = "1"
+    try:
+        for name in sorted(specs):
+            _fast(name, lambda name=name: specs[name].fn(spark, bench_dir))
+            clear_pipeline_cache(blocking=True)  # same per-query isolation as exact
+        _fast("q_join_sortmerge_bucketed",
+              lambda: join_sortmerge_bucketed(spark, bprefix))
+    finally:
+        del os.environ["EHS_FAST_SUMS"]
+    clear_pipeline_cache()
 
-    if not explain:
-        wall = time.perf_counter() - wall0
-        mach1 = _machine_cpu_jiffies()
-        tree1 = _proc_tree_cpu_jiffies()
-        load_end = _load_snapshot()
-        # share of the machine's CPU capacity burned by processes OUTSIDE
-        # this bench's tree during the timed window — ~0 on an idle box
-        ncpu = os.cpu_count() or 1
-        hz = os.sysconf("SC_CLK_TCK")
-        capacity = max(1.0, ncpu * hz * wall)
-        # machine busy includes steal (it's a /proc/stat line-1 field), so
-        # subtract it: external = other-VM-visible processes ONLY, keeping
-        # the two metrics orthogonal (steal high + external 0 = hypervisor)
-        d_steal = max(0, mach1[2] - mach0[2])
-        external = max(0, (mach1[0] - mach0[0]) - d_steal - (tree1 - tree0))
-        external_frac = round(external / capacity, 4)
-        steal_frac = round(d_steal / capacity, 4)
+    lw = window.close()
+    load_end = load_snapshot()
+    ncpu = os.cpu_count() or 1
+    # external = CPU of processes outside this bench's tree, steal = cycles
+    # the hypervisor withheld; each a share of the machine's capacity over
+    # the timed window, ~0 on an idle box
+    external_frac = round(lw["external_cpu_frac"], 4)
+    steal_frac = round(lw["steal_cpu_frac"], 4)
 
-        warm_gt_2x = sorted(
-            n for n in timings
-            if warm.get(n, 0.0) > 2.0 * timings[n] and warm.get(n, 0.0) > 0.5
-        )
-        # Precondition discipline (VERDICT r11): BENCH_r11 was taken at
-        # loadavg 3.5-6.3 and self-reported clean while three untouched
-        # queries "regressed" up to +298% vs the same session's idle run.
-        # Gate on the loadavg captured at PROCESS BOOT — before the
-        # session/ingest/warmup generate self-inflicted load — with the
-        # stricter of an absolute 2.0 and the old relative half-capacity
-        # bound, so low-core machines keep their tighter threshold.
-        reasons = []
-        if warm_gt_2x:
-            reasons.append("warm_gt_2x_cold")
-        if external_frac > 0.15:
-            reasons.append("external_cpu")
-        # 0.05, not 0.15: BENCH_r14 carried only 6.6% steal yet measured
-        # unchanged queries 2-6x slower — on a 32-thread box even a few
-        # percent of stolen jiffies marks a hypervisor contending hard
-        # enough to distort wall-clock far beyond its own share
-        if steal_frac > 0.05:
-            reasons.append("hypervisor_steal")
-        if load_boot["loadavg_1m"] > min(2.0, 0.5 * ncpu):
-            reasons.append("loadavg_at_boot")
-        if load_boot["loadavg_5m"] > min(4.0, 0.75 * ncpu):
-            reasons.append("loadavg5m_at_boot")
-        flagged = bool(reasons)
-        total = round(sum(timings.values()), 4)
-        detail = {
-            "metric": "bench_total",
-            "value": total,
-            "unit": "sec",
-            "queries": timings,
-            "queries_warm": warm,
-            "queries_warm_retry": warm_retry,
-            "warm_total": round(sum(warm.values()), 4),
-            "value_fast": round(sum(fast.values()), 4),
-            "queries_fast": fast,
-            "sf": sf,
-            "isolation": "per_query_drain",  # r17: cache drained between lines
-            "load": {"boot": load_boot, "start": load_start, "end": load_end,
-                     "external_cpu_frac": external_frac,
-                     "steal_cpu_frac": steal_frac,
-                     "wall_s": round(wall, 2), "ncpu": ncpu,
-                     "quiet_wait": quiet_wait},
-            "sanity": {"warm_gt_2x_cold": warm_gt_2x,
-                       "contaminated": flagged,
-                       "reasons": reasons},
-        }
-        # Full detail to stderr + a committed artifact: every field the old
-        # stdout line carried (per-query warm/fast/retry, load, sanity).
-        print("bench detail: " + json.dumps(detail), file=sys.stderr)
-        try:
-            here = os.path.dirname(os.path.abspath(__file__))
-            os.makedirs(os.path.join(here, "artifacts"), exist_ok=True)
-            with open(os.path.join(here, "artifacts", "bench_detail.json"), "w") as fh:
-                json.dump(detail, fh, indent=1)
-        except OSError:
-            pass  # read-only checkout: stderr still carries the detail
-        # The ONE stdout JSON line — kept COMPACT (<2000 chars) because the
-        # driver retains only the last 2000 chars of stdout and json-parses
-        # them: every BENCH_r13..r15 artifact shows "parsed": null with the
-        # front of the line (metric/value/queries — the contract fields!)
-        # truncated away. Same metric, same methodology, same timed passes;
-        # the per-query warm/fast dicts and load/sanity moved to the detail
-        # artifact above, summarized here as scalars.
-        print(json.dumps({
-            "metric": "bench_total",
-            "value": total,
-            "unit": "sec",
-            "queries": timings,
-            "sf": sf,
-            "warm_total": round(sum(warm.values()), 4),
-            "value_fast": round(sum(fast.values()), 4),
-            "contaminated": flagged,
-            "reasons": reasons,
-        }, separators=(",", ":")))
+    warm_gt_2x = sorted(
+        n for n in timings
+        if warm.get(n, 0.0) > 2.0 * timings[n] and warm.get(n, 0.0) > 0.5
+    )
+    # Precondition discipline (VERDICT r11): BENCH_r11 was taken at
+    # loadavg 3.5-6.3 and self-reported clean while three untouched
+    # queries "regressed" up to +298% vs the same session's idle run.
+    # Gate on the loadavg captured at PROCESS BOOT — before the
+    # session/ingest/warmup generate self-inflicted load — with the
+    # stricter of an absolute 2.0 and the old relative half-capacity
+    # bound, so low-core machines keep their tighter threshold.
+    reasons = []
+    if warm_gt_2x:
+        reasons.append("warm_gt_2x_cold")
+    if external_frac > 0.15:
+        reasons.append("external_cpu")
+    # 0.05, not 0.15: BENCH_r14 carried only 6.6% steal yet measured
+    # unchanged queries 2-6x slower — on a 32-thread box even a few
+    # percent of stolen jiffies marks a hypervisor contending hard
+    # enough to distort wall-clock far beyond its own share
+    if steal_frac > 0.05:
+        reasons.append("hypervisor_steal")
+    if load_boot["loadavg_1m"] > min(2.0, 0.5 * ncpu):
+        reasons.append("loadavg_at_boot")
+    if load_boot["loadavg_5m"] > min(4.0, 0.75 * ncpu):
+        reasons.append("loadavg5m_at_boot")
+    flagged = bool(reasons)
+    total = round(sum(timings.values()), 4)
+    detail = {
+        "metric": "bench_total",
+        "value": total,
+        "unit": "sec",
+        "queries": timings,
+        "queries_warm": warm,
+        "queries_warm_retry": warm_retry,
+        "warm_total": round(sum(warm.values()), 4),
+        "value_fast": round(sum(fast.values()), 4),
+        "queries_fast": fast,
+        "lines": lines,
+        "sf": sf,
+        "isolation": "per_query_drain",  # r17: cache drained between lines
+        "load": {"boot": load_boot, "start": load_start, "end": load_end,
+                 "external_cpu_frac": external_frac,
+                 "steal_cpu_frac": steal_frac,
+                 "wall_s": round(lw["wall_s"], 2), "ncpu": ncpu,
+                 "quiet_wait": quiet_wait},
+        "sanity": {"warm_gt_2x_cold": warm_gt_2x,
+                   "contaminated": flagged,
+                   "reasons": reasons},
+    }
+    # Full detail to stderr + a committed artifact: every field the old
+    # stdout line carried (per-query warm/fast/retry, load, sanity) and
+    # the per-line stage records.
+    print("bench detail: " + json.dumps(detail), file=sys.stderr)
+    try:
+        here = os.path.dirname(os.path.abspath(__file__))
+        os.makedirs(os.path.join(here, "artifacts"), exist_ok=True)
+        with open(os.path.join(here, "artifacts", "bench_detail.json"), "w") as fh:
+            json.dump(detail, fh, indent=1)
+    except OSError:
+        pass  # read-only checkout: stderr still carries the detail
+    # The ONE stdout JSON line — kept COMPACT (<2000 chars) because the
+    # driver retains only the last 2000 chars of stdout and json-parses
+    # them: every BENCH_r13..r15 artifact shows "parsed": null with the
+    # front of the line (metric/value/queries — the contract fields!)
+    # truncated away. Same metric, same methodology, same timed passes;
+    # the per-query warm/fast dicts and load/sanity moved to the detail
+    # artifact above, summarized here as scalars.
+    print(json.dumps({
+        "metric": "bench_total",
+        "value": total,
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf,
+        "warm_total": round(sum(warm.values()), 4),
+        "value_fast": round(sum(fast.values()), 4),
+        "contaminated": flagged,
+        "reasons": reasons,
+    }, separators=(",", ":")))
     spark.stop()
 
 

@@ -423,9 +423,11 @@ def band_pairs(banded: DataFrame) -> DataFrame:
       (signatures, fingerprints, vectors) are functionally dependent on
       the id, so distinct-on-ids is the identical pair set, and a pair
       colliding in several bands is emitted once.
-    - the deduped pairs are repartitioned to session parallelism, so the
-      caller's per-pair verify (signature agreement, popcount, cosine
-      fold) never collapses onto a few AQE-coalesced partitions.
+    - the pairs are repartitioned to session parallelism on (id_a, id_b)
+      BELOW the distinct, which that exchange also serves, so the caller's
+      per-pair verify (signature agreement, popcount, cosine fold) never
+      collapses onto a few AQE-coalesced partitions. Above the distinct
+      it would be planned away whenever shuffle partitions = parallelism.
 
     Cost before the distinct is Σ over buckets of C(bucket size, 2): the
     one place a pair-budget check belongs.
@@ -445,8 +447,8 @@ def band_pairs(banded: DataFrame) -> DataFrame:
             & (F.col("l.id") < F.col("r.id")),
         )
         .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
         .repartition(par, "id_a", "id_b")
+        .distinct()
     )
 
 

@@ -38,6 +38,8 @@ def get_session(
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
         .config("spark.ui.enabled", "false")
+        # readable stderr: no console progress bars
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -30,28 +30,39 @@ from pyspark.sql import functions as F
 
 
 def _staged_swap_write(
-    df: DataFrame, path: str, block_bytes: int = 128 * 1024 * 1024
+    df: DataFrame, path: str, block_bytes: int = 128 * 1024 * 1024,
+    partition_col: str | None = None,
 ) -> None:
     """Write ``df`` to a staging sibling of ``path`` and swap via rename.
 
     The write pins ``parquet.block.size`` (the row-group size) explicitly:
     row groups are the unit of reader parallelism, so a maintenance
     rewrite must never emit a file whose whole payload is one row group
-    (assert_rowgroup_layout — the r14 single-row-group finding).
+    (assert_rowgroup_layout — the r14 single-row-group finding). With
+    ``partition_col`` the rewrite keeps a ``partitionBy(col)`` layout with
+    one file per partition directory: repartition and sort on the column,
+    one task per value.
 
     Safe overwrite-of-input: the plan may still be reading the files under
     ``path`` while the staging write runs (nothing is deleted), and the
-    visible table flips in a single directory rename. A crash before the
-    swap leaves the original intact; a crash between the two renames leaves
-    the data recoverable under the ``.old-*`` sibling (unlike
-    rmtree-then-move, which has a window where the table is simply gone).
-    Staging lives next to the target so both renames stay on one filesystem.
+    visible table flips in a single directory rename. A failed write
+    removes its staging sibling and leaves ``path`` as it was; a crash
+    between the two renames leaves the data recoverable under the
+    ``.old-*`` sibling (unlike rmtree-then-move, which has a window where
+    the table is simply gone). Staging lives next to the target so both
+    renames stay on one filesystem.
     """
     token = uuid.uuid4().hex[:8]
     staging = f"{path}.staging-{token}"
-    df.write.mode("overwrite").option(
-        "parquet.block.size", int(block_bytes)
-    ).parquet(staging)
+    w = df.write
+    if partition_col is not None:
+        w = (df.repartition(partition_col).sortWithinPartitions(partition_col)
+             .write.partitionBy(partition_col))
+    try:
+        w.mode("overwrite").option("parquet.block.size", int(block_bytes)).parquet(staging)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
     swap_directory(staging, path)
 
 
@@ -336,33 +347,13 @@ def compact_partitioned_table(
     layout PartitionFilters binds against. This rewrite repartitions ON
     the partition column (one task per value → one file per directory,
     the q_ann_index_serve write discipline), pins the row-group size,
-    and swaps via the same staged-rename as ``_staged_swap_write``.
-    The swap is two renames, not atomic: there is a window between them
-    where ``path`` does not exist — this is a single-process maintenance
-    pass (a crash between the renames leaves the data recoverable under
-    the ``.old-*`` sibling), not a lock-free concurrent-reader protocol;
-    a managed table format (Delta/Iceberg OPTIMIZE with a partition
-    clause) is the form that gives readers snapshot isolation. Returns
-    the partition-dir count.
+    and swaps through ``_staged_swap_write``: a single-process
+    maintenance pass (``swap_directory``), not a concurrent-reader
+    protocol; Delta/Iceberg OPTIMIZE with a partition clause is the form
+    that gives readers snapshot isolation. Returns the partition-dir count.
     """
     path = path.rstrip("/")
-    df = spark.read.parquet(path)
-    token = uuid.uuid4().hex[:8]
-    staging = f"{path}.staging-{token}"
-    try:
-        (
-            df.repartition(partition_col)
-            .sortWithinPartitions(partition_col)
-            .write.mode("overwrite")
-            .option("parquet.block.size", int(block_bytes))
-            .partitionBy(partition_col)
-            .parquet(staging)
-        )
-    except BaseException:
-        # a failed staging write must not leak a .staging-* sibling
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    swap_directory(staging, path)
+    _staged_swap_write(spark.read.parquet(path), path, block_bytes, partition_col)
     assert_rowgroup_layout(path, block_bytes=block_bytes)
     return len(
         [d for d in os.listdir(path) if d.startswith(f"{partition_col}=")]
@@ -371,8 +362,8 @@ def compact_partitioned_table(
 
 def swap_directory(staging: str, path: str) -> None:
     """Two-rename directory swap with rollback — the staged-swap
-    discipline shared by ``_staged_swap_write``,
-    ``compact_partitioned_table``, and the index refit (a fully built
+    discipline shared by ``_staged_swap_write`` (upsert and both
+    compactions) and the index refit (a fully built
     replacement tree under ``staging`` replaces ``path``). Not atomic:
     there is a window between the renames where ``path`` does not exist
     (single-process maintenance contract); a crash between them leaves

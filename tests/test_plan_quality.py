@@ -280,6 +280,45 @@ def test_pair_families_take_candidates_from_band_pairs(spark, monkeypatch, qid):
     assert calls, f"{qid} built its candidates without band_pairs"
 
 
+def test_band_pairs_verify_runs_at_session_parallelism(spark):
+    """The per-pair verify after band_pairs (a payload re-attach by id,
+    then a filter) runs one task per core when the shuffle partition count
+    equals the parallelism, the engine session's default: the pair
+    exchange must be one AQE cannot coalesce. Read from the executed job's
+    stages in the status store."""
+    from pyspark.sql import functions as F
+
+    from etl_housing_spark.operators.dedup import band_pairs
+
+    sc = spark.sparkContext
+    par = sc.defaultParallelism
+    # 100 ids in 4 bands, 10 buckets of 10 per band: 450 distinct pairs
+    banded = spark.range(400).select(
+        (F.col("id") % 100).alias("id"),
+        (F.col("id") / 100).cast("int").alias("band"),
+        (F.col("id") % 10).alias("bkey"),
+    )
+    payload = F.broadcast(spark.range(100).select(
+        F.col("id").alias("id_a"), (F.col("id") * 3).alias("pa")))
+    verify = band_pairs(banded).join(payload, "id_a").where(F.col("pa") >= F.col("id_b"))
+    group = "band-pairs-parallelism"
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(par))
+    sc.setJobGroup(group, "band_pairs verify")
+    try:
+        verify.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    st = sc.statusTracker()
+    last_job = st.getJobInfo(max(st.getJobIdsForGroup(group)))
+    # the result stage reads the pair exchange: distinct, re-attach, filter
+    ran = [st.getStageInfo(s) for s in last_job.stageIds]
+    verify_stage = max((s for s in ran if s and s.numCompletedTasks), key=lambda s: s.stageId)
+    assert verify_stage.numTasks == par
+
+
 @pytest.mark.parametrize(
     "qid",
     [

@@ -183,6 +183,26 @@ def test_upsert_staged_swap_no_leftovers(spark, tmp_path):
     assert siblings == [], f"staging/old debris left behind: {siblings}"
 
 
+def test_failed_upsert_keeps_table_and_leaves_no_staging(spark, tmp_path):
+    """An upsert whose write fails raises, leaves the table readable with
+    its old rows, and removes its staging sibling."""
+    import os
+
+    import pytest
+
+    root = tmp_path / "wh4"
+    wh = ParquetWarehouse(spark, str(root))
+    df = with_surrogate_key(_listings(spark), ["name"])
+    wh.write(df, "t")
+    before = sorted(tuple(r) for r in wh.read("t").collect())
+    bad = df.withColumn("price", F.raise_error(F.lit("boom")).cast(df.schema["price"].dataType))
+    with pytest.raises(Exception, match="boom"):
+        wh.upsert(bad, "t", ["row_key"])
+    assert sorted(tuple(r) for r in wh.read("t").collect()) == before
+    siblings = [p for p in os.listdir(root) if p != "t"]
+    assert siblings == [], f"staging/old debris left behind: {siblings}"
+
+
 def test_compact_table_staged_swap(spark, tmp_path):
     from etl_housing_spark.sources.warehouse import compact_table
 
